@@ -54,14 +54,3 @@ def words_splitter(backend: str = "whitespace"):
             f"cluster image"
         )
     raise ValueError(f"unknown splitter backend {backend!r}")
-
-
-def word_to_char_maps(starts: List[int], ends: List[int]) -> Tuple[dict, dict]:
-    """Word-index -> char-offset maps.
-
-    Mirrors reference model.py:1825-1852: ``start_token_idx_to_text_idx[i]``
-    is the start char of word i; ``end_token_idx_to_text_idx[i]`` the
-    EXCLUSIVE end char. Output mention char spans slice as text[s:e]
-    (model.py:1955-1961).
-    """
-    return dict(enumerate(starts)), dict(enumerate(ends))

@@ -4,18 +4,16 @@ Design rule: every derived value must be reproducible by the ANSI-SQL
 oracle (DuckDB) — so hashing is arithmetic over codepoints / token ids
 (identical in any engine), never an engine-specific hash function.
 
-Scale note: token ids are the codepoint-fold hash of the token (default
-mode) — a pure narrow JVM expression with NO distinct, NO global window and
-NO vocab join, so the tokenize→id subtree never shuffles and scales to any
-corpus. Hash collisions are deterministic and engine-identical, so oracle
-parity holds exactly. The legacy dense-rank mode (global window over the
-distinct vocabulary) remains available for dense 1..V ids but is a
-single-task sort at web scale — do not use it in the hot path.
+Scale note: token ids are the codepoint-fold hash of the token — a pure
+narrow JVM expression with NO distinct, NO global window and NO vocab join,
+so the tokenize→id subtree never shuffles and scales to any corpus. Hash
+collisions are deterministic and engine-identical, so oracle parity holds
+exactly.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 P31 = 2147483647  # arithmetic-hash modulus (2^31 - 1), shared with oracles
@@ -59,47 +57,11 @@ def fold_hash(col) -> Column:
     )
 
 
-def tokens_table(docs: DataFrame) -> DataFrame:
-    """(doc_id, pos, tok) — whitespace split with positions (0-based)."""
-    return docs.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
-    )
-
-
 def token_id_array(text_col) -> Column:
     """array<long> of fold-hash token ids for a whitespace-split text column
     — the zero-shuffle building block for per-doc aggregates."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     return F.transform(F.split(c, " "), fold_hash)
-
-
-def vocab_table(toks: DataFrame) -> DataFrame:
-    """(tok, token_id) dense 1-based ids by lexicographic order.
-
-    LEGACY: global window over the deduplicated token set — a single-task
-    sort that does not scale past vocabulary saturation; kept only for
-    consumers that need dense 1..V ids (see module doc).
-    """
-    return (
-        toks.select("tok")
-        .distinct()
-        .withColumn("token_id", F.row_number().over(Window.orderBy("tok")))
-    )
-
-
-def token_ids(docs: DataFrame, mode: str = "hash") -> DataFrame:
-    """(doc_id, pos, token_id).
-
-    mode='hash' (default): token_id = fold_hash(tok). The plan is
-    scan→posexplode→project — fully narrow, no shuffle anywhere.
-    mode='dense': legacy dense-rank ids (distinct + global window + join).
-    """
-    toks = tokens_table(docs)
-    if mode == "hash":
-        return toks.select(
-            "doc_id", "pos", fold_hash(F.col("tok")).alias("token_id")
-        )
-    return toks.join(vocab_table(toks), "tok").select("doc_id", "pos", "token_id")
 
 
 def affine_hash(col, j: int):

@@ -52,11 +52,6 @@ def span_prf(pred_mentions: DataFrame, gold_mentions: DataFrame) -> DataFrame:
     return micro_prf(pred_mentions, gold_mentions, ["doc_id", "label", "start", "end"])
 
 
-def triple_prf(pred_triples: DataFrame, gold_triples: DataFrame) -> DataFrame:
-    """Triple micro-F1 on (doc_id, subj, pred, obj) — evaluator.py:210-255."""
-    return micro_prf(pred_triples, gold_triples, ["doc_id", "subj", "pred", "obj"])
-
-
 def relex_prf(pred: DataFrame, gold: DataFrame) -> DataFrame:
     """Relex WORD-SPAN micro-F1: exact (rel_label, head_span, tail_span)
     matching — the reference relation evaluator's strict mode

@@ -197,6 +197,48 @@ def done_buckets(spark: SparkSession, base: str, fmt: str = "parquet") -> List[i
     ]
 
 
+def bucket_stats(graph: DataFrame) -> dict:
+    """Per-bucket lineage counts of a bucketed graph frame (GRAPH_DDL +
+    bucket), in one aggregate: {bucket: Row(bucket, doc_id_min,
+    doc_id_max, n_docs, n_mentions, n_triples)}, the counts in
+    LINEAGE_SCHEMA order. Buckets without docs are absent. The mention /
+    triple counts are array sizes, i.e. the rows mentions_table /
+    triples_raw_table explode them into."""
+
+    def n_items(col: str):
+        # size(null) is -1 under Spark's default sizeOfNull setting
+        return F.sum(F.when(F.col(col).isNull(), 0).otherwise(F.size(col)))
+
+    rows = graph.groupBy("bucket").agg(
+        F.min("doc_id").alias("doc_id_min"),
+        F.max("doc_id").alias("doc_id_max"),
+        F.count(F.lit(1)).alias("n_docs"),
+        n_items("mentions").alias("n_mentions"),
+        n_items("triples").alias("n_triples"),
+    ).collect()
+    return {r.bucket: r for r in rows}
+
+
+def lineage_frame(
+    spark: SparkSession,
+    buckets,
+    stats: dict,
+    run_id: str,
+    status: str,
+    wall_ms: int,
+    snapshot_id: Optional[str] = None,
+) -> DataFrame:
+    """LINEAGE_SCHEMA rows for `buckets`, counts from bucket_stats; a
+    bucket with no docs gets zero counts and null doc_id bounds."""
+    ts, no_docs = time.time(), (None, None, 0, 0, 0)
+    rows = [
+        (int(b), run_id, status, *(stats[b][1:] if b in stats else no_docs),
+         int(wall_ms), ts, snapshot_id)
+        for b in buckets
+    ]
+    return spark.createDataFrame(rows, LINEAGE_SCHEMA)
+
+
 def run_extraction(
     spark: SparkSession,
     docs: DataFrame,
@@ -245,19 +287,22 @@ def run_extraction(
     )
     # bucket is recomputed from doc_id (cheaper than carrying it through
     # the UDF and keeps GRAPH_DDL independent of lineage config).
-    # repartition by bucket BEFORE the persist: a partitionBy("bucket")
+    # Hash-repartition on bucket BEFORE the persist: a partitionBy("bucket")
     # writer emits one file per (task, bucket-value) pair, so without
-    # co-location the three table writes each fan out into
-    # (input partitions x lineage buckets) tiny files — 3 x 2048 at 32x64,
-    # and per-file fixed costs dominated the whole job (~70% of the 100k-doc
-    # stage wall, BENCH.md). One hash shuffle on the tiny bucket key
-    # collapses that to <= lineage_buckets files per table; the expensive
-    # extraction UDF still runs at full input parallelism on the map side
-    # of this exchange, and the persist caches the post-shuffle layout all
-    # three writes share.
+    # co-location each table write fans out into input partitions x
+    # buckets tiny files (BENCH.md, round 4). With every bucket in exactly
+    # one task, each table gets one file per bucket. The task count is
+    # min(buckets, cores): more tasks than cores only adds per-task cost
+    # on few-KB partitions, and on >= B cores the plan is one bucket per
+    # task. The extraction UDF still runs at input parallelism on the map
+    # side of this exchange; the sort hands the writers bucket-ordered
+    # rows, and the persist is the branch point the three writes and the
+    # lineage aggregate share.
+    n_tasks = min(cfg.lineage_buckets, spark.sparkContext.defaultParallelism)
     graph = (
         with_bucket(graph, cfg.lineage_buckets)
-        .repartition(cfg.lineage_buckets, "bucket")
+        .repartition(n_tasks, "bucket")
+        .sortWithinPartitions("bucket")
         .persist()
     )
 
@@ -279,61 +324,21 @@ def run_extraction(
     wall_ms = int((time.time() - t0) * 1000)
 
     # lineage appended only after data committed — one row per ATTEMPTED
-    # bucket (empty buckets included, else they would be re-attempted forever).
-    # Counts come from the tables just WRITTEN (cheap columnar re-read),
-    # never from the input DataFrame: re-traversing `todo` would re-run the
-    # whole upstream (scan/synthesis) once per aggregate.
-    fp_written = io.read("span_fp", required=True).filter(
-        F.col("bucket").isin(pending)
+    # bucket (empty buckets included, else they would be re-attempted
+    # forever). Counts come from the persisted graph the writes consumed:
+    # one row per doc in span_fp, one mentions / triples_raw row per
+    # array element, so they equal the written tables' per-bucket counts.
+    stats = bucket_stats(graph)
+    lineage = lineage_frame(
+        spark, pending, stats, run_id, "done", wall_ms,
+        # Iceberg: the mentions table's commit for this bucket batch, so
+        # resume/audit can pin reads with VERSION AS OF; null under plain
+        # parquet (no snapshot concept)
+        snapshot_id=io.snapshot_id("mentions"),
     )
-    m_written = io.read("mentions", required=True).filter(
-        F.col("bucket").isin(pending)
-    )
-    t_written = io.read("triples_raw", required=True).filter(
-        F.col("bucket").isin(pending)
-    )
-    stats = (
-        spark.createDataFrame([(int(b),) for b in pending], "bucket int")
-        .join(
-            fp_written.groupBy("bucket").agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.min("doc_id").alias("doc_id_min"),
-                F.max("doc_id").alias("doc_id_max"),
-            ),
-            "bucket",
-            "left",
-        )
-        .withColumn("n_docs", F.coalesce("n_docs", F.lit(0)))
-        .join(
-            m_written.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_mentions")),
-            "bucket",
-            "left",
-        )
-        .join(
-            t_written.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_triples")),
-            "bucket",
-            "left",
-        )
-        .select(
-            "bucket",
-            F.lit(run_id).alias("run_id"),
-            F.lit("done").alias("status"),
-            "doc_id_min",
-            "doc_id_max",
-            "n_docs",
-            F.coalesce("n_mentions", F.lit(0)).alias("n_mentions"),
-            F.coalesce("n_triples", F.lit(0)).alias("n_triples"),
-            F.lit(wall_ms).alias("wall_ms"),
-            F.lit(time.time()).alias("ts"),
-            # Iceberg: the mentions table's commit for this bucket batch,
-            # so resume/audit can pin reads with VERSION AS OF; null under
-            # plain parquet (no snapshot concept)
-            F.lit(io.snapshot_id("mentions")).cast("string").alias("snapshot_id"),
-        )
-    )
-    io.append(stats, "lineage")
-    n_docs = fp_written.count()
+    io.append(lineage, "lineage")
     graph.unpersist()
+    n_docs = sum(s.n_docs for s in stats.values())
     return {"run_id": run_id, "buckets": len(pending), "n_docs": n_docs, "wall_ms": wall_ms}
 
 

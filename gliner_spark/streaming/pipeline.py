@@ -65,12 +65,13 @@ def run_stream_pipeline(
     from pyspark.sql import functions as F
 
     from gliner_spark.operators.extraction import mentions_table, triples_raw_table
-    from gliner_spark.sinks.materialize import with_bucket
+    from gliner_spark.sinks.materialize import bucket_stats, lineage_frame, with_bucket
 
     cfg = model.config
     staging = os.path.join(base, "stream")
 
     def process_batch(batch_df, batch_id: int):
+        t0 = _time.time()
         graph = with_bucket(extract_graph(batch_df, model), cfg.lineage_buckets).persist()
         # _batch_id stamps every staged row; the lineage row appended
         # BELOW (after BOTH table writes) is the batch's commit marker —
@@ -89,19 +90,12 @@ def run_stream_pipeline(
         t.write.mode("append").partitionBy("bucket").parquet(
             os.path.join(staging, "triples_raw")
         )
-        lin = graph.groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("doc_id").alias("doc_id_min"),
-            F.max("doc_id").alias("doc_id_max"),
-        ).select(
-            "bucket",
-            F.lit(f"stream-{batch_id}").alias("run_id"),
-            F.lit("streamed").alias("status"),
-            "doc_id_min", "doc_id_max", "n_docs",
-            F.lit(0).cast("long").alias("n_mentions"),
-            F.lit(0).cast("long").alias("n_triples"),
-            F.lit(0).cast("long").alias("wall_ms"),
-            F.lit(_time.time()).alias("ts"),
+        # real per-bucket counts from the same aggregate the batch commit
+        # uses (staged rows per (bucket, _batch_id) == these counts)
+        stats = bucket_stats(graph)
+        lin = lineage_frame(
+            spark, sorted(stats), stats, f"stream-{batch_id}", "streamed",
+            int((_time.time() - t0) * 1000),
         )
         lin.write.mode("append").parquet(os.path.join(base, "lineage"))
         graph.unpersist()

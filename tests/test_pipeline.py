@@ -9,6 +9,8 @@
   rerun — no lost and no duplicated work vs a single clean run.
 """
 
+import glob
+import os
 import shutil
 import tempfile
 
@@ -168,6 +170,110 @@ def test_resume_no_loss_no_duplicates(spark, model):
     finally:
         shutil.rmtree(base_crash, ignore_errors=True)
         shutil.rmtree(base_clean, ignore_errors=True)
+
+
+def _bucket_counts(df, key="bucket"):
+    return {r[0]: r[1] for r in df.groupBy(key).count().collect()}
+
+
+def test_lineage_counts_match_written_tables(spark, model):
+    """Lineage counts are taken from the persisted graph, not from the
+    written tables: after a simulated crash and a resume they must still
+    equal a groupBy over span_fp / mentions / triples_raw, and buckets
+    without docs (40 docs over 64 buckets) get zero counts, null bounds."""
+    docs = synth_docs(spark, 40, partitions=4)
+    base = tempfile.mkdtemp(prefix="gs_lin_")
+    try:
+        run_extraction(spark, docs, model, base, bucket_limit=7)
+        st = run_extraction(spark, docs, model, base)
+        fp = spark.read.parquet(f"{base}/span_fp")
+        docs_per_bucket = {
+            r.bucket: r
+            for r in fp.groupBy("bucket").agg(
+                F.count(F.lit(1)).alias("n"),
+                F.min("doc_id").alias("lo"),
+                F.max("doc_id").alias("hi"),
+            ).collect()
+        }
+        n_m = _bucket_counts(spark.read.parquet(f"{base}/mentions"))
+        n_t = _bucket_counts(spark.read.parquet(f"{base}/triples_raw"))
+        lin = spark.read.parquet(f"{base}/lineage").collect()
+        assert sorted(r.bucket for r in lin) == list(
+            range(model.config.lineage_buckets)
+        )
+        assert 0 < len(docs_per_bucket) < model.config.lineage_buckets
+        for r in lin:
+            d = docs_per_bucket.get(r.bucket)
+            assert r.n_docs == (d.n if d else 0), r
+            assert r.doc_id_min == (d.lo if d else None), r
+            assert r.doc_id_max == (d.hi if d else None), r
+            assert r.n_mentions == n_m.get(r.bucket, 0), r
+            assert r.n_triples == n_t.get(r.bucket, 0), r
+        assert st["n_docs"] == sum(
+            r.n_docs for r in lin if r.run_id == st["run_id"]
+        )
+        assert sum(r.n_docs for r in lin) == 40
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_bucket_partitions_hold_one_file(spark, model, docs_df):
+    """Co-location contract (SCALE.md): each bucket's rows are written by
+    one task, so every bucket=k directory of the three bucketed tables
+    holds exactly one parquet file, not one per input partition."""
+    base = tempfile.mkdtemp(prefix="gs_layout_")
+    try:
+        run_extraction(spark, docs_df, model, base)
+        for tbl in ("mentions", "triples_raw", "span_fp"):
+            dirs = glob.glob(os.path.join(base, tbl, "bucket=*"))
+            assert dirs, tbl
+            for d in dirs:
+                files = glob.glob(os.path.join(d, "*.parquet"))
+                assert len(files) == 1, (d, files)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_stream_lineage_counts_match_staged_rows(spark, model):
+    """Streamed micro-batches commit lineage rows in the full lineage
+    schema whose counts equal the staged rows per (bucket, _batch_id)."""
+    from gliner_spark.sinks.materialize import LINEAGE_SCHEMA
+    from gliner_spark.streaming.pipeline import run_stream_pipeline
+
+    src = tempfile.mkdtemp(prefix="gs_slin_src_")
+    base = tempfile.mkdtemp(prefix="gs_slin_base_")
+    ckpt = tempfile.mkdtemp(prefix="gs_slin_ckpt_")
+    try:
+        # 12 files at 8 files per trigger -> two micro-batches
+        synth_docs(spark, 120, partitions=4).repartition(12).write.mode(
+            "overwrite"
+        ).parquet(src)
+        q = run_stream_pipeline(spark, src, base, model, ckpt)
+        q.awaitTermination(180)
+
+        lin = spark.read.parquet(f"{base}/lineage")
+        assert lin.columns == [c.split()[0] for c in LINEAGE_SCHEMA.split(", ")]
+        rows = lin.collect()
+        assert {r.status for r in rows} == {"streamed"}
+        batch_ids = {int(r.run_id.split("-")[1]) for r in rows}
+        assert len(batch_ids) == 2
+        assert sum(r.n_docs for r in rows) == 120
+
+        def staged(tbl):
+            df = spark.read.parquet(f"{base}/stream/{tbl}")
+            k = F.concat_ws(":", "_batch_id", "bucket").alias("k")
+            return _bucket_counts(df.select(k), "k")
+
+        n_m, n_t = staged("mentions"), staged("triples_raw")
+        assert sum(n_m.values()) > 0 and sum(n_t.values()) > 0
+        for r in rows:
+            k = f"{r.run_id.split('-')[1]}:{r.bucket}"
+            assert r.n_mentions == n_m.get(k, 0), r
+            assert r.n_triples == n_t.get(k, 0), r
+            assert r.n_docs > 0 and r.doc_id_min <= r.doc_id_max, r
+    finally:
+        for d in (src, base, ckpt):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def test_format_seam_parquet_flag_and_lineage_snapshot_column(spark, model):
