@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gliner_spark.gate import edge_rows, view_table
+
 PR_UNIT = 1_000_000   # rank micro-units (1.0 == 1e6)
 PR_DAMP = 850         # damping * 1000
 PR_ITERS = 3
@@ -27,9 +29,11 @@ TWO_HOP_MAX_FANOUT = 64
 
 # r7 adaptive small-graph gate (the _cc_driver design generalized): at or
 # below this many DISTINCT edges the iterative centrality/community
-# operators run their loop on the driver from ONE bounded collect —
-# arithmetic-identical pure-integer replays, parity-tested against the
-# distributed plans, which remain the >bound (100 TB) path. Env-tunable
+# operators run their loop on the driver — arithmetic-identical
+# pure-integer replays, parity-tested against the distributed plans,
+# which remain the >bound (100 TB) path. The operators over a triples
+# frame share ONE bounded collect per frame (gliner_spark/gate.py: the
+# driver edge snapshot) and derive their edge view from it. Env-tunable
 # for clusters with small drivers; 0 disables every driver path.
 import os as _os
 
@@ -38,10 +42,10 @@ GRAPH_DRIVER_MAX_EDGES = int(
 )
 
 
-# raw-tier cap for _collected_dedup: collect at most this many PRE-distinct
-# rows before degrading to the cluster-side distinct tier (bounds the extra
-# driver memory of the raw tier; the GATE condition — distinct rows <= bound
-# — is unchanged either way)
+# raw-tier cap for _collected_dedup and the gate's edge snapshot: collect
+# at most this many PRE-distinct rows before degrading to the cluster-side
+# distinct tier (bounds the extra driver memory of the raw tier; the GATE
+# condition — distinct rows <= bound — is unchanged either way)
 RAW_COLLECT_CAP = int(
     _os.environ.get("GS_GRAPH_RAW_COLLECT_CAP", "1000000")
 )
@@ -55,10 +59,12 @@ STATS_SKIP_BYTES = int(
 )
 
 
-def _arrow_collect_bounded(df: DataFrame, cap: int):
+def _arrow_collect_bounded(df: DataFrame, cap: int, over=None):
     """Bounded Arrow collect of a RAW (pre-aggregate) frame: pyarrow
     table if the frame has <= cap rows, else None (caller degrades to
-    its aggregate-then-collect tier).
+    its aggregate-then-collect tier). `over`, if given, is called with
+    an over-cap table before it is dropped (the edge snapshot keeps its
+    row counts, so the frame is never collected again).
 
     Replaces limit(cap+1).toArrow() at the raw-tier collect sites:
     CollectLimit funnels the rows through a driver-side row->Arrow
@@ -97,7 +103,11 @@ def _arrow_collect_bounded(df: DataFrame, cap: int):
         tbl = df.toArrow()
     except Exception:
         return None
-    return None if tbl.num_rows > cap else tbl
+    if tbl.num_rows > cap:
+        if over is not None:
+            over(tbl)
+        return None
+    return tbl
 
 
 def _collected_dedup(raw_df: DataFrame, cols, max_edges: int | None):
@@ -113,23 +123,34 @@ def _collected_dedup(raw_df: DataFrame, cols, max_edges: int | None):
 
     Tiering: raw rows <= RAW_COLLECT_CAP -> dedup here; else fall back
     to the old distinct-collect tier (same gate condition) so huge raw
-    tables never flood the driver."""
+    tables never flood the driver. This is one collect per call: the
+    operators over a triples frame go through gate.edge_rows instead,
+    which serves the same tiers from ONE collect per frame."""
     bound = GRAPH_DRIVER_MAX_EDGES if max_edges is None else max_edges
     if bound <= 0:
         return None
     tbl = _arrow_collect_bounded(raw_df.select(*cols), RAW_COLLECT_CAP)
     if tbl is not None:
-        d = tbl.group_by(list(cols)).aggregate([])
-        if d.num_rows > bound:
-            return None
-        d = d.sort_by([(c, "ascending") for c in cols])
-        return list(
-            zip(*(d.column(i).to_pylist() for i in range(d.num_columns)))
-        )
+        return _sorted_distinct(tbl, cols, bound)
+    return _degraded_dedup(raw_df, cols, max_edges)
+
+
+def _sorted_distinct(tbl, cols, bound: int):
+    """The raw tier's tail: distinct rows of a collected table, sorted,
+    as row tuples, or None if more than `bound`."""
+    d = tbl.group_by(list(cols)).aggregate([])
+    if d.num_rows > bound:
+        return None
+    d = d.sort_by([(c, "ascending") for c in cols])
+    return list(zip(*(d.column(i).to_pylist() for i in range(d.num_columns))))
+
+
+def _degraded_dedup(raw_df: DataFrame, cols, max_edges: int | None):
+    """The degraded tier: a cluster-side distinct, then one bounded
+    collect. Rows are sorted here too (collect order is partition-
+    dependent; consumers like the vectorized cooc pair counting rely on
+    contiguous sorted groups)."""
     rows = _collected_edges(raw_df.distinct(), cols, max_edges)
-    # honor the SORTED contract on the degraded tier too (collect order
-    # is partition-dependent; consumers like the vectorized cooc pair
-    # counting rely on contiguous sorted groups)
     return None if rows is None else sorted(rows)
 
 
@@ -274,8 +295,8 @@ def _duckdb_round6(x):
 
 
 def graph_edges_raw(triples: DataFrame) -> DataFrame:
-    """graph_edges WITHOUT the final distinct — the raw tier of
-    _collected_dedup (the dedup runs vectorized on the driver). The
+    """graph_edges WITHOUT the final distinct — the raw frame of the
+    gate's directed view (the dedup runs vectorized on the driver). The
     distributed plans keep using graph_edges."""
     return (
         triples.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
@@ -299,17 +320,14 @@ def entity_degrees(
     from gliner_spark.cache import forward_caches
 
     # r7 pass 3: below the node bound both role aggregates replay as
-    # pyarrow group_bys over ONE raw Arrow collect and merge in a dict
-    # (the full-outer join + fills in python; all-integer output)
+    # pyarrow group_bys over the frame's raw spo view (the edge
+    # snapshot) and merge in a dict (the full-outer join + fills in
+    # python; all-integer output)
     bound = (
         GRAPH_DRIVER_MAX_EDGES if driver_max_edges is None
         else driver_max_edges
     )
-    tbl = None
-    if bound > 0:
-        tbl = _arrow_collect_bounded(
-            triples.select("subj", "pred", "obj"), RAW_COLLECT_CAP
-        )
+    tbl = view_table(triples, "spo") if bound > 0 else None
     if tbl is not None:
         out_t = tbl.group_by(["subj"]).aggregate(
             [("pred", "count_distinct"), ([], "count_all")]
@@ -385,9 +403,7 @@ def two_hop_paths(
     from gliner_spark.metrics import attach_audits, capped_filter
 
     e = graph_edges(triples)
-    erows = _collected_dedup(
-        graph_edges_raw(triples), ("src", "dst"), driver_max_edges
-    )
+    erows = edge_rows(triples, "directed", driver_max_edges)
     if erows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): hop join replay with
         # the audited mid-node out-fanout cap, exact integer counts
@@ -466,9 +482,7 @@ def entity_components(
     if cfg is None:
         cfg = PipelineConfig()
     e = graph_edges(triples)
-    erows = _collected_dedup(
-        graph_edges_raw(triples), ("src", "dst"), driver_max_edges
-    )
+    erows = edge_rows(triples, "directed", driver_max_edges)
     if erows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): the node set here IS
         # the edge endpoints, so one bounded edge collect feeds the same
@@ -678,9 +692,7 @@ def pagerank(
         raise ValueError("personalized + dangling redistribution is not "
                          "defined here; pick one")
     if not reliable_checkpoint:
-        erows = _collected_dedup(
-            graph_edges_raw(triples), ("src", "dst"), driver_max_edges
-        )
+        erows = edge_rows(triples, "directed", driver_max_edges)
         if erows is not None:
             # driver path (GRAPH_DRIVER_MAX_EDGES gate): the bigint
             # PageRank rounds replayed exactly (DIV == // for the
@@ -865,8 +877,8 @@ def pagerank(
 
 
 def undirected_edges_raw(triples: DataFrame) -> DataFrame:
-    """undirected_edges WITHOUT the final distinct — the raw tier of
-    _collected_dedup (driver-side vectorized dedup)."""
+    """undirected_edges WITHOUT the final distinct — the raw frame of
+    the gate's undirected view (driver-side vectorized dedup)."""
     return graph_edges_raw(triples).select(
         F.least("src", "dst").alias("a"),
         F.greatest("src", "dst").alias("b"),
@@ -911,9 +923,7 @@ def triangle_counts(
     from gliner_spark.metrics import attach_audits, capped_filter
 
     if und is None:
-        rows = _collected_dedup(
-            undirected_edges_raw(triples), ("a", "b"), driver_max_edges
-        )
+        rows = edge_rows(triples, "undirected", driver_max_edges)
         if rows is not None:
             # driver path (GRAPH_DRIVER_MAX_EDGES gate): _tri_driver is
             # the audited-cap compact-forward replay
@@ -982,9 +992,7 @@ def clustering_coefficients(
     from gliner_spark.cache import attach_caches, forward_caches
     from gliner_spark.metrics import attach_audits
 
-    rows = _collected_dedup(
-        undirected_edges_raw(triples), ("a", "b"), driver_max_edges
-    )
+    rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): triangle replay +
         # degree/capped bookkeeping in python; the one double division is
@@ -1109,9 +1117,7 @@ def node_similarity(
     from gliner_spark.cache import attach_caches, forward_caches
     from gliner_spark.metrics import attach_audits, capped_filter
 
-    rows = _collected_dedup(
-        undirected_edges_raw(triples), ("a", "b"), driver_max_edges
-    )
+    rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): full-neighborhood
         # wedge counting with the audited pivot cap; the Jaccard double
@@ -1244,9 +1250,7 @@ def kcore(
     depth equals the longest chain of cascading removals, not |V|."""
     from gliner_spark.cache import forward_caches
 
-    erows = _collected_dedup(
-        undirected_edges_raw(triples), ("a", "b"), driver_max_edges
-    )
+    erows = edge_rows(triples, "undirected", driver_max_edges)
     if erows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): the same confluent
         # peel over one bounded edge collect, including the bounded-round
@@ -1352,9 +1356,7 @@ def link_prediction(
     from gliner_spark.cache import attach_caches, forward_caches
     from gliner_spark.metrics import attach_audits, capped_filter
 
-    rows = _collected_dedup(
-        undirected_edges_raw(triples), ("a", "b"), driver_max_edges
-    )
+    rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): RA wedges with the
         # audited pivot cap, non-edge filter, integer micro-unit scores,
@@ -1494,9 +1496,7 @@ def bfs_distances(
     the plan is a fixed pipeline, not a data-dependent recursion."""
     from gliner_spark.cache import forward_caches
 
-    erows = _collected_dedup(
-        graph_edges_raw(triples), ("src", "dst"), driver_max_edges
-    )
+    erows = edge_rows(triples, "directed", driver_max_edges)
     if erows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): multi-source
         # directed BFS replay over one bounded edge collect
@@ -1609,9 +1609,7 @@ def lpa_communities(
 
     own_und = None
     if und is None:
-        rows = _collected_dedup(
-            undirected_edges_raw(triples), ("a", "b"), driver_max_edges
-        )
+        rows = edge_rows(triples, "undirected", driver_max_edges)
         if rows is not None:
             # driver path (GRAPH_DRIVER_MAX_EDGES gate): _lpa_driver is
             # the exact synchronous-LPA replay over one bounded collect
@@ -1699,9 +1697,7 @@ def partition_modularity(
     candidates."""
     from gliner_spark.cache import forward_caches
 
-    rows = _collected_dedup(
-        undirected_edges_raw(triples), ("a", "b"), driver_max_edges
-    )
+    rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): LPA + the exact
         # integer modularity decomposition over one bounded edge collect;
@@ -2084,9 +2080,7 @@ def ktruss(
     from gliner_spark.cache import forward_caches
     from gliner_spark.metrics import attach_audits, capped_filter
 
-    erows = _collected_dedup(
-        undirected_edges_raw(triples), ("a", "b"), driver_max_edges
-    )
+    erows = edge_rows(triples, "undirected", driver_max_edges)
     if erows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate) — _ktruss_driver
         # replays the audited peel; per-round cap audits ride the output
@@ -2195,13 +2189,7 @@ def metapath_counts(
     # metapath predicates' edges (all-integer output; per-step audit
     # frames keep skew_metrics working). The capped join chain
     # (unchanged) is the scale path above it.
-    rows = _collected_dedup(
-        triples.filter(F.col("pred").isin(list(preds))).select(
-            "subj", "pred", "obj"
-        ),
-        ("subj", "pred", "obj"),
-        driver_max_edges,
-    )
+    rows = edge_rows(triples, "preds", driver_max_edges, preds)
     if rows is not None:
         from collections import Counter
 
@@ -2330,9 +2318,7 @@ def wl_colors(
     from gliner_spark.cache import forward_caches
     from gliner_spark.functions.text import FOLD_M, P31, fold_hash
 
-    rows = _collected_dedup(
-        undirected_edges_raw(triples), ("a", "b"), driver_max_edges
-    )
+    rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): the refinement hash
         # is pure bigint arithmetic — replayed exactly (fold_hash of the
@@ -2433,9 +2419,7 @@ def degree_histogram(
     # r7 pass 3: bucket index = bit_length - 1 == length(bin(d)) - 1
     # exactly; the replay is one collected-edge degree counter plus an
     # all-integer bucket fold
-    rows = _collected_dedup(
-        undirected_edges_raw(triples), ("a", "b"), driver_max_edges
-    )
+    rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
         deg: dict = {}
         for a, b_ in rows:
@@ -2556,11 +2540,11 @@ def _audit_frame(spark, audit: dict):
 
 
 def _seed_bfs_matrix(adj, seeds, depth: int):
-    """Vectorized _seed_bfs_driver: (nodes, D) with D[i, j] the
+    """Driver replay of _seed_bfs: (nodes, D) with D[i, j] the
     first-reach distance of nodes[j] from seeds[i] (-1 unreached) — a
-    CSR numpy level-synchronous BFS, value-identical to the dict replay
-    (first reach == min dist is order-independent). The per-node python
-    loop was ~0.8 s of every seed-BFS-consuming driver path at sf0.1."""
+    CSR numpy level-synchronous BFS (first reach == min dist is
+    order-independent). It replaced a per-node python loop that was
+    ~0.8 s of every seed-BFS-consuming driver path at sf0.1."""
     import numpy as np
 
     nodes = list(adj)
@@ -2599,28 +2583,6 @@ def _seed_bfs_matrix(adj, seeds, depth: int):
             dist[nbrs] = d
             front = nbrs
     return nodes, D
-
-
-def _seed_bfs_driver(adj, seeds, depth: int) -> dict:
-    """{(seed, node): first-reach dist} per-seed BFS to `depth` — the
-    pure-python replay of _seed_bfs for driver-gated small graphs."""
-    out = {}
-    for s in seeds:
-        dist = {s: 0}
-        frontier = [s]
-        for d in range(1, depth + 1):
-            nxt = []
-            for u in frontier:
-                for v in adj[u]:
-                    if v not in dist:
-                        dist[v] = d
-                        nxt.append(v)
-            if not nxt:
-                break
-            frontier = nxt
-        for node, d in dist.items():
-            out[(s, node)] = d
-    return out
 
 
 def _seed_bfs(triples: DataFrame, n_seeds: int, depth: int) -> DataFrame:
@@ -2711,9 +2673,7 @@ def harmonic_centrality(
     materialized)."""
     from gliner_spark.cache import attach_caches, forward_caches
 
-    rows = _collected_dedup(
-        undirected_edges_raw(triples), ("a", "b"), driver_max_edges
-    )
+    rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): one bounded collect
         # of the distinct undirected edges, integer BFS + harmonic sums
@@ -2789,9 +2749,7 @@ def hits(
     if rounds < 1:
         raise ValueError("hits needs rounds >= 1 (0 rounds would have "
                          "no authority scores to return)")
-    erows = _collected_dedup(
-        graph_edges_raw(triples), ("src", "dst"), driver_max_edges
-    )
+    erows = edge_rows(triples, "directed", driver_max_edges)
     if erows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): the integer HITS
         # rounds replayed exactly ((UNIT * s) DIV max == // for nonneg,
@@ -2950,9 +2908,7 @@ def square_counts(
     from gliner_spark.cache import forward_caches
     from gliner_spark.metrics import attach_audits, capped_filter
 
-    rows = _collected_dedup(
-        undirected_edges_raw(triples), ("a", "b"), driver_max_edges
-    )
+    rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): diagonal-wedge
         # square counting with the audited pivot cap, exact integers
@@ -3025,10 +2981,13 @@ STRESS_DEPTH = 4
 
 
 def _stress_driver_np(adj, seeds, depth: int) -> dict:
-    """Vectorized _stress_driver: the same per-seed two-phase Brandes
-    over a CSR adjacency with np.add.at accumulation — all int64, value-
-    identical (sigma sums and g sums are order-independent integer
-    additions)."""
+    """{node: [stress_sum, n_seeds_reached]} — per-seed two-phase
+    Brandes with integer path counts, the driver replay of
+    stress_centrality's distributed plan (sigma = sum of level-(d-1)
+    predecessor sigmas; g = 1 + sum of g over one-level-deeper
+    neighbors; through = sigma * (g - 1) for dist >= 1), over a CSR
+    adjacency with np.add.at accumulation — all int64 (sigma sums and
+    g sums are order-independent integer additions)."""
     import numpy as np
 
     nodes = list(adj)
@@ -3098,54 +3057,6 @@ def _stress_driver_np(adj, seeds, depth: int) -> dict:
     }
 
 
-def _stress_driver(adj, seeds, depth: int) -> dict:
-    """{node: [stress_sum, n_seeds_reached]} — per-seed two-phase
-    Brandes with integer path counts, the driver replay of the
-    distributed plan below (sigma = sum of level-(d-1) predecessor
-    sigmas; g = 1 + sum of g over one-level-deeper neighbors; through =
-    sigma * (g - 1) for dist >= 1)."""
-    stress: dict = {}
-    for s in seeds:
-        dist = {s: 0}
-        sigma = {s: 1}
-        levels = [[s]]
-        frontier = [s]
-        for d in range(1, depth + 1):
-            nxt = []
-            for u in frontier:
-                su = sigma[u]
-                for v in adj[u]:
-                    dv = dist.get(v)
-                    if dv is None:
-                        dist[v] = d
-                        sigma[v] = su
-                        nxt.append(v)
-                    elif dv == d:
-                        sigma[v] += su
-            if not nxt:
-                break
-            levels.append(nxt)
-            frontier = nxt
-        g: dict = {}
-        for li in range(len(levels) - 1, -1, -1):
-            for v in levels[li]:
-                gv = 1
-                for w in adj[v]:
-                    if dist.get(w) == li + 1:
-                        gv += g[w]
-                g[v] = gv
-        for li in range(1, len(levels)):
-            for v in levels[li]:
-                thr = sigma[v] * (g[v] - 1)
-                e = stress.get(v)
-                if e is None:
-                    stress[v] = [thr, 1]
-                else:
-                    e[0] += thr
-                    e[1] += 1
-    return stress
-
-
 def stress_centrality(
     triples: DataFrame,
     n_seeds: int = STRESS_SEEDS,
@@ -3195,12 +3106,10 @@ def stress_centrality(
 
     from gliner_spark.cache import attach_caches
 
-    rows = _collected_dedup(
-        undirected_edges_raw(triples), ("a", "b"), driver_max_edges
-    )
+    rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): pure-integer Brandes
-        # replay over one bounded edge collect (_stress_driver)
+        # replay over the undirected edge view (_stress_driver_np)
         adj = _adj_from_und(rows)
         seeds = _driver_seeds(adj, n_seeds)
         st = _stress_driver_np(adj, seeds, depth)
@@ -3343,9 +3252,7 @@ def distance_profile(
     unrolled levels and the permille division exactly."""
     from gliner_spark.cache import attach_caches, forward_caches
 
-    rows = _collected_dedup(
-        undirected_edges_raw(triples), ("a", "b"), driver_max_edges
-    )
+    rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate) — same BFS replay as
         # harmonic_centrality; the histogram/cumulative/permille are
@@ -3423,9 +3330,7 @@ def assortativity(
     # division is NOT replayed — the moment row goes back as a local
     # relation and the SAME when/round expression below emits the
     # coefficient, so the bits cannot drift
-    rows = _collected_dedup(
-        undirected_edges_raw(triples), ("a", "b"), driver_max_edges
-    )
+    rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
         deg: dict = {}
         for a, b in rows:
@@ -3536,9 +3441,7 @@ def pred_association(
     # pred) rows arrive sorted, per-subject pred lists are ascending
     # slices, pairs via triu gathers + np.unique, lift raw double with
     # the same F.round applied back in Spark
-    sp_rows = _collected_dedup(
-        triples.select("subj", "pred"), ("subj", "pred"), driver_max_edges
-    )
+    sp_rows = edge_rows(triples, "sp", driver_max_edges)
     if sp_rows is not None:
         import numpy as np
 
@@ -3727,9 +3630,7 @@ def triad_census(
     from gliner_spark.cache import attach_caches, forward_caches
     from gliner_spark.metrics import attach_audits, capped_filter
 
-    erows = _collected_dedup(
-        graph_edges_raw(triples), ("src", "dst"), driver_max_edges
-    )
+    erows = edge_rows(triples, "directed", driver_max_edges)
     if erows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): _triad_driver
         # replays the capped compact-forward enumeration + direction
@@ -4052,11 +3953,7 @@ def egonet(
     windows, no fan-out beyond the facts already in the neighborhood."""
     from gliner_spark.cache import forward_caches
 
-    frows = _collected_dedup(
-        triples.select("subj", "pred", "obj"),
-        ("subj", "pred", "obj"),
-        driver_max_edges,
-    )
+    frows = edge_rows(triples, "spo", driver_max_edges)
     if frows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): BFS distances +
         # both endpoint joins replayed over one bounded collect of the
@@ -4127,11 +4024,7 @@ def summary_graph(
     from gliner_spark.cache import forward_caches
     from gliner_spark.functions.text import FOLD_M, P31, fold_hash
 
-    erows = _collected_dedup(
-        triples.select("subj", "pred", "obj"),
-        ("subj", "pred", "obj"),
-        driver_max_edges,
-    )
+    erows = edge_rows(triples, "spo", driver_max_edges)
     if erows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): WL colors + the
         # closed-form isolate fallback + quotient aggregation replayed

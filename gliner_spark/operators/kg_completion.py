@@ -192,6 +192,9 @@ def _positive_cols(triples: DataFrame, driver_max_rows: int | None):
     )
     if rows is None:
         return None
+    # collect order is partition-dependent: sort like the Arrow tier
+    # ((subj, pred, obj) is the group key, so it orders every row)
+    rows.sort(key=lambda r: r[:3])
     return (
         [r[0] for r in rows],
         [r[1] for r in rows],
@@ -653,19 +656,16 @@ def walk_corpus(
     adjacency co-shuffle on the node key each hop. An undirected edge
     guarantees every reached node has a non-empty pool, so walks never
     dead-end."""
+    from gliner_spark.gate import edge_rows
     from gliner_spark.operators.graph_analytics import (
         _adj_from_und,
-        _collected_dedup,
         _fold_hash_many,
         _fold_hash_py,
         undirected_edges,
-        undirected_edges_raw,
     )
 
     und = undirected_edges(triples)
-    rows = _collected_dedup(
-        undirected_edges_raw(triples), ("a", "b"), driver_max_edges
-    )
+    rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): the bounded pools
         # and fold-hash walk steps replayed exactly (pmod == % for the
@@ -823,17 +823,11 @@ RULE_MIN_CONF_PERMILLE = 500  # inference threshold: conf >= 50.0%
 
 
 def _rule_edge_rows(triples: DataFrame, driver_max_rows: int | None):
-    """Bounded collect of the distinct non-loop edges (subj, pred, obj)
-    — the shared driver-gate entry of mine_rules / apply_rules."""
-    from gliner_spark.operators.graph_analytics import _collected_dedup
+    """The distinct non-loop edges (subj, pred, obj), bounded — the
+    shared driver-gate entry of mine_rules / apply_rules."""
+    from gliner_spark.gate import edge_rows
 
-    return _collected_dedup(
-        triples.filter(F.col("subj") != F.col("obj")).select(
-            "subj", "pred", "obj"
-        ),
-        ("subj", "pred", "obj"),
-        driver_max_rows,
-    )
+    return edge_rows(triples, "spo_nonloop", driver_max_rows)
 
 
 def mine_rules(

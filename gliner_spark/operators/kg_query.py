@@ -39,20 +39,16 @@ def _is_var(term: str) -> bool:
 
 
 def _pattern_edge_index(triples: DataFrame, all_atoms, driver_max_rows):
-    """Driver-gate entry of conjunctive_match / optional_match: one
-    bounded collect of the distinct (subj, pred, obj) edges restricted
-    to the pattern's constant predicates. Returns {pred: [(s, o), ...]}
-    or None (caller keeps the distributed plan)."""
-    from gliner_spark.operators.graph_analytics import _collected_dedup
+    """Driver-gate entry of conjunctive_match / optional_match: the
+    distinct (subj, pred, obj) edges restricted to the pattern's
+    constant predicates (the gate's predicate view: derived from the
+    frame's edge snapshot if one exists, else one bounded collect).
+    Returns {pred: [(s, o), ...]} or None (caller keeps the distributed
+    plan)."""
+    from gliner_spark.gate import edge_rows
 
     preds = sorted({p for _s, p, _o in all_atoms if not _is_var(p)})
-    rows = _collected_dedup(
-        triples.filter(F.col("pred").isin(preds)).select(
-            "subj", "pred", "obj"
-        ),
-        ("subj", "pred", "obj"),
-        driver_max_rows,
-    )
+    rows = edge_rows(triples, "preds", driver_max_rows, preds)
     if rows is None:
         return None
     idx: dict = {}

@@ -226,18 +226,12 @@ def rpq_match(
     # visited product-state budget is exceeded (see _rpq_driver). The
     # distributed unroll below is unchanged — the 100 TB path, and the
     # fallback for dense expressions.
-    from gliner_spark.operators.graph_analytics import (
-        _collected_dedup,
-        _local_df,
-    )
+    from gliner_spark.gate import edge_rows
+    from gliner_spark.operators.graph_analytics import _local_df
 
     cap = RPQ_STATE_CAP if state_cap is None else state_cap
     if cap > 0 and max_hops >= 1:
-        erows = _collected_dedup(
-            triples.select("subj", "pred", "obj"),
-            ("subj", "pred", "obj"),
-            driver_max_edges,
-        )
+        erows = edge_rows(triples, "spo", driver_max_edges)
         if erows is not None:
             data = _rpq_driver(
                 erows, transitions, accepting, max_hops, cap
