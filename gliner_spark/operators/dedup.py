@@ -27,8 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gliner_spark.operators.graph_analytics import _local_df
-
+from gliner_spark import gate
+from gliner_spark.cache import attach_caches, forward_caches
 from gliner_spark.functions.text import (
     MINHASH_BANDS,
     MINHASH_ROWS,
@@ -36,6 +36,8 @@ from gliner_spark.functions.text import (
     affine_hash,
     token_id_array,
 )
+from gliner_spark.gate import local_result
+from gliner_spark.metrics import attach_audits, audits_of, capped_filter
 
 MAX_BUCKET = 200  # LSH band-bucket cap (candidate-pair skew guard)
 
@@ -108,8 +110,6 @@ def _candidate_pairs_from_ids(staged: DataFrame) -> DataFrame:
     The bucket cap is AUDITED, not silent: a 1-row audit aggregate of
     dropped over-cap rows rides the returned frame (metrics.capped_filter;
     read with metrics.skew_metrics — one cached-scan agg job)."""
-    from gliner_spark.metrics import attach_audits, capped_filter
-
     buckets = _band_buckets(_signatures_from_ids(staged))
     w = Window.partitionBy("band", "bkey")
     buckets, audit = capped_filter(
@@ -163,18 +163,6 @@ def _jaccard_verify(
         .select("doc_a", "doc_b", "jaccard")
     )
     return out.orderBy("doc_a", "doc_b") if sort else out
-
-
-import os as _os
-
-# r7 adaptive small-corpus gate (the SIM_DRIVER_MAX_VECTORS design for
-# token-set dedup): at or below this many documents the minhash banding /
-# bucket cap / exact-Jaccard verify runs on the driver from one bounded
-# collect of the SPARK-computed token-id arrays (token hashing stays
-# engine-exact by construction); the Jaccard double is the same
-# int/int IEEE division in python. 0 disables; distributed plan
-# unchanged above the bound.
-DD_DRIVER_MAX_DOCS = int(_os.environ.get("GS_DD_DRIVER_MAX_DOCS", "20000"))
 
 
 def _minhash_driver_pairs(rows, threshold: float):
@@ -244,38 +232,24 @@ def minhash_dedup(
     stage's exploded item sets (explode of array_distinct — already unique
     per doc, so no distinct shuffle either). The corpus text is scanned
     exactly once in the physical plan."""
-    from gliner_spark.cache import attach_caches
-    from gliner_spark.metrics import attach_audits
-
-    bound = DD_DRIVER_MAX_DOCS if driver_max_docs is None else driver_max_docs
-    if bound > 0:
-        from gliner_spark.operators.graph_analytics import _collected_edges
-
-        rows = _collected_edges(
-            staged_token_ids(docs), ("doc_id", "_ids"), bound
+    # r7 adaptive small-corpus gate (gate.DD_DRIVER_MAX_DOCS): the minhash
+    # banding / bucket cap / exact-Jaccard verify runs on the driver from
+    # one bounded collect of the SPARK-computed token-id arrays (token
+    # hashing stays engine-exact by construction); the Jaccard double is
+    # the same int/int IEEE division in python
+    rows = gate.collect_rows(
+        staged_token_ids(docs), ("doc_id", "_ids"), driver_max_docs, "docs"
+    )
+    if rows is not None:
+        data, audit = _minhash_driver_pairs(rows, threshold)
+        # doc id type follows the input table (bigint in the fixture
+        # corpora; string in kg chains)
+        id_t = dict(docs.dtypes)["doc_id"]
+        return local_result(
+            docs, data, f"doc_a {id_t}, doc_b {id_t}, jaccard double",
+            ["doc_a", "doc_b"] if sort else (), audits=[audit],
+            forward=False,
         )
-        if rows is not None:
-            spark = docs.sparkSession
-            data, audit = _minhash_driver_pairs(rows, threshold)
-            # doc id type follows the input table (bigint in the
-            # fixture corpora; string in kg chains)
-            id_t = dict(docs.dtypes)["doc_id"]
-            out = _local_df(spark,
-                data, f"doc_a {id_t}, doc_b {id_t}, jaccard double"
-            )
-            if sort:
-                out = out.orderBy("doc_a", "doc_b")
-            audit_df = _local_df(spark,
-                [
-                    (
-                        audit["guard"], audit["n_dropped_rows"],
-                        audit["max_group_size"], audit["cap"],
-                    )
-                ],
-                "guard string, n_dropped_rows long, max_group_size long, "
-                "cap long",
-            )
-            return attach_audits(out, audit_df)
     staged = staged_token_ids(docs).persist()
     ids = staged.select(
         "doc_id", F.explode(F.array_distinct("_ids")).alias("item")
@@ -322,8 +296,6 @@ def ngram_jaccard_dedup(
     gone; only the verify-stage intersection join shuffles. ONE tokenize
     pass: the staged id arrays feed both the gram explode and the LSH
     candidate stage (persisted at the branch point)."""
-    from gliner_spark.cache import attach_caches
-
     if n != 3:  # a bare assert would be stripped under python -O
         raise ValueError("gram fold below is specialized for n=3")
     staged = staged_token_ids(docs).persist()
@@ -343,8 +315,6 @@ def ngram_jaccard_dedup(
     grams = staged.select("doc_id", F.explode(grams_arr).alias("item"))
     pairs = _candidate_pairs_from_ids(staged)
     out = attach_caches(_jaccard_verify(pairs, grams, threshold), staged)
-    from gliner_spark.metrics import attach_audits
-
     return attach_audits(out, pairs)
 
 
@@ -374,8 +344,6 @@ def duplicate_clusters(
     cfg threads the CC knobs (cc_driver_max_nodes, cc_max_iterations,
     cc_reliable_checkpoint for executor-loss survival on a real cluster);
     None = defaults."""
-    from gliner_spark.cache import forward_caches
-    from gliner_spark.metrics import attach_audits
     from gliner_spark.operators.linking import closure_clusters
 
     # sort=False: the pair list feeds straight into CC's shuffle — the
@@ -453,7 +421,6 @@ def winnow_overlap_pairs(
     no pair information worth C(cap,2) join rows), then one equi-join
     on fp and a grouped count. Never an all-pairs product; output is
     bounded by C(bucket_cap, 2) rows per fingerprint."""
-    from gliner_spark.metrics import attach_audits, capped_filter
     from gliner_spark.operators.text_analysis import (
         _winnow_fps_driver,
         _winnow_gram_rows,
@@ -471,15 +438,11 @@ def winnow_overlap_pairs(
         pair_rows, audit = _winnow_pairs_driver(
             grows, min_shared, bucket_cap
         )
-        spark = docs.sparkSession
         id_t = dict(docs.dtypes)["doc_id"]
-        from gliner_spark.operators.graph_analytics import _audit_frame
-
-        out = _local_df(spark,
-            pair_rows,
-            f"doc_a {id_t}, doc_b {id_t}, n_shared long",
-        ).orderBy("doc_a", "doc_b")
-        return attach_audits(out, _audit_frame(spark, audit))
+        return local_result(
+            docs, pair_rows, f"doc_a {id_t}, doc_b {id_t}, n_shared long",
+            ["doc_a", "doc_b"], audits=[audit], forward=False,
+        )
     inv = (
         winnow_fingerprints(docs, sort=False)
         .select("doc_id", "fp")
@@ -529,8 +492,6 @@ def containment_pairs(
     Verification cost is bounded by |pairs| x grams(doc), never
     corpus x corpus. The dd_containment oracle replays candidates and
     verifier bit-for-bit."""
-    from gliner_spark.cache import attach_caches
-    from gliner_spark.metrics import attach_audits, audits_of
     from gliner_spark.operators.text_analysis import (
         WINNOW_K,
         _winnow_gram_rows,
@@ -557,17 +518,14 @@ def containment_pairs(
             if max(ca, cb) >= min_permille:
                 data.append((a, b, inter, len(sa), len(sb), ca, cb))
         data.sort()
-        spark = docs.sparkSession
         id_t = dict(docs.dtypes)["doc_id"]
-        from gliner_spark.operators.graph_analytics import _audit_frame
-
-        out = _local_df(spark,
-            data,
+        return local_result(
+            docs, data,
             f"doc_a {id_t}, doc_b {id_t}, n_shared_grams long, "
             "n_grams_a long, n_grams_b long, "
             "contain_a_permille long, contain_b_permille long",
-        ).orderBy("doc_a", "doc_b")
-        return attach_audits(out, _audit_frame(spark, audit))
+            ["doc_a", "doc_b"], audits=[audit], forward=False,
+        )
     cand = winnow_overlap_pairs(docs, min_shared, bucket_cap)
     pairs = cand.select("doc_a", "doc_b")
     post = gram_postings(docs).select("doc_id", "gh").distinct().persist()
@@ -649,8 +607,6 @@ def duplicated_substring_spans(
     Determinism: positions and counts are exact integers; the islands
     flag uses lag() with a NULL-start (both engines send the first
     position to a new island)."""
-    from gliner_spark.cache import forward_caches
-
     toks = docs.select("doc_id", F.split("text", " ").alias("_t"))
     n = F.size("_t")
     pg = (
@@ -773,9 +729,6 @@ def blocking_quality(
     Determinism: counts are exact integers; Jaccard doubles are formed
     identically in both engines; permilles are integer floor
     divisions."""
-    from gliner_spark.cache import attach_caches
-    from gliner_spark.metrics import attach_audits, audits_of
-
     if item_space not in ("token", "shingle"):
         raise ValueError(f"unknown item_space {item_space!r}")
     sample = docs.orderBy("doc_id").limit(sample_n).select("doc_id", "text")

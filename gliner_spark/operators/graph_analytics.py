@@ -20,7 +20,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gliner_spark.gate import edge_rows, view_table
+from gliner_spark import gate
+from gliner_spark.cache import attach_caches, forward_caches
+from gliner_spark.gate import (
+    edge_rows,
+    graph_edges_raw,
+    local_result,
+    undirected_edges_raw,
+    view_table,
+)
+from gliner_spark.metrics import attach_audits, capped_filter
 
 PR_UNIT = 1_000_000   # rank micro-units (1.0 == 1e6)
 PR_DAMP = 850         # damping * 1000
@@ -28,184 +37,13 @@ PR_ITERS = 3
 TWO_HOP_MAX_FANOUT = 64
 
 # r7 adaptive small-graph gate (the _cc_driver design generalized): at or
-# below this many DISTINCT edges the iterative centrality/community
-# operators run their loop on the driver — arithmetic-identical
-# pure-integer replays, parity-tested against the distributed plans,
-# which remain the >bound (100 TB) path. The operators over a triples
-# frame share ONE bounded collect per frame (gliner_spark/gate.py: the
-# driver edge snapshot) and derive their edge view from it. Env-tunable
-# for clusters with small drivers; 0 disables every driver path.
-import os as _os
-
-GRAPH_DRIVER_MAX_EDGES = int(
-    _os.environ.get("GS_GRAPH_DRIVER_MAX_EDGES", "500000")
-)
-
-
-# raw-tier cap for _collected_dedup and the gate's edge snapshot: collect
-# at most this many PRE-distinct rows before degrading to the cluster-side
-# distinct tier (bounds the extra driver memory of the raw tier; the GATE
-# condition — distinct rows <= bound — is unchanged either way)
-RAW_COLLECT_CAP = int(
-    _os.environ.get("GS_GRAPH_RAW_COLLECT_CAP", "1000000")
-)
-
-# plan-stats short-circuit for _arrow_collect_bounded: inputs whose
-# Catalyst size estimate exceeds this skip the probe count entirely and
-# go straight to the fallback tier (at petabyte scale the raw tier can
-# never fire, so not even a count should be spent on it)
-STATS_SKIP_BYTES = int(
-    _os.environ.get("GS_DRIVER_STATS_SKIP_BYTES", str(1 << 30))
-)
-
-
-def _arrow_collect_bounded(df: DataFrame, cap: int, over=None):
-    """Bounded Arrow collect of a RAW (pre-aggregate) frame: pyarrow
-    table if the frame has <= cap rows, else None (caller degrades to
-    its aggregate-then-collect tier). `over`, if given, is called with
-    an over-cap table before it is dropped (the edge snapshot keeps its
-    row counts, so the frame is never collected again).
-
-    Replaces limit(cap+1).toArrow() at the raw-tier collect sites:
-    CollectLimit funnels the rows through a driver-side row->Arrow
-    conversion, measured 2-4x slower than the executor-side Arrow
-    batches a plain toArrow() streams (A/B'd per operator; e.g. degree
-    1.0 -> 0.67 s, cooc 1.48 -> 1.17 s walls at sf0.1). Memory safety
-    is layered: (1) a Catalyst plan-stats probe skips inputs whose
-    KNOWN size estimate exceeds STATS_SKIP_BYTES without running any
-    job (file scans report real bytes, so the petabyte path never
-    collects; Long.MaxValue is the 'unknown' sentinel, not huge);
-    (2) Spark's own spark.driver.maxResultSize (default 1g) aborts a
-    runaway collect -> caught -> fallback tier; (3) the exact row cap
-    is still enforced on the collected table, so downstream tier
-    conditions are unchanged."""
-    try:
-        # sum the plan's LEAF sizes, not the top-level estimate: join
-        # plans multiply row guesses into garbage (a ~30 MB chain join
-        # reported 1.2e15 bytes) while leaves are trustworthy — file
-        # scans report real bytes, cached relations their materialized
-        # estimate, and unknown sources the Long.MaxValue-band sentinel
-        # (ignored: unknown is not huge; the raw-tier collect frames are
-        # row-bounded projections, and a pathological fan-out is still
-        # caught by maxResultSize below). A petabyte scan's leaves carry
-        # real file bytes, so the at-scale path skips without any job.
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        total = 0
-        for i in range(leaves.size()):
-            sz = int(str(leaves.apply(i).stats().sizeInBytes()))
-            if sz < (1 << 60):
-                total += sz
-        if total > STATS_SKIP_BYTES:
-            return None
-    except Exception:
-        pass  # stats unavailable -> maxResultSize still bounds memory
-    try:
-        tbl = df.toArrow()
-    except Exception:
-        return None
-    if tbl.num_rows > cap:
-        if over is not None:
-            over(tbl)
-        return None
-    return tbl
-
-
-def _collected_dedup(raw_df: DataFrame, cols, max_edges: int | None):
-    """_collected_edges over a PRE-distinct frame: collect the raw rows
-    through Arrow, dedup + sort them vectorized on the driver
-    (pyarrow group_by), and apply the SAME distinct-row bound as
-    _collected_edges. The cluster-side `.distinct()` was 0.5-0.6s of
-    every driver-gated operator at sf0.1 (32-partition exchange + AQE
-    round) while the raw Arrow collect + C++ dedup of the same rows is
-    ~0.3s (guide §1.2: remove the shuffle outright; §6: Arrow driver
-    transfers). Rows come back SORTED (deterministic; the old collect
-    order was partition-dependent and every caller is order-insensitive).
-
-    Tiering: raw rows <= RAW_COLLECT_CAP -> dedup here; else fall back
-    to the old distinct-collect tier (same gate condition) so huge raw
-    tables never flood the driver. This is one collect per call: the
-    operators over a triples frame go through gate.edge_rows instead,
-    which serves the same tiers from ONE collect per frame."""
-    bound = GRAPH_DRIVER_MAX_EDGES if max_edges is None else max_edges
-    if bound <= 0:
-        return None
-    tbl = _arrow_collect_bounded(raw_df.select(*cols), RAW_COLLECT_CAP)
-    if tbl is not None:
-        return _sorted_distinct(tbl, cols, bound)
-    return _degraded_dedup(raw_df, cols, max_edges)
-
-
-def _sorted_distinct(tbl, cols, bound: int):
-    """The raw tier's tail: distinct rows of a collected table, sorted,
-    as row tuples, or None if more than `bound`."""
-    d = tbl.group_by(list(cols)).aggregate([])
-    if d.num_rows > bound:
-        return None
-    d = d.sort_by([(c, "ascending") for c in cols])
-    return list(zip(*(d.column(i).to_pylist() for i in range(d.num_columns))))
-
-
-def _degraded_dedup(raw_df: DataFrame, cols, max_edges: int | None):
-    """The degraded tier: a cluster-side distinct, then one bounded
-    collect. Rows are sorted here too (collect order is partition-
-    dependent; consumers like the vectorized cooc pair counting rely on
-    contiguous sorted groups)."""
-    rows = _collected_edges(raw_df.distinct(), cols, max_edges)
-    return None if rows is None else sorted(rows)
-
-
-def _local_df(spark, rows, ddl: str):
-    """spark.createDataFrame for driver-replay outputs, through a typed
-    pyarrow table (the Arrow createDataFrame path is ~2x faster than the
-    py4j tuple path even at a few thousand rows — guide §6 'Arrow for
-    driver transfers'). Bit-exact for the scalar types the replays emit
-    (string / int / long / double / boolean); any parse or conversion
-    surprise falls back to the tuple path, which is the old behavior."""
-    try:
-        import pyarrow as pa
-
-        pa_types = {
-            "string": pa.string(),
-            "int": pa.int32(),
-            "integer": pa.int32(),
-            "bigint": pa.int64(),
-            "long": pa.int64(),
-            "double": pa.float64(),
-            "boolean": pa.bool_(),
-        }
-        fields = []
-        for part in ddl.split(","):
-            name, typ = part.strip().split()
-            fields.append((name, pa_types[typ.lower()]))
-        cols = list(zip(*rows)) if rows else [[] for _ in fields]
-        tbl = pa.table(
-            {name: pa.array(list(col), type=typ)
-             for (name, typ), col in zip(fields, cols)}
-        )
-        return spark.createDataFrame(tbl)
-    except Exception:
-        return spark.createDataFrame(rows, ddl)
-
-
-def _collected_edges(df: DataFrame, cols, max_edges: int | None):
-    """One bounded collect of an edge frame: row tuples if
-    |rows| <= bound, else None (caller falls back to the distributed
-    plan). The limit caps driver memory the same way _cc_driver's edge
-    collect does. Collection goes through Arrow (DataFrame.toArrow) —
-    the py4j Row path was the dominant cost of the driver-gated
-    operators at 1e5+ rows."""
-    bound = GRAPH_DRIVER_MAX_EDGES if max_edges is None else max_edges
-    if bound <= 0:
-        return None
-    lim = df.select(*cols).limit(bound + 1)
-    try:
-        tbl = lim.toArrow()
-    except Exception:  # older Spark / arrow-incompatible schema
-        rows = lim.collect()
-        return None if len(rows) > bound else rows
-    if tbl.num_rows > bound:
-        return None
-    return list(zip(*(tbl.column(i).to_pylist() for i in range(tbl.num_columns))))
+# below the edge bound (gliner_spark/gate.py: GRAPH_DRIVER_MAX_EDGES,
+# env-tunable, 0 disables every driver path) the iterative centrality /
+# community operators run their loop on the driver — arithmetic-
+# identical pure-integer replays, parity-tested against the distributed
+# plans, which remain the >bound (100 TB) path. The operators over a
+# triples frame share ONE bounded collect per frame (the gate's driver
+# edge snapshot) and derive their edge view from it.
 
 
 def _fold_hash_py(s: str) -> int:
@@ -294,16 +132,6 @@ def _duckdb_round6(x):
     return r / F.lit(1e6)
 
 
-def graph_edges_raw(triples: DataFrame) -> DataFrame:
-    """graph_edges WITHOUT the final distinct — the raw frame of the
-    gate's directed view (the dedup runs vectorized on the driver). The
-    distributed plans keep using graph_edges."""
-    return (
-        triples.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-    )
-
-
 def graph_edges(triples: DataFrame) -> DataFrame:
     """Distinct directed (src, dst) edges from the canonical triples."""
     return graph_edges_raw(triples).distinct()
@@ -317,37 +145,22 @@ def entity_degrees(
     Two grouped aggregates (map-side partial) merged on the node id via a
     full outer join — the fact table is scanned once per direction and
     never self-joined."""
-    from gliner_spark.cache import forward_caches
-
     # r7 pass 3: below the node bound both role aggregates replay as
     # pyarrow group_bys over the frame's raw spo view (the edge
     # snapshot) and merge in a dict (the full-outer join + fills in
     # python; all-integer output)
-    bound = (
-        GRAPH_DRIVER_MAX_EDGES if driver_max_edges is None
-        else driver_max_edges
-    )
-    tbl = view_table(triples, "spo") if bound > 0 else None
+    tbl = None
+    if gate.bound(driver_max_edges) > 0:
+        tbl = view_table(triples, "spo")
     if tbl is not None:
-        out_t = tbl.group_by(["subj"]).aggregate(
-            [("pred", "count_distinct"), ([], "count_all")]
-        )
-        in_t = tbl.group_by(["obj"]).aggregate(
-            [("pred", "count_distinct"), ([], "count_all")]
-        )
-        if max(out_t.num_rows, in_t.num_rows) <= bound:
+        aggs = [("pred", "count_distinct"), ([], "count_all")]
+        out_t = gate.group(None, ["subj"], aggs, driver_max_edges, tbl)
+        in_t = gate.group(None, ["obj"], aggs, driver_max_edges, tbl)
+        if out_t is not None and in_t is not None:
             prof: dict = {}
-            for e, npred, odeg in zip(
-                out_t.column("subj").to_pylist(),
-                out_t.column("pred_count_distinct").to_pylist(),
-                out_t.column("count_all").to_pylist(),
-            ):
+            for e, npred, odeg in gate.rows(out_t):
                 prof[e] = [odeg, 0, npred, 0]
-            for e, npred, ideg in zip(
-                in_t.column("obj").to_pylist(),
-                in_t.column("pred_count_distinct").to_pylist(),
-                in_t.column("count_all").to_pylist(),
-            ):
+            for e, npred, ideg in gate.rows(in_t):
                 p = prof.setdefault(e, [0, 0, 0, 0])
                 p[1] = ideg
                 p[3] = npred
@@ -355,13 +168,12 @@ def entity_degrees(
                 (e, p[0], p[1], p[2], p[3], p[0] + p[1])
                 for e, p in prof.items()
             )
-            out = _local_df(
-                triples.sparkSession,
-                data,
+            return local_result(
+                triples, data,
                 "entity string, out_deg long, in_deg long, "
                 "n_pred_out long, n_pred_in long, degree long",
-            ).orderBy("entity")
-            return forward_caches(out, triples)
+                ["entity"],
+            )
     out = triples.groupBy(F.col("subj").alias("entity")).agg(
         F.count(F.lit(1)).alias("out_deg"),
         F.countDistinct("pred").alias("n_pred_out"),
@@ -370,8 +182,6 @@ def entity_degrees(
         F.count(F.lit(1)).alias("in_deg"),
         F.countDistinct("pred").alias("n_pred_in"),
     )
-    from gliner_spark.cache import forward_caches
-
     return forward_caches(
         out.join(inn, "entity", "full_outer")
         .na.fill(0, ["out_deg", "n_pred_out", "in_deg", "n_pred_in"])
@@ -400,8 +210,6 @@ def two_hop_paths(
     bounds the join output by |E| * max_fanout. The cap is AUDITED,
     never silent (capped-hub edge counts ride the returned frame — read
     with metrics.skew_metrics)."""
-    from gliner_spark.metrics import attach_audits, capped_filter
-
     e = graph_edges(triples)
     erows = edge_rows(triples, "directed", driver_max_edges)
     if erows is not None:
@@ -433,15 +241,10 @@ def two_hop_paths(
             "max_group_size": max_fan,
             "cap": int(max_fanout),
         }
-        spark = triples.sparkSession
-        out = _local_df(spark,
-            [(s, d, n) for (s, d), n in sorted(counts.items())],
-            "src string, dst string, n_paths long",
-        ).orderBy("src", "dst")
-        from gliner_spark.cache import forward_caches
-
-        return forward_caches(
-            attach_audits(out, _audit_frame(spark, audit)), triples
+        return local_result(
+            triples, [(s, d, n) for (s, d), n in sorted(counts.items())],
+            "src string, dst string, n_paths long", ["src", "dst"],
+            audits=[audit],
         )
     w = Window.partitionBy("src")
     ok_mid, audit = capped_filter(
@@ -457,8 +260,6 @@ def two_hop_paths(
         .agg(F.count(F.lit(1)).cast("long").alias("n_paths"))
         .orderBy("src", "dst")
     )
-    from gliner_spark.cache import forward_caches
-
     return forward_caches(attach_audits(out, audit), triples)
 
 
@@ -517,15 +318,10 @@ def entity_components(
             for c, members in comp_d.items()
             for n in members
         ]
-        from gliner_spark.cache import forward_caches
-
-        return forward_caches(
-            _local_df(triples.sparkSession,
-                data, "entity string, component string, component_size long"
-            ).orderBy(
-                F.desc("component_size"), F.asc("component"), F.asc("entity")
-            ),
-            triples,
+        return local_result(
+            triples, data,
+            "entity string, component string, component_size long",
+            [F.desc("component_size"), F.asc("component"), F.asc("entity")],
         )
     nodes = (
         e.select(F.col("src").alias("id"))
@@ -538,8 +334,6 @@ def entity_components(
     sizes = comp.groupBy("component").agg(
         F.count(F.lit(1)).cast("long").alias("component_size")
     )
-    from gliner_spark.cache import forward_caches
-
     return forward_caches(
         comp.join(sizes, "component")
         .select(
@@ -579,7 +373,6 @@ def incremental_components(
     never re-read, which is the whole point at 100 TB: a day's delta
     folds in delta time. Repeated folds compose (pytest-pinned against
     full recompute per fold)."""
-    from gliner_spark.cache import forward_caches
     from gliner_spark.config import PipelineConfig
     from gliner_spark.operators.linking import connected_components
 
@@ -697,17 +490,10 @@ def pagerank(
             # driver path (GRAPH_DRIVER_MAX_EDGES gate): the bigint
             # PageRank rounds replayed exactly (DIV == // for the
             # nonneg operands here) for all three variants
-            from gliner_spark.cache import forward_caches
-
             edges_d = [(r[0], r[1]) for r in erows]
             nodes_d = sorted({x for ed in edges_d for x in ed})
             if dangling and not nodes_d:
-                return forward_caches(
-                    _local_df(triples.sparkSession,
-                        [], "node string, rank long"
-                    ),
-                    triples,
-                )
+                return local_result(triples, [], "node string, rank long")
             od_d: dict = {}
             for u, _v in edges_d:
                 od_d[u] = od_d.get(u, 0) + 1
@@ -742,11 +528,9 @@ def pagerank(
                         n: base_d + (damping * s[n]) // 1000
                         for n in nodes_d
                     }
-            return forward_caches(
-                _local_df(triples.sparkSession,
-                    list(ranks_d.items()), "node string, rank long"
-                ).orderBy(F.desc("rank"), F.asc("node")),
-                triples,
+            return local_result(
+                triples, list(ranks_d.items()), "node string, rank long",
+                [F.desc("rank"), F.asc("node")],
             )
     e = graph_edges(triples)
     if reliable_checkpoint:
@@ -776,15 +560,8 @@ def pagerank(
         if n_nodes == 0:
             # empty edge set: the share expression would be DIV 0 (ANSI
             # raises); match the non-dangling path's empty result
-            from gliner_spark.cache import forward_caches
-
             nodes.unpersist()
-            return forward_caches(
-                _local_df(triples.sparkSession,
-                    [], "node string, rank long"
-                ),
-                triples,
-            )
+            return local_result(triples, [], "node string, rank long")
     if seed_prefix:
         _seed = F.col("node").startswith(seed_prefix)
         ranks = nodes.select(
@@ -868,21 +645,8 @@ def pagerank(
             )
     out = ranks.orderBy(F.desc("rank"), F.asc("node"))
     if dangling:
-        from gliner_spark.cache import attach_caches
-
         out = attach_caches(out, nodes)
-    from gliner_spark.cache import forward_caches
-
     return forward_caches(out, triples)
-
-
-def undirected_edges_raw(triples: DataFrame) -> DataFrame:
-    """undirected_edges WITHOUT the final distinct — the raw frame of
-    the gate's undirected view (driver-side vectorized dedup)."""
-    return graph_edges_raw(triples).select(
-        F.least("src", "dst").alias("a"),
-        F.greatest("src", "dst").alias("b"),
-    )
 
 
 def undirected_edges(triples: DataFrame) -> DataFrame:
@@ -919,9 +683,6 @@ def triangle_counts(
     `und` optionally supplies a pre-built (possibly persisted) canonical
     undirected edge set so composing operators (clustering_coefficients)
     don't re-run the same distinct-exchange twice in one query."""
-    from gliner_spark.cache import forward_caches
-    from gliner_spark.metrics import attach_audits, capped_filter
-
     if und is None:
         rows = edge_rows(triples, "undirected", driver_max_edges)
         if rows is not None:
@@ -930,12 +691,10 @@ def triangle_counts(
             counts, audit = _tri_driver(
                 {(r[0], r[1]) for r in rows}, max_fanout
             )
-            spark = triples.sparkSession
-            out = _local_df(spark,
-                sorted(counts.items()), "entity string, n_triangles long"
-            ).orderBy("entity")
-            return forward_caches(
-                attach_audits(out, _audit_frame(spark, audit)), triples
+            return local_result(
+                triples, sorted(counts.items()),
+                "entity string, n_triangles long", ["entity"],
+                audits=[audit],
             )
         und = undirected_edges(triples)
     w = Window.partitionBy("a")
@@ -989,9 +748,6 @@ def clustering_coefficients(
     triangle subplan, and the capped-pivot flag — previously the same
     distinct ran twice per query); the persist handle rides on the output
     for release_caches. Aggregates and equi-joins only."""
-    from gliner_spark.cache import attach_caches, forward_caches
-    from gliner_spark.metrics import attach_audits
-
     rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): triangle replay +
@@ -1023,23 +779,18 @@ def clustering_coefficients(
             )
             for n, nbrs in adj.items()
         ]
-        spark = triples.sparkSession
-        out = (
-            _local_df(spark,
-                data,
-                "entity string, k long, n_triangles long, _raw double, "
-                "capped boolean",
-            )
-            .select(
+        return local_result(
+            triples, data,
+            "entity string, k long, n_triangles long, _raw double, "
+            "capped boolean",
+            ["entity"],
+            select=[
                 "entity", "k", "n_triangles",
                 F.when(F.col("k") >= 2, F.round("_raw", 6))
                 .otherwise(F.lit(0.0)).alias("clustering"),
                 "capped",
-            )
-            .orderBy("entity")
-        )
-        return forward_caches(
-            attach_audits(out, _audit_frame(spark, audit)), triples
+            ],
+            audits=[audit],
         )
     und = undirected_edges(triples).persist()
     deg = (
@@ -1114,9 +865,6 @@ def node_similarity(
     aggregate and the wedge join; joins + aggregates only, one exact
     bigint division per row — the kg_node_similarity oracle replays it
     bit-for-bit."""
-    from gliner_spark.cache import attach_caches, forward_caches
-    from gliner_spark.metrics import attach_audits, capped_filter
-
     rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): full-neighborhood
@@ -1152,21 +900,16 @@ def node_similarity(
             "max_group_size": max_fan,
             "cap": int(max_fanout),
         }
-        spark = triples.sparkSession
-        out = (
-            _local_df(spark,
-                data,
-                "a string, b string, common long, k_a long, k_b long, "
-                "_raw double",
-            )
-            .select(
+        return local_result(
+            triples, data,
+            "a string, b string, common long, k_a long, k_b long, "
+            "_raw double",
+            ["a", "b"],
+            select=[
                 "a", "b", "common", "k_a", "k_b",
                 F.round("_raw", 6).alias("jaccard"),
-            )
-            .orderBy("a", "b")
-        )
-        return forward_caches(
-            attach_audits(out, _audit_frame(spark, audit)), triples
+            ],
+            audits=[audit],
         )
     und = undirected_edges(triples).persist()
     sym = und.select(
@@ -1248,8 +991,6 @@ def kcore(
     > max_rounds raises rather than returning a non-fixpoint (CC's
     convergence contract); real KGs converge in a handful of rounds —
     depth equals the longest chain of cascading removals, not |V|."""
-    from gliner_spark.cache import forward_caches
-
     erows = edge_rows(triples, "undirected", driver_max_edges)
     if erows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): the same confluent
@@ -1276,11 +1017,9 @@ def kcore(
         for a, b in eset:
             deg[a] = deg.get(a, 0) + 1
             deg[b] = deg.get(b, 0) + 1
-        return forward_caches(
-            _local_df(triples.sparkSession,
-                sorted(deg.items()), "entity string, core_degree long"
-            ).orderBy("entity"),
-            triples,
+        return local_result(
+            triples, sorted(deg.items()), "entity string, core_degree long",
+            ["entity"],
         )
     edges = undirected_edges(triples).localCheckpoint()
     prev = edges
@@ -1353,9 +1092,6 @@ def link_prediction(
     lowest-information wedges), anti-joined against the edge set to keep
     non-edges, grouped-sum scored, global top-N. Joins + aggregates
     only."""
-    from gliner_spark.cache import attach_caches, forward_caches
-    from gliner_spark.metrics import attach_audits, capped_filter
-
     rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): RA wedges with the
@@ -1390,13 +1126,10 @@ def link_prediction(
             "max_group_size": max_fan,
             "cap": int(max_fanout),
         }
-        spark = triples.sparkSession
-        out = _local_df(spark,
-            [(a, b, c, s) for (a, b), (s, c) in ranked],
+        return local_result(
+            triples, [(a, b, c, s) for (a, b), (s, c) in ranked],
             "a string, b string, common long, ra_score long",
-        )
-        return forward_caches(
-            attach_audits(out, _audit_frame(spark, audit)), triples
+            audits=[audit],
         )
     und = undirected_edges(triples).persist()
     sym = und.select(
@@ -1494,17 +1227,15 @@ def bfs_distances(
     distinct + anti-join per round over the localCheckpointed edge set
     (frontiers shrink after the expansion wave); depth is a constant, so
     the plan is a fixed pipeline, not a data-dependent recursion."""
-    from gliner_spark.cache import forward_caches
-
     erows = edge_rows(triples, "directed", driver_max_edges)
     if erows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): multi-source
         # directed BFS replay over one bounded edge collect
         dist_d = _bfs_dist_driver(erows, seed_prefix, depth)
-        out = _local_df(triples.sparkSession,
-            list(dist_d.items()), "node string, dist long"
-        ).orderBy("dist", "node")
-        return forward_caches(out, triples)
+        return local_result(
+            triples, list(dist_d.items()), "node string, dist long",
+            ["dist", "node"],
+        )
     e = graph_edges(triples).localCheckpoint()
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -1535,8 +1266,6 @@ def bfs_distances(
     for p in parts[1:]:
         allp = allp.union(p)
     dist = allp.groupBy("node").agg(F.min("dist").cast("long").alias("dist"))
-    from gliner_spark.cache import attach_caches
-
     # e / seed-level checkpoints ride the output as releasable handles
     # (ADVICE r6: loop operators should expose their surviving
     # checkpoints to release_caches instead of pinning blocks until GC)
@@ -1605,8 +1334,6 @@ def lpa_communities(
     (partition_modularity passes its own so one query runs the distinct
     once — the clustering_coefficients lesson); `sort=False` skips the
     output sort for composing consumers."""
-    from gliner_spark.cache import attach_caches, forward_caches
-
     own_und = None
     if und is None:
         rows = edge_rows(triples, "undirected", driver_max_edges)
@@ -1614,12 +1341,11 @@ def lpa_communities(
             # driver path (GRAPH_DRIVER_MAX_EDGES gate): _lpa_driver is
             # the exact synchronous-LPA replay over one bounded collect
             labels_d = _lpa_driver(_adj_from_und(rows), rounds)
-            out = _local_df(triples.sparkSession,
-                list(labels_d.items()), "entity string, community string"
+            return local_result(
+                triples, list(labels_d.items()),
+                "entity string, community string",
+                ["entity"] if sort else (),
             )
-            if sort:
-                out = out.orderBy("entity")
-            return forward_caches(out, triples)
         und = own_und = undirected_edges(triples).localCheckpoint()
     sym = und.select(
         F.col("a").alias("node"), F.col("b").alias("nbr")
@@ -1695,8 +1421,6 @@ def partition_modularity(
     as a broadcast 1-row aggregate (no driver collect); two label joins
     + three grouped aggregates, no window wider than a node's label
     candidates."""
-    from gliner_spark.cache import forward_caches
-
     rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): LPA + the exact
@@ -1729,12 +1453,12 @@ def partition_modularity(
             )
             for c, (n_nodes, d_total) in comm.items()
         ]
-        out = _local_df(triples.sparkSession,
-            data,
+        return local_result(
+            triples, data,
             "community string, n_nodes long, e_intra long, d_total long, "
             "q_contrib double",
-        ).orderBy("community")
-        return forward_caches(out, triples)
+            ["community"],
+        )
     und = undirected_edges(triples).localCheckpoint()
     # the LPA unroll is lazy (r7); this operator reads it three times
     # (both intra-edge endpoints + the degree-sum join), so materialize
@@ -1783,8 +1507,6 @@ def partition_modularity(
         )
         .orderBy("community")
     )
-    from gliner_spark.cache import attach_caches
-
     return attach_caches(forward_caches(out, triples), und, labels)
 
 
@@ -1799,8 +1521,6 @@ def schema_profile(triples: DataFrame) -> DataFrame:
     constraint mining. Single map-side-combined aggregate (distincts are
     per-group partial), no joins; deterministic (count DESC, signature)
     ordering."""
-    from gliner_spark.cache import forward_caches
-
     out = (
         triples.groupBy("subj_type", "pred", "obj_type")
         .agg(
@@ -1841,8 +1561,6 @@ def cardinality_constraints(triples: DataFrame) -> DataFrame:
     Two two-level grouped aggregates (subject side and object side),
     merged on the predicate — map-side partial throughout, no joins
     wider than |predicates| rows, exact integer permille (floor DIV)."""
-    from gliner_spark.cache import forward_caches
-
     so = triples.groupBy("pred", "subj").agg(
         F.countDistinct("obj").alias("n_obj")
     )
@@ -1906,21 +1624,14 @@ def entity_provenance(
 
     One UNION ALL of the two role projections feeding one grouped
     aggregate — a single shuffle on the entity id."""
-    from gliner_spark.cache import forward_caches
-
     # r7 pass 3: the whole card aggregates in pyarrow C++ over one raw
     # Arrow collect (count_distinct / count_all / sum / min / max —
     # UTF-8 binary min/max == Spark string min/max); gate on the
     # distinct entity count
-    bound = (
-        GRAPH_DRIVER_MAX_EDGES if driver_max_edges is None
-        else driver_max_edges
-    )
     tbl = None
-    if bound > 0:
-        tbl = _arrow_collect_bounded(
-            triples.select("doc_id", "pred", "subj", "obj"),
-            RAW_COLLECT_CAP,
+    if gate.bound(driver_max_edges) > 0:
+        tbl = gate.collect_raw(
+            triples.select("doc_id", "pred", "subj", "obj")
         )
     if tbl is not None:
         import pyarrow as pa
@@ -1934,37 +1645,26 @@ def entity_provenance(
             .rename_columns(["doc_id", "pred", "entity"])
             .append_column("as_subj", pa.array([0] * n, pa.int64())),
         ])
-        agg = sides_t.group_by(["entity"]).aggregate([
+        agg = gate.group(None, ["entity"], [
             ("doc_id", "count_distinct"),
             ([], "count_all"),
             ("as_subj", "sum"),
             ("pred", "count_distinct"),
             ("doc_id", "min"),
             ("doc_id", "max"),
-        ])
-        if agg.num_rows <= bound:
-            agg = agg.sort_by([("entity", "ascending")])
-            cols = [
-                agg.column("entity").to_pylist(),
-                agg.column("doc_id_count_distinct").to_pylist(),
-                agg.column("count_all").to_pylist(),
-                agg.column("as_subj_sum").to_pylist(),
-                agg.column("pred_count_distinct").to_pylist(),
-                agg.column("doc_id_min").to_pylist(),
-                agg.column("doc_id_max").to_pylist(),
-            ]
+        ], driver_max_edges, sides_t)
+        if agg is not None:
             data = [
                 (e, nd, nt, ns, nt - ns, np_, fd, ld)
-                for e, nd, nt, ns, np_, fd, ld in zip(*cols)
+                for e, nd, nt, ns, np_, fd, ld in gate.rows(agg)
             ]
-            out = _local_df(
-                triples.sparkSession,
-                data,
+            return local_result(
+                triples, data,
                 "entity string, n_docs long, n_triples long, "
                 "n_as_subj long, n_as_obj long, n_preds long, "
                 "first_doc string, last_doc string",
-            ).orderBy("entity")
-            return forward_caches(out, triples)
+                ["entity"],
+            )
     sides = triples.select(
         "doc_id", "pred", F.col("subj").alias("entity"),
         F.lit(1).alias("as_subj"),
@@ -2077,29 +1777,16 @@ def ktruss(
     bounded by cap * |edges|, one closure semi-join, one grouped count,
     one left join + filter; localCheckpoint per round with the previous
     round unpersisted (CC loop hygiene)."""
-    from gliner_spark.cache import forward_caches
-    from gliner_spark.metrics import attach_audits, capped_filter
-
     erows = edge_rows(triples, "undirected", driver_max_edges)
     if erows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate) — _ktruss_driver
         # replays the audited peel; per-round cap audits ride the output
         # as local 1-row frames so skew_metrics keeps working
         data, audit_dicts = _ktruss_driver(erows, k, max_rounds, max_fanout)
-        spark = triples.sparkSession
-        out = _local_df(spark,
-            data, "a string, b string, support long"
-        ).orderBy("a", "b")
-        audit_frames = [
-            _local_df(spark,
-                [(d["guard"], d["n_dropped_rows"], d["max_group_size"],
-                  d["cap"])],
-                "guard string, n_dropped_rows long, max_group_size long, "
-                "cap long",
-            )
-            for d in audit_dicts
-        ]
-        return forward_caches(attach_audits(out, *audit_frames), triples)
+        return local_result(
+            triples, data, "a string, b string, support long", ["a", "b"],
+            audits=audit_dicts,
+        )
 
     def support(edges, tag):
         w = Window.partitionBy("a")
@@ -2179,9 +1866,6 @@ def metapath_counts(
     bounded by |frontier_i| * max_fanout and a hub entity can never
     quadratically blow up the walk join. Self-loop walks (src == dst)
     are excluded at the end."""
-    from gliner_spark.cache import forward_caches
-    from gliner_spark.metrics import attach_audits, capped_filter
-
     if len(preds) < 2:
         raise ValueError("metapath needs at least 2 predicates")
     # r7: below the distinct-edge bound the audited hub-capped walk
@@ -2193,12 +1877,11 @@ def metapath_counts(
     if rows is not None:
         from collections import Counter
 
-        spark = triples.sparkSession
         by_pred: dict = {}
         for s, p, o in rows:
             by_pred.setdefault(p, []).append((s, o))
         frontier = by_pred.get(preds[0], [])
-        audit_frames = []
+        audits = []
         for k, p in enumerate(preds[1:], start=1):
             adj: dict = {}
             for s, o in by_pred.get(p, []):
@@ -2215,19 +1898,18 @@ def metapath_counts(
                 for (s, mid) in frontier
                 for nxt in ok.get(mid, ())
             ]
-            audit_frames.append(_audit_frame(spark, {
+            audits.append({
                 "guard": f"metapath_hub_cap_{k}",
                 "n_dropped_rows": n_dropped,
                 "max_group_size": max_sz,
                 "cap": int(max_fanout),
-            }))
+            })
         cnt = Counter((s, d) for s, d in frontier if s != d)
-        out = _local_df(
-            spark,
-            sorted((s, d, n) for (s, d), n in cnt.items()),
-            "src string, dst string, n_paths long",
-        ).orderBy("src", "dst")
-        return forward_caches(attach_audits(out, *audit_frames), triples)
+        return local_result(
+            triples, sorted((s, d, n) for (s, d), n in cnt.items()),
+            "src string, dst string, n_paths long", ["src", "dst"],
+            audits=audits,
+        )
     steps = [
         triples.filter(F.col("pred") == p)
         .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
@@ -2315,7 +1997,6 @@ def wl_colors(
     lists are degree-sized; a 100 TB graph's hubs make the collect_list
     large but it stays O(deg), the same bound every degree aggregate
     here already carries."""
-    from gliner_spark.cache import forward_caches
     from gliner_spark.functions.text import FOLD_M, P31, fold_hash
 
     rows = edge_rows(triples, "undirected", driver_max_edges)
@@ -2328,11 +2009,10 @@ def wl_colors(
         sizes: dict = {}
         for c in cols_d.values():
             sizes[c] = sizes.get(c, 0) + 1
-        out = _local_df(triples.sparkSession,
-            [(n, c, sizes[c]) for n, c in cols_d.items()],
-            "entity string, wl_color long, class_size long",
-        ).orderBy("entity")
-        return forward_caches(out, triples)
+        return local_result(
+            triples, [(n, c, sizes[c]) for n, c in cols_d.items()],
+            "entity string, wl_color long, class_size long", ["entity"],
+        )
     und = undirected_edges(triples).localCheckpoint()
     sym = und.select(
         F.col("a").alias("node"), F.col("b").alias("nbr")
@@ -2392,8 +2072,6 @@ def wl_colors(
         F.col("color").alias("wl_color"),
         F.count(F.lit(1)).over(w).cast("long").alias("class_size"),
     ).orderBy("entity")
-    from gliner_spark.cache import attach_caches
-
     return attach_caches(forward_caches(out, triples), und)
 
 
@@ -2414,8 +2092,6 @@ def degree_histogram(
     Plan: one symmetrized map-side-combined degree aggregate, one
     16-ish-row bucket aggregate — two shuffles total, output size
     log2(max_degree) rows at ANY corpus scale."""
-    from gliner_spark.cache import forward_caches
-
     # r7 pass 3: bucket index = bit_length - 1 == length(bin(d)) - 1
     # exactly; the replay is one collected-edge degree counter plus an
     # all-integer bucket fold
@@ -2442,13 +2118,12 @@ def degree_histogram(
             (k, 1 << k, (2 << k) - 1, v[0], v[1], v[2], v[3])
             for k, v in buckets.items()
         )
-        out = _local_df(
-            triples.sparkSession,
-            data,
+        return local_result(
+            triples, data,
             "bucket long, lo long, hi long, min_degree long, "
             "max_degree long, n_entities long, sum_degree long",
-        ).orderBy("bucket")
-        return forward_caches(out, triples)
+            ["bucket"],
+        )
     und = undirected_edges(triples)
     deg = (
         und.select(F.col("a").alias("node"))
@@ -2523,20 +2198,6 @@ def _tri_driver(eset: set, cap: int):
         "cap": int(cap),
     }
     return counts, audit
-
-
-def _audit_frame(spark, audit: dict):
-    """1-row audit frame from a driver-path guard dict (the capped_filter
-    audit schema, so skew_metrics reads both identically)."""
-    return _local_df(spark,
-        [
-            (
-                audit["guard"], audit["n_dropped_rows"],
-                audit["max_group_size"], audit["cap"],
-            )
-        ],
-        "guard string, n_dropped_rows long, max_group_size long, cap long",
-    )
 
 
 def _seed_bfs_matrix(adj, seeds, depth: int):
@@ -2671,8 +2332,6 @@ def harmonic_centrality(
     localCheckpointed symmetric edge list, then one grouped integer
     aggregate. The seed pick is a TakeOrdered top-k (no global sort
     materialized)."""
-    from gliner_spark.cache import attach_caches, forward_caches
-
     rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): one bounded collect
@@ -2689,15 +2348,16 @@ def harmonic_centrality(
             (HC_UNIT // np.where(pos, D, 1).astype(np.int64)) * pos
         ).sum(axis=0)
         cnt = pos.sum(axis=0)
-        out = _local_df(triples.sparkSession,
+        return local_result(
+            triples,
             [
                 (n, int(h), int(c))
                 for n, h, c in zip(nodes_l, harm.tolist(), cnt.tolist())
                 if c > 0
             ],
             "entity string, harmonic long, n_seeds_reached long",
-        ).orderBy(F.desc("harmonic"), "entity")
-        return forward_caches(out, triples)
+            [F.desc("harmonic"), "entity"],
+        )
     dist = _seed_bfs(triples, n_seeds, depth)
     out = (
         dist.filter(F.col("dist") > 0)
@@ -2744,8 +2404,6 @@ def hits(
     max aggregate broadcast back; score frames are localCheckpointed per
     round with the previous round unpersisted (dangling-PR hygiene), so
     the logical plan stays flat."""
-    from gliner_spark.cache import forward_caches
-
     if rounds < 1:
         raise ValueError("hits needs rounds >= 1 (0 rounds would have "
                          "no authority scores to return)")
@@ -2769,11 +2427,11 @@ def hits(
                 s2[u] += auth_d[v]
             mx2 = max(max(s2.values(), default=0), 1)
             hub_d = {n: (HITS_UNIT * s2[n]) // mx2 for n in nodes_d}
-        out = _local_df(triples.sparkSession,
-            [(n, auth_d[n], hub_d[n]) for n in nodes_d],
+        return local_result(
+            triples, [(n, auth_d[n], hub_d[n]) for n in nodes_d],
             "entity string, authority long, hub long",
-        ).orderBy(F.desc("authority"), "entity")
-        return forward_caches(out, triples)
+            [F.desc("authority"), "entity"],
+        )
     e = graph_edges(triples).localCheckpoint()
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -2829,8 +2487,6 @@ def hits(
         .select(F.col("node").alias("entity"), "authority", "hub")
         .orderBy(F.desc("authority"), "entity")
     )
-    from gliner_spark.cache import attach_caches
-
     return attach_caches(forward_caches(out, triples), e, nodes, *prev)
 
 
@@ -2846,8 +2502,6 @@ def reciprocity(triples: DataFrame) -> DataFrame:
     Shape at scale: one distinct projection, one self left-semi join on
     the reversed composite key (pred, o, s) — full-pair keys, no hub
     blowup — and one grouped count each; two shuffles total."""
-    from gliner_spark.cache import forward_caches
-
     d = (
         triples.filter(F.col("subj") != F.col("obj"))
         .select("pred", "subj", "obj")
@@ -2905,9 +2559,6 @@ def square_counts(
     exactly one of its two diagonals, so each square contributes
     exactly once per member node. Pure integer counts, replayed
     relationally by the kg_squares oracle."""
-    from gliner_spark.cache import forward_caches
-    from gliner_spark.metrics import attach_audits, capped_filter
-
     rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): diagonal-wedge
@@ -2939,12 +2590,9 @@ def square_counts(
             "max_group_size": max_fan,
             "cap": int(max_fanout),
         }
-        spark = triples.sparkSession
-        out = _local_df(spark,
-            sorted(sq_counts.items()), "entity string, n_squares long"
-        ).orderBy("entity")
-        return forward_caches(
-            attach_audits(out, _audit_frame(spark, audit)), triples
+        return local_result(
+            triples, sorted(sq_counts.items()),
+            "entity string, n_squares long", ["entity"], audits=[audit],
         )
     und = undirected_edges(triples)
     sym = und.select(
@@ -3101,10 +2749,7 @@ def stress_centrality(
     localCheckpointed symmetric edge list + one grouped sum; level
     frames are checkpointed (the backward pass re-reads each exactly
     once, and the loop stays flat)."""
-    from gliner_spark.cache import forward_caches
     from gliner_spark.functions.text import fold_hash
-
-    from gliner_spark.cache import attach_caches
 
     rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
@@ -3113,11 +2758,11 @@ def stress_centrality(
         adj = _adj_from_und(rows)
         seeds = _driver_seeds(adj, n_seeds)
         st = _stress_driver_np(adj, seeds, depth)
-        out = _local_df(triples.sparkSession,
-            [(n, v[0], v[1]) for n, v in st.items()],
+        return local_result(
+            triples, [(n, v[0], v[1]) for n, v in st.items()],
             "entity string, stress long, n_seeds_reached long",
-        ).orderBy(F.desc("stress"), "entity")
-        return forward_caches(out, triples)
+            [F.desc("stress"), "entity"],
+        )
     und = undirected_edges(triples).localCheckpoint()
     sym = und.select(
         F.col("a").alias("node"), F.col("b").alias("nbr")
@@ -3250,8 +2895,6 @@ def distance_profile(
     the profile itself is one grouped count + a cumulative window over
     <= depth rows. All integers — the kg_distances oracle replays the
     unrolled levels and the permille division exactly."""
-    from gliner_spark.cache import attach_caches, forward_caches
-
     rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate) — same BFS replay as
@@ -3272,12 +2915,12 @@ def distance_profile(
         for d in sorted(hist_d):
             cum += hist_d[d]
             data.append((d, hist_d[d], cum, 1000 * cum // total))
-        out = _local_df(triples.sparkSession,
-            data,
+        return local_result(
+            triples, data,
             "dist long, n_pairs long, cum_pairs long, "
             "reached_permille long",
-        ).orderBy("dist")
-        return forward_caches(out, triples)
+            ["dist"],
+        )
     dist = _seed_bfs(triples, n_seeds, depth)
     hist = (
         dist.filter(F.col("dist") > 0)
@@ -3323,8 +2966,6 @@ def assortativity(
     Shape at scale: the canonical undirected edge set, one symmetric
     degree aggregate, two broadcast-able joins to tag edge endpoints,
     one map-side-combined 1-row aggregate."""
-    from gliner_spark.cache import forward_caches
-
     # r7: below the undirected-edge bound the exact integer edge moments
     # replay on the driver from one bounded collect; the raw IEEE
     # division is NOT replayed — the moment row goes back as a local
@@ -3342,30 +2983,28 @@ def assortativity(
             s_jk += j * k
             s_sum += j + k
             s_sq += j * j + k * k
-        moments = _local_df(
-            triples.sparkSession,
-            [(len(rows), s_jk, s_sum, s_sq)],
+        return local_result(
+            triples, [(len(rows), s_jk, s_sum, s_sq)],
             "n_edges long, s_jk long, s_sum long, s_sq long",
-        )
-        out = moments.select(
-            "n_edges", "s_jk", "s_sum", "s_sq",
-            F.when(
-                (2 * F.col("n_edges") * F.col("s_sq")
-                 - F.col("s_sum") * F.col("s_sum")) == 0,
-                F.lit(None).cast("double"),
-            )
-            .otherwise(
-                F.round(
-                    (4 * F.col("n_edges") * F.col("s_jk")
-                     - F.col("s_sum") * F.col("s_sum")).cast("double")
-                    / (2 * F.col("n_edges") * F.col("s_sq")
-                       - F.col("s_sum") * F.col("s_sum")),
-                    6,
+            select=[
+                "n_edges", "s_jk", "s_sum", "s_sq",
+                F.when(
+                    (2 * F.col("n_edges") * F.col("s_sq")
+                     - F.col("s_sum") * F.col("s_sum")) == 0,
+                    F.lit(None).cast("double"),
                 )
-            )
-            .alias("assortativity"),
+                .otherwise(
+                    F.round(
+                        (4 * F.col("n_edges") * F.col("s_jk")
+                         - F.col("s_sum") * F.col("s_sum")).cast("double")
+                        / (2 * F.col("n_edges") * F.col("s_sq")
+                           - F.col("s_sum") * F.col("s_sum")),
+                        6,
+                    )
+                )
+                .alias("assortativity"),
+            ],
         )
-        return forward_caches(out, triples)
     und = undirected_edges(triples).localCheckpoint()
     sym = und.select(
         F.col("a").alias("node"), F.col("b").alias("nbr")
@@ -3434,8 +3073,6 @@ def pred_association(
     PREDICATE count (bounded by the ontology's predicate vocabulary,
     not by corpus size — hub subjects add rows, not predicates),
     support filter, two broadcast-able frequency joins."""
-    from gliner_spark.cache import forward_caches
-
     # r7 pass 3: below the incidence bound the pair self-join replays
     # like the vectorized cooc counting — collected distinct (subj,
     # pred) rows arrive sorted, per-subject pred lists are ascending
@@ -3486,20 +3123,16 @@ def pred_association(
                     uniq_p[ia], uniq_p[ib], npair, na, nb,
                     float(n_subj * npair) / float(na * nb),
                 ))
-        out = (
-            _local_df(
-                triples.sparkSession,
-                data,
-                "pred_a string, pred_b string, n_pair long, "
-                "n_a long, n_b long, _raw double",
-            )
-            .select(
+        return local_result(
+            triples, data,
+            "pred_a string, pred_b string, n_pair long, "
+            "n_a long, n_b long, _raw double",
+            ["pred_a", "pred_b"],
+            select=[
                 "pred_a", "pred_b", "n_pair", "n_a", "n_b",
                 F.round("_raw", 6).alias("lift"),
-            )
-            .orderBy("pred_a", "pred_b")
+            ],
         )
-        return forward_caches(out, triples)
     sp = triples.select("subj", "pred").distinct()
     n_subj = sp.agg(F.countDistinct("subj").cast("long").alias("n_subj"))
     freq = sp.groupBy("pred").agg(
@@ -3627,9 +3260,6 @@ def triad_census(
     distinct-edge projection, and a CASE expression classifies. Joins +
     one tiny aggregate; the kg_triads oracle replays the same flags and
     CASE bit-for-bit."""
-    from gliner_spark.cache import attach_caches, forward_caches
-    from gliner_spark.metrics import attach_audits, capped_filter
-
     erows = edge_rows(triples, "directed", driver_max_edges)
     if erows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): _triad_driver
@@ -3637,13 +3267,10 @@ def triad_census(
         # flags + CASE classification exactly; audit frame keeps
         # skew_metrics working
         counts, audit = _triad_driver(erows, max_fanout)
-        spark = triples.sparkSession
-        out = _local_df(spark,
-            sorted(counts.items()),
-            "triad_type string, n_triangles long",
-        ).orderBy("triad_type")
-        return forward_caches(
-            attach_audits(out, _audit_frame(spark, audit)), triples
+        return local_result(
+            triples, sorted(counts.items()),
+            "triad_type string, n_triangles long", ["triad_type"],
+            audits=[audit],
         )
     # und feeds three subplans (flags, fan window, closure semi-join)
     # and flags joins onto tris three times — persist both branch
@@ -3755,8 +3382,6 @@ def pagerank_weighted(
     combined), then per round one join + grouped sum over the
     localCheckpointed weighted edge table — identical economics to the
     unweighted loop."""
-    from gliner_spark.cache import forward_caches
-
     ew_frame = (
         triples.filter(F.col("subj") != F.col("obj"))
         .select(
@@ -3766,42 +3391,17 @@ def pagerank_weighted(
         .groupBy("src", "dst")
         .agg(F.countDistinct("doc_id").cast("long").alias("w"))
     )
-    # r7: replay the distinct-doc weight aggregate on the driver from one
-    # raw Arrow collect (pyarrow count_distinct == Spark countDistinct on
-    # exact strings) — the cluster aggregate was two exchanges per call;
-    # gate condition (weighted edges <= bound) unchanged, raw tables past
-    # RAW_COLLECT_CAP degrade to the old aggregate-then-collect tier
-    bound_w = (
-        GRAPH_DRIVER_MAX_EDGES if driver_max_edges is None
-        else driver_max_edges
+    # r7: the distinct-doc weight aggregate replays on the driver
+    # (pyarrow count_distinct == Spark countDistinct on exact strings);
+    # the cluster aggregate was two exchanges per call
+    wt = gate.group(
+        triples.filter(F.col("subj") != F.col("obj")),
+        ["subj", "obj"], [("doc_id", "count_distinct")], driver_max_edges,
     )
-    wrows = None
-    if bound_w > 0:
-        tbl = _arrow_collect_bounded(
-            triples.filter(F.col("subj") != F.col("obj"))
-            .select("subj", "obj", "doc_id"),
-            RAW_COLLECT_CAP,
-        )
-        if tbl is not None:
-            agg = tbl.group_by(["subj", "obj"]).aggregate(
-                [("doc_id", "count_distinct")]
-            )
-            if agg.num_rows <= bound_w:
-                wrows = sorted(
-                    zip(
-                        agg.column("subj").to_pylist(),
-                        agg.column("obj").to_pylist(),
-                        agg.column("doc_id_count_distinct").to_pylist(),
-                    )
-                )
-        else:
-            wrows = _collected_edges(
-                ew_frame, ("src", "dst", "w"), driver_max_edges
-            )
-    if wrows is not None:
+    if wt is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): weighted bigint
         # rounds replayed exactly ((rank * w) DIV out_w == // nonneg)
-        edges_d = [(r[0], r[1], int(r[2])) for r in wrows]
+        edges_d = gate.rows(wt)
         nodes_d = sorted({x for u, v, _w in edges_d for x in (u, v)})
         ow_d: dict = {}
         for u, _v, w_ in edges_d:
@@ -3815,11 +3415,9 @@ def pagerank_weighted(
             ranks_d = {
                 n: base_d + (damping * s[n]) // 1000 for n in nodes_d
             }
-        return forward_caches(
-            _local_df(triples.sparkSession,
-                list(ranks_d.items()), "node string, rank long"
-            ).orderBy(F.desc("rank"), F.asc("node")),
-            triples,
+        return local_result(
+            triples, list(ranks_d.items()), "node string, rank long",
+            [F.desc("rank"), F.asc("node")],
         )
     ew = ew_frame.localCheckpoint()
     nodes = (
@@ -3880,8 +3478,6 @@ def transitive_closure(
 
     Determinism: min_depth is an exact integer; the DuckDB oracle
     replays it as a depth-bounded recursive CTE grouped to min."""
-    from gliner_spark.cache import forward_caches
-
     e = (
         triples.filter(F.col("pred") == pred)
         .filter(F.col("subj") != F.col("obj"))
@@ -3919,8 +3515,6 @@ def transitive_closure(
     out = best.filter(F.col("src") != F.col("dst")).orderBy(
         "src", "dst"
     )
-    from gliner_spark.cache import attach_caches
-
     # the surviving checkpoints (final best + last frontier) ride the
     # output as releasable handles
     handles = [e, best] + (
@@ -3951,8 +3545,6 @@ def egonet(
     fact set against the distanced node set — the node set is the
     small side (neighborhood-sized) and broadcasts under AQE; no
     windows, no fan-out beyond the facts already in the neighborhood."""
-    from gliner_spark.cache import forward_caches
-
     frows = edge_rows(triples, "spo", driver_max_edges)
     if frows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): BFS distances +
@@ -3967,12 +3559,12 @@ def egonet(
             for s_, p_, o_ in frows
             if s_ in dist_d and o_ in dist_d
         )
-        out = _local_df(triples.sparkSession,
-            data,
+        return local_result(
+            triples, data,
             "subj string, pred string, obj string, "
             "dist_subj long, dist_obj long",
-        ).orderBy("subj", "pred", "obj")
-        return forward_caches(out, triples)
+            ["subj", "pred", "obj"],
+        )
     dist = bfs_distances(triples, seed_prefix, depth)
     t = triples.select("subj", "pred", "obj").distinct()
     out = (
@@ -4021,7 +3613,6 @@ def summary_graph(
     of the distinct fact set and one grouped count; output is
     |colors|^2-bounded but in practice schema-sized (role classes x
     predicates)."""
-    from gliner_spark.cache import forward_caches
     from gliner_spark.functions.text import FOLD_M, P31, fold_hash
 
     erows = edge_rows(triples, "spo", driver_max_edges)
@@ -4062,12 +3653,12 @@ def summary_graph(
             (sc, p_, oc, n, len(ss), len(os_))
             for (sc, p_, oc), (n, ss, os_) in sorted(agg.items())
         ]
-        out = _local_df(triples.sparkSession,
-            data,
+        return local_result(
+            triples, data,
             "subj_color long, pred string, obj_color long, "
             "n_facts long, n_subjects long, n_objects long",
-        ).orderBy("subj_color", "pred", "obj_color")
-        return forward_caches(out, triples)
+            ["subj_color", "pred", "obj_color"],
+        )
     wl = wl_colors(triples, rounds).select("entity", "wl_color")
     k = pow(FOLD_M, rounds, P31)
 

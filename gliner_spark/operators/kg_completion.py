@@ -26,9 +26,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gliner_spark.cache import forward_caches
+from gliner_spark import gate
+from gliner_spark.cache import attach_caches, forward_caches
 from gliner_spark.functions.text import fold_hash
-from gliner_spark.operators.graph_analytics import _local_df
+from gliner_spark.gate import edge_rows, local_result
+from gliner_spark.metrics import attach_audits, capped_filter
+from gliner_spark.operators.graph_analytics import (
+    _adj_from_und,
+    _fold_hash_many,
+    _fold_hash_py,
+    undirected_edges,
+)
 
 # Bounded deterministic candidate pool per entity type. At web scale the
 # per-type entity set is unbounded (millions of persons), so the sampler
@@ -54,8 +62,6 @@ def _fold_keys_composed(subs, preds, objs):
     the per-char fold over every 40-char row key was the dominant cost
     of the negatives replay."""
     import numpy as np
-
-    from gliner_spark.operators.graph_analytics import _fold_hash_many
 
     P, M = 2147483647, 1000003
 
@@ -94,8 +100,6 @@ def _negatives_driver(cols, pool_cap: int):
     import heapq
 
     import numpy as np
-
-    from gliner_spark.operators.graph_analytics import _fold_hash_many
 
     subs, preds, objs, typs = cols
     if not subs:
@@ -142,65 +146,18 @@ def _positive_cols(triples: DataFrame, driver_max_rows: int | None):
     (subj, pred, obj, min(obj_type)) — the shared driver-gate entry of
     negative_samples / transe_margin_eval / ranking_metrics (one copy so
     the gate condition can never diverge between the sampler and the
-    evals that consume it). Raw fact rows <= RAW_COLLECT_CAP are
-    collected through Arrow and the groupBy-min replayed with pyarrow
+    evals that consume it). The groupBy-min replays with pyarrow
     (hash_min over UTF-8 binary order == Spark's string min == python's
-    codepoint min); bigger raw tables degrade to the old
-    aggregate-then-collect tier. Returns COLUMN lists
+    codepoint min) on gate.group's raw tier. Returns COLUMN lists
     (subs, preds, objs, typs), sorted by (subj, pred, obj) in C++
     rather than as python row tuples (every consumer is column-
     oriented), if the distinct-positive count fits the bound; else None
     (caller keeps the distributed plan)."""
-    from gliner_spark.operators.graph_analytics import (
-        GRAPH_DRIVER_MAX_EDGES,
-        RAW_COLLECT_CAP,
-        _arrow_collect_bounded,
-        _collected_edges,
+    tbl = gate.group(
+        triples, ["subj", "pred", "obj"], [("obj_type", "min")],
+        driver_max_rows,
     )
-
-    bound = (
-        GRAPH_DRIVER_MAX_EDGES if driver_max_rows is None
-        else driver_max_rows
-    )
-    if bound <= 0:
-        return None
-    tbl = _arrow_collect_bounded(
-        triples.select("subj", "pred", "obj", "obj_type"),
-        RAW_COLLECT_CAP,
-    )
-    if tbl is not None:
-        agg = tbl.group_by(["subj", "pred", "obj"]).aggregate(
-            [("obj_type", "min")]
-        )
-        if agg.num_rows > bound:
-            return None
-        agg = agg.sort_by(
-            [("subj", "ascending"), ("pred", "ascending"),
-             ("obj", "ascending")]
-        )
-        return (
-            agg.column("subj").to_pylist(),
-            agg.column("pred").to_pylist(),
-            agg.column("obj").to_pylist(),
-            agg.column("obj_type_min").to_pylist(),
-        )
-    pos_frame = triples.groupBy("subj", "pred", "obj").agg(
-        F.min("obj_type").alias("obj_type")
-    )
-    rows = _collected_edges(
-        pos_frame, ("subj", "pred", "obj", "obj_type"), driver_max_rows
-    )
-    if rows is None:
-        return None
-    # collect order is partition-dependent: sort like the Arrow tier
-    # ((subj, pred, obj) is the group key, so it orders every row)
-    rows.sort(key=lambda r: r[:3])
-    return (
-        [r[0] for r in rows],
-        [r[1] for r in rows],
-        [r[2] for r in rows],
-        [r[3] for r in rows],
-    )
+    return None if tbl is None else tuple(c.to_pylist() for c in tbl.columns)
 
 
 def negative_samples(
@@ -225,8 +182,6 @@ def negative_samples(
     filtered check is one left-anti shuffle join on (s, p, o'). No
     all-pairs work anywhere.
     """
-    from gliner_spark.cache import attach_caches
-
     cols = _positive_cols(triples, driver_max_rows)
     if cols is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate, here on distinct
@@ -234,12 +189,12 @@ def negative_samples(
         # downstream scorers (transe_margin_eval family) then run over a
         # local relation — one narrow stage instead of pool/broadcast/
         # anti-join shuffles
-        out = _local_df(triples.sparkSession,
-            _negatives_driver(cols, pool_cap),
+        return local_result(
+            triples, _negatives_driver(cols, pool_cap),
             "subj string, pred string, pos_obj string, neg_obj string, "
             "obj_type string",
-        ).orderBy("subj", "pred", "pos_obj", "neg_obj")
-        return forward_caches(out, triples)
+            ["subj", "pred", "pos_obj", "neg_obj"],
+        )
     # one positive per distinct FACT: min(obj_type) makes the pool
     # choice deterministic if a foreign table carries the same (s,p,o)
     # under two obj_types (our chain's obj determines its type, but the
@@ -355,108 +310,45 @@ def cooc_candidates(
     the non-adjacency check is one left-anti join against the distinct
     edge set. Media objects are excluded (refs, not entities).
     """
-    from gliner_spark.metrics import attach_audits, capped_filter
-
-    ed = (
-        triples.select("doc_id", F.col("subj").alias("entity"))
-        .union(
-            triples.filter(F.col("obj_type") != "media").select(
-                "doc_id", F.col("obj").alias("entity")
-            )
+    ed_raw = triples.select("doc_id", F.col("subj").alias("entity")).union(
+        triples.filter(F.col("obj_type") != "media").select(
+            "doc_id", F.col("obj").alias("entity")
         )
-        .distinct()
     )
-    from gliner_spark.operators.graph_analytics import (
-        _audit_frame,
-        _collected_dedup,
-    )
-
     # r7: ONE raw Arrow collect of the fact rows feeds BOTH driver-side
     # dedups ((doc, entity) incidences and the adjacency set) — the two
     # separate collects (one over a union that scanned the table twice)
     # were the dominant cost of the driver path. Gate conditions
     # unchanged: each distinct set must fit the row bound; raw tables
-    # past RAW_COLLECT_CAP degrade to the old two-collect tiers.
-    from gliner_spark.operators.graph_analytics import (
-        GRAPH_DRIVER_MAX_EDGES,
-        RAW_COLLECT_CAP,
-    )
-
-    bound = (
-        GRAPH_DRIVER_MAX_EDGES if driver_max_rows is None
-        else driver_max_rows
-    )
-    erows = adj_rows = None
-    tbl = None
-    if bound > 0:
-        from gliner_spark.operators.graph_analytics import (
-            _arrow_collect_bounded,
-        )
-
-        tbl = _arrow_collect_bounded(
-            triples.select("doc_id", "subj", "obj", "obj_type"),
-            RAW_COLLECT_CAP,
+    # past RAW_COLLECT_CAP degrade to two gate.group calls of their own.
+    ed_t = adj_t = tbl = None
+    if gate.bound(driver_max_rows) > 0:
+        tbl = gate.collect_raw(
+            triples.select("doc_id", "subj", "obj", "obj_type")
         )
     if tbl is not None:
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        t1 = tbl.select(["doc_id", "subj"]).rename_columns(
-            ["doc_id", "entity"]
-        )
-        t2 = (
+        ed_t = pa.concat_tables([
+            tbl.select(["doc_id", "subj"]).rename_columns(
+                ["doc_id", "entity"]
+            ),
             tbl.filter(pc.not_equal(tbl.column("obj_type"), "media"))
             .select(["doc_id", "obj"])
-            .rename_columns(["doc_id", "entity"])
+            .rename_columns(["doc_id", "entity"]),
+        ])
+        adj_t = tbl.filter(
+            pc.not_equal(tbl.column("subj"), tbl.column("obj"))
+        ).select(["subj", "obj"])
+    ed = gate.group(ed_raw, ["doc_id", "entity"], (), driver_max_rows, ed_t)
+    adj = None
+    if ed is not None:
+        adj = gate.group(
+            triples.filter(F.col("subj") != F.col("obj")),
+            ["subj", "obj"], (), driver_max_rows, adj_t,
         )
-        ed_t = (
-            pa.concat_tables([t1, t2])
-            .group_by(["doc_id", "entity"])
-            .aggregate([])
-        )
-        adj_t = (
-            tbl.filter(pc.not_equal(tbl.column("subj"), tbl.column("obj")))
-            .select(["subj", "obj"])
-            .group_by(["subj", "obj"])
-            .aggregate([])
-        )
-        if ed_t.num_rows <= bound and adj_t.num_rows <= bound:
-            ed_t = ed_t.sort_by(
-                [("doc_id", "ascending"), ("entity", "ascending")]
-            )
-            erows = (
-                ed_t.column("doc_id").to_pylist(),
-                ed_t.column("entity").to_pylist(),
-            )
-            adj_rows = list(
-                zip(
-                    adj_t.column("subj").to_pylist(),
-                    adj_t.column("obj").to_pylist(),
-                )
-            )
-    elif bound > 0:
-        ed_raw = triples.select(
-            "doc_id", F.col("subj").alias("entity")
-        ).union(
-            triples.filter(F.col("obj_type") != "media").select(
-                "doc_id", F.col("obj").alias("entity")
-            )
-        )
-        ed_pairs = _collected_dedup(
-            ed_raw, ("doc_id", "entity"), driver_max_rows
-        )
-        if ed_pairs is not None:
-            erows = (
-                [r[0] for r in ed_pairs],
-                [r[1] for r in ed_pairs],
-            )
-            adj_rows = _collected_dedup(
-                triples.filter(F.col("subj") != F.col("obj"))
-                .select("subj", "obj"),
-                ("subj", "obj"),
-                driver_max_rows,
-            )
-    if erows is not None and adj_rows is not None:
+    if adj is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate, here on distinct
         # (doc, entity) incidences): capped pair counting, marginals and
         # the non-adjacency filter — vectorized (r7 pass 3: the python
@@ -470,7 +362,8 @@ def cooc_candidates(
         # rounded back IN Spark with the same F.round.
         import numpy as np
 
-        docs_l, ents_l = erows
+        docs_l = ed.column("doc_id").to_pylist()
+        ents_l = ed.column("entity").to_pylist()
         uniq_ents = sorted(set(ents_l))
         n_ents = len(uniq_ents)
         eid = {e: i for i, e in enumerate(uniq_ents)}
@@ -514,7 +407,7 @@ def cooc_candidates(
             uk = np.zeros(0, np.int64)
             cnt = uk
         adj_list = []
-        for r in adj_rows:
+        for r in gate.rows(adj):
             x, y = (r[0], r[1]) if r[0] < r[1] else (r[1], r[0])
             ia, ib = eid.get(x), eid.get(y)
             if ia is not None and ib is not None:
@@ -541,26 +434,21 @@ def cooc_candidates(
             "max_group_size": max_doc,
             "cap": int(doc_cap),
         }
-        spark = triples.sparkSession
-        out = (
-            _local_df(spark,
-                data,
-                "entity_a string, entity_b string, n_docs_pair long, "
-                "n_docs_a long, n_docs_b long, _raw double",
-            )
-            .select(
+        return local_result(
+            triples, data,
+            "entity_a string, entity_b string, n_docs_pair long, "
+            "n_docs_a long, n_docs_b long, _raw double",
+            ["entity_a", "entity_b"],
+            select=[
                 "entity_a", "entity_b", "n_docs_pair", "n_docs_a",
                 "n_docs_b", F.round("_raw", 6).alias("lift"),
-            )
-            .orderBy("entity_a", "entity_b")
-        )
-        return forward_caches(
-            attach_audits(out, _audit_frame(spark, audit)), triples
+            ],
+            audits=[audit],
         )
 
     w = Window.partitionBy("doc_id")
     capped, audit = capped_filter(
-        ed.withColumn("sz", F.count(F.lit(1)).over(w)),
+        ed_raw.distinct().withColumn("sz", F.count(F.lit(1)).over(w)),
         "sz", doc_cap, "cooc_doc_cap",
     )
     # ONE population for every count in the lift: pair counts, marginals
@@ -615,8 +503,6 @@ def cooc_candidates(
         )
         .orderBy("entity_a", "entity_b")
     )
-    from gliner_spark.cache import attach_caches
-
     return attach_caches(
         forward_caches(attach_audits(out, audit), triples), capped
     )
@@ -656,14 +542,6 @@ def walk_corpus(
     adjacency co-shuffle on the node key each hop. An undirected edge
     guarantees every reached node has a non-empty pool, so walks never
     dead-end."""
-    from gliner_spark.gate import edge_rows
-    from gliner_spark.operators.graph_analytics import (
-        _adj_from_und,
-        _fold_hash_many,
-        _fold_hash_py,
-        undirected_edges,
-    )
-
     und = undirected_edges(triples)
     rows = edge_rows(triples, "undirected", driver_max_edges)
     if rows is not None:
@@ -758,10 +636,10 @@ def walk_corpus(
             )
             for i in range(len(wids_l))
         ]
-        out = _local_df(triples.sparkSession,
-            data, "entity string, walk_id long, walk string"
-        ).orderBy("entity", "walk_id")
-        return forward_caches(out, triples)
+        return local_result(
+            triples, data, "entity string, walk_id long, walk string",
+            ["entity", "walk_id"],
+        )
     sym = und.select(
         F.col("a").alias("node"), F.col("b").alias("nbr")
     ).union(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
@@ -813,8 +691,6 @@ def walk_corpus(
     out = frontier.select("entity", "walk_id", "walk").orderBy(
         "entity", "walk_id"
     )
-    from gliner_spark.cache import attach_caches
-
     return attach_caches(forward_caches(out, triples), pool)
 
 
@@ -825,8 +701,6 @@ RULE_MIN_CONF_PERMILLE = 500  # inference threshold: conf >= 50.0%
 def _rule_edge_rows(triples: DataFrame, driver_max_rows: int | None):
     """The distinct non-loop edges (subj, pred, obj), bounded — the
     shared driver-gate entry of mine_rules / apply_rules."""
-    from gliner_spark.gate import edge_rows
-
     return edge_rows(triples, "spo_nonloop", driver_max_rows)
 
 
@@ -859,14 +733,13 @@ def mine_rules(
     # output); the self-join plan (unchanged) is the scale path above it
     rows = _rule_edge_rows(triples, driver_max_rows)
     if rows is not None:
-        out = _local_df(
-            triples.sparkSession,
-            _mine_rules_driver(rows, min_support),
+        return local_result(
+            triples, _mine_rules_driver(rows, min_support),
             "body_pred string, head_pred string, inverse long, "
             "support long, n_body long, n_head long, "
             "conf_permille long, hc_permille long",
-        ).orderBy("body_pred", "head_pred", "inverse")
-        return forward_caches(out, triples)
+            ["body_pred", "head_pred", "inverse"],
+        )
     d = (
         triples.filter(F.col("subj") != F.col("obj"))
         .select("subj", "pred", "obj")
@@ -1034,13 +907,12 @@ def apply_rules(
     # are re-mined locally — cheaper than a second cluster pass)
     rows = _rule_edge_rows(triples, driver_max_rows)
     if rows is not None:
-        out = _local_df(
-            triples.sparkSession,
-            _apply_rules_driver(rows, min_conf_permille, min_support),
+        return local_result(
+            triples, _apply_rules_driver(rows, min_conf_permille, min_support),
             "subj string, pred string, obj string, rule_body string, "
             "inverse long, conf_permille long",
-        ).orderBy("subj", "pred", "obj", "rule_body", "inverse")
-        return forward_caches(out, triples)
+            ["subj", "pred", "obj", "rule_body", "inverse"],
+        )
     rules = mine_rules(
         triples, min_support=min_support, driver_max_rows=driver_max_rows
     ).filter(F.col("conf_permille") >= min_conf_permille)
@@ -1104,8 +976,6 @@ def _hash_embed_np(strs, dim: int):
     import numpy as np
 
     from gliner_spark.functions.text import P31
-    from gliner_spark.operators.graph_analytics import _fold_hash_many
-
     base = _fold_hash_many(list(strs))
     j = np.arange(dim, dtype=np.int64)
     k = (base[:, None] * (2 * j + 5) + j) % P31 % 256
@@ -1293,20 +1163,17 @@ def transe_margin_eval(
         data = _margin_eval_driver(
             _negatives_driver(cols, NEG_POOL_CAP), dim, scorer
         )
-        out = (
-            _local_df(
-                triples.sparkSession, data,
-                "pred string, n_pairs long, n_ranked_correct long, "
-                "accuracy_permille long, _m double",
-            )
-            .select(
+        return local_result(
+            triples, data,
+            "pred string, n_pairs long, n_ranked_correct long, "
+            "accuracy_permille long, _m double",
+            ["pred"],
+            select=[
                 "pred", "n_pairs", "n_ranked_correct",
                 "accuracy_permille",
                 F.round("_m", 6).alias("mean_margin"),
-            )
-            .orderBy("pred")
+            ],
         )
-        return forward_caches(out, triples)
 
     l1 = _l1_expr(dim)
 
@@ -1413,8 +1280,6 @@ def _ranking_driver(cols, dim: int, pool_cap: int):
     import heapq
 
     import numpy as np
-
-    from gliner_spark.operators.graph_analytics import _fold_hash_many
 
     subs, preds, objs, typs = cols
     if not subs:
@@ -1545,7 +1410,6 @@ def ranking_metrics(
     side is |positives| x pool_cap rows with one in-row 8-term fold
     each and there is no join-back — bounded, whole-stage-codegen, no
     all-pairs anything; the rank is one grouped count + a left join."""
-    from gliner_spark.cache import attach_caches
     from gliner_spark.operators.kg_scoring import hash_embedding
 
     # r7: same shared distinct-positive gate as negative_samples /
@@ -1555,14 +1419,13 @@ def ranking_metrics(
     # scale path above it.
     cols = _positive_cols(triples, driver_max_rows)
     if cols is not None:
-        out = _local_df(
-            triples.sparkSession,
-            _ranking_driver(cols, dim, pool_cap),
+        return local_result(
+            triples, _ranking_driver(cols, dim, pool_cap),
             "pred string, n_facts long, mrr_micro long, "
             "hits1_permille long, hits3_permille long, "
             "hits10_permille long",
-        ).orderBy("pred")
-        return forward_caches(out, triples)
+            ["pred"],
+        )
 
     l1 = _l1_expr(dim)
 

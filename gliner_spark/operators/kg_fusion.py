@@ -30,7 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gliner_spark import gate
 from gliner_spark.cache import forward_caches
+from gliner_spark.gate import local_result
 
 FUSE_MIN_OBJECTS = 2   # emit only genuinely contested (subj, pred) groups
 FACT_TOP_M = 3         # facts kept per entity card
@@ -42,64 +44,20 @@ def _vote_cols(
 ):
     """Tiered bounded collect of the distinct-doc vote counts per
     (subj, pred, obj) — the shared driver-gate entry of fuse_functional
-    and fact_rank. Raw fact rows <= RAW_COLLECT_CAP collect through
-    Arrow and the countDistinct replays with pyarrow count_distinct
-    (exact on strings); bigger raw tables degrade to the
-    aggregate-then-collect tier. Returns column lists
+    and fact_rank. The countDistinct replays with pyarrow count_distinct
+    (exact on strings) on gate.group's raw tier. Returns column lists
     (subs, preds, objs, counts) sorted by (subj, pred, obj) if the
     distinct-fact count fits the bound, else None."""
-    from gliner_spark.operators.graph_analytics import (
-        GRAPH_DRIVER_MAX_EDGES,
-        RAW_COLLECT_CAP,
-        _arrow_collect_bounded,
-        _collected_edges,
-    )
-
-    bound = (
-        GRAPH_DRIVER_MAX_EDGES if driver_max_rows is None
-        else driver_max_rows
-    )
-    if bound <= 0:
-        return None
     base = (
         triples.filter(F.col("obj_type") != "media")
         if exclude_media
         else triples
     )
-    tbl = _arrow_collect_bounded(
-        base.select("subj", "pred", "obj", "doc_id"), RAW_COLLECT_CAP
+    tbl = gate.group(
+        base, ["subj", "pred", "obj"], [("doc_id", "count_distinct")],
+        driver_max_rows,
     )
-    if tbl is not None:
-        agg = tbl.group_by(["subj", "pred", "obj"]).aggregate(
-            [("doc_id", "count_distinct")]
-        )
-        if agg.num_rows > bound:
-            return None
-        agg = agg.sort_by(
-            [("subj", "ascending"), ("pred", "ascending"),
-             ("obj", "ascending")]
-        )
-        return (
-            agg.column("subj").to_pylist(),
-            agg.column("pred").to_pylist(),
-            agg.column("obj").to_pylist(),
-            agg.column("doc_id_count_distinct").to_pylist(),
-        )
-    facts = base.groupBy("subj", "pred", "obj").agg(
-        F.countDistinct("doc_id").cast("long").alias("n_support")
-    )
-    rows = _collected_edges(
-        facts, ("subj", "pred", "obj", "n_support"), driver_max_rows
-    )
-    if rows is None:
-        return None
-    rows.sort()
-    return (
-        [r[0] for r in rows],
-        [r[1] for r in rows],
-        [r[2] for r in rows],
-        [r[3] for r in rows],
-    )
+    return None if tbl is None else tuple(c.to_pylist() for c in tbl.columns)
 
 
 def _fuse_driver(cols, min_objects: int):
@@ -182,22 +140,19 @@ def fuse_functional(
     a Zipf-small contest set (rival truth claims, not corpus rows), so
     no cap is needed: the window sorts claims, it never joins them.
     """
-    from gliner_spark.operators.graph_analytics import _local_df
-
     # r7: below the shared distinct-fact bound the vote aggregate and
     # the contest windows replay on the driver from one raw Arrow
     # collect (all-integer output); the distributed plan (unchanged) is
     # the scale path above it
     cols = _vote_cols(triples, driver_max_rows, exclude_media=True)
     if cols is not None:
-        out = _local_df(
-            triples.sparkSession,
-            _fuse_driver(cols, min_objects),
+        return local_result(
+            triples, _fuse_driver(cols, min_objects),
             "subj string, pred string, obj_fused string, "
             "n_support long, n_objects long, total_votes long, "
             "confidence_permille long",
-        ).orderBy("subj", "pred")
-        return forward_caches(out, triples)
+            ["subj", "pred"],
+        )
     votes = (
         triples.filter(F.col("obj_type") != "media")
         .groupBy("subj", "pred", "obj")
@@ -249,19 +204,16 @@ def fact_rank(
     subj whose width is the entity's own fact count (bounded by the
     extractor's per-doc emission, not the corpus).
     """
-    from gliner_spark.operators.graph_analytics import _local_df
-
     # r7: same driver gate as fuse_functional (shared _vote_cols entry;
     # fact_rank votes over ALL facts, media included)
     cols = _vote_cols(triples, driver_max_rows, exclude_media=False)
     if cols is not None:
-        out = _local_df(
-            triples.sparkSession,
-            _fact_rank_driver(cols, top_m),
+        return local_result(
+            triples, _fact_rank_driver(cols, top_m),
             "entity string, rank long, pred string, obj string, "
             "n_support long, fact_score long",
-        ).orderBy("entity", "rank")
-        return forward_caches(out, triples)
+            ["entity", "rank"],
+        )
     facts = triples.groupBy("subj", "pred", "obj").agg(
         F.countDistinct("doc_id").cast("long").alias("n_support")
     )

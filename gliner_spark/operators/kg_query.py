@@ -31,7 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gliner_spark import gate
 from gliner_spark.cache import forward_caches
+from gliner_spark.gate import edge_rows, local_result
 
 
 def _is_var(term: str) -> bool:
@@ -45,8 +47,6 @@ def _pattern_edge_index(triples: DataFrame, all_atoms, driver_max_rows):
     frame's edge snapshot if one exists, else one bounded collect).
     Returns {pred: [(s, o), ...]} or None (caller keeps the distributed
     plan)."""
-    from gliner_spark.gate import edge_rows
-
     preds = sorted({p for _s, p, _o in all_atoms if not _is_var(p)})
     rows = edge_rows(triples, "preds", driver_max_rows, preds)
     if rows is None:
@@ -199,18 +199,9 @@ def conjunctive_match(
     # the distributed plan at the cost of one counting pass.
     edge_index = _pattern_edge_index(triples, atoms, driver_max_rows)
     if edge_index is not None:
-        from gliner_spark.operators.graph_analytics import (
-            GRAPH_DRIVER_MAX_EDGES,
-            _local_df,
-        )
-
-        bound_cap = (
-            GRAPH_DRIVER_MAX_EDGES if driver_max_rows is None
-            else driver_max_rows
-        )
         try:
             (cols, rows), bound_vars = _bind_pattern_rows(
-                edge_index, atoms, bound_cap
+                edge_index, atoms, gate.bound(driver_max_rows)
             )
         except _BgpFanoutBail:
             edge_index = None
@@ -223,19 +214,15 @@ def conjunctive_match(
                     and r[ia] != r[ib]
                 ]
             out_cols = sorted(v for v in bound_vars)
-            spark = triples.sparkSession
             if not out_cols:
-                out = _local_df(
-                    spark, [(True,)] if rows else [], "matched boolean"
+                return local_result(
+                    triples, [(True,)] if rows else [], "matched boolean"
                 )
-            else:
-                sel = [cols.index(c) for c in out_cols]
-                out = _local_df(
-                    spark,
-                    [tuple(r[i] for i in sel) for r in rows],
-                    ", ".join(f"{c} string" for c in out_cols),
-                ).orderBy(*out_cols)
-            return forward_caches(out, triples)
+            sel = [cols.index(c) for c in out_cols]
+            return local_result(
+                triples, [tuple(r[i] for i in sel) for r in rows],
+                ", ".join(f"{c} string" for c in out_cols), out_cols,
+            )
     bound, bound_vars = _bind_pattern(triples, atoms)
     for a, b in neq:
         bound = bound.filter(F.col(a) != F.col(b))

@@ -33,9 +33,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gliner_spark.operators.graph_analytics import _local_df
-
+from gliner_spark import gate
+from gliner_spark.cache import attach_caches
 from gliner_spark.config import PipelineConfig
+from gliner_spark.gate import local_result
+from gliner_spark.metrics import attach_audits, capped_filter
 
 # affine rehash constants for minhash permutations (fixed, public constants;
 # any odd multiplier works). Shingle hashes are first reduced into a 31-bit
@@ -124,8 +126,6 @@ def similarity_edges(surfaces: DataFrame, cfg: PipelineConfig) -> DataFrame:
     # skew guard: drop degenerate blocks (identity linkage is implicit);
     # the cap is observed — dropped-row counts ride the caller's action
     # (metrics.skew_metrics) instead of firing silently
-    from gliner_spark.metrics import capped_filter
-
     w = Window.partitionBy("label", "band", "sig")
     blocked, _block_audit = capped_filter(
         blocked.withColumn("block_n", F.count(F.lit(1)).over(w)),
@@ -156,8 +156,6 @@ def similarity_edges(surfaces: DataFrame, cfg: PipelineConfig) -> DataFrame:
     jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
         F.array_union("sh_a", "sh_b")
     )
-    from gliner_spark.metrics import attach_audits
-
     out = pairs.withColumn("jaccard", jac).filter(
         F.col("jaccard") >= cfg.link_jaccard_threshold
     ).select("label", "norm_a", "norm_b")
@@ -181,17 +179,17 @@ def _cc_driver(nodes: DataFrame, edge_rows: list) -> DataFrame:
             x = parent[x]
         return x
 
-    for r in edge_rows:
-        if r.src not in parent or r.dst not in parent:
+    for src, dst in edge_rows:
+        if src not in parent or dst not in parent:
             # the distributed loop's behavior for unknown endpoints is an
             # accident of its propagate union (it emits rows for them but
             # never seeds their own ids) — refuse instead of silently
             # diverging; canonicalize always passes a closed node set
             raise ValueError(
-                f"connected_components: edge ({r.src}, {r.dst}) references "
+                f"connected_components: edge ({src}, {dst}) references "
                 "an id absent from nodes; pass a closed node set"
             )
-        a, b = find(r.src), find(r.dst)
+        a, b = find(src), find(dst)
         if a != b:
             if a < b:
                 parent[b] = a
@@ -241,8 +239,8 @@ def connected_components(
             # carry far more edges than nodes): ONE limited collect both
             # checks the bound and feeds the union-find
             cap = cfg.cc_driver_max_nodes * 8
-            edge_rows = edges.limit(cap + 1).collect()
-            if len(edge_rows) <= cap:
+            edge_rows = gate.collect_rows(edges, ("src", "dst"), cap)
+            if edge_rows is not None:
                 out = _cc_driver(nodes, edge_rows)
                 edges.unpersist()
                 return out
@@ -321,8 +319,6 @@ def closure_clusters(
     similarity.semantic_clusters (SRP pairs over vec ids) — keep/size/
     ordering semantics can never drift between them. Callers own audit/
     cache forwarding from their pair source."""
-    from gliner_spark.config import PipelineConfig
-
     if cfg is None:
         cfg = PipelineConfig()
     edges = pairs.select(
@@ -334,12 +330,7 @@ def closure_clusters(
     # replayed in python from one bounded collect; the distributed CC
     # below is unchanged above the bound. component = MIN reachable id,
     # identical to _cc_driver's union-by-min.
-    from gliner_spark.operators.graph_analytics import (
-        _collected_dedup,
-        _local_df,
-    )
-
-    erows = _collected_dedup(edges, ("src", "dst"), None)
+    erows = gate.dedup(edges, ("src", "dst"))
     if erows is not None:
         parent: dict = {}
 
@@ -368,11 +359,12 @@ def closure_clusters(
                 data.append((node, cluster, sz, node == cluster))
         data.sort(key=lambda r: (r[1], r[0]))
         id_t = dict(pairs.dtypes)[a_col]
-        return _local_df(pairs.sparkSession,
-            data,
+        return local_result(
+            pairs, data,
             f"{out_col} {id_t}, cluster {id_t}, "
             "cluster_size long, keep boolean",
-        ).orderBy("cluster", out_col)
+            ["cluster", out_col], forward=False,
+        )
     nodes = (
         edges.select(F.col("src").alias("id"))
         .union(edges.select(F.col("dst").alias("id")))
@@ -538,23 +530,16 @@ def canonicalize(mentions: DataFrame, cfg: PipelineConfig):
     rewrite mapping use (label, norm, entity_id).
     """
     # r7: the surface table is a pure groupBy-count over (label, norm) —
-    # below RAW_COLLECT_CAP raw mention rows, pull the two columns
+    # below gate.RAW_COLLECT_CAP raw mention rows, pull the two columns
     # through ONE Arrow collect and aggregate vectorized on the driver
     # (pyarrow group_by count), skipping the cluster-side aggregate
     # exchange AND the separate count job the old gate paid on every
     # chain invocation. The gate condition (distinct surfaces <=
     # link_driver_max_surfaces) is unchanged; oversized corpora degrade
     # to the old persist+count tier below.
-    from gliner_spark.operators.graph_analytics import (
-        RAW_COLLECT_CAP,
-        _arrow_collect_bounded,
-    )
-
     surfaces = None
     srows = None
-    tbl = _arrow_collect_bounded(
-        mentions.select("label", "norm"), RAW_COLLECT_CAP
-    )
+    tbl = gate.collect_raw(mentions.select("label", "norm"))
     if tbl is not None:
         agg = tbl.group_by(["label", "norm"]).aggregate([([], "count_all")])
         n_surfaces = agg.num_rows
@@ -591,34 +576,21 @@ def canonicalize(mentions: DataFrame, cfg: PipelineConfig):
         # collect + createDataFrame — the same gated design as
         # connected_components' _cc_driver. Above the bound the
         # distributed plan below is unchanged (the 100 TB path).
-        from gliner_spark.cache import attach_caches
-        from gliner_spark.metrics import attach_audits
-
-        spark = mentions.sparkSession
         smap_rows, ent_rows, audit = _canonicalize_driver_rows(
             srows, cfg
         )
-        audit_df = _local_df(spark,
-            [
-                (
-                    audit["guard"], audit["n_dropped_rows"],
-                    audit["max_group_size"], audit["cap"],
-                )
-            ],
-            "guard string, n_dropped_rows long, max_group_size long, "
-            "cap long",
-        )
-        entities = _local_df(spark,
-            ent_rows,
+        entities = local_result(
+            mentions, ent_rows,
             "entity_id string, canonical string, label string, "
             "n_mentions long",
+            audits=[audit], forward=False,
         )
-        smap_out = _local_df(spark,
-            smap_rows,
+        smap_out = local_result(
+            mentions, smap_rows,
             "label string, norm string, entity_id string, "
             "canonical string, n_mentions long",
+            forward=False,
         )
-        entities = attach_audits(entities, audit_df)
         if surfaces is not None:
             entities = attach_caches(entities, surfaces)
             smap_out = attach_caches(smap_out, surfaces)
@@ -668,9 +640,6 @@ def canonicalize(mentions: DataFrame, cfg: PipelineConfig):
     ).select("entity_id", "canonical", "label", "n_mentions")
     # propagate the LSH-block-cap audit so the pipeline sink can
     # append skew metrics after its write action
-    from gliner_spark.cache import attach_caches
-    from gliner_spark.metrics import attach_audits
-
     entities = attach_audits(entities, edges_s)
     # the two branch-point persists ride BOTH outputs so a caller's
     # release_caches frees them whichever frame it consumed (the handles
@@ -730,8 +699,6 @@ def canonicalize_incremental(
     links (strictly better), so equality is exact whenever no bucket
     crosses the cap mid-stream.
     """
-    from gliner_spark.metrics import capped_filter
-
     new_surf = surface_table(new_mentions)
     old = old_surface_map
     # count increments for surfaces the map already knows
@@ -897,9 +864,6 @@ def canonicalize_incremental(
         )
         .distinct()
     )
-    from gliner_spark.cache import attach_caches
-    from gliner_spark.metrics import attach_audits
-
     # forward all three skew audits (delta↔delta block cap via dd_edges,
     # the delta↔existing bucket cap, and the cap-CROSSING divergence
     # condition) so the delta finalize can record them

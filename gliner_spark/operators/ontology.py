@@ -21,8 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gliner_spark import gate
 from gliner_spark.cache import forward_caches
-from gliner_spark.operators.graph_analytics import _local_df
+from gliner_spark.gate import local_result
 
 # subclass DAG (child -> parent). Multi-level chains exercise rdfs11
 # transitivity; the two-parent diamond would also be legal (dict of
@@ -73,9 +74,6 @@ def rdfs_types(
     Output: (entity, type, depth) — depth = min subclass hops from an
     asserted type (0 = asserted directly by the extractor). One row per
     entailed (entity, type); ordered for the oracle."""
-    spark = triples.sparkSession
-    from gliner_spark.operators.graph_analytics import _collected_dedup
-
     asserted_raw = triples.select(
         F.col("subj").alias("entity"), F.col("subj_type").alias("cls")
     ).unionByName(
@@ -83,9 +81,7 @@ def rdfs_types(
             F.col("obj").alias("entity"), F.col("obj_type").alias("cls")
         )
     )
-    arows = _collected_dedup(
-        asserted_raw, ("entity", "cls"), driver_max_rows
-    )
+    arows = gate.dedup(asserted_raw, ("entity", "cls"), driver_max_rows)
     if arows is not None:
         # driver path (GRAPH_DRIVER_MAX_EDGES gate): the closure is a
         # python constant already; replay the broadcast join + grouped
@@ -103,15 +99,14 @@ def rdfs_types(
                 if hops < best.get(k, 1 << 30):
                     best[k] = hops
         data = sorted((e_, t_, d_) for (e_, t_), d_ in best.items())
-        from gliner_spark.operators.graph_analytics import _local_df as _ldf
-
-        out = _ldf(spark,
-            data, "entity string, type string, depth long"
-        ).orderBy("entity", "type")
-        return forward_caches(out, triples)
+        return local_result(
+            triples, data, "entity string, type string, depth long",
+            ["entity", "type"],
+        )
     asserted = asserted_raw.distinct()
-    closure = _local_df(spark,
-        _closure(SUBCLASS), "cls string, anc string, hops int"
+    closure = local_result(
+        triples, _closure(SUBCLASS), "cls string, anc string, hops int",
+        forward=False,
     )
     direct = asserted.select(
         "entity", F.col("cls").alias("type"), F.lit(0).alias("hops")
@@ -141,12 +136,8 @@ def subproperty_triples(
     delta, the same contract as kg_completion.apply_rules).
 
     Shape: broadcast axiom join + one distinct + one anti-join."""
-    spark = triples.sparkSession
-    from gliner_spark.operators.graph_analytics import _collected_dedup
-
-    brows = _collected_dedup(
-        triples.select("subj", "pred", "obj", "subj_type", "obj_type"),
-        ("subj", "pred", "obj", "subj_type", "obj_type"),
+    brows = gate.dedup(
+        triples, ("subj", "pred", "obj", "subj_type", "obj_type"),
         driver_max_rows,
     )
     if brows is not None:
@@ -162,14 +153,15 @@ def subproperty_triples(
         data = sorted(
             r for r in inferred if (r[0], r[1], r[2]) not in known
         )
-        out = _local_df(spark,
-            data,
+        return local_result(
+            triples, data,
             "subj string, pred string, obj string, via_pred string, "
             "subj_type string, obj_type string",
-        ).orderBy("subj", "pred", "obj", "via_pred")
-        return forward_caches(out, triples)
-    ax = _local_df(spark,
-        sorted(SUBPROPERTY.items()), "pred string, super string"
+            ["subj", "pred", "obj", "via_pred"],
+        )
+    ax = local_result(
+        triples, sorted(SUBPROPERTY.items()), "pred string, super string",
+        forward=False,
     )
     base = triples.select(
         "subj", "pred", "obj", "subj_type", "obj_type"

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gliner_spark.cache import forward_caches
-from gliner_spark.operators.graph_analytics import _local_df
+from gliner_spark.gate import edge_rows, local_result
 
 RPQ_MAX_HOPS = 6
 
@@ -218,7 +218,6 @@ def rpq_match(
         )
     if not transitions:
         raise ValueError("path expression has no satisfiable transition")
-    spark = triples.sparkSession
 
     # r7 driver gate (the generalized _cc_driver design): below the edge
     # bound, run the product BFS in python from one bounded collect of
@@ -226,9 +225,6 @@ def rpq_match(
     # visited product-state budget is exceeded (see _rpq_driver). The
     # distributed unroll below is unchanged — the 100 TB path, and the
     # fallback for dense expressions.
-    from gliner_spark.gate import edge_rows
-    from gliner_spark.operators.graph_analytics import _local_df
-
     cap = RPQ_STATE_CAP if state_cap is None else state_cap
     if cap > 0 and max_hops >= 1:
         erows = edge_rows(triples, "spo", driver_max_edges)
@@ -237,18 +233,19 @@ def rpq_match(
                 erows, transitions, accepting, max_hops, cap
             )
             if data is not None:
-                out = _local_df(
-                    spark, data, "src string, dst string, min_hops long"
-                ).orderBy("src", "dst")
-                return forward_caches(out, triples)
+                return local_result(
+                    triples, data, "src string, dst string, min_hops long",
+                    ["src", "dst"],
+                )
 
     # self-loop facts stay in: SPARQL path semantics match them (the
     # product BFS handles them like any cycle; the visited anti-join
     # terminates). transitive_closure's self-pair EXCLUSION is that
     # operator's contract, not this one's.
     e = triples.select("subj", "pred", "obj").distinct()
-    tdf = _local_df(spark,
-        transitions, "q1 int, pred string, dir string, q2 int"
+    tdf = local_result(
+        triples, transitions, "q1 int, pred string, dir string, q2 int",
+        forward=False,
     )
     fwd = e.join(
         F.broadcast(tdf.filter(F.col("dir") == "fwd")), "pred"

@@ -25,7 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gliner_spark.operators.graph_analytics import _local_df
+from gliner_spark import gate
+from gliner_spark.cache import forward_caches
+from gliner_spark.gate import local_result
+from gliner_spark.metrics import attach_audits, capped_filter
 
 QUANT = 10000
 
@@ -76,7 +79,7 @@ def cosine_topk(
     if qrows is not None:
         ids, vecs, norms = _np_qz(qrows)
         rows = _np_exact_topk_rows(ids, vecs, norms, n_queries, k)
-        return _sim_out_df(emb.sparkSession, rows)
+        return _sim_out_df(emb, rows)
     queries = qz.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("q").alias("qa"),
@@ -112,7 +115,7 @@ def ivf_topk(
         rows = _np_exact_topk_rows(
             ids, vecs, norms, n_queries, k, cand_mask=cand
         )
-        return _sim_out_df(emb.sparkSession, rows)
+        return _sim_out_df(emb, rows)
     queries = qz.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("cell"),
@@ -349,7 +352,7 @@ def kmeans_ivf_topk(
                 rows.append(
                     (qid, int(ids[cidx][t]), rank, float(sims[t]))
                 )
-        return _sim_out_df(emb.sparkSession, rows)
+        return _sim_out_df(emb, rows)
     cents = cells if cells is not None else train_kmeans_cells(qz, k=n_cells)
 
     corpus = qz.select(
@@ -543,7 +546,7 @@ def pq_topk(
                 rows.append(
                     (qid, int(ids[cidx][t]), rank, int(d2[cidx][t]))
                 )
-        return _d2_out_df(emb.sparkSession, rows)
+        return _d2_out_df(emb, rows)
     if books is None:
         books = train_pq_codebooks(qz)
     m = len(books)
@@ -637,7 +640,7 @@ def pq_refine_topk(
                 rows.append(
                     (qid, int(ids[short][t]), rank, float(sims[t]))
                 )
-        return _sim_out_df(emb.sparkSession, rows)
+        return _sim_out_df(emb, rows)
     if books is None:
         books = train_pq_codebooks(qz)
     cand = pq_topk(
@@ -738,7 +741,7 @@ def ivfpq_refine_topk(
                 rows.append(
                     (qid, int(ids[short][t]), rank, float(sims[t]))
                 )
-        return _sim_out_df(emb.sparkSession, rows)
+        return _sim_out_df(emb, rows)
     if cells is None or books is None:
         rows = _collect_training_sample(qz, KM_SAMPLE_TARGET)
         if cells is None:
@@ -837,7 +840,7 @@ def ivfpq_topk(
                 rows.append(
                     (qid, int(ids[cidx][t]), rank, int(d2[t]))
                 )
-        return _d2_out_df(emb.sparkSession, rows)
+        return _d2_out_df(emb, rows)
     if cells is None or books is None:
         # ONE count + ONE bounded sample collect feed BOTH trainers
         rows = _collect_training_sample(qz, KM_SAMPLE_TARGET)
@@ -939,26 +942,12 @@ def _hp_band_keys(q_col, dim: int, planes: int = HP_PLANES,
     return keys
 
 
-import os as _os
-
-# r7 adaptive small-corpus gate for the SRP near-dup family (the
-# GRAPH_DRIVER_MAX_EDGES design applied to vectors): at or below this
-# many vectors the banding/cap/verify pipeline runs on the driver from
-# one bounded collect of the SPARK-computed quantized vectors (so the
-# round-to-int quantization stays engine-exact by construction); the
-# final sim rounding is applied back IN Spark with the same F.round
-# expression. 0 disables. Distributed plan unchanged above the bound.
-SIM_DRIVER_MAX_VECTORS = int(
-    _os.environ.get("GS_SIM_DRIVER_MAX_VECTORS", "20000")
-)
-
-
 # --------------------------------------------------------------------------
 # r7 driver fast paths for the ANN family (guide §1.2: the data is
 # corpus-sized but the local harness corpora are small — the measured cost
 # of these queries was almost entirely plan/codegen of the literal
 # centroid/codebook expression trees, ~3.5-4.5 s per query over 2000
-# vectors). Below SIM_DRIVER_MAX_VECTORS the scoring runs in numpy from
+# vectors). Below gate.SIM_DRIVER_MAX_VECTORS the scoring runs in numpy from
 # ONE bounded collect of the SPARK-computed quantized vectors:
 # - every distance (cell assignment, PQ code, ADC, SQ8 recon, dots) is
 #   exact int64, identical to the JVM bigint folds;
@@ -973,15 +962,12 @@ SIM_DRIVER_MAX_VECTORS = int(
 
 
 def _sim_qz_rows(qz, bound, with_label: bool = False):
-    from gliner_spark.operators.graph_analytics import _collected_edges
-
     cols = (
         ("vec_id", "label", "q", "norm2")
         if with_label
         else ("vec_id", "q", "norm2")
     )
-    b = SIM_DRIVER_MAX_VECTORS if bound is None else bound
-    return _collected_edges(qz, cols, b)
+    return gate.collect_rows(qz, cols, bound, "vectors")
 
 
 def _np_qz(qrows):
@@ -1107,29 +1093,22 @@ def _np_pq_dtab(vec, books):
     return np.stack(tabs)  # (m, k)
 
 
-def _sim_out_df(spark, rows):
+def _sim_out_df(emb, rows):
     """(query_id, vec_id, rank, sim) local frame with the F.round(sim, 6)
     applied in Spark (engine-exact bits, the neardup precedent)."""
-    from gliner_spark.operators.graph_analytics import _local_df
-
-    return (
-        _local_df(spark,
-            rows, "query_id long, vec_id long, rank int, sim double"
-        )
-        .select(
-            "query_id", "vec_id", "rank",
-            F.round("sim", 6).alias("sim"),
-        )
-        .orderBy("query_id", "rank")
+    return local_result(
+        emb, rows, "query_id long, vec_id long, rank int, sim double",
+        ["query_id", "rank"],
+        select=["query_id", "vec_id", "rank", F.round("sim", 6).alias("sim")],
+        forward=False,
     )
 
 
-def _d2_out_df(spark, rows):
-    from gliner_spark.operators.graph_analytics import _local_df
-
-    return _local_df(spark,
-        rows, "query_id long, vec_id long, rank int, d2 long"
-    ).orderBy("query_id", "rank")
+def _d2_out_df(emb, rows):
+    return local_result(
+        emb, rows, "query_id long, vec_id long, rank int, d2 long",
+        ["query_id", "rank"], forward=False,
+    )
 
 
 def _np_exact_topk_rows(ids, vecs, norms, n_queries, k, cand_mask=None):
@@ -1266,49 +1245,23 @@ def embedding_neardup(
     SRP collision probability per plane is 1 - theta/pi, so recall rises
     steeply with similarity (~0.99 at cosine 0.95 with 6 bands x 4 bits).
     Recall vs the unblocked baseline is reported in BENCH.md."""
-    from gliner_spark.metrics import attach_audits as _attach
-
-    bound = (
-        SIM_DRIVER_MAX_VECTORS
-        if driver_max_vectors is None
-        else driver_max_vectors
+    qrows = gate.collect_rows(
+        _quantized(emb), ("vec_id", "q", "norm2"), driver_max_vectors,
+        "vectors",
     )
-    if bound > 0:
-        from gliner_spark.operators.graph_analytics import _collected_edges
-
-        qrows = _collected_edges(
-            _quantized(emb), ("vec_id", "q", "norm2"), bound
+    if qrows is not None:
+        ddl = "vec_a long, vec_b long, sim double"
+        order = ["vec_a", "vec_b"] if sort else ()
+        if not qrows:
+            return local_result(emb, [], ddl, order, forward=False)
+        pairs, audit = _neardup_driver_pairs(
+            qrows, len(qrows[0][1]), threshold
         )
-        if qrows is not None:
-            spark = emb.sparkSession
-            if not qrows:
-                out = _local_df(spark,
-                    [], "vec_a long, vec_b long, sim double"
-                )
-            else:
-                dim_d = len(qrows[0][1])
-                pairs, audit = _neardup_driver_pairs(qrows, dim_d, threshold)
-                out = _local_df(spark,
-                    pairs, "vec_a long, vec_b long, sim double"
-                ).select(
-                    "vec_a", "vec_b", F.round("sim", 6).alias("sim")
-                )
-                audit_df = _local_df(spark,
-                    [
-                        (
-                            audit["guard"], audit["n_dropped_rows"],
-                            audit["max_group_size"], audit["cap"],
-                        )
-                    ],
-                    "guard string, n_dropped_rows long, "
-                    "max_group_size long, cap long",
-                )
-                if sort:
-                    out = out.orderBy("vec_a", "vec_b")
-                return _attach(out, audit_df)
-            if sort:
-                out = out.orderBy("vec_a", "vec_b")
-            return out
+        return local_result(
+            emb, pairs, ddl, order,
+            select=["vec_a", "vec_b", F.round("sim", 6).alias("sim")],
+            audits=[audit], forward=False,
+        )
     qz = _quantized(emb)
     dim = len(emb.select("embedding").first()[0])
     keys = _hp_band_keys(F.col("q"), dim)
@@ -1323,8 +1276,6 @@ def embedding_neardup(
             )
         ).alias("bb"),
     ).select("vec_id", "bb.band", "bb.bkey")
-    from gliner_spark.metrics import attach_audits, capped_filter
-
     w = Window.partitionBy("band", "bkey")
     buckets, _cap_audit = capped_filter(
         buckets.withColumn("n", F.count(F.lit(1)).over(w)),
@@ -1392,8 +1343,6 @@ def semantic_clusters(
     distributed, reused from entity linking). Returns (vec_id, cluster,
     cluster_size, keep) for clustered vectors only — singletons are
     implicitly their own cluster."""
-    from gliner_spark.cache import forward_caches
-    from gliner_spark.metrics import attach_audits
     from gliner_spark.operators.linking import closure_clusters
 
     pairs = embedding_neardup(emb, threshold=threshold, sort=False)
@@ -1480,7 +1429,7 @@ def sq8_topk(
                 rows.append(
                     (qid, int(ids[cidx][t]), rank, float(sims[t]))
                 )
-        return _sim_out_df(emb.sparkSession, rows)
+        return _sim_out_df(emb, rows)
     if ranges is None:
         ranges = train_sq8_ranges(qz)
     mn = ", ".join(f"CAST({lo} AS BIGINT)" for lo, _ in ranges)

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gliner_spark import gate
 from gliner_spark.functions.text import (
     LANG_MARKERS,
     LANG_ORDER,
@@ -617,17 +618,13 @@ def _winnow_gram_rows(docs: DataFrame, k: int, bound: int | None):
     (one row per doc) — the shared input of the r7 winnow-family driver
     replays. Engine-exact by construction: tokenization and gram
     hashing stay in Spark expressions."""
-    from gliner_spark.operators.dedup import DD_DRIVER_MAX_DOCS
-    from gliner_spark.operators.graph_analytics import _collected_edges
-
-    b = DD_DRIVER_MAX_DOCS if bound is None else bound
     # two-stage select like gram_postings: _ids must be a materialized
     # projection, NOT an inlined expression — inlining re-tokenizes the
     # document once per gram slice (O(n_tokens^2) per doc)
     staged = docs.select(
         "doc_id", token_id_array("text").alias("_ids")
     ).select("doc_id", gram_hash_array(F.col("_ids"), k).alias("_ghs"))
-    return _collected_edges(staged, ("doc_id", "_ghs"), b)
+    return gate.collect_rows(staged, ("doc_id", "_ghs"), bound, "docs")
 
 
 def _winnow_fps_driver(rows, w: int):

@@ -31,11 +31,15 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # bounded driver-gate collects are limit(bound+1).toArrow();
-        # executeTake's default first batch of 1 partition serializes the
-        # upstream into incremental single-task waves — start at the
-        # session's parallelism instead (r7, guide §1.2/§5: the limit is
-        # a memory bound, not a work-reduction hint, for these collects)
+        # the driver gate's limit-mode collects (gate.py: computed
+        # per-row frames and degraded-tier aggregates) are
+        # limit(bound+1).toArrow(); executeTake's default first batch of
+        # 1 partition serializes the upstream into incremental
+        # single-task waves — start at the session's parallelism instead
+        # (r7, guide §1.2/§5: the limit is a memory bound, not a
+        # work-reduction hint, for these collects). Raw-mode collects
+        # take no limit. The setting stays until an early-abort raw
+        # collect replaces the limit mode.
         .config("spark.sql.limit.initialNumPartitions", str(shuffle))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")

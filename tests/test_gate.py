@@ -1,10 +1,14 @@
-"""The driver edge snapshot (gliner_spark/gate.py): every driver-gated
-graph operator called on one triples frame shares ONE bounded collect of
-it, and takes the same tier, with the same rows, as an operator that
-collects on its own. Also pins the tier of every gated operator in the
-benchmark mix, and the sorted output of every collect tier."""
+"""The driver gate (gliner_spark/gate.py). The edge snapshot: every
+driver-gated graph operator called on one triples frame shares ONE
+bounded collect of it, and takes the same tier, with the same rows, as
+an operator that collects on its own. Also pins the tier of every gated
+operator, the sorted output of every collect tier, the degraded tier of
+every grouped site, and that the gate stays behind one module."""
 
+import ast
+import pathlib
 import random
+import re
 
 import pytest
 
@@ -102,10 +106,10 @@ def collects(monkeypatch):
     """Spy on the bounded collect primitives: the raw Arrow collect
     (every raw-tier collect, snapshot included) and the degraded tier's
     distinct collect."""
-    import gliner_spark.operators.graph_analytics as ga
+    from gliner_spark import gate
 
     calls = {"raw": 0, "degraded": 0}
-    raw, degraded = ga._arrow_collect_bounded, ga._collected_edges
+    raw, degraded = gate._arrow_collect_bounded, gate._collect_limited
 
     def spy_raw(*a, **k):
         calls["raw"] += 1
@@ -115,8 +119,8 @@ def collects(monkeypatch):
         calls["degraded"] += 1
         return degraded(*a, **k)
 
-    monkeypatch.setattr(ga, "_arrow_collect_bounded", spy_raw)
-    monkeypatch.setattr(ga, "_collected_edges", spy_degraded)
+    monkeypatch.setattr(gate, "_arrow_collect_bounded", spy_raw)
+    monkeypatch.setattr(gate, "_collect_limited", spy_degraded)
     return calls
 
 
@@ -142,14 +146,14 @@ def test_release_caches_keeps_the_snapshot(spark, triples_path, collects):
 def test_over_cap_frame_keeps_per_op_tiers(
     spark, triples_path, collects, monkeypatch
 ):
-    import gliner_spark.operators.graph_analytics as ga
+    from gliner_spark import gate
 
     t = _read(spark, triples_path)
     n_rows = t.count()
     n_bgp = t.filter(t.pred.isin([p for _s, p, _o in BGP])).count()
     n_nonloop = t.filter(t.subj != t.obj).count()
     assert n_bgp < n_nonloop <= n_rows
-    monkeypatch.setattr(ga, "RAW_COLLECT_CAP", n_bgp)
+    monkeypatch.setattr(gate, "RAW_COLLECT_CAP", n_bgp)
     conj = _op("conjunctive")
 
     # no snapshot yet: the predicate view makes its own (small) collect
@@ -179,7 +183,9 @@ def test_over_cap_frame_keeps_per_op_tiers(
     assert _rows(out) == got["conjunctive"]
 
     for name, rows in got.items():
-        assert rows == _rows(_op(name)(_read(spark, triples_path), 0)), name
+        forced = _op(name)(_read(spark, triples_path), 0)
+        assert _tier(forced) == "distributed", name
+        assert rows == _rows(forced), name
 
 
 @pytest.mark.parametrize("name", GATED)
@@ -190,12 +196,12 @@ def test_gated_mix_op_tier_pin(spark, triples_path, name):
 
 
 def test_positive_cols_degraded_tier_sorted(spark, triples_path, monkeypatch):
-    import gliner_spark.operators.graph_analytics as ga
+    from gliner_spark import gate
     from gliner_spark.operators.kg_completion import _positive_cols
 
     t = _read(spark, triples_path).repartition(4)
     arrow_tier = _positive_cols(t, None)
-    monkeypatch.setattr(ga, "RAW_COLLECT_CAP", 0)
+    monkeypatch.setattr(gate, "RAW_COLLECT_CAP", 0)
     # keep the aggregate's 32 shuffle partitions apart, as on a cluster:
     # coalesced into one, the sort-aggregate output is sorted by chance
     key = "spark.sql.adaptive.coalescePartitions.enabled"
@@ -221,3 +227,234 @@ def test_frame_without_pred_collects_per_view(spark, collects):
     got = _rows(ga.triangle_counts(t))
     assert collects == {"raw": 1, "degraded": 0}
     assert got == _rows(ga.triangle_counts(t, driver_max_edges=0))
+
+
+# ---------------------------------------------------------------- tier pins
+
+
+def _other_ops():
+    """name -> op(frames, bound) for every gated op outside the mix,
+    with bound None = default gate, 0 = forced distributed plan.
+    `frames` holds the shared triples, documents and embeddings."""
+    from gliner_spark.operators import dedup, similarity as sim
+    from gliner_spark.operators import graph_analytics as ga
+    from gliner_spark.operators import kg_completion as kc
+    from gliner_spark.operators import kg_fusion as kf
+    from gliner_spark.operators import ontology as on
+    from gliner_spark.operators.rpq import rpq_match
+
+    ops = {}
+    for name in (
+        "link_prediction", "bfs_distances", "partition_modularity",
+        "entity_provenance", "ktruss", "metapath_counts", "wl_colors",
+        "degree_histogram", "hits", "square_counts", "assortativity",
+        "pred_association", "triad_census", "pagerank_weighted", "egonet",
+        "summary_graph",
+    ):
+        ops[name] = lambda f, d, fn=getattr(ga, name): fn(
+            f["triples"], driver_max_edges=d
+        )
+    ops["walk_corpus"] = lambda f, d: kc.walk_corpus(
+        f["triples"], driver_max_edges=d
+    )
+    ops["rpq_match"] = lambda f, d: rpq_match(
+        f["triples"], ("plus", ("pred", "knows")), driver_max_edges=d
+    )
+    for mod, name in (
+        (kc, "negative_samples"), (kc, "cooc_candidates"),
+        (kc, "mine_rules"), (kc, "apply_rules"), (kc, "ranking_metrics"),
+        (kf, "fuse_functional"), (kf, "fact_rank"),
+        (on, "rdfs_types"), (on, "subproperty_triples"),
+    ):
+        ops[name] = lambda f, d, fn=getattr(mod, name): fn(
+            f["triples"], driver_max_rows=d
+        )
+    for name in ("minhash_dedup", "winnow_overlap_pairs",
+                 "containment_pairs"):
+        ops[name] = lambda f, d, fn=getattr(dedup, name): fn(
+            f["docs"], driver_max_docs=d
+        )
+    for name, kw in (
+        ("cosine_topk", {}), ("ivf_topk", {}), ("kmeans_ivf_topk", {}),
+        ("pq_topk", {}), ("pq_refine_topk", {"shortlist": 12}),
+        ("ivfpq_topk", {}), ("ivfpq_refine_topk", {"shortlist": 12}),
+        ("sq8_topk", {}),
+    ):
+        ops[name] = lambda f, d, fn=getattr(sim, name), kw=kw: fn(
+            f["emb"], n_queries=6, k=4, driver_max_vectors=d, **kw
+        )
+    ops["embedding_neardup"] = lambda f, d: sim.embedding_neardup(
+        f["emb"], driver_max_vectors=d
+    )
+    return ops
+
+
+OTHER_GATED = tuple(sorted(_other_ops()))
+
+
+@pytest.fixture(scope="module")
+def frames(spark, triples_path, tmp_path_factory):
+    """The shared triples, plus small documents and embeddings tables
+    (parquet, so a forced-distributed plan reads a file scan). The
+    documents are edited copies of 20 texts, so the dedup family finds
+    candidate pairs."""
+    rng = random.Random(9)
+    words = [f"w{i}" for i in range(60)]
+    texts = [[rng.choice(words) for _ in range(30)] for _ in range(20)]
+    docs = []
+    for i in range(200):
+        toks = list(texts[i % 20])
+        toks[rng.randrange(30)] = rng.choice(words)
+        docs.append((i, " ".join(toks)))
+    base = tmp_path_factory.mktemp("frames")
+    spark.createDataFrame(docs, "doc_id bigint, text string").write.parquet(
+        str(base / "docs")
+    )
+    spark.createDataFrame(
+        [(i, [rng.uniform(-1.0, 1.0) for _ in range(64)], i % 8)
+         for i in range(200)],
+        "vec_id bigint, embedding array<float>, label int",
+    ).write.parquet(str(base / "emb"))
+    return {
+        "triples": _read(spark, triples_path),
+        "docs": spark.read.parquet(str(base / "docs")),
+        "emb": spark.read.parquet(str(base / "emb")),
+    }
+
+
+@pytest.mark.parametrize("name", OTHER_GATED)
+def test_gated_op_tier_pin(frames, name):
+    from gliner_spark.cache import release_caches
+
+    op = _other_ops()[name]
+    assert _tier(op(frames, None)) == "driver"
+    forced = op(frames, 0)
+    assert _tier(forced) == "distributed"
+    release_caches(forced)
+
+
+def test_closure_clusters_tier_pin(spark, triples_path, monkeypatch):
+    from gliner_spark import gate
+    from gliner_spark.operators.linking import closure_clusters
+
+    pairs = _read(spark, triples_path).filter("pred = 'knows'").selectExpr(
+        "subj AS doc_a", "obj AS doc_b"
+    )
+    assert _tier(closure_clusters(pairs, "doc_a", "doc_b", "doc_id")) == (
+        "driver"
+    )
+    monkeypatch.setattr(gate, "GRAPH_DRIVER_MAX_EDGES", 0)
+    forced = closure_clusters(pairs, "doc_a", "doc_b", "doc_id")
+    assert _tier(forced) == "distributed"
+
+
+# ------------------------------------------------ degraded grouped tiers
+
+
+def _grouped_site(name, t):
+    """The op over frame `t` whose driver tier reads the grouped site."""
+    from gliner_spark.operators import graph_analytics as ga
+    from gliner_spark.operators import kg_completion as kc
+    from gliner_spark.operators import kg_fusion as kf
+    from gliner_spark.operators import ontology as on
+    from gliner_spark.operators.linking import closure_clusters
+
+    if name == "closure_clusters":
+        pairs = t.filter("pred = 'knows'").selectExpr(
+            "subj AS doc_a", "obj AS doc_b"
+        )
+        return closure_clusters(pairs, "doc_a", "doc_b", "doc_id")
+    return {
+        "_positive_cols": kc.negative_samples,
+        "_vote_cols": kf.fuse_functional,
+        "cooc_candidates": kc.cooc_candidates,
+        "pagerank_weighted": ga.pagerank_weighted,
+        "rdfs_types": on.rdfs_types,
+        "subproperty_triples": on.subproperty_triples,
+    }[name](t)
+
+
+GROUPED_SITES = (
+    "_positive_cols", "_vote_cols", "cooc_candidates", "pagerank_weighted",
+    "rdfs_types", "subproperty_triples", "closure_clusters",
+)
+
+
+@pytest.mark.parametrize("name", GROUPED_SITES)
+def test_degraded_grouped_tier_matches_raw_tier(
+    spark, triples_path, monkeypatch, name
+):
+    """Past RAW_COLLECT_CAP every grouped site takes the degraded tier
+    (Spark aggregate, then a limit-mode collect) and returns the raw
+    tier's rows, sorted, and its op the raw tier's output."""
+    from gliner_spark import gate
+
+    t = _read(spark, triples_path).repartition(4)
+    seen = {"rows": [], "limited": 0}
+    group, limited = gate.group, gate._collect_limited
+
+    def spy_group(*a, **k):
+        tbl = group(*a, **k)
+        seen["rows"].append(None if tbl is None else gate.rows(tbl))
+        return tbl
+
+    def spy_limited(*a, **k):
+        seen["limited"] += 1
+        return limited(*a, **k)
+
+    monkeypatch.setattr(gate, "group", spy_group)
+    monkeypatch.setattr(gate, "_collect_limited", spy_limited)
+
+    def run():
+        seen["rows"], seen["limited"] = [], 0
+        out = _grouped_site(name, t)
+        assert _tier(out) == "driver"
+        return seen["rows"], seen["limited"], _rows(out)
+
+    raw_rows, raw_limited, raw_out = run()
+    assert raw_limited == 0
+    assert raw_rows and all(r for r in raw_rows)
+    monkeypatch.setattr(gate, "RAW_COLLECT_CAP", 0)
+    # keep the aggregate's 32 shuffle partitions apart, as on a cluster:
+    # coalesced into one, the sort-aggregate output is sorted by chance
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        deg_rows, deg_limited, deg_out = run()
+    finally:
+        spark.conf.set(key, old)
+    assert deg_limited == len(deg_rows)
+    assert deg_rows == raw_rows
+    assert deg_out == raw_out
+
+
+# ------------------------------------------------------------ one module
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / "gliner_spark"
+
+
+def test_collects_stay_in_the_gate_module():
+    bad = re.compile(
+        r"\.toArrow\(|_arrow_collect_bounded|\.limit\([^)]*\+\s*1\s*\)"
+        r"|def _(collected_\w+|degraded_dedup|sorted_distinct|local_df)\b"
+    )
+    hits = [
+        f"{path.name}:{i}: {line.strip()}"
+        for path in sorted((PKG / "operators").glob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if bad.search(line)
+    ]
+    assert hits == []
+
+
+def test_gate_imports_no_operator():
+    tree = ast.parse((PKG / "gate.py").read_text())
+    mods = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom):
+            mods.add(node.module or "")
+            mods.update(f"{node.module}.{a.name}" for a in node.names)
+        elif isinstance(node, ast.Import):
+            mods.update(a.name for a in node.names)
+    assert not [m for m in mods if m.startswith("gliner_spark.operators")]

@@ -3,7 +3,7 @@ row-identical to the distributed CC path."""
 
 import pytest
 
-import gliner_spark.operators.graph_analytics as ga
+from gliner_spark import gate
 from gliner_spark.operators.linking import closure_clusters
 
 
@@ -19,11 +19,22 @@ def _rows(df):
     return [tuple(r) for r in df.collect()]
 
 
+def _has_non_local_leaf(df):
+    """The forced-off call really took the distributed plan: the driver
+    tier's output has only LocalRelation leaves."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return any(
+        leaves.apply(i).getClass().getSimpleName() != "LocalRelation"
+        for i in range(leaves.size())
+    )
+
+
 def test_closure_driver_matches_distributed(pairs, monkeypatch):
     fast = closure_clusters(pairs, "doc_a", "doc_b", "doc_id", None)
     fast_rows = _rows(fast)
-    monkeypatch.setattr(ga, "GRAPH_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(gate, "GRAPH_DRIVER_MAX_EDGES", 0)
     slow = closure_clusters(pairs, "doc_a", "doc_b", "doc_id", None)
+    assert _has_non_local_leaf(slow)
     assert fast_rows == _rows(slow)
     assert [(f.name, f.dataType) for f in fast.schema.fields] == [
         (f.name, f.dataType) for f in slow.schema.fields
@@ -40,8 +51,9 @@ def test_closure_driver_string_ids(spark, monkeypatch):
     pairs = spark.createDataFrame(rows, "doc_a string, doc_b string")
     fast = closure_clusters(pairs, "doc_a", "doc_b", "doc_id", None)
     fast_rows = _rows(fast)
-    monkeypatch.setattr(ga, "GRAPH_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(gate, "GRAPH_DRIVER_MAX_EDGES", 0)
     slow = closure_clusters(pairs, "doc_a", "doc_b", "doc_id", None)
+    assert _has_non_local_leaf(slow)
     assert fast_rows == _rows(slow)
     assert fast_rows[0] == ("doc-a", "doc-a", 3, True)
 

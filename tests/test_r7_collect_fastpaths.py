@@ -6,13 +6,10 @@ import random
 
 import pytest
 
+from gliner_spark.gate import GRAPH_DRIVER_MAX_EDGES, _local_df, dedup
 from gliner_spark.operators.graph_analytics import (
-    GRAPH_DRIVER_MAX_EDGES,
-    _collected_dedup,
-    _collected_edges,
     _fold_hash_many,
     _fold_hash_py,
-    _local_df,
 )
 
 
@@ -64,10 +61,8 @@ def test_collected_dedup_matches_distinct_collect(spark):
         [("a", "b"), ("a", "b"), ("b", "c"), ("a", "c"), ("b", "c")],
         "src string, dst string",
     )
-    got = _collected_dedup(raw, ("src", "dst"), 100)
-    want = sorted(
-        _collected_edges(raw.distinct(), ("src", "dst"), 100)
-    )
+    got = dedup(raw, ("src", "dst"), 100)
+    want = sorted(map(tuple, raw.distinct().collect()))
     assert sorted(got) == want
     assert got == sorted(set(got))  # returned sorted + unique
 
@@ -78,23 +73,23 @@ def test_collected_dedup_bound_fallback(spark):
         "src string, dst string",
     )
     # distinct rows (50) exceed bound -> None (caller goes distributed)
-    assert _collected_dedup(raw, ("src", "dst"), 10) is None
+    assert dedup(raw, ("src", "dst"), 10) is None
     # bound 0 disables the gate entirely
-    assert _collected_dedup(raw, ("src", "dst"), 0) is None
-    assert _collected_dedup(raw, ("src", "dst"), 50) is not None
+    assert dedup(raw, ("src", "dst"), 0) is None
+    assert dedup(raw, ("src", "dst"), 50) is not None
 
 
 def test_collected_dedup_raw_cap_degrades_to_distinct_tier(
     spark, monkeypatch
 ):
-    import gliner_spark.operators.graph_analytics as ga
+    from gliner_spark import gate
 
     raw = spark.createDataFrame(
         [("a", "b")] * 40 + [("b", "c")] * 40,
         "src string, dst string",
     )
-    monkeypatch.setattr(ga, "RAW_COLLECT_CAP", 8)
-    got = ga._collected_dedup(raw, ("src", "dst"), 100)
+    monkeypatch.setattr(gate, "RAW_COLLECT_CAP", 8)
+    got = gate.dedup(raw, ("src", "dst"), 100)
     # falls back to the cluster-distinct tier, same result set
     assert sorted(got) == [("a", "b"), ("b", "c")]
 
