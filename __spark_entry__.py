@@ -62,16 +62,20 @@ def _synth(spark: SparkSession, sf_dir: str, with_gold: bool = False):
     )
 
 
-def _graph(spark: SparkSession, sf_dir: str, model, labels=None):
-    """Fused synth+extract (r7): one mapInArrow runs gen_doc and the
-    model forward per id — identical rows to
-    extract_graph(_synth(...), model), minus the corpus's
+def _synth_ids(spark: SparkSession, sf_dir: str):
+    """The fixture's corpus as the fused synth source of the extraction
+    heads: one mapInArrow runs gen_doc and the model forward per id —
+    identical rows to extract_X(_synth(...), ...), minus the corpus's
     Python->JVM->Python round trip between the two stages."""
-    from gliner_spark.operators.extraction import synth_extract_graph
+    from gliner_spark.operators.extraction import synth_ids
 
-    return synth_extract_graph(
-        spark, _n_docs(spark, sf_dir), model, labels=labels
-    )
+    return synth_ids(spark, _n_docs(spark, sf_dir))
+
+
+def _graph(spark: SparkSession, sf_dir: str, model, labels=None):
+    from gliner_spark.operators.extraction import extract_graph
+
+    return extract_graph(_synth_ids(spark, sf_dir), model, labels=labels)
 
 
 def _model():
@@ -852,11 +856,10 @@ def q_kg_span_f1(spark, sf_dir):
 
 def q_kg_mentions_zeroshot(spark, sf_dir):
     """Per-request label subset (zero-shot surface): persons+locations only."""
-    from gliner_spark.operators.extraction import synth_extract_mentions_only
+    from gliner_spark.operators.extraction import extract_mentions
 
-    df = synth_extract_mentions_only(
-        spark, _n_docs(spark, sf_dir), _model(),
-        labels=["person", "location"],
+    df = extract_mentions(
+        _synth_ids(spark, sf_dir), _model(), labels=["person", "location"]
     )
     return df.withColumn("score", F.round("score", 6))
 
@@ -918,11 +921,9 @@ def q_kg_mentions_dense(spark, sf_dir):
     """Dense-encoder scoring stage: hash-bucket embedding -> SpanMarkerV0
     (reference span_rep.py:464-511) -> mean-pooled label prompts ->
     matmul/sigmoid head (base.py:474); weights shipped via sc.broadcast."""
-    from gliner_spark.operators.extraction import synth_extract_spans_dense
+    from gliner_spark.operators.extraction import extract_spans_dense
 
-    df = synth_extract_spans_dense(
-        spark, _n_docs(spark, sf_dir), _dense_ckpt()
-    )
+    df = extract_spans_dense(_synth_ids(spark, sf_dir), _dense_ckpt())
     return df.withColumn("score", F.round("score", 6))
 
 
@@ -937,11 +938,11 @@ def q_kg_mentions_encoder(spark, sf_dir):
     import os
     import tempfile
 
-    from gliner_spark.operators.extraction import synth_extract_spans_encoder
+    from gliner_spark.operators.extraction import extract_spans_encoder
 
     p = os.path.join(tempfile.gettempdir(), "gs_encoder_seam_ckpt.npz")
     _dense_ckpt().save_npz(p)  # deterministic weights — rewrite is a no-op
-    df = synth_extract_spans_encoder(spark, _n_docs(spark, sf_dir), p)
+    df = extract_spans_encoder(_synth_ids(spark, sf_dir), p)
     return df.withColumn("score", F.round("score", 6))
 
 
@@ -965,14 +966,10 @@ def q_kg_relations_prompted(spark, sf_dir):
     """Prompt-based two-pass RE (reference GLiNERRelationExtractor,
     multitask/relation_extraction.py:13-181): pass-1 NER -> per-doc
     composite labels '{entity} <> {relation}' -> pass-2 scoring -> parsed
-    (source, relation, target) rows. Both passes fused in one mapInPandas."""
-    from gliner_spark.operators.prompted_re import (
-        synth_extract_relations_prompted,
-    )
+    (source, relation, target) rows. Both passes fused in one mapInArrow."""
+    from gliner_spark.operators.prompted_re import extract_relations_prompted
 
-    df = synth_extract_relations_prompted(
-        spark, _n_docs(spark, sf_dir), _model()
-    )
+    df = extract_relations_prompted(_synth_ids(spark, sf_dir), _model())
     return df.withColumn("score", F.round("score", 6))
 
 
@@ -980,13 +977,9 @@ def q_kg_triples_spans(spark, sf_dir):
     """Word-span-annotated relation triples — the relex evaluator's strict
     matching input (reference evaluator.py:210-255 matches exact
     (rel_label, h_span, t_span) tuples; operators/evaluation.relex_prf)."""
-    from gliner_spark.operators.extraction import (
-        synth_extract_triples_with_spans,
-    )
+    from gliner_spark.operators.extraction import extract_triples_with_spans
 
-    df = synth_extract_triples_with_spans(
-        spark, _n_docs(spark, sf_dir), _model()
-    )
+    df = extract_triples_with_spans(_synth_ids(spark, sf_dir), _model())
     return df.withColumn("score", F.round("score", 6))
 
 

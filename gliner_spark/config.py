@@ -60,8 +60,6 @@ class PipelineConfig:
     cc_checkpoint_dir: str = ""
 
     # --- Spark execution ---
-    shuffle_partitions: int = 32
-    doc_partitions: int = 0      # 0 = leave input partitioning; else repartition(N, doc_id)
     arrow_max_records: int = 2048
     # >0: calibrate maxRecordsPerBatch from measured doc bytes so one Arrow
     # batch ~ this many MB (reference serve/memory.py analog; core/batching).

@@ -526,7 +526,9 @@ def containment_pairs(
             "contain_a_permille long, contain_b_permille long",
             ["doc_a", "doc_b"], audits=[audit], forward=False,
         )
-    cand = winnow_overlap_pairs(docs, min_shared, bucket_cap)
+    cand = winnow_overlap_pairs(
+        docs, min_shared, bucket_cap, driver_max_docs
+    )
     pairs = cand.select("doc_a", "doc_b")
     post = gram_postings(docs).select("doc_id", "gh").distinct().persist()
     sizes = post.groupBy("doc_id").agg(

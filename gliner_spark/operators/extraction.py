@@ -1,10 +1,28 @@
-"""Stage 1+2: mention + raw-triple extraction as ONE mapInPandas pass.
+"""Stage 1+2: extraction heads over one document source, as ONE mapInArrow pass.
 
 Mirrors the reference's relex forward, which emits entities and relations in
 a single model pass (gliner/modeling/base.py:2256-2495, decoder.py:1121-93):
 per document there is zero cross-document communication (SURVEY §3.3), so
-the whole neural stage is embarrassingly parallel — one Arrow-vectorized
-UDF, no shuffle, no second scan of the corpus for relations.
+every extraction head is "per batch of documents: assemble the text, call
+the model, append output columns" — one Arrow-vectorized UDF, no shuffle,
+no second scan of the corpus for relations.
+
+Three pieces, shared by every head:
+- the document source: a docs frame (doc_id, spans), or `synth_ids(...)`,
+  a spark.range id range that runs gen_doc per id inside the same UDF (the
+  synthetic spans never cross the Python->JVM->Python boundary between a
+  synth stage and an extract stage; every doc is a pure function of its
+  id, so the rows equal those over synth_docs(...));
+- one per-batch document iterator (`_batch_docs`) yielding
+  (doc_id, kinds, texts, refs) from either source;
+- one runner (`_run`): ships the model or checkpoint once (sc.broadcast,
+  or sc.addFile for a checkpoint path), prunes a docs frame to
+  (doc_id, spans), and runs mapInArrow with the head's DDL.
+
+A head is a per-batch accumulator: `add_doc(doc_id, kinds, texts, refs)`
+then `finish() -> RecordBatch`. The graph head builds nested
+mentions[]/triples[] arrays from offsets; the flat heads build typed
+columns from row tuples.
 
 The model object is broadcast once per job (the reference's frozen-prompt
 mode, model.py:2455-2541, proves label embeddings can be precomputed and
@@ -12,8 +30,6 @@ reused for every batch — our broadcast variable is exactly that).
 
 Scale notes (100 TB):
 - input scan only reads (doc_id, spans) — column pruning reaches parquet;
-- optional repartition by hash(doc_id) balances Arrow batches when the
-  upstream layout is skewed by document size;
 - output is nested per doc (mentions[], triples[]) then exploded — explode
   is narrow (no shuffle).
 """
@@ -21,12 +37,15 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
+import os
+from typing import NamedTuple
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gliner_spark.core.dense import load_checkpoint_sparkfile, predict_spans_dense
+from gliner_spark.core.encoders import DenseCheckpointBackend, SpanEncoder
 from gliner_spark.core.model import GlinerSparkModel, normalize_surface
 
 GRAPH_DDL = (
@@ -36,6 +55,17 @@ GRAPH_DDL = (
     "label:string,score:double,norm:string>>, "
     "triples array<struct<subj:string,pred:string,obj:string,"
     "subj_type:string,obj_type:string,score:double>>"
+)
+MENTIONS_DDL = (
+    "doc_id string, ent_idx int, start int, end int, text string, "
+    "label string, score double, norm string"
+)
+DENSE_SPANS_DDL = (
+    "doc_id string, word_start int, word_end int, label string, score double"
+)
+TRIPLES_SPANS_DDL = (
+    "doc_id string, subj string, pred string, obj string, "
+    "h_ws int, h_we int, t_ws int, t_we int, score double"
 )
 
 
@@ -57,77 +87,6 @@ def span_fingerprint(spans) -> str:
         ref = sp["media_ref"] if isinstance(sp, dict) else sp.media_ref
         h.update(_span_fp_bytes(kind, text, ref))
     return h.hexdigest()
-
-
-def _process_batches(bc_model, labels=None):
-    """Returns the mapInPandas function. `bc_model` is an explicit
-    sc.broadcast handle: the pickled model ships to each executor ONCE (not
-    per task-closure), which is what matters when the weights are a real
-    100MB+ encoder; the sigmoid gather tables are materialized lazily per
-    process. `labels` restricts extraction to a per-run label subset
-    (zero-shot selection, reference predict_entities model.py:2333)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = bc_model.value
-        for pdf in batches:
-            out_rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                spans = list(spans)
-                text = " ".join(
-                    sp["text"] for sp in spans if sp["kind"] == "text"
-                )
-                mentions, tokens, _, _ = model.predict_doc(text, labels=labels)
-                rels = model.predict_relations_doc(tokens, mentions)
-                m_rows = [
-                    {
-                        "ent_idx": k,
-                        "start": m["start"],
-                        "end": m["end"],
-                        "text": m["text"],
-                        "label": m["label"],
-                        "score": m["score"],
-                        "norm": normalize_surface(m["text"]),
-                    }
-                    for k, m in enumerate(mentions)
-                ]
-                t_rows = [
-                    {
-                        "subj": m_rows[r["head_idx"]]["norm"],
-                        "pred": r["relation"],
-                        "obj": m_rows[r["tail_idx"]]["norm"],
-                        "subj_type": m_rows[r["head_idx"]]["label"],
-                        "obj_type": m_rows[r["tail_idx"]]["label"],
-                        "score": r["score"],
-                    }
-                    for r in rels
-                ]
-                if m_rows:  # media spans participate as triple objects
-                    anchor = m_rows[0]
-                    for sp in spans:
-                        if sp["kind"] == "media":
-                            t_rows.append(
-                                {
-                                    "subj": anchor["norm"],
-                                    "pred": "depicts",
-                                    "obj": sp["media_ref"],
-                                    "subj_type": anchor["label"],
-                                    "obj_type": "media",
-                                    "score": 1.0,
-                                }
-                            )
-                out_rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "span_fp": span_fingerprint(spans),
-                        "mentions": m_rows,
-                        "triples": t_rows,
-                    }
-                )
-            yield pd.DataFrame(
-                out_rows, columns=["doc_id", "span_fp", "mentions", "triples"]
-            )
-
-    return fn
 
 
 def _graph_arrow_types():
@@ -163,10 +122,9 @@ class _GraphBatchAccum:
     every output value is appended to a flat python list and the nested
     mentions[]/triples[] columns are built ONCE per batch as pyarrow
     ListArray(StructArray) via offsets — no per-row dicts, no pandas
-    block manager. Shared by the Arrow-docs path (_graph_arrow_fn) and
-    the fused synth+extract path (synth_extract_graph) so the two can
-    never drift (values bit-identical to the row path —
-    test_arrow_graph_parity)."""
+    block manager. The graph head of extract_graph, over either document
+    source; its mentions equal extract_mentions' rows
+    (test_mentions_head_matches_graph_head)."""
 
     def __init__(self, model, labels=None):
         self.model = model
@@ -272,246 +230,53 @@ class _GraphBatchAccum:
         )
 
 
-def _graph_arrow_fn(bc_model, labels=None):
-    """Columnar (mapInArrow) inner loop for the flagship mentions+triples
-    pass (VERDICT r4 ask #1). Per-doc model calls are unchanged — greedy
-    decode is inherently per-doc; output assembly lives in
-    _GraphBatchAccum (shared with the fused synth path)."""
+class synth_ids(NamedTuple):
+    """The synthetic document source: ids 0..n_docs-1 in `partitions`
+    contiguous ranges (spark.range; one fewer exchange than synth_docs'
+    round-robin repartition), each turned into gen_doc(id, seed) inside
+    the extraction UDF. Pass it wherever an `extract_*` takes `docs`."""
+
+    spark: SparkSession
+    n_docs: int
+    seed: int = 42
+    partitions: int = 32
+
+
+def _batch_docs(rb, seed):
+    """(doc_id, kinds, texts, refs) for each document of one input batch,
+    the spans in order. `seed` None: a docs-frame batch, read columnar —
+    the nested span structs come out as three flat child arrays plus
+    per-doc lengths, so no per-span python dicts are ever built (to_pylist
+    on a list<struct> column was a measurable slice of batch time).
+    Otherwise a synth id batch: gen_doc once per id."""
+    if seed is not None:
+        from gliner_spark.sources.synth import gen_doc
+
+        for i in rb.column(0).to_pylist():
+            d = gen_doc(int(i), seed)
+            spans = d["spans"]
+            yield (
+                d["doc_id"],
+                [sp["kind"] for sp in spans],
+                [sp["text"] for sp in spans],
+                [sp["media_ref"] for sp in spans],
+            )
+        return
     import pyarrow.compute as pc  # explicit: pa.compute is NOT auto-loaded
 
-    def fn(batches):
-        model = bc_model.value
-        for rb in batches:
-            doc_ids = rb.column(rb.schema.get_field_index("doc_id"))
-            spans_col = rb.column(rb.schema.get_field_index("spans"))
-            # columnar INPUT access too: the nested span structs are read
-            # as three flat child arrays + per-doc lengths — no per-span
-            # python dicts are ever built (to_pylist on a list<struct>
-            # column was a measurable slice of batch time)
-            lengths = [
-                v.as_py() for v in pc.list_value_length(spans_col)
-            ]
-            flat = spans_col.flatten()
-            kinds = flat.field("kind").to_pylist()
-            texts = flat.field("text").to_pylist()
-            refs = flat.field("media_ref").to_pylist()
-            acc = _GraphBatchAccum(model, labels=labels)
-            pos = 0
-            for doc_id, n_spans in zip(doc_ids.to_pylist(), lengths):
-                lo, hi = pos, pos + (n_spans or 0)
-                pos = hi
-                acc.add_doc(
-                    doc_id, kinds[lo:hi], texts[lo:hi], refs[lo:hi]
-                )
-            yield acc.finish()
+    doc_ids = rb.column(rb.schema.get_field_index("doc_id"))
+    spans_col = rb.column(rb.schema.get_field_index("spans"))
+    lengths = [v.as_py() for v in pc.list_value_length(spans_col)]
+    flat = spans_col.flatten()
+    kinds = flat.field("kind").to_pylist()
+    texts = flat.field("text").to_pylist()
+    refs = flat.field("media_ref").to_pylist()
+    pos = 0
+    for doc_id, n_spans in zip(doc_ids.to_pylist(), lengths):
+        lo, hi = pos, pos + (n_spans or 0)
+        pos = hi
+        yield doc_id, kinds[lo:hi], texts[lo:hi], refs[lo:hi]
 
-    return fn
-
-
-def synth_extract_graph(
-    spark,
-    n_docs: int,
-    model: GlinerSparkModel,
-    seed: int = 42,
-    partitions: int = 32,
-    labels=None,
-) -> DataFrame:
-    """Fused corpus synthesis + extraction (r7, guide §4.1): ONE
-    mapInArrow over spark.range ids runs gen_doc AND the model forward
-    per document, so the synthetic spans never cross the Python->JVM->
-    Python boundary between a synth stage and an extract stage — the
-    rows are identical to extract_graph(synth_docs(...), model) by
-    construction (same gen_doc, same _GraphBatchAccum assembly; parity
-    test + every kg_* oracle gate). range(0, n, 1, partitions) replaces
-    synth_docs' round-robin repartition: one fewer exchange, identical
-    row multiset (every doc is a pure function of its id)."""
-    from gliner_spark.sources.synth import gen_doc
-
-    bc = spark.sparkContext.broadcast(model)
-
-    def fn(batches):
-        model_v = bc.value
-        for rb in batches:
-            acc = _GraphBatchAccum(model_v, labels=labels)
-            for i in rb.column(0).to_pylist():
-                d = gen_doc(int(i), seed)
-                spans = d["spans"]
-                acc.add_doc(
-                    d["doc_id"],
-                    [sp["kind"] for sp in spans],
-                    [sp["text"] for sp in spans],
-                    [sp["media_ref"] for sp in spans],
-                )
-            yield acc.finish()
-
-    rng = (
-        spark.range(0, n_docs, 1, partitions)
-        if partitions
-        else spark.range(n_docs)
-    )
-    return rng.mapInArrow(fn, schema=GRAPH_DDL)
-
-
-def extract_graph(
-    docs: DataFrame,
-    model: GlinerSparkModel,
-    length_sorted: bool = False,
-    labels=None,
-    use_arrow: bool = True,
-) -> DataFrame:
-    """docs(doc_id, spans) -> nested per-doc graph rows (GRAPH_DDL).
-
-    use_arrow (default, r5): the flagship runs the mapInArrow columnar
-    inner loop (_graph_arrow_fn) — identical rows to the mapInPandas row
-    path (kept as use_arrow=False for the A/B bench tool and the parity
-    test), measured faster because mention/triple cells skip per-row dicts
-    and the pandas block manager.
-
-    length_sorted: range-partition by document size before scoring — the
-    Spark analog of the reference's sequence packing (infer_packing.py:
-    164-326): co-locating similar-length docs makes Arrow batches uniform,
-    which matters when the encoder pads to the batch max (a transformer on
-    GPU executors). The deterministic stand-in does per-doc work with no
-    padding, so this is measured ~neutral here (BENCH.md) and OFF by
-    default; it costs one shuffle.
-    """
-    cfg = model.config
-    bc = docs.sparkSession.sparkContext.broadcast(model)
-    src = docs.select("doc_id", "spans")  # column pruning to the scan
-    if length_sorted:
-        src = src.withColumn(
-            "_len",
-            F.aggregate(
-                F.transform("spans", lambda s: F.length(s["text"])),
-                F.lit(0),
-                lambda a, x: a + x,
-            ),
-        ).repartitionByRange(cfg.shuffle_partitions, "_len").drop("_len")
-    elif cfg.doc_partitions:
-        src = src.repartition(cfg.doc_partitions, "doc_id")
-    if use_arrow:
-        return src.mapInArrow(
-            _graph_arrow_fn(bc, labels=labels), schema=GRAPH_DDL
-        )
-    return src.mapInPandas(_process_batches(bc, labels=labels), schema=GRAPH_DDL)
-
-
-def _synth_range(spark, n_docs: int, partitions: int):
-    """spark.range source for the fused synth+X operators: contiguous id
-    ranges per partition (one fewer exchange than synth_docs' round-robin
-    repartition; identical row multiset — every doc is a pure function of
-    its id)."""
-    return (
-        spark.range(0, n_docs, 1, partitions)
-        if partitions
-        else spark.range(n_docs)
-    )
-
-
-def _synth_doc_texts(pdf, seed: int):
-    """(doc_id, assembled_text) per range id — the shared per-batch input
-    iterator of the fused mapInPandas operators."""
-    from gliner_spark.sources.synth import gen_doc
-
-    for i in pdf["id"]:
-        d = gen_doc(int(i), seed)
-        yield d["doc_id"], " ".join(
-            sp["text"] for sp in d["spans"] if sp["kind"] == "text"
-        )
-
-
-MENTIONS_DDL = (
-    "doc_id string, ent_idx int, start int, end int, text string, "
-    "label string, score double, norm string"
-)
-
-
-def extract_mentions_only(
-    docs: DataFrame, model: GlinerSparkModel, labels=None
-) -> DataFrame:
-    """NER-only mode with an optional per-request label subset — the
-    zero-shot surface (labels chosen at query time, reference
-    predict_entities model.py:2333 + make_mapping utils.py:182-212).
-    Flat mention rows, no relation pass."""
-    bc = docs.sparkSession.sparkContext.broadcast(model)
-
-    def fn(batches):
-        model = bc.value
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                text = " ".join(
-                    sp["text"] for sp in spans if sp["kind"] == "text"
-                )
-                mentions, _, _, _ = model.predict_doc(text, labels=labels)
-                for k, m in enumerate(mentions):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "ent_idx": k,
-                            "start": m["start"],
-                            "end": m["end"],
-                            "text": m["text"],
-                            "label": m["label"],
-                            "score": m["score"],
-                            "norm": normalize_surface(m["text"]),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "ent_idx", "start", "end", "text", "label",
-                    "score", "norm",
-                ],
-            )
-
-    return docs.select("doc_id", "spans").mapInPandas(fn, schema=MENTIONS_DDL)
-
-
-def synth_extract_mentions_only(
-    spark, n_docs: int, model: GlinerSparkModel, labels=None,
-    seed: int = 42, partitions: int = 32,
-) -> DataFrame:
-    """Fused synth + NER-only extraction (r7): same rows as
-    extract_mentions_only(synth_docs(...)) without the synth stage's
-    Python->JVM->Python round trip."""
-    bc = spark.sparkContext.broadcast(model)
-
-    def fn(batches):
-        m = bc.value
-        for pdf in batches:
-            rows = []
-            for doc_id, text in _synth_doc_texts(pdf, seed):
-                mentions, _, _, _ = m.predict_doc(text, labels=labels)
-                for k, mn in enumerate(mentions):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "ent_idx": k,
-                            "start": mn["start"],
-                            "end": mn["end"],
-                            "text": mn["text"],
-                            "label": mn["label"],
-                            "score": mn["score"],
-                            "norm": normalize_surface(mn["text"]),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "ent_idx", "start", "end", "text", "label",
-                    "score", "norm",
-                ],
-            )
-
-    return _synth_range(spark, n_docs, partitions).mapInPandas(
-        fn, schema=MENTIONS_DDL
-    )
-
-
-DENSE_SPANS_DDL = (
-    "doc_id string, word_start int, word_end int, label string, score double"
-)
 
 # driver-side registry of shipped checkpoint basenames (collision guard)
 _SHIPPED_CKPTS: dict = {}
@@ -526,10 +291,8 @@ def _ship_checkpoint(sc, ckpt_path) -> str:
     would silently serve the first one's weights — the registry key
     includes applicationId so a fresh SparkContext (fresh SparkFiles
     state) never trips a stale-process collision."""
-    import os as _os
-
-    path = _os.path.abspath(str(ckpt_path))
-    name = _os.path.basename(path)
+    path = os.path.abspath(str(ckpt_path))
+    name = os.path.basename(path)
     reg_key = (sc.applicationId, name)
     prev = _SHIPPED_CKPTS.get(reg_key)
     if prev is not None and prev != path:
@@ -543,116 +306,185 @@ def _ship_checkpoint(sc, ckpt_path) -> str:
     return name
 
 
-def extract_spans_dense(docs: DataFrame, ckpt) -> DataFrame:
+def _run(docs, payload, ddl: str, head) -> DataFrame:
+    """The one extraction runner: docs (a docs frame or synth_ids) ->
+    ONE mapInArrow with schema `ddl`, zero shuffle.
+
+    payload is the model or checkpoint object, shipped by an explicit
+    sc.broadcast (once per executor, not per task closure — what matters
+    when the weights are a real 100MB+ encoder), or a PATH to an .npz
+    checkpoint, shipped by sc.addFile and lazy-loaded + cached per
+    executor python worker (core/dense.load_checkpoint_sparkfile) — the
+    seam a real exported GLiNER weight file drops into without pickling
+    the arrays through the broadcast block store. head(payload, schema)
+    makes one batch's accumulator; schema is `ddl` as an Arrow schema,
+    parsed once on the driver."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    synth = isinstance(docs, synth_ids)
+    spark = docs.spark if synth else docs.sparkSession
+    sc = spark.sparkContext
+    if isinstance(payload, (str, os.PathLike)):
+        name = _ship_checkpoint(sc, payload)
+
+        def load():
+            return load_checkpoint_sparkfile(name)
+    else:
+        bc = sc.broadcast(payload)
+
+        def load():
+            return bc.value
+
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
+    seed = docs.seed if synth else None
+
+    def fn(batches):
+        value = load()
+        for rb in batches:
+            acc = head(value, schema)
+            for doc in _batch_docs(rb, seed):
+                acc.add_doc(*doc)
+            yield acc.finish()
+
+    if not synth:
+        src = docs.select("doc_id", "spans")  # column pruning to the scan
+    elif docs.partitions:
+        src = spark.range(0, docs.n_docs, 1, docs.partitions)
+    else:
+        src = spark.range(docs.n_docs)
+    return src.mapInArrow(fn, schema=ddl)
+
+
+def _doc_text(kinds, texts) -> str:
+    """The model input: the doc's text spans joined by one space."""
+    return " ".join(t for kd, t in zip(kinds, texts) if kd == "text")
+
+
+class _FlatHead:
+    """Per-batch accumulator of flat output rows: add_doc appends one
+    tuple per row (in schema order), finish builds each typed column
+    once — no per-row dicts, no pandas block manager."""
+
+    def __init__(self, value, schema):
+        self.value, self.schema, self.rows = value, schema, []
+
+    def finish(self):
+        import pyarrow as pa
+
+        cols = list(zip(*self.rows)) or [()] * len(self.schema)
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, self.schema)],
+            schema=self.schema,
+        )
+
+
+class _MentionsHead(_FlatHead):
+    def __init__(self, model, schema, labels=None):
+        super().__init__(model, schema)
+        self.labels = labels
+
+    def add_doc(self, doc_id, kinds, texts, refs):
+        mentions, _, _, _ = self.value.predict_doc(
+            _doc_text(kinds, texts), labels=self.labels
+        )
+        self.rows += [
+            (doc_id, k, m["start"], m["end"], m["text"], m["label"],
+             m["score"], normalize_surface(m["text"]))
+            for k, m in enumerate(mentions)
+        ]
+
+
+class _DenseHead(_FlatHead):
+    def add_doc(self, doc_id, kinds, texts, refs):
+        self.rows += [
+            (doc_id, m["word_start"], m["word_end"], m["label"], m["score"])
+            for m in predict_spans_dense(_doc_text(kinds, texts), self.value)
+        ]
+
+
+class _EncoderHead(_FlatHead):
+    """Scores through the SpanEncoder protocol: the label prompts are
+    derived via encode_labels once per batch (a few label strings —
+    negligible next to the per-doc scoring)."""
+
+    def __init__(self, ckpt, schema):
+        super().__init__(ckpt, schema)
+        self.enc = SpanEncoder(DenseCheckpointBackend(ckpt))
+        self.lm = self.enc.encode_labels(ckpt.labels)
+        self.marker = ckpt.marker()
+
+    def add_doc(self, doc_id, kinds, texts, refs):
+        ck = self.value
+        span_idx, valid, probs = self.enc.score_text(
+            _doc_text(kinds, texts), self.marker, self.lm, ck.scale,
+            ck.bias, ck.max_width,
+        )
+        if probs.size == 0:
+            return
+        # one vectorized mask instead of a nonzero per valid row
+        # (row-major emission order unchanged)
+        keep = valid[:, None] & (probs >= ck.threshold)
+        self.rows += [
+            (doc_id, int(span_idx[i, 0]), int(span_idx[i, 1]),
+             ck.labels[int(c)], float(probs[i, c]))
+            for i, c in zip(*np.nonzero(keep))
+        ]
+
+
+class _TriplesSpansHead(_FlatHead):
+    def add_doc(self, doc_id, kinds, texts, refs):
+        m = self.value
+        mentions, tokens, _, _ = m.predict_doc(_doc_text(kinds, texts))
+        for r in m.predict_relations_doc(tokens, mentions):
+            h, t = mentions[r["head_idx"]], mentions[r["tail_idx"]]
+            self.rows.append(
+                (doc_id, normalize_surface(h["text"]), r["relation"],
+                 normalize_surface(t["text"]), h["word_start"],
+                 h["word_end"], t["word_start"], t["word_end"], r["score"])
+            )
+
+
+def extract_graph(
+    docs: DataFrame | synth_ids, model: GlinerSparkModel, labels=None
+) -> DataFrame:
+    """docs -> nested per-doc graph rows (GRAPH_DDL): mentions[] and
+    triples[] (media spans become 'depicts' triples of the first
+    mention) plus the span fingerprint. `labels` restricts extraction to
+    a per-run label subset (zero-shot selection, reference
+    predict_entities model.py:2333)."""
+    return _run(
+        docs, model, GRAPH_DDL,
+        lambda m, _schema: _GraphBatchAccum(m, labels=labels),
+    )
+
+
+def extract_mentions(
+    docs: DataFrame | synth_ids, model: GlinerSparkModel, labels=None
+) -> DataFrame:
+    """NER-only mode with an optional per-request label subset — the
+    zero-shot surface (labels chosen at query time, reference
+    predict_entities model.py:2333 + make_mapping utils.py:182-212).
+    Flat mention rows (MENTIONS_DDL), no relation pass; the same rows as
+    mentions_table(extract_graph(docs, model, labels=labels))."""
+    return _run(
+        docs, model, MENTIONS_DDL,
+        lambda m, schema: _MentionsHead(m, schema, labels=labels),
+    )
+
+
+def extract_spans_dense(docs: DataFrame | synth_ids, ckpt) -> DataFrame:
     """Dense-encoder scoring stage: embedding lookup -> SpanMarkerV0 ->
     prompt matmul -> sigmoid >= threshold (core/dense.py; reference
     span_rep.py:464-511 + base.py:474). Emits the scored span grid — the
     decode stage is shared with the gather path and gated separately.
 
-    ckpt is either a DenseCheckpoint (ships via explicit ``sc.broadcast``:
-    once per executor, not per task) or a PATH to an .npz checkpoint file,
-    which ships via ``sc.addFile`` and is lazy-loaded + cached per executor
-    python worker (core/dense.load_checkpoint_sparkfile) — the seam a real
-    exported GLiNER weight file drops into without re-pickling the arrays
-    through the broadcast block store. One mapInPandas, zero shuffle,
-    (doc_id, spans)-pruned scan — same plan shape as extract_graph.
-    """
-    import os as _os
-
-    from gliner_spark.core.dense import (
-        load_checkpoint_sparkfile,
-        predict_spans_dense,
-    )
-
-    if isinstance(ckpt, (str, _os.PathLike)):
-        name = _ship_checkpoint(docs.sparkSession.sparkContext, ckpt)
-
-        def get_ckpt():
-            return load_checkpoint_sparkfile(name)
-    else:
-        bc = docs.sparkSession.sparkContext.broadcast(ckpt)
-
-        def get_ckpt():
-            return bc.value
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w = get_ckpt()
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                text = " ".join(
-                    sp["text"] for sp in spans if sp["kind"] == "text"
-                )
-                for m in predict_spans_dense(text, w):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "word_start": m["word_start"],
-                            "word_end": m["word_end"],
-                            "label": m["label"],
-                            "score": m["score"],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "word_start", "word_end", "label", "score"],
-            )
-
-    return docs.select("doc_id", "spans").mapInPandas(
-        fn, schema=DENSE_SPANS_DDL
-    )
+    ckpt is either a DenseCheckpoint (shipped by sc.broadcast) or a PATH
+    to an .npz checkpoint file (shipped by sc.addFile; see _run)."""
+    return _run(docs, ckpt, DENSE_SPANS_DDL, _DenseHead)
 
 
-def synth_extract_spans_dense(
-    spark, n_docs: int, ckpt, seed: int = 42, partitions: int = 32
-) -> DataFrame:
-    """Fused synth + dense-encoder scoring (r7): same rows as
-    extract_spans_dense(synth_docs(...), ckpt) without the synth stage's
-    Python->JVM->Python round trip."""
-    import os as _os
-
-    from gliner_spark.core.dense import (
-        load_checkpoint_sparkfile,
-        predict_spans_dense,
-    )
-
-    if isinstance(ckpt, (str, _os.PathLike)):
-        name = _ship_checkpoint(spark.sparkContext, ckpt)
-
-        def get_ckpt():
-            return load_checkpoint_sparkfile(name)
-    else:
-        bc = spark.sparkContext.broadcast(ckpt)
-
-        def get_ckpt():
-            return bc.value
-
-    def fn(batches):
-        w = get_ckpt()
-        for pdf in batches:
-            rows = []
-            for doc_id, text in _synth_doc_texts(pdf, seed):
-                for m in predict_spans_dense(text, w):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "word_start": m["word_start"],
-                            "word_end": m["word_end"],
-                            "label": m["label"],
-                            "score": m["score"],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "word_start", "word_end", "label", "score"],
-            )
-
-    return _synth_range(spark, n_docs, partitions).mapInPandas(
-        fn, schema=DENSE_SPANS_DDL
-    )
-
-
-def extract_spans_encoder(docs: DataFrame, ckpt_path) -> DataFrame:
+def extract_spans_encoder(docs: DataFrame | synth_ids, ckpt_path) -> DataFrame:
     """Scored span grid through the pluggable `SpanEncoder` BACKEND
     protocol (core/encoders.py) — the seam a real trained GLiNER drops
     into (reference model.py:639-691 load path; encoder.py:868-879 word
@@ -665,263 +497,18 @@ def extract_spans_encoder(docs: DataFrame, ckpt_path) -> DataFrame:
     extract_spans_dense (tests/test_encoders_seam.py proves the adapter
     bit-equal to core/dense.score_doc_dense), so the kg_mentions_dense
     oracle gates this path too — swapping in a torch/ONNX backend touches
-    ZERO Spark code. Same plan shape: one mapInPandas, zero shuffle,
-    (doc_id, spans)-pruned scan."""
-    import numpy as np
-
-    name = _ship_checkpoint(docs.sparkSession.sparkContext, ckpt_path)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from gliner_spark.core.dense import load_checkpoint_sparkfile
-        from gliner_spark.core.encoders import (
-            DenseCheckpointBackend,
-            SpanEncoder,
-        )
-
-        ckpt = load_checkpoint_sparkfile(name)
-        enc = SpanEncoder(DenseCheckpointBackend(ckpt))
-        # label prompts via the protocol, once per python worker (a few
-        # label strings — negligible next to the per-doc scoring)
-        lm = enc.encode_labels(ckpt.labels)
-        marker = ckpt.marker()
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                text = " ".join(
-                    sp["text"] for sp in spans if sp["kind"] == "text"
-                )
-                span_idx, valid, probs = enc.score_text(
-                    text, marker, lm, ckpt.scale, ckpt.bias, ckpt.max_width
-                )
-                if probs.size == 0:
-                    continue
-                # one vectorized mask instead of a nonzero per valid row
-                # (row-major emission order unchanged)
-                keep = valid[:, None] & (probs >= ckpt.threshold)
-                for i, c in zip(*np.nonzero(keep)):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "word_start": int(span_idx[i, 0]),
-                            "word_end": int(span_idx[i, 1]),
-                            "label": ckpt.labels[int(c)],
-                            "score": float(probs[i, c]),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "word_start", "word_end", "label", "score"],
-            )
-
-    return docs.select("doc_id", "spans").mapInPandas(
-        fn, schema=DENSE_SPANS_DDL
-    )
+    ZERO Spark code."""
+    return _run(docs, ckpt_path, DENSE_SPANS_DDL, _EncoderHead)
 
 
-def synth_extract_spans_encoder(
-    spark, n_docs: int, ckpt_path, seed: int = 42, partitions: int = 32
+def extract_triples_with_spans(
+    docs: DataFrame | synth_ids, model: GlinerSparkModel
 ) -> DataFrame:
-    """Fused synth + SpanEncoder-backend scoring (r7): same rows as
-    extract_spans_encoder(synth_docs(...), ckpt_path) without the synth
-    stage's Python->JVM->Python round trip."""
-    import numpy as np
-
-    name = _ship_checkpoint(spark.sparkContext, ckpt_path)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from gliner_spark.core.dense import load_checkpoint_sparkfile
-        from gliner_spark.core.encoders import (
-            DenseCheckpointBackend,
-            SpanEncoder,
-        )
-
-        ckpt = load_checkpoint_sparkfile(name)
-        enc = SpanEncoder(DenseCheckpointBackend(ckpt))
-        lm = enc.encode_labels(ckpt.labels)
-        marker = ckpt.marker()
-        for pdf in batches:
-            rows = []
-            for doc_id, text in _synth_doc_texts(pdf, seed):
-                span_idx, valid, probs = enc.score_text(
-                    text, marker, lm, ckpt.scale, ckpt.bias, ckpt.max_width
-                )
-                if probs.size == 0:
-                    continue
-                keep = valid[:, None] & (probs >= ckpt.threshold)
-                for i, c in zip(*np.nonzero(keep)):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "word_start": int(span_idx[i, 0]),
-                            "word_end": int(span_idx[i, 1]),
-                            "label": ckpt.labels[int(c)],
-                            "score": float(probs[i, c]),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "word_start", "word_end", "label", "score"],
-            )
-
-    return _synth_range(spark, n_docs, partitions).mapInPandas(
-        fn, schema=DENSE_SPANS_DDL
-    )
-
-
-def extract_mentions_arrow(
-    docs: DataFrame, model: GlinerSparkModel, labels=None
-) -> DataFrame:
-    """Columnar variant of extract_mentions_only: mapInArrow consumes and
-    emits pyarrow RecordBatches directly — output columns are appended to
-    flat python lists and built once per batch (no per-row dicts, no
-    pandas block manager). Same rows, measured ~1.3-1.5x the row-path
-    throughput (tools/bench_arrow_ab.py)."""
-    import pyarrow as pa
-
-    bc = docs.sparkSession.sparkContext.broadcast(model)
-    out_schema = pa.schema(
-        [
-            ("doc_id", pa.string()),
-            ("ent_idx", pa.int32()),
-            ("start", pa.int32()),
-            ("end", pa.int32()),
-            ("text", pa.string()),
-            ("label", pa.string()),
-            ("score", pa.float64()),
-            ("norm", pa.string()),
-        ]
-    )
-
-    def fn(batches):
-        model = bc.value
-        for rb in batches:
-            doc_ids = rb.column(rb.schema.get_field_index("doc_id"))
-            spans_col = rb.column(rb.schema.get_field_index("spans"))
-            o_doc, o_idx, o_s, o_e = [], [], [], []
-            o_text, o_label, o_score, o_norm = [], [], [], []
-            for doc_id, spans in zip(doc_ids.to_pylist(), spans_col.to_pylist()):
-                text = " ".join(
-                    sp["text"] for sp in spans if sp["kind"] == "text"
-                )
-                mentions, _, _, _ = model.predict_doc(text, labels=labels)
-                for k, m in enumerate(mentions):
-                    o_doc.append(doc_id)
-                    o_idx.append(k)
-                    o_s.append(m["start"])
-                    o_e.append(m["end"])
-                    o_text.append(m["text"])
-                    o_label.append(m["label"])
-                    o_score.append(m["score"])
-                    o_norm.append(normalize_surface(m["text"]))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(o_doc, pa.string()),
-                    pa.array(o_idx, pa.int32()),
-                    pa.array(o_s, pa.int32()),
-                    pa.array(o_e, pa.int32()),
-                    pa.array(o_text, pa.string()),
-                    pa.array(o_label, pa.string()),
-                    pa.array(o_score, pa.float64()),
-                    pa.array(o_norm, pa.string()),
-                ],
-                schema=out_schema,
-            )
-
-    return docs.select("doc_id", "spans").mapInArrow(fn, schema=MENTIONS_DDL)
-
-
-TRIPLES_SPANS_DDL = (
-    "doc_id string, subj string, pred string, obj string, "
-    "h_ws int, h_we int, t_ws int, t_we int, score double"
-)
-
-
-def extract_triples_with_spans(docs: DataFrame, model: GlinerSparkModel) -> DataFrame:
     """Relation triples annotated with head/tail WORD spans — the input the
     relex word-span evaluator matches on (reference evaluator.py:210-255:
     exact (rel_label, h_span, t_span) tuples). Text relations only (media
-    'depicts' triples carry no spans). Same single-pass UDF shape as
-    extract_graph."""
-    bc = docs.sparkSession.sparkContext.broadcast(model)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = bc.value
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                text = " ".join(
-                    sp["text"] for sp in spans if sp["kind"] == "text"
-                )
-                mentions, tokens, _, _ = model.predict_doc(text)
-                for r in model.predict_relations_doc(tokens, mentions):
-                    h, t = mentions[r["head_idx"]], mentions[r["tail_idx"]]
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "subj": normalize_surface(h["text"]),
-                            "pred": r["relation"],
-                            "obj": normalize_surface(t["text"]),
-                            "h_ws": h["word_start"],
-                            "h_we": h["word_end"],
-                            "t_ws": t["word_start"],
-                            "t_we": t["word_end"],
-                            "score": r["score"],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "subj", "pred", "obj",
-                    "h_ws", "h_we", "t_ws", "t_we", "score",
-                ],
-            )
-
-    return docs.select("doc_id", "spans").mapInPandas(
-        fn, schema=TRIPLES_SPANS_DDL
-    )
-
-
-def synth_extract_triples_with_spans(
-    spark, n_docs: int, model: GlinerSparkModel,
-    seed: int = 42, partitions: int = 32,
-) -> DataFrame:
-    """Fused synth + word-span triple extraction (r7): same rows as
-    extract_triples_with_spans(synth_docs(...), model) without the synth
-    stage's Python->JVM->Python round trip."""
-    bc = spark.sparkContext.broadcast(model)
-
-    def fn(batches):
-        m = bc.value
-        for pdf in batches:
-            rows = []
-            for doc_id, text in _synth_doc_texts(pdf, seed):
-                mentions, tokens, _, _ = m.predict_doc(text)
-                for r in m.predict_relations_doc(tokens, mentions):
-                    h, t = mentions[r["head_idx"]], mentions[r["tail_idx"]]
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "subj": normalize_surface(h["text"]),
-                            "pred": r["relation"],
-                            "obj": normalize_surface(t["text"]),
-                            "h_ws": h["word_start"],
-                            "h_we": h["word_end"],
-                            "t_ws": t["word_start"],
-                            "t_we": t["word_end"],
-                            "score": r["score"],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "subj", "pred", "obj",
-                    "h_ws", "h_we", "t_ws", "t_we", "score",
-                ],
-            )
-
-    return _synth_range(spark, n_docs, partitions).mapInPandas(
-        fn, schema=TRIPLES_SPANS_DDL
-    )
+    'depicts' triples carry no spans)."""
+    return _run(docs, model, TRIPLES_SPANS_DDL, _TriplesSpansHead)
 
 
 def mentions_table(graph: DataFrame) -> DataFrame:

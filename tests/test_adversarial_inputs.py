@@ -1,6 +1,7 @@
 """Adversarial document-shape hardening: the extraction UDF must handle
 every degenerate spans[] layout without crashing and preserve invariants."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from gliner_spark.operators.extraction import (
@@ -21,27 +22,31 @@ def _sp(kind, text, ref=None, off=0):
     return {"kind": kind, "text": text, "media_ref": ref, "offset": off}
 
 
+# every degenerate spans[] layout the heads must survive
+SHAPES = [
+    ("d-empty-spans", []),
+    ("d-empty-text", [_sp("text", "")]),
+    ("d-whitespace", [_sp("text", "   \t  ")]),
+    ("d-media-only", [_sp("media", "a caption", "media://cafe01")]),
+    ("d-unicode", [_sp("text", "héllo wörld 🦊 — alice almeida works at acme corp .")]),
+    ("d-newlines", [_sp("text", "alice almeida\nworks at\nacme corp .")]),
+    ("d-long", [_sp("text", ("acme corp visited lisbon . " * 400).strip())]),
+    ("d-punct", [_sp("text", "!!! ??? ,,, ... ;;; acme corp !!!")]),
+    (
+        "d-mixed",
+        [
+            _sp("media", "lead image", "media://aa"),
+            _sp("text", "bruno borisov founded hooli corp ."),
+            _sp("media", "mid image", "media://bb"),
+            _sp("text", "hooli corp is based in porto ."),
+        ],
+    ),
+]
+
+
 def test_degenerate_doc_shapes(spark):
     model = default_model()
-    rows = [
-        ("d-empty-spans", []),
-        ("d-empty-text", [_sp("text", "")]),
-        ("d-whitespace", [_sp("text", "   \t  ")]),
-        ("d-media-only", [_sp("media", "a caption", "media://cafe01")]),
-        ("d-unicode", [_sp("text", "héllo wörld 🦊 — alice almeida works at acme corp .")]),
-        ("d-newlines", [_sp("text", "alice almeida\nworks at\nacme corp .")]),
-        ("d-long", [_sp("text", ("acme corp visited lisbon . " * 400).strip())]),
-        ("d-punct", [_sp("text", "!!! ??? ,,, ... ;;; acme corp !!!")]),
-        (
-            "d-mixed",
-            [
-                _sp("media", "lead image", "media://aa"),
-                _sp("text", "bruno borisov founded hooli corp ."),
-                _sp("media", "mid image", "media://bb"),
-                _sp("text", "hooli corp is based in porto ."),
-            ],
-        ),
-    ]
+    rows = SHAPES
     docs = _docs(spark, rows)
     graph = extract_graph(docs, model).cache()
     got = {r.doc_id: r for r in graph.collect()}
@@ -80,6 +85,21 @@ def test_degenerate_doc_shapes(spark):
         text = " ".join(s["text"] for s in spans if s["kind"] == "text")
         for m in got[doc_id].mentions:
             assert text[m.start : m.end] == m.text
+
+
+@pytest.mark.parametrize(
+    "head",
+    ["graph", "mentions", "dense", "encoder", "triples_spans", "prompted"],
+)
+def test_degenerate_doc_shapes_every_head(spark, extraction_heads, head):
+    """Every extraction head runs the nine shapes on a docs frame without
+    a task failure, and its rows name only input documents; the graph
+    head emits one row for every document."""
+    ids = {r[0] for r in SHAPES}
+    got = {r.doc_id for r in extraction_heads[head](_docs(spark, SHAPES)).collect()}
+    assert got <= ids
+    if head == "graph":
+        assert got == ids
 
 
 def test_null_media_ref_and_duplicate_surfaces(spark):

@@ -110,40 +110,33 @@ def test_sparkfile_weight_loading_matches_broadcast(spark, tmp_path):
     assert via_file == via_bc and len(via_file) > 0
 
 
-def test_arrow_mentions_path_matches_pandas_path(spark):
+@pytest.mark.parametrize("labels", [None, ["person"]], ids=["all", "person"])
+@pytest.mark.parametrize("source", ["docs", "synth"])
+def test_mentions_head_matches_graph_head(spark, source, labels):
+    """The flat mentions head equals the graph head's exploded mentions,
+    over either document source and with or without a label subset. Both
+    heads call the same predict_doc, so this checks the document iterator
+    and both output builders against each other."""
     from gliner_spark.operators.extraction import (
-        extract_mentions_arrow,
-        extract_mentions_only,
+        extract_graph,
+        extract_mentions,
+        mentions_table,
+        synth_ids,
     )
     from gliner_spark.presets import default_model
     from gliner_spark.sources.synth import synth_docs
 
     model = default_model()
-    docs = synth_docs(spark, 200, partitions=8)
-    a = sorted(map(tuple, extract_mentions_only(docs, model).collect()))
-    b = sorted(map(tuple, extract_mentions_arrow(docs, model).collect()))
+    src = (
+        synth_docs(spark, 200, partitions=8)
+        if source == "docs"
+        else synth_ids(spark, 200, partitions=8)
+    )
+    a = sorted(map(tuple, extract_mentions(src, model, labels=labels).collect()))
+    b = sorted(
+        map(tuple, mentions_table(extract_graph(src, model, labels=labels)).collect())
+    )
     assert a == b and len(a) > 0
-
-
-def test_arrow_graph_path_matches_pandas_path(spark):
-    """r5 flagship port (VERDICT r4 ask #1): the mapInArrow mentions+
-    triples pass must be row-for-row identical to the mapInPandas path —
-    including nested mention/triple structs, span fingerprints, and the
-    media 'depicts' triples."""
-    from gliner_spark.operators.extraction import extract_graph
-    from gliner_spark.presets import default_model
-    from gliner_spark.sources.synth import synth_docs
-
-    model = default_model()
-    docs = synth_docs(spark, 200, partitions=8)
-    a = {r.doc_id: r for r in extract_graph(docs, model, use_arrow=True).collect()}
-    b = {r.doc_id: r for r in extract_graph(docs, model, use_arrow=False).collect()}
-    assert len(a) == 200 and set(a) == set(b)
-    assert all(a[k] == b[k] for k in a)
-    # zero-shot label subset flows through the arrow path too
-    la = {r.doc_id: r for r in extract_graph(docs, model, use_arrow=True, labels=["person"]).collect()}
-    lb = {r.doc_id: r for r in extract_graph(docs, model, use_arrow=False, labels=["person"]).collect()}
-    assert la == lb
 
 
 def test_dense_partitioning_invariance(spark):

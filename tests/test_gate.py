@@ -94,11 +94,14 @@ def _rows(df):
     return out
 
 
-def _tier(df):
+def _leaf_names(df):
     leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-    names = {leaves.apply(i).getClass().getSimpleName()
-             for i in range(leaves.size())}
-    return "driver" if names <= {"LocalRelation"} else "distributed"
+    return {leaves.apply(i).getClass().getSimpleName()
+            for i in range(leaves.size())}
+
+
+def _tier(df):
+    return "driver" if _leaf_names(df) <= {"LocalRelation"} else "distributed"
 
 
 @pytest.fixture
@@ -330,6 +333,18 @@ def test_gated_op_tier_pin(frames, name):
     assert _tier(op(frames, None)) == "driver"
     forced = op(frames, 0)
     assert _tier(forced) == "distributed"
+    release_caches(forced)
+
+
+def test_containment_forced_plan_has_no_local_leaf(frames):
+    """Forced distributed (driver_max_docs=0), containment_pairs builds its
+    winnow candidates in Spark as well: no stage of the plan is a driver
+    replay, so no leaf of the optimized plan is a LocalRelation."""
+    from gliner_spark.cache import release_caches
+    from gliner_spark.operators.dedup import containment_pairs
+
+    forced = containment_pairs(frames["docs"], driver_max_docs=0)
+    assert "LocalRelation" not in _leaf_names(forced)
     release_caches(forced)
 
 

@@ -9,10 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from gliner_spark.operators.dedup import minhash_signatures, simhash
-from gliner_spark.operators.extraction import extract_graph
 from gliner_spark.operators.kg_scoring import score_triples
 from gliner_spark.operators.text_analysis import bpe_stats, doc_fingerprint
-from gliner_spark.presets import default_model
 
 DOCS = "/root/testdata/sf0.01/documents.parquet"
 
@@ -40,8 +38,8 @@ def test_narrow_family_has_no_shuffle_before_output_sort(spark):
         assert "row_number" not in p.lower()  # the round-1 vocab window
 
 
-def test_extraction_scan_prunes_columns(spark):
-    """The model UDF's scan must read exactly (doc_id, spans)."""
+def test_extraction_scan_prunes_columns(spark, extraction_heads):
+    """Every extraction head's scan must read exactly (doc_id, spans)."""
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).withColumn("spans", F.array(F.struct(
@@ -57,11 +55,12 @@ def test_extraction_scan_prunes_columns(spark):
         docs.write.mode("overwrite").parquet(d)
         wide = spark.read.parquet(d)
         assert len(wide.columns) > 2
-        p = _plan(extract_graph(wide, default_model()))
-        m = re.search(r"ReadSchema: ([^\n]*)", p)
-        assert m and "doc_id" in m.group(1) and "spans" in m.group(1)
-        # the wide table's other top-level columns must NOT be read
-        assert "lang" not in m.group(1), m.group(1)
+        for name, head in extraction_heads.items():
+            p = _plan(head(wide))
+            m = re.search(r"ReadSchema: ([^\n]*)", p)
+            assert m and "doc_id" in m.group(1) and "spans" in m.group(1), name
+            # the wide table's other top-level columns must NOT be read
+            assert "lang" not in m.group(1), (name, m.group(1))
     finally:
         shutil.rmtree(d, ignore_errors=True)
 

@@ -1,5 +1,6 @@
-"""r7: the fused synth+extract operators must emit exactly the rows of
-their two-stage compositions (synth_docs -> extract_*)."""
+"""r7: every extraction head over the fused synth source (synth_ids) must
+emit exactly the rows of its two-stage composition (synth_docs ->
+extract_*)."""
 
 import pytest
 
@@ -21,12 +22,12 @@ def test_fused_graph_matches_two_stage(spark, model):
     from gliner_spark.operators.extraction import (
         extract_graph,
         mentions_table,
-        synth_extract_graph,
+        synth_ids,
         triples_raw_table,
     )
     from gliner_spark.sources.synth import synth_docs
 
-    fused = synth_extract_graph(spark, N, model)
+    fused = extract_graph(synth_ids(spark, N), model)
     two = extract_graph(synth_docs(spark, N, partitions=8), model)
     for tab in (mentions_table, triples_raw_table):
         assert _sorted_rows(tab(fused)) == _sorted_rows(tab(two))
@@ -38,14 +39,14 @@ def test_fused_graph_matches_two_stage(spark, model):
 
 def test_fused_mentions_only_matches(spark, model):
     from gliner_spark.operators.extraction import (
-        extract_mentions_only,
-        synth_extract_mentions_only,
+        extract_mentions,
+        synth_ids,
     )
     from gliner_spark.sources.synth import synth_docs
 
     labels = ["person", "location"]
-    fused = synth_extract_mentions_only(spark, N, model, labels=labels)
-    two = extract_mentions_only(
+    fused = extract_mentions(synth_ids(spark, N), model, labels=labels)
+    two = extract_mentions(
         synth_docs(spark, N, partitions=8), model, labels=labels
     )
     assert _sorted_rows(fused) == _sorted_rows(two)
@@ -58,36 +59,33 @@ def test_fused_dense_and_encoder_match(spark):
     import __spark_entry__ as entry
     from gliner_spark.operators.extraction import (
         extract_spans_dense,
-        synth_extract_spans_dense,
-        synth_extract_spans_encoder,
+        extract_spans_encoder,
+        synth_ids,
     )
     from gliner_spark.sources.synth import synth_docs
 
     ck = entry._dense_ckpt()
-    fused = synth_extract_spans_dense(spark, N, ck)
+    fused = extract_spans_dense(synth_ids(spark, N), ck)
     two = extract_spans_dense(synth_docs(spark, N, partitions=8), ck)
     rows = _sorted_rows(fused)
     assert rows == _sorted_rows(two)
     p = os.path.join(tempfile.gettempdir(), "gs_r7_fused_enc.npz")
     ck.save_npz(p)
-    assert _sorted_rows(synth_extract_spans_encoder(spark, N, p)) == rows
+    assert _sorted_rows(extract_spans_encoder(synth_ids(spark, N), p)) == rows
 
 
 def test_fused_prompted_and_spans_match(spark, model):
     from gliner_spark.operators.extraction import (
         extract_triples_with_spans,
-        synth_extract_triples_with_spans,
+        synth_ids,
     )
-    from gliner_spark.operators.prompted_re import (
-        extract_relations_prompted,
-        synth_extract_relations_prompted,
-    )
+    from gliner_spark.operators.prompted_re import extract_relations_prompted
     from gliner_spark.sources.synth import synth_docs
 
     docs = synth_docs(spark, N, partitions=8)
     assert _sorted_rows(
-        synth_extract_relations_prompted(spark, N, model)
+        extract_relations_prompted(synth_ids(spark, N), model)
     ) == _sorted_rows(extract_relations_prompted(docs, model))
     assert _sorted_rows(
-        synth_extract_triples_with_spans(spark, N, model)
+        extract_triples_with_spans(synth_ids(spark, N), model)
     ) == _sorted_rows(extract_triples_with_spans(docs, model))
