@@ -40,18 +40,7 @@ class PipelineConfig:
     link_minhash_rows: int = 16     # minhash signature length
     link_minhash_bands: int = 4     # LSH bands (rows/bands hashes per band)
     link_max_block_size: int = 1000  # blocks larger than this get salted/split
-    # surface count at or below which canonicalize runs the whole
-    # LSH/verify/CC/representative pipeline on the driver from ONE bounded
-    # collect of the (persisted, Zipf-collapsed) surface table — the same
-    # adaptive design as cc_driver_max_nodes; arithmetic-identical to the
-    # distributed plan (r7). 0 disables (always distributed).
-    link_driver_max_surfaces: int = 20_000
     cc_max_iterations: int = 20
-    # node count at or below which connected components runs as driver-side
-    # union-find (2 bounded collects) instead of the iterative join loop —
-    # the post-Zipf-collapse surface graph is usually tiny, and each loop
-    # round costs 2 Spark actions. 0 disables (always distributed).
-    cc_driver_max_nodes: int = 100_000
     # cluster profile: reliable (checkpoint-dir-backed) lineage cuts in the
     # CC loop. localCheckpoint (default) stores blocks on executors — fine
     # in local mode, but an executor loss mid-loop kills the job on a real

@@ -172,11 +172,6 @@ class SpanEncoder:
         return span_idx, valid, sigmoid(logits)
 
 
-def TorchSpanEncoder(model_name_or_path: str, device: str = "cpu") -> SpanEncoder:
-    """Back-compat constructor: a SpanEncoder over the HF backend."""
-    return SpanEncoder(HFTransformerBackend(model_name_or_path, device))
-
-
 class OnnxSpanEncoder:
     """ONNX Runtime backend stub (reference model.py:1493-1556 exports;
     CPU scoring inside executors without torch). Same protocol: implement

@@ -9,33 +9,33 @@ unchanged: that is the 100 TB path. This module is the only place that
 knows how the gate works; an operator supplies its collect spec, its
 replay kernel and its distributed plan.
 
-Bounds (read at call time, so tests can monkeypatch them here; a per-op
-`driver_max_*` keyword overrides the default through `bound`, and a
-bound <= 0 disables the driver tier):
+Bounds. Every tier bound is one entry of BOUNDS, read at call time; a
+bound <= 0 disables that driver tier:
 
-  constant (env var)            default  gates
-  GRAPH_DRIVER_MAX_EDGES        500000   distinct rows of the collected
-    (GS_GRAPH_DRIVER_MAX_EDGES)          view: graph_analytics,
-                                         kg_completion, kg_fusion,
-                                         kg_query, ontology, rpq,
-                                         linking.closure_clusters
-  DD_DRIVER_MAX_DOCS            20000    documents: dedup.minhash_dedup,
-    (GS_DD_DRIVER_MAX_DOCS)              winnow_overlap_pairs,
-                                         containment_pairs
-  SIM_DRIVER_MAX_VECTORS        20000    vectors: the similarity
-    (GS_SIM_DRIVER_MAX_VECTORS)          near-dup and ANN driver family
-  RAW_COLLECT_CAP (none)        1000000  raw-mode collects: rows of the
-                                         pre-aggregate frame
-  STATS_SKIP_BYTES (none)       1 GiB    raw mode: leaf-stats size past
-                                         which the collect is skipped
-                                         without a job
+  kind        default  gates
+  edges        500000  distinct rows of the collected view:
+                       graph_analytics, kg_completion, kg_fusion,
+                       kg_query, ontology, rpq, linking.closure_clusters
+  docs          20000  documents: dedup.minhash_dedup,
+                       winnow_overlap_pairs, containment_pairs
+  vectors       20000  vectors: the similarity near-dup and ANN driver
+                       family
+  cc_nodes     100000  nodes: linking.connected_components (its edge
+                       collect is bounded at 8x this)
+  surfaces      20000  distinct surfaces: linking.canonicalize
+  rpq_states  2000000  the product-BFS state budget of rpq.rpq_match
 
-Three bounds live with their callers, because they are not row bounds of
-a collect made here: `PipelineConfig.cc_driver_max_nodes` (connected
-components, nodes; the edge collect is bounded at 8x it),
-`PipelineConfig.link_driver_max_surfaces` (canonicalize, distinct
-surfaces) and `rpq.RPQ_STATE_CAP` (the product-BFS state budget,
-GS_RPQ_STATE_CAP).
+Two constants bound the raw collect itself, whatever the tier:
+RAW_COLLECT_CAP (1000000 rows of the pre-aggregate frame) and
+STATS_SKIP_BYTES (1 GiB: the leaf-stats size past which the collect is
+skipped without a job).
+
+Forcing a tier. No operator takes a bound of its own, so a test or a
+harness forces a tier by patching BOUNDS in-process for a block (all
+zeros: the distributed plan everywhere; one kind: that kind only), and
+every gated call under it, nested ones included, reads the patched
+value. The default table is the production policy; nothing else sets
+it.
 
 Collect modes. The module picks the mode; operators never call
 toArrow(), limit() or a collect primitive themselves.
@@ -94,7 +94,6 @@ filtered to a predicate set, the non-loop spo rows, and (subj, pred).
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.errors import AnalysisException
@@ -104,27 +103,21 @@ from pyspark.sql import functions as F
 from gliner_spark.cache import forward_caches
 from gliner_spark.metrics import attach_audits
 
-GRAPH_DRIVER_MAX_EDGES = int(
-    os.environ.get("GS_GRAPH_DRIVER_MAX_EDGES", "500000")
-)
-DD_DRIVER_MAX_DOCS = int(os.environ.get("GS_DD_DRIVER_MAX_DOCS", "20000"))
-SIM_DRIVER_MAX_VECTORS = int(
-    os.environ.get("GS_SIM_DRIVER_MAX_VECTORS", "20000")
-)
+BOUNDS = {
+    "edges": 500_000,
+    "docs": 20_000,
+    "vectors": 20_000,
+    "cc_nodes": 100_000,
+    "surfaces": 20_000,
+    "rpq_states": 2_000_000,
+}
 RAW_COLLECT_CAP = 1_000_000
 STATS_SKIP_BYTES = 1 << 30
 
 
-def bound(value: int | None = None, kind: str = "edges") -> int:
-    """A per-op `driver_max_*` value, or the default bound of `kind`
-    ("edges", "docs" or "vectors") when it is None."""
-    if value is not None:
-        return value
-    return {
-        "edges": GRAPH_DRIVER_MAX_EDGES,
-        "docs": DD_DRIVER_MAX_DOCS,
-        "vectors": SIM_DRIVER_MAX_VECTORS,
-    }[kind]
+def bound(kind: str = "edges") -> int:
+    """The tier bound of `kind` (a BOUNDS key), read at call time."""
+    return BOUNDS[kind]
 
 
 # ----------------------------------------------------------------- collects
@@ -187,14 +180,13 @@ def rows(tbl) -> list:
     return list(zip(*(c.to_pylist() for c in tbl.columns)))
 
 
-def collect_rows(df: DataFrame, cols, value: int | None = None,
-                 kind: str = "edges"):
+def collect_rows(df: DataFrame, cols, cap: int):
     """Limit-mode collect of a computed per-row frame: row tuples of
-    `cols` if at most bound(value, kind) rows, else None."""
-    b = bound(value, kind)
-    if b <= 0:
+    `cols` if at most `cap` rows (a bound(kind), or a cap computed from
+    one), else None; cap <= 0 is None with no job."""
+    if cap <= 0:
         return None
-    tbl = _collect_limited(df.select(*cols), b)
+    tbl = _collect_limited(df.select(*cols), cap)
     return None if tbl is None else rows(tbl)
 
 
@@ -233,17 +225,16 @@ def _group_degraded(frame: DataFrame, keys, aggs, b: int):
     )
 
 
-def group(frame: DataFrame | None, keys, aggs=(), value: int | None = None,
-          table=None):
+def group(frame: DataFrame | None, keys, aggs=(), table=None):
     """Rows of `frame` grouped by `keys` with `aggs` ((col, fn) pairs;
     col [] for count_all), as a pyarrow table sorted by `keys`, if there
-    are at most bound(value) groups; else None.
+    are at most bound() groups; else None.
 
     The raw tier groups `table` (when the caller collected it already)
     or a raw-mode collect of the frame's columns. Past RAW_COLLECT_CAP
     the degraded tier runs the same aggregates in Spark and collects in
     limit mode; with `frame` None there is no degraded tier."""
-    b = bound(value)
+    b = bound()
     if b <= 0:
         return None
     keys, aggs = list(keys), list(aggs)
@@ -255,10 +246,10 @@ def group(frame: DataFrame | None, keys, aggs=(), value: int | None = None,
     return None if frame is None else _group_degraded(frame, keys, aggs, b)
 
 
-def dedup(frame: DataFrame, cols, value: int | None = None):
+def dedup(frame: DataFrame, cols):
     """Sorted distinct row tuples of `frame`'s `cols` if at most
-    bound(value), else None: `group` with no aggregate."""
-    tbl = group(frame, cols, (), value)
+    bound(), else None: `group` with no aggregate."""
+    tbl = group(frame, cols)
     return None if tbl is None else rows(tbl)
 
 
@@ -469,12 +460,11 @@ def view_table(triples: DataFrame, view: str, preds=None):
     return collect_raw(_view_frame(triples, view, preds))
 
 
-def edge_rows(triples: DataFrame, view: str, max_edges: int | None = None,
-              preds=None):
-    """Sorted distinct row tuples of `view` if at most bound(max_edges),
-    else None: `dedup` of the view, its raw tier served from the frame's
+def edge_rows(triples: DataFrame, view: str, preds=None):
+    """Sorted distinct row tuples of `view` if at most bound(), else
+    None: `dedup` of the view, its raw tier served from the frame's
     snapshot."""
-    b = bound(max_edges)
+    b = bound()
     if b <= 0:
         return None
     cols = list(VIEWS[view])

@@ -222,8 +222,7 @@ def _minhash_driver_pairs(rows, threshold: float):
 
 
 def minhash_dedup(
-    docs: DataFrame, threshold: float = 0.5, sort: bool = True,
-    driver_max_docs: int | None = None,
+    docs: DataFrame, threshold: float = 0.5, sort: bool = True
 ) -> DataFrame:
     """Near-dup pairs: LSH candidates verified by exact token-set Jaccard.
 
@@ -232,13 +231,13 @@ def minhash_dedup(
     stage's exploded item sets (explode of array_distinct — already unique
     per doc, so no distinct shuffle either). The corpus text is scanned
     exactly once in the physical plan."""
-    # r7 adaptive small-corpus gate (gate.DD_DRIVER_MAX_DOCS): the minhash
+    # r7 adaptive small-corpus gate (BOUNDS["docs"]): the minhash
     # banding / bucket cap / exact-Jaccard verify runs on the driver from
     # one bounded collect of the SPARK-computed token-id arrays (token
     # hashing stays engine-exact by construction); the Jaccard double is
     # the same int/int IEEE division in python
     rows = gate.collect_rows(
-        staged_token_ids(docs), ("doc_id", "_ids"), driver_max_docs, "docs"
+        staged_token_ids(docs), ("doc_id", "_ids"), gate.bound("docs")
     )
     if rows is not None:
         data, audit = _minhash_driver_pairs(rows, threshold)
@@ -341,9 +340,8 @@ def duplicate_clusters(
     machinery from entity linking (driver union-find below the bound,
     min-label propagation + pointer jumping above — O(log diameter)
     rounds). The pair set is Zipf-collapsed and tiny next to the corpus.
-    cfg threads the CC knobs (cc_driver_max_nodes, cc_max_iterations,
-    cc_reliable_checkpoint for executor-loss survival on a real cluster);
-    None = defaults."""
+    cfg threads the CC knobs (cc_max_iterations, cc_reliable_checkpoint
+    for executor-loss survival on a real cluster); None = defaults."""
     from gliner_spark.operators.linking import closure_clusters
 
     # sort=False: the pair list feeds straight into CC's shuffle — the
@@ -403,7 +401,6 @@ def winnow_overlap_pairs(
     docs: DataFrame,
     min_shared: int = WINNOW_MIN_SHARED,
     bucket_cap: int = WINNOW_BUCKET_CAP,
-    driver_max_docs: int | None = None,
 ) -> DataFrame:
     """Near-dup / overlap candidate pairs from WINNOWING fingerprints
     (the MOSS pipeline's second half): doc pairs sharing at least
@@ -427,13 +424,13 @@ def winnow_overlap_pairs(
         winnow_fingerprints,
     )
 
-    # r7 driver gate (DD_DRIVER_MAX_DOCS): fingerprint selection,
+    # r7 driver gate (BOUNDS["docs"]): fingerprint selection,
     # inverted index, bucket cap and shared-count pairing replayed from
     # one bounded collect of the Spark-computed gram arrays; the
     # distributed plan below is unchanged above the bound
     from gliner_spark.operators.text_analysis import WINNOW_K
 
-    grows = _winnow_gram_rows(docs, WINNOW_K, driver_max_docs)
+    grows = _winnow_gram_rows(docs, WINNOW_K)
     if grows is not None:
         pair_rows, audit = _winnow_pairs_driver(
             grows, min_shared, bucket_cap
@@ -474,7 +471,6 @@ def containment_pairs(
     min_shared: int = WINNOW_MIN_SHARED,
     bucket_cap: int = WINNOW_BUCKET_CAP,
     min_permille: int = CONTAIN_MIN_PERMILLE,
-    driver_max_docs: int | None = None,
 ) -> DataFrame:
     """Asymmetric CONTAINMENT detection — quotation / near-superset
     pairs (Broder 1997's containment c(A,B) = |S(A) ∩ S(B)| / |S(A)|
@@ -498,10 +494,10 @@ def containment_pairs(
         gram_postings,
     )
 
-    # r7 driver gate (DD_DRIVER_MAX_DOCS): candidates + exact
+    # r7 driver gate (BOUNDS["docs"]): candidates + exact
     # distinct-gram containment verify replayed from the same one
     # bounded gram collect; distributed plan unchanged above the bound
-    grows = _winnow_gram_rows(docs, WINNOW_K, driver_max_docs)
+    grows = _winnow_gram_rows(docs, WINNOW_K)
     if grows is not None:
         cand_rows, audit = _winnow_pairs_driver(
             grows, min_shared, bucket_cap
@@ -526,9 +522,7 @@ def containment_pairs(
             "contain_a_permille long, contain_b_permille long",
             ["doc_a", "doc_b"], audits=[audit], forward=False,
         )
-    cand = winnow_overlap_pairs(
-        docs, min_shared, bucket_cap, driver_max_docs
-    )
+    cand = winnow_overlap_pairs(docs, min_shared, bucket_cap)
     pairs = cand.select("doc_a", "doc_b")
     post = gram_postings(docs).select("doc_id", "gh").distinct().persist()
     sizes = post.groupBy("doc_id").agg(

@@ -37,8 +37,8 @@ PR_ITERS = 3
 TWO_HOP_MAX_FANOUT = 64
 
 # r7 adaptive small-graph gate (the _cc_driver design generalized): at or
-# below the edge bound (gliner_spark/gate.py: GRAPH_DRIVER_MAX_EDGES,
-# env-tunable, 0 disables every driver path) the iterative centrality /
+# below the edge bound (gliner_spark/gate.py: BOUNDS["edges"], 0
+# disables every driver path) the iterative centrality /
 # community operators run their loop on the driver — arithmetic-
 # identical pure-integer replays, parity-tested against the distributed
 # plans, which remain the >bound (100 TB) path. The operators over a
@@ -137,9 +137,7 @@ def graph_edges(triples: DataFrame) -> DataFrame:
     return graph_edges_raw(triples).distinct()
 
 
-def entity_degrees(
-    triples: DataFrame, driver_max_edges: int | None = None
-) -> DataFrame:
+def entity_degrees(triples: DataFrame) -> DataFrame:
     """Per-node degree profile: out/in edge counts and distinct predicates.
 
     Two grouped aggregates (map-side partial) merged on the node id via a
@@ -150,12 +148,12 @@ def entity_degrees(
     # snapshot) and merge in a dict (the full-outer join + fills in
     # python; all-integer output)
     tbl = None
-    if gate.bound(driver_max_edges) > 0:
+    if gate.bound() > 0:
         tbl = view_table(triples, "spo")
     if tbl is not None:
         aggs = [("pred", "count_distinct"), ([], "count_all")]
-        out_t = gate.group(None, ["subj"], aggs, driver_max_edges, tbl)
-        in_t = gate.group(None, ["obj"], aggs, driver_max_edges, tbl)
+        out_t = gate.group(None, ["subj"], aggs, tbl)
+        in_t = gate.group(None, ["obj"], aggs, tbl)
         if out_t is not None and in_t is not None:
             prof: dict = {}
             for e, npred, odeg in gate.rows(out_t):
@@ -200,7 +198,6 @@ def entity_degrees(
 
 def two_hop_paths(
     triples: DataFrame, max_fanout: int = TWO_HOP_MAX_FANOUT,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """(src, dst, n_paths) over 2-hop walks src -> mid -> dst (src != dst),
     counted over the DISTINCT edge set.
@@ -211,9 +208,9 @@ def two_hop_paths(
     never silent (capped-hub edge counts ride the returned frame — read
     with metrics.skew_metrics)."""
     e = graph_edges(triples)
-    erows = edge_rows(triples, "directed", driver_max_edges)
+    erows = edge_rows(triples, "directed")
     if erows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate): hop join replay with
+        # driver path (BOUNDS["edges"] gate): hop join replay with
         # the audited mid-node out-fanout cap, exact integer counts
         fwd: dict = {}
         for r in erows:
@@ -263,9 +260,7 @@ def two_hop_paths(
     return forward_caches(attach_audits(out, audit), triples)
 
 
-def entity_components(
-    triples: DataFrame, cfg=None, driver_max_edges: int | None = None
-) -> DataFrame:
+def entity_components(triples: DataFrame, cfg=None) -> DataFrame:
     """Connected components of the (undirected) entity graph — the
     community/link-structure query KG consumers run right after degree
     profiles. Reuses the adaptive CC machinery from entity linking
@@ -283,9 +278,9 @@ def entity_components(
     if cfg is None:
         cfg = PipelineConfig()
     e = graph_edges(triples)
-    erows = edge_rows(triples, "directed", driver_max_edges)
+    erows = edge_rows(triples, "directed")
     if erows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate): the node set here IS
+        # driver path (BOUNDS["edges"] gate): the node set here IS
         # the edge endpoints, so one bounded edge collect feeds the same
         # union-by-min union-find _cc_driver runs — without the separate
         # nodes.count / nodes.collect / edge-collect jobs (UTF-8 byte
@@ -446,7 +441,6 @@ def pagerank(
     checkpoint_dir: str = "",
     dangling: bool = False,
     seed_prefix: str = "",
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Integer PageRank over the distinct edge set: fixed `iters` rounds of
     r'(v) = (1-d) + d * sum_{u->v} (r(u) DIV out_deg(u)),
@@ -485,9 +479,9 @@ def pagerank(
         raise ValueError("personalized + dangling redistribution is not "
                          "defined here; pick one")
     if not reliable_checkpoint:
-        erows = edge_rows(triples, "directed", driver_max_edges)
+        erows = edge_rows(triples, "directed")
         if erows is not None:
-            # driver path (GRAPH_DRIVER_MAX_EDGES gate): the bigint
+            # driver path (BOUNDS["edges"] gate): the bigint
             # PageRank rounds replayed exactly (DIV == // for the
             # nonneg operands here) for all three variants
             edges_d = [(r[0], r[1]) for r in erows]
@@ -659,7 +653,6 @@ def triangle_counts(
     triples: DataFrame,
     max_fanout: int = TWO_HOP_MAX_FANOUT,
     und: DataFrame | None = None,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Per-entity triangle participation counts over the UNDIRECTED
     distinct entity graph — the clustering-coefficient numerator and the
@@ -684,9 +677,9 @@ def triangle_counts(
     undirected edge set so composing operators (clustering_coefficients)
     don't re-run the same distinct-exchange twice in one query."""
     if und is None:
-        rows = edge_rows(triples, "undirected", driver_max_edges)
+        rows = edge_rows(triples, "undirected")
         if rows is not None:
-            # driver path (GRAPH_DRIVER_MAX_EDGES gate): _tri_driver is
+            # driver path (BOUNDS["edges"] gate): _tri_driver is
             # the audited-cap compact-forward replay
             counts, audit = _tri_driver(
                 {(r[0], r[1]) for r in rows}, max_fanout
@@ -725,7 +718,6 @@ def triangle_counts(
 
 def clustering_coefficients(
     triples: DataFrame, max_fanout: int = TWO_HOP_MAX_FANOUT,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Local clustering coefficient per entity over the undirected
     distinct graph: cc(v) = 2*T(v) / (k(v)*(k(v)-1)), with T(v) the
@@ -748,9 +740,9 @@ def clustering_coefficients(
     triangle subplan, and the capped-pivot flag — previously the same
     distinct ran twice per query); the persist handle rides on the output
     for release_caches. Aggregates and equi-joins only."""
-    rows = edge_rows(triples, "undirected", driver_max_edges)
+    rows = edge_rows(triples, "undirected")
     if rows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate): triangle replay +
+        # driver path (BOUNDS["edges"] gate): triangle replay +
         # degree/capped bookkeeping in python; the one double division is
         # computed raw and rounded back IN Spark with the same F.round
         eset = {(r[0], r[1]) for r in rows}
@@ -845,7 +837,6 @@ def clustering_coefficients(
 
 def node_similarity(
     triples: DataFrame, max_fanout: int = TWO_HOP_MAX_FANOUT,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Neighborhood Jaccard for every canonical undirected entity edge
     (a, b): J = |N(a) ∩ N(b)| / |N(a) ∪ N(b)| over the undirected
@@ -865,9 +856,9 @@ def node_similarity(
     aggregate and the wedge join; joins + aggregates only, one exact
     bigint division per row — the kg_node_similarity oracle replays it
     bit-for-bit."""
-    rows = edge_rows(triples, "undirected", driver_max_edges)
+    rows = edge_rows(triples, "undirected")
     if rows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate): full-neighborhood
+        # driver path (BOUNDS["edges"] gate): full-neighborhood
         # wedge counting with the audited pivot cap; the Jaccard double
         # is computed raw and rounded back IN Spark with the same F.round
         eset = {(r[0], r[1]) for r in rows}
@@ -965,7 +956,6 @@ def kcore(
     triples: DataFrame,
     k: int = KCORE_K,
     max_rounds: int = KCORE_MAX_ROUNDS,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """k-core of the undirected entity graph: the maximal subgraph in
     which every member keeps degree >= k WITHIN the subgraph — the
@@ -991,9 +981,9 @@ def kcore(
     > max_rounds raises rather than returning a non-fixpoint (CC's
     convergence contract); real KGs converge in a handful of rounds —
     depth equals the longest chain of cascading removals, not |V|."""
-    erows = edge_rows(triples, "undirected", driver_max_edges)
+    erows = edge_rows(triples, "undirected")
     if erows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate): the same confluent
+        # driver path (BOUNDS["edges"] gate): the same confluent
         # peel over one bounded edge collect, including the bounded-round
         # non-convergence contract
         eset = {(r[0], r[1]) for r in erows}
@@ -1073,7 +1063,6 @@ def link_prediction(
     triples: DataFrame,
     top: int = LP_TOP,
     max_fanout: int = TWO_HOP_MAX_FANOUT,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Missing-link candidates by Resource Allocation index (Zhou,
     Lü & Zhang 2009 — the strongest of the classic local similarity
@@ -1092,9 +1081,9 @@ def link_prediction(
     lowest-information wedges), anti-joined against the edge set to keep
     non-edges, grouped-sum scored, global top-N. Joins + aggregates
     only."""
-    rows = edge_rows(triples, "undirected", driver_max_edges)
+    rows = edge_rows(triples, "undirected")
     if rows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate): RA wedges with the
+        # driver path (BOUNDS["edges"] gate): RA wedges with the
         # audited pivot cap, non-edge filter, integer micro-unit scores,
         # deterministic top-N — all exact (LP_UNIT DIV deg == // nonneg)
         eset = {(r[0], r[1]) for r in rows}
@@ -1210,7 +1199,6 @@ def bfs_distances(
     triples: DataFrame,
     seed_prefix: str = "person:",
     depth: int = BFS_DEPTH,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Minimum directed-hop distance from any SEED entity (id starts with
     `seed_prefix`) within `depth` hops over the distinct edge set — the
@@ -1227,9 +1215,9 @@ def bfs_distances(
     distinct + anti-join per round over the localCheckpointed edge set
     (frontiers shrink after the expansion wave); depth is a constant, so
     the plan is a fixed pipeline, not a data-dependent recursion."""
-    erows = edge_rows(triples, "directed", driver_max_edges)
+    erows = edge_rows(triples, "directed")
     if erows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate): multi-source
+        # driver path (BOUNDS["edges"] gate): multi-source
         # directed BFS replay over one bounded edge collect
         dist_d = _bfs_dist_driver(erows, seed_prefix, depth)
         return local_result(
@@ -1297,7 +1285,6 @@ def _lpa_driver(adj, rounds: int) -> dict:
 def lpa_communities(
     triples: DataFrame, rounds: int = LPA_ROUNDS,
     und: DataFrame | None = None, sort: bool = True,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation (Raghavan,
     Albert & Kumara 2007, made deterministic): every node starts labeled
@@ -1336,9 +1323,9 @@ def lpa_communities(
     output sort for composing consumers."""
     own_und = None
     if und is None:
-        rows = edge_rows(triples, "undirected", driver_max_edges)
+        rows = edge_rows(triples, "undirected")
         if rows is not None:
-            # driver path (GRAPH_DRIVER_MAX_EDGES gate): _lpa_driver is
+            # driver path (BOUNDS["edges"] gate): _lpa_driver is
             # the exact synchronous-LPA replay over one bounded collect
             labels_d = _lpa_driver(_adj_from_und(rows), rounds)
             return local_result(
@@ -1398,7 +1385,6 @@ def _duckdb_round6_py(x: float) -> float:
 
 def partition_modularity(
     triples: DataFrame, rounds: int = LPA_ROUNDS,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Newman modularity decomposition of the LPA partition — the
     standard "are these communities real" score, per community and in
@@ -1421,9 +1407,9 @@ def partition_modularity(
     as a broadcast 1-row aggregate (no driver collect); two label joins
     + three grouped aggregates, no window wider than a node's label
     candidates."""
-    rows = edge_rows(triples, "undirected", driver_max_edges)
+    rows = edge_rows(triples, "undirected")
     if rows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate): LPA + the exact
+        # driver path (BOUNDS["edges"] gate): LPA + the exact
         # integer modularity decomposition over one bounded edge collect;
         # the one double division replays DuckDB's round via
         # _duckdb_round6_py (same floats: int->double exact below 2^53,
@@ -1613,9 +1599,7 @@ def cardinality_constraints(triples: DataFrame) -> DataFrame:
     return forward_caches(out, triples)
 
 
-def entity_provenance(
-    triples: DataFrame, driver_max_edges: int | None = None
-) -> DataFrame:
+def entity_provenance(triples: DataFrame) -> DataFrame:
     """Per-entity provenance card: distinct supporting documents, triple
     participation split by role, distinct predicates, and the first/last
     document ids — the "where did this node come from" record every KG
@@ -1629,7 +1613,7 @@ def entity_provenance(
     # UTF-8 binary min/max == Spark string min/max); gate on the
     # distinct entity count
     tbl = None
-    if gate.bound(driver_max_edges) > 0:
+    if gate.bound() > 0:
         tbl = gate.collect_raw(
             triples.select("doc_id", "pred", "subj", "obj")
         )
@@ -1652,7 +1636,7 @@ def entity_provenance(
             ("pred", "count_distinct"),
             ("doc_id", "min"),
             ("doc_id", "max"),
-        ], driver_max_edges, sides_t)
+        ], sides_t)
         if agg is not None:
             data = [
                 (e, nd, nt, ns, nt - ns, np_, fd, ld)
@@ -1751,7 +1735,6 @@ def ktruss(
     k: int = TRUSS_K,
     max_rounds: int = TRUSS_MAX_ROUNDS,
     max_fanout: int = TWO_HOP_MAX_FANOUT,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """k-truss of the undirected entity graph: the maximal subgraph in
     which every EDGE participates in >= k-2 triangles within the
@@ -1777,9 +1760,9 @@ def ktruss(
     bounded by cap * |edges|, one closure semi-join, one grouped count,
     one left join + filter; localCheckpoint per round with the previous
     round unpersisted (CC loop hygiene)."""
-    erows = edge_rows(triples, "undirected", driver_max_edges)
+    erows = edge_rows(triples, "undirected")
     if erows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate) — _ktruss_driver
+        # driver path (BOUNDS["edges"] gate) — _ktruss_driver
         # replays the audited peel; per-round cap audits ride the output
         # as local 1-row frames so skew_metrics keeps working
         data, audit_dicts = _ktruss_driver(erows, k, max_rounds, max_fanout)
@@ -1852,7 +1835,6 @@ def metapath_counts(
     triples: DataFrame,
     preds: tuple = METAPATH,
     max_fanout: int = TWO_HOP_MAX_FANOUT,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Typed metapath instance counts: (src, dst, n_paths) over walks
     src -p1-> m1 -p2-> ... -pk-> dst following the GIVEN predicate
@@ -1873,7 +1855,7 @@ def metapath_counts(
     # metapath predicates' edges (all-integer output; per-step audit
     # frames keep skew_metrics working). The capped join chain
     # (unchanged) is the scale path above it.
-    rows = edge_rows(triples, "preds", driver_max_edges, preds)
+    rows = edge_rows(triples, "preds", preds)
     if rows is not None:
         from collections import Counter
 
@@ -1966,7 +1948,6 @@ def _wl_driver_colors(adj: dict, rounds: int) -> dict:
 
 def wl_colors(
     triples: DataFrame, rounds: int = WL_ROUNDS,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """1-dimensional Weisfeiler-Leman color refinement over the
     undirected entity graph (Weisfeiler & Leman 1968; the WL-kernel
@@ -1999,9 +1980,9 @@ def wl_colors(
     here already carries."""
     from gliner_spark.functions.text import FOLD_M, P31, fold_hash
 
-    rows = edge_rows(triples, "undirected", driver_max_edges)
+    rows = edge_rows(triples, "undirected")
     if rows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate): the refinement hash
+        # driver path (BOUNDS["edges"] gate): the refinement hash
         # is pure bigint arithmetic — replayed exactly (fold_hash of the
         # type prefix, sorted neighbor colors, same FOLD_M/P31 folds)
         adj = _adj_from_und(rows)
@@ -2075,9 +2056,7 @@ def wl_colors(
     return attach_caches(forward_caches(out, triples), und)
 
 
-def degree_histogram(
-    triples: DataFrame, driver_max_edges: int | None = None
-) -> DataFrame:
+def degree_histogram(triples: DataFrame) -> DataFrame:
     """Exact log2-bucketed degree-distribution histogram of the
     undirected entity graph — the first scale-free / power-law profile
     read on a constructed KG (Barabasi-Albert style degree plots), and
@@ -2095,7 +2074,7 @@ def degree_histogram(
     # r7 pass 3: bucket index = bit_length - 1 == length(bin(d)) - 1
     # exactly; the replay is one collected-edge degree counter plus an
     # all-integer bucket fold
-    rows = edge_rows(triples, "undirected", driver_max_edges)
+    rows = edge_rows(triples, "undirected")
     if rows is not None:
         deg: dict = {}
         for a, b_ in rows:
@@ -2307,7 +2286,6 @@ def harmonic_centrality(
     triples: DataFrame,
     n_seeds: int = HC_SEEDS,
     depth: int = HC_DEPTH,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Seed-sampled harmonic centrality over the undirected entity graph
     (Boldi & Vigna 2014's preferred centrality; estimated from a fixed
@@ -2332,9 +2310,9 @@ def harmonic_centrality(
     localCheckpointed symmetric edge list, then one grouped integer
     aggregate. The seed pick is a TakeOrdered top-k (no global sort
     materialized)."""
-    rows = edge_rows(triples, "undirected", driver_max_edges)
+    rows = edge_rows(triples, "undirected")
     if rows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate): one bounded collect
+        # driver path (BOUNDS["edges"] gate): one bounded collect
         # of the distinct undirected edges, integer BFS + harmonic sums
         # in python — arithmetic-identical (HC_UNIT DIV dist == // for
         # nonneg), parity-tested against the distributed plan below
@@ -2380,7 +2358,6 @@ HITS_UNIT = 1_000_000
 
 def hits(
     triples: DataFrame, rounds: int = HITS_ROUNDS,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Integer HITS hubs-and-authorities over the distinct directed edge
     set (Kleinberg 1999): fixed `rounds` of mutual reinforcement —
@@ -2407,9 +2384,9 @@ def hits(
     if rounds < 1:
         raise ValueError("hits needs rounds >= 1 (0 rounds would have "
                          "no authority scores to return)")
-    erows = edge_rows(triples, "directed", driver_max_edges)
+    erows = edge_rows(triples, "directed")
     if erows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate): the integer HITS
+        # driver path (BOUNDS["edges"] gate): the integer HITS
         # rounds replayed exactly ((UNIT * s) DIV max == // for nonneg,
         # max floored at 1 like the greatest(max, 1) aggregate)
         edges_d = [(r[0], r[1]) for r in erows]
@@ -2539,7 +2516,6 @@ def reciprocity(triples: DataFrame) -> DataFrame:
 
 def square_counts(
     triples: DataFrame, max_fanout: int = TWO_HOP_MAX_FANOUT,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Per-entity 4-cycle (square) participation counts over the
     undirected distinct entity graph — the bipartite-ish clustering
@@ -2559,9 +2535,9 @@ def square_counts(
     exactly one of its two diagonals, so each square contributes
     exactly once per member node. Pure integer counts, replayed
     relationally by the kg_squares oracle."""
-    rows = edge_rows(triples, "undirected", driver_max_edges)
+    rows = edge_rows(triples, "undirected")
     if rows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate): diagonal-wedge
+        # driver path (BOUNDS["edges"] gate): diagonal-wedge
         # square counting with the audited pivot cap, exact integers
         adj = _adj_from_und(rows)
         common: dict = {}
@@ -2709,7 +2685,6 @@ def stress_centrality(
     triples: DataFrame,
     n_seeds: int = STRESS_SEEDS,
     depth: int = STRESS_DEPTH,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Seed-sampled stress centrality over the undirected entity graph —
     the INTEGER member of the betweenness family (Shimbel 1953;
@@ -2751,9 +2726,9 @@ def stress_centrality(
     once, and the loop stays flat)."""
     from gliner_spark.functions.text import fold_hash
 
-    rows = edge_rows(triples, "undirected", driver_max_edges)
+    rows = edge_rows(triples, "undirected")
     if rows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate): pure-integer Brandes
+        # driver path (BOUNDS["edges"] gate): pure-integer Brandes
         # replay over the undirected edge view (_stress_driver_np)
         adj = _adj_from_und(rows)
         seeds = _driver_seeds(adj, n_seeds)
@@ -2877,7 +2852,6 @@ def distance_profile(
     triples: DataFrame,
     n_seeds: int = HC_SEEDS,
     depth: int = HC_DEPTH,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Seed-sampled shortest-distance distribution of the undirected
     entity graph — the effective-diameter readout (the d50/d90 "six
@@ -2895,9 +2869,9 @@ def distance_profile(
     the profile itself is one grouped count + a cumulative window over
     <= depth rows. All integers — the kg_distances oracle replays the
     unrolled levels and the permille division exactly."""
-    rows = edge_rows(triples, "undirected", driver_max_edges)
+    rows = edge_rows(triples, "undirected")
     if rows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate) — same BFS replay as
+        # driver path (BOUNDS["edges"] gate) — same BFS replay as
         # harmonic_centrality; the histogram/cumulative/permille are
         # exact integer folds (1000 * cum DIV total == // for nonneg)
         import numpy as np
@@ -2946,9 +2920,7 @@ def distance_profile(
     return attach_caches(forward_caches(out, triples), dist)
 
 
-def assortativity(
-    triples: DataFrame, driver_max_edges: int | None = None
-) -> DataFrame:
+def assortativity(triples: DataFrame) -> DataFrame:
     """Degree assortativity of the undirected entity graph (Newman 2002
     Phys. Rev. Lett. 89, 208701): the Pearson correlation of the degrees
     at either end of an edge — positive means hubs attach to hubs
@@ -2971,7 +2943,7 @@ def assortativity(
     # division is NOT replayed — the moment row goes back as a local
     # relation and the SAME when/round expression below emits the
     # coefficient, so the bits cannot drift
-    rows = edge_rows(triples, "undirected", driver_max_edges)
+    rows = edge_rows(triples, "undirected")
     if rows is not None:
         deg: dict = {}
         for a, b in rows:
@@ -3057,7 +3029,6 @@ PRED_ASSOC_MIN_SUPPORT = 2
 
 def pred_association(
     triples: DataFrame, min_support: int = PRED_ASSOC_MIN_SUPPORT,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Subject-level predicate association — which predicates co-occur
     on the same subject more than chance (the attribute-association
@@ -3078,7 +3049,7 @@ def pred_association(
     # pred) rows arrive sorted, per-subject pred lists are ascending
     # slices, pairs via triu gathers + np.unique, lift raw double with
     # the same F.round applied back in Spark
-    sp_rows = edge_rows(triples, "sp", driver_max_edges)
+    sp_rows = edge_rows(triples, "sp")
     if sp_rows is not None:
         import numpy as np
 
@@ -3239,7 +3210,6 @@ def _triad_driver(erows, cap: int):
 
 def triad_census(
     triples: DataFrame, max_fanout: int = TWO_HOP_MAX_FANOUT,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Collapsed Davis-Leinhardt triad census of the DIRECTED entity
     graph, restricted to closed triads (triangles): one row per class
@@ -3260,9 +3230,9 @@ def triad_census(
     distinct-edge projection, and a CASE expression classifies. Joins +
     one tiny aggregate; the kg_triads oracle replays the same flags and
     CASE bit-for-bit."""
-    erows = edge_rows(triples, "directed", driver_max_edges)
+    erows = edge_rows(triples, "directed")
     if erows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate): _triad_driver
+        # driver path (BOUNDS["edges"] gate): _triad_driver
         # replays the capped compact-forward enumeration + direction
         # flags + CASE classification exactly; audit frame keeps
         # skew_metrics working
@@ -3365,7 +3335,6 @@ WPR_ITERS = PR_ITERS
 
 def pagerank_weighted(
     triples: DataFrame, iters: int = WPR_ITERS, damping: int = PR_DAMP,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Support-weighted integer PageRank: edge weight = number of
     DISTINCT documents asserting any triple on that (src, dst) edge, so
@@ -3396,10 +3365,10 @@ def pagerank_weighted(
     # the cluster aggregate was two exchanges per call
     wt = gate.group(
         triples.filter(F.col("subj") != F.col("obj")),
-        ["subj", "obj"], [("doc_id", "count_distinct")], driver_max_edges,
+        ["subj", "obj"], [("doc_id", "count_distinct")],
     )
     if wt is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate): weighted bigint
+        # driver path (BOUNDS["edges"] gate): weighted bigint
         # rounds replayed exactly ((rank * w) DIV out_w == // nonneg)
         edges_d = gate.rows(wt)
         nodes_d = sorted({x for u, v, _w in edges_d for x in (u, v)})
@@ -3530,7 +3499,6 @@ def egonet(
     triples: DataFrame,
     seed_prefix: str = "person:",
     depth: int = EGONET_DEPTH,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """K-hop ego-network export: the INDUCED subgraph on all entities
     within `depth` directed hops of any seed (bfs_distances node set) —
@@ -3545,9 +3513,9 @@ def egonet(
     fact set against the distanced node set — the node set is the
     small side (neighborhood-sized) and broadcasts under AQE; no
     windows, no fan-out beyond the facts already in the neighborhood."""
-    frows = edge_rows(triples, "spo", driver_max_edges)
+    frows = edge_rows(triples, "spo")
     if frows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate): BFS distances +
+        # driver path (BOUNDS["edges"] gate): BFS distances +
         # both endpoint joins replayed over one bounded collect of the
         # distinct facts (edges exclude self-loops, like graph_edges)
         dist_d = _bfs_dist_driver(
@@ -3590,7 +3558,6 @@ def egonet(
 
 def summary_graph(
     triples: DataFrame, rounds: int = WL_ROUNDS,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Structural KG summary: the QUOTIENT GRAPH of the fact set under
     WL-color equivalence (DataGuide/bisimulation-style graph
@@ -3615,9 +3582,9 @@ def summary_graph(
     predicates)."""
     from gliner_spark.functions.text import FOLD_M, P31, fold_hash
 
-    erows = edge_rows(triples, "spo", driver_max_edges)
+    erows = edge_rows(triples, "spo")
     if erows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate): WL colors + the
+        # driver path (BOUNDS["edges"] gate): WL colors + the
         # closed-form isolate fallback + quotient aggregation replayed
         # in python over one bounded collect of the distinct facts
         und_pairs = {

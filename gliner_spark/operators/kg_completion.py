@@ -141,7 +141,7 @@ def _negatives_driver(cols, pool_cap: int):
     return out
 
 
-def _positive_cols(triples: DataFrame, driver_max_rows: int | None):
+def _positive_cols(triples: DataFrame):
     """Tiered bounded collect of the distinct positives
     (subj, pred, obj, min(obj_type)) — the shared driver-gate entry of
     negative_samples / transe_margin_eval / ranking_metrics (one copy so
@@ -154,15 +154,13 @@ def _positive_cols(triples: DataFrame, driver_max_rows: int | None):
     oriented), if the distinct-positive count fits the bound; else None
     (caller keeps the distributed plan)."""
     tbl = gate.group(
-        triples, ["subj", "pred", "obj"], [("obj_type", "min")],
-        driver_max_rows,
+        triples, ["subj", "pred", "obj"], [("obj_type", "min")]
     )
     return None if tbl is None else tuple(c.to_pylist() for c in tbl.columns)
 
 
 def negative_samples(
     triples: DataFrame, pool_cap: int = NEG_POOL_CAP,
-    driver_max_rows: int | None = None,
 ) -> DataFrame:
     """One type-consistent corrupted tail per distinct positive triple,
     filtered against the true triple set.
@@ -182,9 +180,9 @@ def negative_samples(
     filtered check is one left-anti shuffle join on (s, p, o'). No
     all-pairs work anywhere.
     """
-    cols = _positive_cols(triples, driver_max_rows)
+    cols = _positive_cols(triples)
     if cols is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate, here on distinct
+        # driver path (BOUNDS["edges"] gate, here on distinct
         # positives): _negatives_driver replays the protocol exactly;
         # downstream scorers (transe_margin_eval family) then run over a
         # local relation — one narrow stage instead of pool/broadcast/
@@ -288,7 +286,6 @@ def cooc_candidates(
     triples: DataFrame,
     doc_cap: int = COOC_DOC_CAP,
     min_support: int = COOC_MIN_SUPPORT,
-    driver_max_rows: int | None = None,
 ) -> DataFrame:
     """Document co-occurrence lift for entity pairs the extractor did
     NOT link — the distant-supervision / missing-relation candidate list
@@ -322,7 +319,7 @@ def cooc_candidates(
     # unchanged: each distinct set must fit the row bound; raw tables
     # past RAW_COLLECT_CAP degrade to two gate.group calls of their own.
     ed_t = adj_t = tbl = None
-    if gate.bound(driver_max_rows) > 0:
+    if gate.bound() > 0:
         tbl = gate.collect_raw(
             triples.select("doc_id", "subj", "obj", "obj_type")
         )
@@ -341,15 +338,15 @@ def cooc_candidates(
         adj_t = tbl.filter(
             pc.not_equal(tbl.column("subj"), tbl.column("obj"))
         ).select(["subj", "obj"])
-    ed = gate.group(ed_raw, ["doc_id", "entity"], (), driver_max_rows, ed_t)
+    ed = gate.group(ed_raw, ["doc_id", "entity"], (), ed_t)
     adj = None
     if ed is not None:
         adj = gate.group(
             triples.filter(F.col("subj") != F.col("obj")),
-            ["subj", "obj"], (), driver_max_rows, adj_t,
+            ["subj", "obj"], (), adj_t,
         )
     if adj is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate, here on distinct
+        # driver path (BOUNDS["edges"] gate, here on distinct
         # (doc, entity) incidences): capped pair counting, marginals and
         # the non-adjacency filter — vectorized (r7 pass 3: the python
         # pair loop was 0.8 s of the 1.2 s wall at sf0.1). Incidences
@@ -518,7 +515,6 @@ def walk_corpus(
     walks_per_node: int = WALKS_PER_NODE,
     length: int = WALK_LEN,
     nbr_cap: int = WALK_NBR_CAP,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Deterministic random-walk corpus over the undirected entity graph
     — the DeepWalk / node2vec(p=q=1) training-data generator (Perozzi et
@@ -543,9 +539,9 @@ def walk_corpus(
     guarantees every reached node has a non-empty pool, so walks never
     dead-end."""
     und = undirected_edges(triples)
-    rows = edge_rows(triples, "undirected", driver_max_edges)
+    rows = edge_rows(triples, "undirected")
     if rows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate): the bounded pools
+        # driver path (BOUNDS["edges"] gate): the bounded pools
         # and fold-hash walk steps replayed exactly (pmod == % for the
         # nonneg hash; pools are hash-rank-capped then sorted, the same
         # _hash_ranked_pool protocol)
@@ -698,15 +694,14 @@ RULE_MIN_SUPPORT = 2          # min # shared (x, y) pairs to emit a rule
 RULE_MIN_CONF_PERMILLE = 500  # inference threshold: conf >= 50.0%
 
 
-def _rule_edge_rows(triples: DataFrame, driver_max_rows: int | None):
+def _rule_edge_rows(triples: DataFrame):
     """The distinct non-loop edges (subj, pred, obj), bounded — the
     shared driver-gate entry of mine_rules / apply_rules."""
-    return edge_rows(triples, "spo_nonloop", driver_max_rows)
+    return edge_rows(triples, "spo_nonloop")
 
 
 def mine_rules(
     triples: DataFrame, min_support: int = RULE_MIN_SUPPORT,
-    driver_max_rows: int | None = None,
 ) -> DataFrame:
     """AMIE-style mining of 2-atom horn rules over the constructed KG
     (Galarraga et al. 2013): `body(x, y) => head(x, y)` (direct) and
@@ -731,7 +726,7 @@ def mine_rules(
     # r7: below the distinct-edge bound the pair-grouped rule counting
     # replays on the driver from one bounded collect (all-integer
     # output); the self-join plan (unchanged) is the scale path above it
-    rows = _rule_edge_rows(triples, driver_max_rows)
+    rows = _rule_edge_rows(triples)
     if rows is not None:
         return local_result(
             triples, _mine_rules_driver(rows, min_support),
@@ -884,7 +879,6 @@ def apply_rules(
     triples: DataFrame,
     min_conf_permille: int = RULE_MIN_CONF_PERMILLE,
     min_support: int = RULE_MIN_SUPPORT,
-    driver_max_rows: int | None = None,
 ) -> DataFrame:
     """Rule-based KG completion: materialize the triples IMPLIED by the
     high-confidence mined rules but absent from the graph — the
@@ -905,7 +899,7 @@ def apply_rules(
     |body edges| * |rules per body predicate|."""
     # r7: same driver gate as mine_rules (shared edge collect; the rules
     # are re-mined locally — cheaper than a second cluster pass)
-    rows = _rule_edge_rows(triples, driver_max_rows)
+    rows = _rule_edge_rows(triples)
     if rows is not None:
         return local_result(
             triples, _apply_rules_driver(rows, min_conf_permille, min_support),
@@ -913,9 +907,7 @@ def apply_rules(
             "inverse long, conf_permille long",
             ["subj", "pred", "obj", "rule_body", "inverse"],
         )
-    rules = mine_rules(
-        triples, min_support=min_support, driver_max_rows=driver_max_rows
-    ).filter(F.col("conf_permille") >= min_conf_permille)
+    rules = mine_rules(triples, min_support=min_support).filter(F.col("conf_permille") >= min_conf_permille)
     d = (
         triples.filter(F.col("subj") != F.col("obj"))
         .select("subj", "pred", "obj")
@@ -1113,7 +1105,6 @@ def _margin_eval_driver(pairs_rows, dim: int, scorer: str):
 
 def transe_margin_eval(
     triples: DataFrame, dim: int = TRANSE_DIM, scorer: str = "transe",
-    driver_max_rows: int | None = None,
 ) -> DataFrame:
     """Pairwise ranking evaluation of a KG-embedding scorer over the
     (positive, corrupted-negative) pairs from negative_samples — the
@@ -1158,7 +1149,7 @@ def transe_margin_eval(
     # data. _energies_np reproduces the ordered folds bit-for-bit; the
     # final round-6 is applied back in Spark below. Above the bound the
     # distributed plan (unchanged) is the scale path.
-    cols = _positive_cols(triples, driver_max_rows)
+    cols = _positive_cols(triples)
     if cols is not None:
         data = _margin_eval_driver(
             _negatives_driver(cols, NEG_POOL_CAP), dim, scorer
@@ -1209,7 +1200,7 @@ def transe_margin_eval(
     else:
         raise ValueError(f"unknown scorer {scorer!r}")
 
-    pairs = negative_samples(triples, driver_max_rows=driver_max_rows)
+    pairs = negative_samples(triples)
     emb = pairs.select(
         "pred",
         hash_embedding("subj", dim).alias("h"),
@@ -1387,7 +1378,6 @@ def ranking_metrics(
     triples: DataFrame,
     dim: int = TRANSE_DIM,
     pool_cap: int = RANK_POOL_CAP,
-    driver_max_rows: int | None = None,
 ) -> DataFrame:
     """Filtered link-prediction RANKING evaluation — the standard KGE
     protocol (Bordes et al. 2013; "filtered" setting of Wang et al.
@@ -1417,7 +1407,7 @@ def ranking_metrics(
     # an all-integer-output blocked numpy compare on the driver below
     # the bound; the distributed broadcast-pool plan (unchanged) is the
     # scale path above it.
-    cols = _positive_cols(triples, driver_max_rows)
+    cols = _positive_cols(triples)
     if cols is not None:
         return local_result(
             triples, _ranking_driver(cols, dim, pool_cap),

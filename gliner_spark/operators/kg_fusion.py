@@ -39,9 +39,7 @@ FACT_TOP_M = 3         # facts kept per entity card
 FR_UNIT = 1_000_000    # rarity micro-units (1.0 == 1e6)
 
 
-def _vote_cols(
-    triples: DataFrame, driver_max_rows: int | None, exclude_media: bool
-):
+def _vote_cols(triples: DataFrame, exclude_media: bool):
     """Tiered bounded collect of the distinct-doc vote counts per
     (subj, pred, obj) — the shared driver-gate entry of fuse_functional
     and fact_rank. The countDistinct replays with pyarrow count_distinct
@@ -54,8 +52,7 @@ def _vote_cols(
         else triples
     )
     tbl = gate.group(
-        base, ["subj", "pred", "obj"], [("doc_id", "count_distinct")],
-        driver_max_rows,
+        base, ["subj", "pred", "obj"], [("doc_id", "count_distinct")]
     )
     return None if tbl is None else tuple(c.to_pylist() for c in tbl.columns)
 
@@ -121,7 +118,6 @@ def _fact_rank_driver(cols, top_m: int):
 
 def fuse_functional(
     triples: DataFrame, min_objects: int = FUSE_MIN_OBJECTS,
-    driver_max_rows: int | None = None,
 ) -> DataFrame:
     """Resolve conflicting object assertions per (subj, pred) by
     distinct-document vote.
@@ -144,7 +140,7 @@ def fuse_functional(
     # the contest windows replay on the driver from one raw Arrow
     # collect (all-integer output); the distributed plan (unchanged) is
     # the scale path above it
-    cols = _vote_cols(triples, driver_max_rows, exclude_media=True)
+    cols = _vote_cols(triples, exclude_media=True)
     if cols is not None:
         return local_result(
             triples, _fuse_driver(cols, min_objects),
@@ -187,7 +183,6 @@ def fuse_functional(
 
 def fact_rank(
     triples: DataFrame, top_m: int = FACT_TOP_M,
-    driver_max_rows: int | None = None,
 ) -> DataFrame:
     """Top-m facts per subject entity for an entity card.
 
@@ -206,7 +201,7 @@ def fact_rank(
     """
     # r7: same driver gate as fuse_functional (shared _vote_cols entry;
     # fact_rank votes over ALL facts, media included)
-    cols = _vote_cols(triples, driver_max_rows, exclude_media=False)
+    cols = _vote_cols(triples, exclude_media=False)
     if cols is not None:
         return local_result(
             triples, _fact_rank_driver(cols, top_m),

@@ -40,7 +40,7 @@ def _is_var(term: str) -> bool:
     return term.startswith("?")
 
 
-def _pattern_edge_index(triples: DataFrame, all_atoms, driver_max_rows):
+def _pattern_edge_index(triples: DataFrame, all_atoms):
     """Driver-gate entry of conjunctive_match / optional_match: the
     distinct (subj, pred, obj) edges restricted to the pattern's
     constant predicates (the gate's predicate view: derived from the
@@ -48,7 +48,7 @@ def _pattern_edge_index(triples: DataFrame, all_atoms, driver_max_rows):
     Returns {pred: [(s, o), ...]} or None (caller keeps the distributed
     plan)."""
     preds = sorted({p for _s, p, _o in all_atoms if not _is_var(p)})
-    rows = edge_rows(triples, "preds", driver_max_rows, preds)
+    rows = edge_rows(triples, "preds", preds)
     if rows is None:
         return None
     idx: dict = {}
@@ -171,7 +171,6 @@ def conjunctive_match(
     triples: DataFrame,
     atoms: list,
     neq: tuple = (),
-    driver_max_rows: int | None = None,
 ) -> DataFrame:
     """Match a conjunctive pattern against (subj, pred, obj) triples.
 
@@ -197,11 +196,11 @@ def conjunctive_match(
     # fan-out bail keeps the replay sound for ANY pattern: every join
     # counts its output before materializing and a blowup falls back to
     # the distributed plan at the cost of one counting pass.
-    edge_index = _pattern_edge_index(triples, atoms, driver_max_rows)
+    edge_index = _pattern_edge_index(triples, atoms)
     if edge_index is not None:
         try:
             (cols, rows), bound_vars = _bind_pattern_rows(
-                edge_index, atoms, gate.bound(driver_max_rows)
+                edge_index, atoms, gate.bound()
             )
         except _BgpFanoutBail:
             edge_index = None

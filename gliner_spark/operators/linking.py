@@ -199,8 +199,8 @@ def _cc_driver(nodes: DataFrame, edge_rows: list) -> DataFrame:
     # id type follows the input (long surface hashes in canonicalize,
     # string entity ids in graph_analytics.entity_components)
     id_type = dict(nodes.dtypes)["id"]
-    return nodes.sparkSession.createDataFrame(
-        rows, f"id {id_type}, component {id_type}"
+    return local_result(
+        nodes, rows, f"id {id_type}, component {id_type}", forward=False
     )
 
 
@@ -213,7 +213,7 @@ def connected_components(
     nodes: (id long); edges: (src long, dst long) undirected (one direction
     given). Returns (id, component) with component = min node id reachable.
 
-    Adaptive small-graph path: at or below cfg.cc_driver_max_nodes nodes
+    Adaptive small-graph path: at or below gate.bound("cc_nodes") nodes
     (pass n_nodes if the caller already knows the count), union-find runs
     on the driver (_cc_driver) — the post-aggregation surface graph is
     Zipf-collapsed and tiny, and each distributed round costs two actions.
@@ -232,14 +232,16 @@ def connected_components(
     # view, both read it — without the persist an overflowing collect would
     # silently re-evaluate the expensive LSH/verify subplan a second time
     edges = edges.persist()
-    if cfg.cc_driver_max_nodes:
+    max_nodes = gate.bound("cc_nodes")
+    if max_nodes > 0:
         n = n_nodes if n_nodes is not None else nodes.count()
-        if n <= cfg.cc_driver_max_nodes:
+        if n <= max_nodes:
             # bound the edge collect too (a dense similarity graph can
             # carry far more edges than nodes): ONE limited collect both
             # checks the bound and feeds the union-find
-            cap = cfg.cc_driver_max_nodes * 8
-            edge_rows = gate.collect_rows(edges, ("src", "dst"), cap)
+            edge_rows = gate.collect_rows(
+                edges, ("src", "dst"), max_nodes * 8
+            )
             if edge_rows is not None:
                 out = _cc_driver(nodes, edge_rows)
                 edges.unpersist()
@@ -324,7 +326,7 @@ def closure_clusters(
     edges = pairs.select(
         F.col(a_col).alias("src"), F.col(b_col).alias("dst")
     )
-    # r7 driver gate (GRAPH_DRIVER_MAX_EDGES): the verified pair set is
+    # r7 driver gate (BOUNDS["edges"]): the verified pair set is
     # Zipf-collapsed and usually tiny (often already a local relation
     # from a driver-gated pair source) — union-find + sizes + keep
     # replayed in python from one bounded collect; the distributed CC
@@ -535,7 +537,7 @@ def canonicalize(mentions: DataFrame, cfg: PipelineConfig):
     # (pyarrow group_by count), skipping the cluster-side aggregate
     # exchange AND the separate count job the old gate paid on every
     # chain invocation. The gate condition (distinct surfaces <=
-    # link_driver_max_surfaces) is unchanged; oversized corpora degrade
+    # BOUNDS["surfaces"]) is unchanged; oversized corpora degrade
     # to the old persist+count tier below.
     surfaces = None
     srows = None
@@ -543,7 +545,7 @@ def canonicalize(mentions: DataFrame, cfg: PipelineConfig):
     if tbl is not None:
         agg = tbl.group_by(["label", "norm"]).aggregate([([], "count_all")])
         n_surfaces = agg.num_rows
-        if n_surfaces <= cfg.link_driver_max_surfaces:
+        if n_surfaces <= gate.bound("surfaces"):
             srows = sorted(
                 zip(
                     agg.column("label").to_pylist(),
@@ -563,7 +565,7 @@ def canonicalize(mentions: DataFrame, cfg: PipelineConfig):
         # becomes a single-task exchange (the count is already paid: it
         # materializes the persist).
         n_surfaces = surfaces.count()
-        if n_surfaces <= cfg.link_driver_max_surfaces:
+        if n_surfaces <= gate.bound("surfaces"):
             srows = surfaces.collect()
     if srows is not None:
         # r7 adaptive small-vocabulary path (guide §1.2 / §2.4): below the

@@ -66,9 +66,7 @@ def _closure(dag: dict) -> list:
     return out
 
 
-def rdfs_types(
-    triples: DataFrame, driver_max_rows: int | None = None
-) -> DataFrame:
+def rdfs_types(triples: DataFrame) -> DataFrame:
     """Materialized entity-type table under rdfs9/rdfs11.
 
     Output: (entity, type, depth) — depth = min subclass hops from an
@@ -81,9 +79,9 @@ def rdfs_types(
             F.col("obj").alias("entity"), F.col("obj_type").alias("cls")
         )
     )
-    arows = gate.dedup(asserted_raw, ("entity", "cls"), driver_max_rows)
+    arows = gate.dedup(asserted_raw, ("entity", "cls"))
     if arows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate): the closure is a
+        # driver path (BOUNDS["edges"] gate): the closure is a
         # python constant already; replay the broadcast join + grouped
         # min over one bounded collect of the distinct (entity, type)
         # pairs
@@ -123,9 +121,7 @@ def rdfs_types(
     return forward_caches(out, triples)
 
 
-def subproperty_triples(
-    triples: DataFrame, driver_max_rows: int | None = None
-) -> DataFrame:
+def subproperty_triples(triples: DataFrame) -> DataFrame:
     """rdfs7 forward chaining: materialize the triples entailed by the
     subproperty axioms that are not already asserted.
 
@@ -137,11 +133,10 @@ def subproperty_triples(
 
     Shape: broadcast axiom join + one distinct + one anti-join."""
     brows = gate.dedup(
-        triples, ("subj", "pred", "obj", "subj_type", "obj_type"),
-        driver_max_rows,
+        triples, ("subj", "pred", "obj", "subj_type", "obj_type")
     )
     if brows is not None:
-        # driver path (GRAPH_DRIVER_MAX_EDGES gate): axiom join,
+        # driver path (BOUNDS["edges"] gate): axiom join,
         # distinct and anti-join replayed over one bounded collect of
         # the distinct typed facts
         known = {(s_, p_, o_) for s_, p_, o_, _st, _ot in brows}

@@ -29,20 +29,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gliner_spark import gate
 from gliner_spark.cache import forward_caches
 from gliner_spark.gate import edge_rows, local_result
 
 RPQ_MAX_HOPS = 6
-
-# r7 driver gate: product-BFS state budget for the python replay. The
-# blowup risk of a dense expression is |V| x |Q| visited product states
-# summed over sources; the replay counts them as it goes and bails out
-# to the distributed plan the moment the budget is exceeded, so the
-# gate is sound for ANY expression (no a-priori density estimate
-# needed). Env-tunable; 0 disables the driver path.
-import os as _os
-
-RPQ_STATE_CAP = int(_os.environ.get("GS_RPQ_STATE_CAP", "2000000"))
 
 
 def _rpq_driver(erows, transitions, accepting, max_hops, state_cap):
@@ -203,9 +194,7 @@ def compile_nfa(expr) -> tuple:
 
 
 def rpq_match(
-    triples: DataFrame, expr, max_hops: int = RPQ_MAX_HOPS,
-    driver_max_edges: int | None = None,
-    state_cap: int | None = None,
+    triples: DataFrame, expr, max_hops: int = RPQ_MAX_HOPS
 ) -> DataFrame:
     """All (src, dst, min_hops) pairs whose connecting path matches
     `expr` within max_hops edges (bounded RPQ, min_hops exact — the
@@ -222,12 +211,15 @@ def rpq_match(
     # r7 driver gate (the generalized _cc_driver design): below the edge
     # bound, run the product BFS in python from one bounded collect of
     # the distinct fact rows; bail out to the distributed plan if the
-    # visited product-state budget is exceeded (see _rpq_driver). The
-    # distributed unroll below is unchanged — the 100 TB path, and the
-    # fallback for dense expressions.
-    cap = RPQ_STATE_CAP if state_cap is None else state_cap
+    # visited product-state budget gate.bound("rpq_states") is exceeded:
+    # the blowup risk of a dense expression is |V| x |Q| visited product
+    # states summed over sources, and the replay counts them as it goes,
+    # so the gate is sound for ANY expression (no a-priori density
+    # estimate needed). The distributed unroll below is unchanged — the
+    # 100 TB path, and the fallback for dense expressions.
+    cap = gate.bound("rpq_states")
     if cap > 0 and max_hops >= 1:
-        erows = edge_rows(triples, "spo", driver_max_edges)
+        erows = edge_rows(triples, "spo")
         if erows is not None:
             data = _rpq_driver(
                 erows, transitions, accepting, max_hops, cap

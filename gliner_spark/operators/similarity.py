@@ -71,11 +71,10 @@ def _pair_sim(a: DataFrame, b: DataFrame) -> DataFrame:
 
 def cosine_topk(
     emb: DataFrame, n_queries: int = 10, k: int = 5,
-    driver_max_vectors: int | None = None,
 ) -> DataFrame:
     """Brute-force cosine top-k of each query (vec_id < n_queries) vs all."""
     qz = _quantized(emb)
-    qrows = _sim_qz_rows(qz, driver_max_vectors)
+    qrows = _sim_qz_rows(qz)
     if qrows is not None:
         ids, vecs, norms = _np_qz(qrows)
         rows = _np_exact_topk_rows(ids, vecs, norms, n_queries, k)
@@ -98,11 +97,10 @@ def cosine_topk(
 
 def ivf_topk(
     emb: DataFrame, n_queries: int = 10, k: int = 5,
-    driver_max_vectors: int | None = None,
 ) -> DataFrame:
     """IVF-bucketed ANN: candidates restricted to the query's cell (label)."""
     qz = _quantized(emb)
-    qrows = _sim_qz_rows(qz, driver_max_vectors, with_label=True)
+    qrows = _sim_qz_rows(qz, with_label=True)
     if qrows is not None:
         import numpy as np
 
@@ -309,7 +307,6 @@ def kmeans_ivf_topk(
     n_cells: int = K_CELLS,
     nprobe: int = NPROBE,
     cells: list | None = None,
-    driver_max_vectors: int | None = None,
 ) -> DataFrame:
     """IVF with a LEARNED coarse quantizer: deterministic k-means centroids,
     corpus bucketed by nearest cell, queries probe their `nprobe` nearest
@@ -320,7 +317,7 @@ def kmeans_ivf_topk(
     cells: a prebuilt quantizer (save_cells/load_cells) — skips training
     entirely (the build-once / probe-many index shape)."""
     qz = _quantized(emb)
-    qrows = _sim_qz_rows(qz, driver_max_vectors)
+    qrows = _sim_qz_rows(qz)
     if qrows is not None:
         import numpy as np
 
@@ -506,7 +503,6 @@ def pq_topk(
     n_queries: int = 10,
     k: int = 5,
     books: list | None = None,
-    driver_max_vectors: int | None = None,
 ) -> DataFrame:
     """Asymmetric-distance PQ search (the IVF-PQ scoring half): the corpus
     is stored ONLY as m nibble codes; each query precomputes its exact
@@ -522,7 +518,7 @@ def pq_topk(
     than broadcast, one top-k window. At 10^9 vectors the scan reads
     4-byte codes instead of 512-byte vectors."""
     qz = _quantized(emb)
-    qrows = _sim_qz_rows(qz, driver_max_vectors)
+    qrows = _sim_qz_rows(qz)
     if qrows is not None:
         import numpy as np
 
@@ -549,6 +545,11 @@ def pq_topk(
         return _d2_out_df(emb, rows)
     if books is None:
         books = train_pq_codebooks(qz)
+    return _pq_topk_plan(qz, n_queries, k, books)
+
+
+def _pq_topk_plan(qz: DataFrame, n_queries: int, k: int, books: list):
+    """pq_topk's distributed plan over the quantized vectors."""
     m = len(books)
 
     code_cols = [
@@ -597,7 +598,6 @@ def pq_refine_topk(
     k: int = 5,
     shortlist: int = 50,
     books: list | None = None,
-    driver_max_vectors: int | None = None,
 ) -> DataFrame:
     """PQ shortlist + exact re-rank — the standard production refinement
     (FAISS IndexRefineFlat shape): ADC over 8-byte codes shortlists
@@ -613,7 +613,7 @@ def pq_refine_topk(
     touched for 500 rows, not a billion) -> exact sim + top-k window.
     Deterministic end-to-end, replayed by the sim_pq_refine oracle."""
     qz = _quantized(emb)
-    qrows = _sim_qz_rows(qz, driver_max_vectors)
+    qrows = _sim_qz_rows(qz)
     if qrows is not None:
         import numpy as np
 
@@ -643,10 +643,7 @@ def pq_refine_topk(
         return _sim_out_df(emb, rows)
     if books is None:
         books = train_pq_codebooks(qz)
-    cand = pq_topk(
-        emb, n_queries=n_queries, k=shortlist, books=books,
-        driver_max_vectors=0,
-    )
+    cand = _pq_topk_plan(qz, n_queries, shortlist, books)
     return _exact_rerank(cand, qz, n_queries, k)
 
 
@@ -699,14 +696,13 @@ def ivfpq_refine_topk(
     nprobe: int = NPROBE,
     cells: list | None = None,
     books: list | None = None,
-    driver_max_vectors: int | None = None,
 ) -> DataFrame:
     """IVF-PQ + refine — the complete FAISS production default
     (IndexIVFPQ wrapped in IndexRefineFlat): coarse nprobe pruning, ADC
     shortlist over 8-byte codes, exact re-rank of shortlist rows only.
     Same exactness story as pq_refine_topk; oracle sim_ivfpq_refine."""
     qz = _quantized(emb)
-    qrows = _sim_qz_rows(qz, driver_max_vectors)
+    qrows = _sim_qz_rows(qz)
     if qrows is not None:
         import numpy as np
 
@@ -748,11 +744,7 @@ def ivfpq_refine_topk(
             cells = train_kmeans_cells(qz, k=n_cells, _rows=rows)
         if books is None:
             books = train_pq_codebooks(qz, _rows=rows)
-    cand = ivfpq_topk(
-        emb, n_queries=n_queries, k=shortlist, n_cells=n_cells,
-        nprobe=nprobe, cells=cells, books=books,
-        driver_max_vectors=0,
-    )
+    cand = _ivfpq_topk_plan(qz, n_queries, shortlist, nprobe, cells, books)
     return _exact_rerank(cand, qz, n_queries, k)
 
 
@@ -789,7 +781,6 @@ def ivfpq_topk(
     nprobe: int = NPROBE,
     cells: list | None = None,
     books: list | None = None,
-    driver_max_vectors: int | None = None,
 ) -> DataFrame:
     """IVF-PQ — the composed production ANN index (FAISS's default shape
     for 10^9+ vectors): the learned coarse quantizer prunes the candidate
@@ -808,7 +799,7 @@ def ivfpq_topk(
     tables as literals-built expressions; ONE equi-join on cell; top-k
     window. No shuffle wider than the broadcast."""
     qz = _quantized(emb)
-    qrows = _sim_qz_rows(qz, driver_max_vectors)
+    qrows = _sim_qz_rows(qz)
     if qrows is not None:
         import numpy as np
 
@@ -848,7 +839,14 @@ def ivfpq_topk(
             cells = train_kmeans_cells(qz, k=n_cells, _rows=rows)
         if books is None:
             books = train_pq_codebooks(qz, _rows=rows)
-    cents = cells
+    return _ivfpq_topk_plan(qz, n_queries, k, nprobe, cells, books)
+
+
+def _ivfpq_topk_plan(
+    qz: DataFrame, n_queries: int, k: int, nprobe: int, cents: list,
+    books: list,
+):
+    """ivfpq_topk's distributed plan over the quantized vectors."""
     m = len(books)
 
     corpus = qz.select(
@@ -947,7 +945,7 @@ def _hp_band_keys(q_col, dim: int, planes: int = HP_PLANES,
 # corpus-sized but the local harness corpora are small — the measured cost
 # of these queries was almost entirely plan/codegen of the literal
 # centroid/codebook expression trees, ~3.5-4.5 s per query over 2000
-# vectors). Below gate.SIM_DRIVER_MAX_VECTORS the scoring runs in numpy from
+# vectors). Below gate.BOUNDS["vectors"] the scoring runs in numpy from
 # ONE bounded collect of the SPARK-computed quantized vectors:
 # - every distance (cell assignment, PQ code, ADC, SQ8 recon, dots) is
 #   exact int64, identical to the JVM bigint folds;
@@ -961,13 +959,13 @@ def _hp_band_keys(q_col, dim: int, planes: int = HP_PLANES,
 # orders forced).
 
 
-def _sim_qz_rows(qz, bound, with_label: bool = False):
+def _sim_qz_rows(qz, with_label: bool = False):
     cols = (
         ("vec_id", "label", "q", "norm2")
         if with_label
         else ("vec_id", "q", "norm2")
     )
-    return gate.collect_rows(qz, cols, bound, "vectors")
+    return gate.collect_rows(qz, cols, gate.bound("vectors"))
 
 
 def _np_qz(qrows):
@@ -1231,8 +1229,7 @@ def _neardup_driver_pairs(qrows, dim: int, threshold: float):
 
 
 def embedding_neardup(
-    emb: DataFrame, threshold: float = 0.95, sort: bool = True,
-    driver_max_vectors: int | None = None,
+    emb: DataFrame, threshold: float = 0.95, sort: bool = True
 ) -> DataFrame:
     """Near-duplicate pairs by cosine >= threshold, blocked by hyperplane
     LSH (sign-random-projection): sign-bit signatures against fixed
@@ -1246,8 +1243,7 @@ def embedding_neardup(
     steeply with similarity (~0.99 at cosine 0.95 with 6 bands x 4 bits).
     Recall vs the unblocked baseline is reported in BENCH.md."""
     qrows = gate.collect_rows(
-        _quantized(emb), ("vec_id", "q", "norm2"), driver_max_vectors,
-        "vectors",
+        _quantized(emb), ("vec_id", "q", "norm2"), gate.bound("vectors")
     )
     if qrows is not None:
         ddl = "vec_a long, vec_b long, sim double"
@@ -1375,7 +1371,6 @@ def sq8_topk(
     n_queries: int = 10,
     k: int = 5,
     ranges: list | None = None,
-    driver_max_vectors: int | None = None,
 ) -> DataFrame:
     """Scalar-quantized (SQ8) similarity search — the third member of the
     FAISS compression family next to PQ and IVF-PQ: each dimension is
@@ -1396,7 +1391,7 @@ def sq8_topk(
     the query side is a broadcast; one top-k window — no join wider than
     broadcast, same shape as pq_topk."""
     qz = _quantized(emb)
-    qrows = _sim_qz_rows(qz, driver_max_vectors)
+    qrows = _sim_qz_rows(qz)
     if qrows is not None:
         import numpy as np
 

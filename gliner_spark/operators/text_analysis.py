@@ -613,7 +613,7 @@ def gram_postings(docs: DataFrame, k: int = WINNOW_K) -> DataFrame:
     ).select("doc_id", F.posexplode(grams).alias("pos", "gh"))
 
 
-def _winnow_gram_rows(docs: DataFrame, k: int, bound: int | None):
+def _winnow_gram_rows(docs: DataFrame, k: int):
     """Bounded collect of the SPARK-computed per-doc gram-hash arrays
     (one row per doc) — the shared input of the r7 winnow-family driver
     replays. Engine-exact by construction: tokenization and gram
@@ -624,7 +624,7 @@ def _winnow_gram_rows(docs: DataFrame, k: int, bound: int | None):
     staged = docs.select(
         "doc_id", token_id_array("text").alias("_ids")
     ).select("doc_id", gram_hash_array(F.col("_ids"), k).alias("_ghs"))
-    return gate.collect_rows(staged, ("doc_id", "_ghs"), bound, "docs")
+    return gate.collect_rows(staged, ("doc_id", "_ghs"), gate.bound("docs"))
 
 
 def _winnow_fps_driver(rows, w: int):

@@ -385,7 +385,7 @@ def finalize_duplicate_clusters(pairs: DataFrame, cfg=None) -> DataFrame:
     (a pair re-verifies in multiple bands and re-appears if the sink
     accumulated overlapping runs) — CC is idempotent on edge multiplicity
     but the distinct keeps the closure's input Zipf-collapsed. cfg
-    threads the CC knobs (cc_driver_max_nodes etc.); None = defaults."""
+    threads the CC knobs (cc_max_iterations etc.); None = defaults."""
     from pyspark.sql import functions as F
 
     from gliner_spark.operators.linking import closure_clusters

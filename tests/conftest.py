@@ -1,11 +1,47 @@
+import contextlib
 import os
 import sys
+from unittest import mock
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from gliner_spark import gate  # noqa: E402
+
 _SPARK = None
+_BOUNDS_DEFAULT = dict(gate.BOUNDS)
+
+
+@pytest.fixture
+def tier():
+    """Force gate tiers for a block by patching gate.BOUNDS in-process:
+    `with tier():` zeroes every bound (the distributed plan everywhere,
+    nested gated calls included); `with tier(edges=n):` sets only the
+    named kinds. A tier is decided when the operator is called, so only
+    the call needs to be inside the block."""
+
+    @contextlib.contextmanager
+    def force(**kinds):
+        assert set(kinds) <= set(gate.BOUNDS), kinds
+        new = kinds or dict.fromkeys(gate.BOUNDS, 0)
+        with mock.patch.dict(gate.BOUNDS, new):
+            yield
+
+    return force
+
+
+@pytest.fixture(autouse=True)
+def _no_leaked_tier():
+    """Fail a test that leaves the gate's bound table changed: the table
+    is module state, so a leaked forced tier would silently change the
+    tiers of every later test."""
+    yield
+    left = dict(gate.BOUNDS)
+    if left != _BOUNDS_DEFAULT:
+        gate.BOUNDS.clear()
+        gate.BOUNDS.update(_BOUNDS_DEFAULT)
+        pytest.fail(f"gate.BOUNDS left changed: {left}")
 
 
 @pytest.fixture(scope="session")

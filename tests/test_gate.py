@@ -26,8 +26,8 @@ GATED = MIGRATED + ("transe_eval",)
 
 
 def _op(name):
-    """op(triples, bound) with bound None = default gate, 0 = forced
-    distributed plan."""
+    """op(triples) on the default gate; under the `tier` fixture it
+    takes the forced tier."""
     from gliner_spark.operators import graph_analytics as ga
     from gliner_spark.operators.kg_completion import transe_margin_eval
     from gliner_spark.operators.kg_query import conjunctive_match
@@ -47,10 +47,10 @@ def _op(name):
         "distances": ga.distance_profile,
     }
     if name in edge_ops:
-        return lambda t, d=None: edge_ops[name](t, driver_max_edges=d)
+        return edge_ops[name]
     if name == "conjunctive":
-        return lambda t, d=None: conjunctive_match(t, BGP, driver_max_rows=d)
-    return lambda t, d=None: transe_margin_eval(t, driver_max_rows=d)
+        return lambda t: conjunctive_match(t, BGP)
+    return transe_margin_eval
 
 
 @pytest.fixture(scope="module")
@@ -147,7 +147,7 @@ def test_release_caches_keeps_the_snapshot(spark, triples_path, collects):
 
 
 def test_over_cap_frame_keeps_per_op_tiers(
-    spark, triples_path, collects, monkeypatch
+    spark, triples_path, collects, monkeypatch, tier
 ):
     from gliner_spark import gate
 
@@ -186,16 +186,18 @@ def test_over_cap_frame_keeps_per_op_tiers(
     assert _rows(out) == got["conjunctive"]
 
     for name, rows in got.items():
-        forced = _op(name)(_read(spark, triples_path), 0)
+        with tier():
+            forced = _op(name)(_read(spark, triples_path))
         assert _tier(forced) == "distributed", name
         assert rows == _rows(forced), name
 
 
 @pytest.mark.parametrize("name", GATED)
-def test_gated_mix_op_tier_pin(spark, triples_path, name):
+def test_gated_mix_op_tier_pin(spark, triples_path, tier, name):
     t = _read(spark, triples_path)
     assert _tier(_op(name)(t)) == "driver"
-    assert _tier(_op(name)(t, 0)) == "distributed"
+    with tier():
+        assert _tier(_op(name)(t)) == "distributed"
 
 
 def test_positive_cols_degraded_tier_sorted(spark, triples_path, monkeypatch):
@@ -203,7 +205,7 @@ def test_positive_cols_degraded_tier_sorted(spark, triples_path, monkeypatch):
     from gliner_spark.operators.kg_completion import _positive_cols
 
     t = _read(spark, triples_path).repartition(4)
-    arrow_tier = _positive_cols(t, None)
+    arrow_tier = _positive_cols(t)
     monkeypatch.setattr(gate, "RAW_COLLECT_CAP", 0)
     # keep the aggregate's 32 shuffle partitions apart, as on a cluster:
     # coalesced into one, the sort-aggregate output is sorted by chance
@@ -211,7 +213,7 @@ def test_positive_cols_degraded_tier_sorted(spark, triples_path, monkeypatch):
     old = spark.conf.get(key)
     spark.conf.set(key, "false")
     try:
-        degraded = _positive_cols(t, None)
+        degraded = _positive_cols(t)
     finally:
         spark.conf.set(key, old)
     assert degraded is not None
@@ -220,7 +222,7 @@ def test_positive_cols_degraded_tier_sorted(spark, triples_path, monkeypatch):
     assert degraded == arrow_tier
 
 
-def test_frame_without_pred_collects_per_view(spark, collects):
+def test_frame_without_pred_collects_per_view(spark, collects, tier):
     import gliner_spark.operators.graph_analytics as ga
 
     t = spark.createDataFrame(
@@ -229,15 +231,16 @@ def test_frame_without_pred_collects_per_view(spark, collects):
     )
     got = _rows(ga.triangle_counts(t))
     assert collects == {"raw": 1, "degraded": 0}
-    assert got == _rows(ga.triangle_counts(t, driver_max_edges=0))
+    with tier():
+        forced = ga.triangle_counts(t)
+    assert got == _rows(forced)
 
 
 # ---------------------------------------------------------------- tier pins
 
 
 def _other_ops():
-    """name -> op(frames, bound) for every gated op outside the mix,
-    with bound None = default gate, 0 = forced distributed plan.
+    """name -> op(frames) for every gated op outside the mix.
     `frames` holds the shared triples, documents and embeddings."""
     from gliner_spark.operators import dedup, similarity as sim
     from gliner_spark.operators import graph_analytics as ga
@@ -254,14 +257,10 @@ def _other_ops():
         "pred_association", "triad_census", "pagerank_weighted", "egonet",
         "summary_graph",
     ):
-        ops[name] = lambda f, d, fn=getattr(ga, name): fn(
-            f["triples"], driver_max_edges=d
-        )
-    ops["walk_corpus"] = lambda f, d: kc.walk_corpus(
-        f["triples"], driver_max_edges=d
-    )
-    ops["rpq_match"] = lambda f, d: rpq_match(
-        f["triples"], ("plus", ("pred", "knows")), driver_max_edges=d
+        ops[name] = lambda f, fn=getattr(ga, name): fn(f["triples"])
+    ops["walk_corpus"] = lambda f: kc.walk_corpus(f["triples"])
+    ops["rpq_match"] = lambda f: rpq_match(
+        f["triples"], ("plus", ("pred", "knows"))
     )
     for mod, name in (
         (kc, "negative_samples"), (kc, "cooc_candidates"),
@@ -269,26 +268,20 @@ def _other_ops():
         (kf, "fuse_functional"), (kf, "fact_rank"),
         (on, "rdfs_types"), (on, "subproperty_triples"),
     ):
-        ops[name] = lambda f, d, fn=getattr(mod, name): fn(
-            f["triples"], driver_max_rows=d
-        )
+        ops[name] = lambda f, fn=getattr(mod, name): fn(f["triples"])
     for name in ("minhash_dedup", "winnow_overlap_pairs",
                  "containment_pairs"):
-        ops[name] = lambda f, d, fn=getattr(dedup, name): fn(
-            f["docs"], driver_max_docs=d
-        )
+        ops[name] = lambda f, fn=getattr(dedup, name): fn(f["docs"])
     for name, kw in (
         ("cosine_topk", {}), ("ivf_topk", {}), ("kmeans_ivf_topk", {}),
         ("pq_topk", {}), ("pq_refine_topk", {"shortlist": 12}),
         ("ivfpq_topk", {}), ("ivfpq_refine_topk", {"shortlist": 12}),
         ("sq8_topk", {}),
     ):
-        ops[name] = lambda f, d, fn=getattr(sim, name), kw=kw: fn(
-            f["emb"], n_queries=6, k=4, driver_max_vectors=d, **kw
+        ops[name] = lambda f, fn=getattr(sim, name), kw=kw: fn(
+            f["emb"], n_queries=6, k=4, **kw
         )
-    ops["embedding_neardup"] = lambda f, d: sim.embedding_neardup(
-        f["emb"], driver_max_vectors=d
-    )
+    ops["embedding_neardup"] = lambda f: sim.embedding_neardup(f["emb"])
     return ops
 
 
@@ -326,30 +319,50 @@ def frames(spark, triples_path, tmp_path_factory):
 
 
 @pytest.mark.parametrize("name", OTHER_GATED)
-def test_gated_op_tier_pin(frames, name):
+def test_gated_op_tier_pin(frames, tier, name):
     from gliner_spark.cache import release_caches
 
     op = _other_ops()[name]
-    assert _tier(op(frames, None)) == "driver"
-    forced = op(frames, 0)
+    assert _tier(op(frames)) == "driver"
+    with tier():
+        forced = op(frames)
     assert _tier(forced) == "distributed"
     release_caches(forced)
 
 
-def test_containment_forced_plan_has_no_local_leaf(frames):
-    """Forced distributed (driver_max_docs=0), containment_pairs builds its
-    winnow candidates in Spark as well: no stage of the plan is a driver
-    replay, so no leaf of the optimized plan is a LocalRelation."""
+@pytest.mark.parametrize("name", (
+    "containment_pairs", "egonet", "summary_graph", "entity_components",
+))
+def test_containment_forced_plan_has_no_local_leaf(
+    frames, tier, monkeypatch, name
+):
+    """Forced distributed (every bound zeroed), an op's nested gated
+    stages are distributed as well: containment_pairs builds its winnow
+    candidates in Spark, egonet its BFS distances, summary_graph its WL
+    colors, and entity_components runs the CC loop, never the driver
+    union-find. No stage of the plan is a driver replay, so no leaf of
+    the optimized plan is a LocalRelation."""
     from gliner_spark.cache import release_caches
-    from gliner_spark.operators.dedup import containment_pairs
+    from gliner_spark.operators import linking
 
-    forced = containment_pairs(frames["docs"], driver_max_docs=0)
+    cc_calls = []
+    cc_driver = linking._cc_driver
+
+    def spy(*a):
+        cc_calls.append(a)
+        return cc_driver(*a)
+
+    monkeypatch.setattr(linking, "_cc_driver", spy)
+    ops = _other_ops()
+    ops["entity_components"] = lambda f: _op("components")(f["triples"])
+    with tier():
+        forced = ops[name](frames)
     assert "LocalRelation" not in _leaf_names(forced)
+    assert cc_calls == []
     release_caches(forced)
 
 
-def test_closure_clusters_tier_pin(spark, triples_path, monkeypatch):
-    from gliner_spark import gate
+def test_closure_clusters_tier_pin(spark, triples_path, tier):
     from gliner_spark.operators.linking import closure_clusters
 
     pairs = _read(spark, triples_path).filter("pred = 'knows'").selectExpr(
@@ -358,8 +371,8 @@ def test_closure_clusters_tier_pin(spark, triples_path, monkeypatch):
     assert _tier(closure_clusters(pairs, "doc_a", "doc_b", "doc_id")) == (
         "driver"
     )
-    monkeypatch.setattr(gate, "GRAPH_DRIVER_MAX_EDGES", 0)
-    forced = closure_clusters(pairs, "doc_a", "doc_b", "doc_id")
+    with tier():
+        forced = closure_clusters(pairs, "doc_a", "doc_b", "doc_id")
     assert _tier(forced) == "distributed"
 
 
@@ -461,6 +474,37 @@ def test_collects_stay_in_the_gate_module():
         if bad.search(line)
     ]
     assert hits == []
+
+
+def test_bounds_live_in_the_gate_table():
+    """No operator or helper takes a bound of its own, and the table
+    reads no environment variable: forcing a tier is patching the
+    table, and it reaches every nested gated call."""
+    knobs = [
+        f"{path.relative_to(PKG)}:{i}"
+        for path in sorted(PKG.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "driver_max_" in line
+    ]
+    env = [
+        f"{name}:{i}: {line.strip()}"
+        for name in ("gate.py", "operators/rpq.py")
+        for i, line in enumerate((PKG / name).read_text().splitlines(), 1)
+        if re.search(r"\benviron\b|\bgetenv\b", line)
+    ]
+    assert knobs == []
+    assert env == []
+
+
+def test_tier_fixture_patches_the_table_for_a_block(tier):
+    from gliner_spark import gate
+
+    default = dict(gate.BOUNDS)
+    with tier():
+        assert set(gate.BOUNDS.values()) == {0}
+    with tier(edges=7):
+        assert gate.BOUNDS == {**default, "edges": 7}
+    assert gate.BOUNDS == default
 
 
 def test_gate_imports_no_operator():

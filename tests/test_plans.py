@@ -74,17 +74,19 @@ def test_kg_scoring_is_single_projection(spark):
     assert _n_exchanges(p) == 0, p[:2000]
 
 
-def test_dedup_verify_path_scans_corpus_once(spark):
+def test_dedup_verify_path_scans_corpus_once(spark, tier):
     """minhash_dedup / ngram_jaccard_dedup stage the token-id arrays at the
     branch point: the text scan+tokenize runs ONCE (persisted InMemory
     relation); signature and verify branches must not re-scan the parquet."""
     from gliner_spark.operators.dedup import minhash_dedup, ngram_jaccard_dedup
 
     docs = spark.read.parquet(DOCS)
-    # minhash_dedup: driver_max_docs=0 asserts the DISTRIBUTED plan (the
-    # r7 driver gate would otherwise collapse this corpus to a local scan)
+    # minhash_dedup: tier() asserts the DISTRIBUTED plan (the r7 driver
+    # gate would otherwise collapse this corpus to a local scan)
+    with tier():
+        forced = minhash_dedup(docs)
     for df in (
-        minhash_dedup(docs, driver_max_docs=0),
+        forced,
         ngram_jaccard_dedup(docs),
     ):
         p = _plan(df)
@@ -225,7 +227,7 @@ def test_bigram_support_scans_corpus_once(spark):
     release_caches(df)
 
 
-def test_clustering_builds_undirected_edges_once(spark):
+def test_clustering_builds_undirected_edges_once(spark, tier):
     """VERDICT r5 ask #4: clustering_coefficients previously ran the same
     canonical-undirected-edge distinct TWICE (its own copy + the one
     inside triangle_counts). The shared `und` is now persisted at the
@@ -244,9 +246,10 @@ def test_clustering_builds_undirected_edges_once(spark):
         "doc_id string, subj string, pred string, obj string, "
         "subj_type string, obj_type string, score double",
     )
-    # driver_max_edges=0: assert the DISTRIBUTED plan (the r7 driver
+    # tier(): assert the DISTRIBUTED plan (the r7 driver
     # gate would otherwise collapse this tiny graph to a local scan)
-    df = clustering_coefficients(triples, driver_max_edges=0)
+    with tier():
+        df = clustering_coefficients(triples)
     p = _plan(df)
     n_least = len(re.findall(r"least\(", p))
     n_scan = len(re.findall(r"InMemoryTableScan", p))
@@ -258,7 +261,7 @@ def test_clustering_builds_undirected_edges_once(spark):
     release_caches(df)
 
 
-def test_pq_refine_fetches_vectors_by_join_not_scan_product(spark):
+def test_pq_refine_fetches_vectors_by_join_not_scan_product(spark, tier):
     """r5: the refine stage must be shaped as shortlist -> equi-join on
     vec_id -> broadcast of the tiny query side. The ONLY nested-loop
     product allowed in the whole plan is pq_topk's broadcast code scan
@@ -266,8 +269,9 @@ def test_pq_refine_fetches_vectors_by_join_not_scan_product(spark):
     from gliner_spark.operators.similarity import pq_refine_topk
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    # driver_max_vectors=0 pins the DISTRIBUTED plan (r7 gate override)
-    p = _plan(pq_refine_topk(emb, driver_max_vectors=0))
+    # tier() pins the DISTRIBUTED plan (every gate bound zeroed)
+    with tier():
+        p = _plan(pq_refine_topk(emb))
     n_nlj = len(re.findall(r"BroadcastNestedLoopJoin", p))
     assert n_nlj <= 1, p[:3000]
     assert "CartesianProduct" not in p, p[:3000]
@@ -292,7 +296,7 @@ def test_constrained_generation_runs_over_distinct_surfaces(spark):
     assert p.count("MapInPandas") == 1, p[:2000]
 
 
-def test_sq8_scoring_is_broadcast_only(spark):
+def test_sq8_scoring_is_broadcast_only(spark, tier):
     """r6: SQ8 search must be shaped like pq_topk — reconstruction is a
     narrow per-row transform over the corpus scan, the query side is the
     ONLY nested-loop broadcast, no cartesian product, no extra
@@ -300,9 +304,10 @@ def test_sq8_scoring_is_broadcast_only(spark):
     from gliner_spark.operators.similarity import sq8_topk
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    # driver_max_vectors=0 pins the DISTRIBUTED plan (r7 gate override
-    # pattern): the default path is the numpy driver replay
-    p = _plan(sq8_topk(emb, driver_max_vectors=0))
+    # tier() pins the DISTRIBUTED plan (every gate bound zeroed): the
+    # default path is the numpy driver replay
+    with tier():
+        p = _plan(sq8_topk(emb))
     assert "CartesianProduct" not in p, p[:2000]
     n_nlj = len(re.findall(r"BroadcastNestedLoopJoin", p))
     assert n_nlj == 1, p[:2000]
@@ -311,7 +316,7 @@ def test_sq8_scoring_is_broadcast_only(spark):
     assert "posexplode" not in p, p[:2000]
 
 
-def test_link_prediction_plan_has_no_cartesian(spark):
+def test_link_prediction_plan_has_no_cartesian(spark, tier):
     """r6: the RA candidate join is wedge-pivot equi-join + anti-join —
     never an all-pairs product."""
     from gliner_spark.operators.graph_analytics import link_prediction
@@ -322,7 +327,8 @@ def test_link_prediction_plan_has_no_cartesian(spark):
         "doc_id string, subj string, pred string, obj string, "
         "subj_type string, obj_type string, score double",
     )
-    df = link_prediction(triples, driver_max_edges=0)  # distributed plan
+    with tier():
+        df = link_prediction(triples)  # distributed plan
     p = _plan(df)
     assert "CartesianProduct" not in p, p[:2000]
     assert "BroadcastNestedLoopJoin" not in p, p[:2000]
@@ -361,7 +367,7 @@ def test_hll_registers_are_one_aggregate(spark):
     assert "Window" not in p, p[:2000]
 
 
-def test_lpa_round_has_no_cartesian_or_global_window(spark):
+def test_lpa_round_has_no_cartesian_or_global_window(spark, tier):
     """r6: each LPA round's window partitions by node (never a global
     unpartitioned window) and all joins are equi-joins."""
     from gliner_spark.operators.graph_analytics import lpa_communities
@@ -373,13 +379,14 @@ def test_lpa_round_has_no_cartesian_or_global_window(spark):
         "doc_id string, subj string, pred string, obj string, "
         "subj_type string, obj_type string, score double",
     )
-    df = lpa_communities(triples, rounds=1, driver_max_edges=0)
+    with tier():
+        df = lpa_communities(triples, rounds=1)
     p = _plan(df)
     assert "CartesianProduct" not in p, p[:2000]
     assert "BroadcastNestedLoopJoin" not in p, p[:2000]
 
 
-def test_mine_rules_broadcasts_pred_counts(spark):
+def test_mine_rules_broadcasts_pred_counts(spark, tier):
     """r6: the per-predicate count table joins back BROADCAST (it is
     |P|-sized), and the pair-key self-join is an equi-join — no
     cartesian / nested-loop anywhere in the rule miner."""
@@ -391,8 +398,9 @@ def test_mine_rules_broadcasts_pred_counts(spark):
         "doc_id string, subj string, pred string, obj string, "
         "subj_type string, obj_type string, score double",
     )
-    # driver_max_rows=0 pins the DISTRIBUTED plan (r7 gate override)
-    p = _plan(mine_rules(triples, driver_max_rows=0))
+    # tier() pins the DISTRIBUTED plan (every gate bound zeroed)
+    with tier():
+        p = _plan(mine_rules(triples))
     assert "BroadcastHashJoin" in p, p[:2000]
     assert "CartesianProduct" not in p, p[:2000]
     assert "BroadcastNestedLoopJoin" not in p, p[:2000]
@@ -418,7 +426,7 @@ def test_incremental_components_never_rebuilds_old_graph(spark):
     assert "Window" not in p, p[:2000]
 
 
-def test_conjunctive_match_plan_all_equi_joins(spark):
+def test_conjunctive_match_plan_all_equi_joins(spark, tier):
     """r6 wave 3: a connected BGP compiles to predicate-pushed
     projections chained by equi-joins — no cartesian product or
     nested-loop join anywhere, and the pred filters reach the scans."""
@@ -431,12 +439,12 @@ def test_conjunctive_match_plan_all_equi_joins(spark):
         "doc_id string, subj string, pred string, obj string, "
         "subj_type string, obj_type string, score double",
     )
-    df = conjunctive_match(
-        triples,
-        [("?p", "works_at", "?o"), ("?o", "based_in", "?l"),
-         ("?p", "visited", "?l")],
-        driver_max_rows=0,  # pin the DISTRIBUTED plan (r7 gate override)
-    )
+    with tier():  # pin the DISTRIBUTED plan (every gate bound zeroed)
+        df = conjunctive_match(
+            triples,
+            [("?p", "works_at", "?o"), ("?o", "based_in", "?l"),
+             ("?p", "visited", "?l")],
+        )
     p = _plan(df)
     assert "CartesianProduct" not in p, p[:2000]
     assert "BroadcastNestedLoopJoin" not in p, p[:2000]
@@ -473,7 +481,7 @@ def test_snapshot_diff_single_outer_join(spark):
     assert "Window" not in p, p[:2000]
 
 
-def test_rdfs_and_optional_plans_are_scale_safe(spark):
+def test_rdfs_and_optional_plans_are_scale_safe(spark, tier):
     """r6 wave 5: rdfs_types joins the constant ontology closure as a
     BROADCAST side (never a shuffle for the hierarchy); optional_match
     attaches each OPTIONAL group by equi-left-join — no cartesian or
@@ -488,12 +496,14 @@ def test_rdfs_and_optional_plans_are_scale_safe(spark):
         "doc_id string, subj string, pred string, obj string, "
         "subj_type string, obj_type string, score double",
     )
-    # driver_max_rows=0 pins the DISTRIBUTED plans (r7 gate override)
-    p = _plan(rdfs_types(triples, driver_max_rows=0))
+    # tier() pins the DISTRIBUTED plans (every gate bound zeroed)
+    with tier():
+        p = _plan(rdfs_types(triples))
     assert "BroadcastHashJoin" in p, p[:2000]
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
 
-    p = _plan(subproperty_triples(triples, driver_max_rows=0))
+    with tier():
+        p = _plan(subproperty_triples(triples))
     assert "BroadcastHashJoin" in p, p[:2000]
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
 

@@ -53,16 +53,17 @@ def _rows(df):
 PATTERN = [("?p", "works_at", "?o"), ("?o", "based_in", "?l")]
 
 
-def test_conjunctive_driver_matches(spark, triples):
+def test_conjunctive_driver_matches(spark, triples, tier):
     from gliner_spark.operators.kg_query import conjunctive_match
 
     drv = _rows(conjunctive_match(triples, PATTERN))
-    dist = _rows(conjunctive_match(triples, PATTERN, driver_max_rows=0))
+    with tier():
+        dist = _rows(conjunctive_match(triples, PATTERN))
     assert drv == dist
     assert len(drv) > 0
 
 
-def test_conjunctive_driver_matches_constants_and_neq(spark, triples):
+def test_conjunctive_driver_matches_constants_and_neq(spark, triples, tier):
     from gliner_spark.operators.kg_query import conjunctive_match
 
     atoms = [
@@ -70,15 +71,13 @@ def test_conjunctive_driver_matches_constants_and_neq(spark, triples):
         ("?q", "works_at", "?o"),
     ]
     drv = _rows(conjunctive_match(triples, atoms, neq=(("p", "q"),)))
-    dist = _rows(
-        conjunctive_match(triples, atoms, neq=(("p", "q"),),
-                          driver_max_rows=0)
-    )
+    with tier():
+        dist = _rows(conjunctive_match(triples, atoms, neq=(("p", "q"),)))
     assert drv == dist
     assert len(drv) > 0
 
 
-def test_conjunctive_driver_ground_existence(spark, triples):
+def test_conjunctive_driver_ground_existence(spark, triples, tier):
     from gliner_spark.operators.kg_query import conjunctive_match
 
     # pick one real edge for the ground atom
@@ -89,13 +88,14 @@ def test_conjunctive_driver_ground_existence(spark, triples):
     miss = [("person:zz", "works_at", "org:zz")]
     for atoms in (hit, miss):
         drv = _rows(conjunctive_match(triples, atoms))
-        dist = _rows(conjunctive_match(triples, atoms, driver_max_rows=0))
+        with tier():
+            dist = _rows(conjunctive_match(triples, atoms))
         assert drv == dist
     assert len(_rows(conjunctive_match(triples, hit))) == 1
     assert len(_rows(conjunctive_match(triples, miss))) == 0
 
 
-def test_conjunctive_driver_same_errors(spark, triples):
+def test_conjunctive_driver_same_errors(spark, triples, tier):
     from gliner_spark.operators.kg_query import conjunctive_match
 
     for bad in (
@@ -106,11 +106,11 @@ def test_conjunctive_driver_same_errors(spark, triples):
     ):
         with pytest.raises(ValueError):
             conjunctive_match(triples, bad)
-        with pytest.raises(ValueError):
-            conjunctive_match(triples, bad, driver_max_rows=0)
+        with pytest.raises(ValueError), tier():
+            conjunctive_match(triples, bad)
 
 
-def test_conjunctive_fanout_bail_falls_back(spark, triples):
+def test_conjunctive_fanout_bail_falls_back(spark, triples, tier):
     # a pattern whose join fan-out exceeds the cap must transparently
     # fall back to the distributed plan with identical rows
     from gliner_spark.operators.kg_query import conjunctive_match
@@ -125,8 +125,10 @@ def test_conjunctive_fanout_bail_falls_back(spark, triples):
     # (the _BgpFanoutBail fires) -> transparent distributed fallback
     cap = n_edges + 10
     assert len(full) > cap
-    bailed = _rows(conjunctive_match(triples, atoms, driver_max_rows=cap))
-    gated = _rows(conjunctive_match(triples, atoms, driver_max_rows=10**6))
+    with tier(edges=cap):
+        bailed = _rows(conjunctive_match(triples, atoms))
+    with tier(edges=10**6):
+        gated = _rows(conjunctive_match(triples, atoms))
     assert full == bailed == gated
 
 

@@ -28,13 +28,12 @@ ROWS = (
 )
 
 
-def _run(spark, driver_max):
+def _run(spark):
     from gliner_spark.cache import release_caches
     from gliner_spark.config import PipelineConfig
     from gliner_spark.operators.linking import canonicalize
 
-    cfg = PipelineConfig(link_driver_max_surfaces=driver_max)
-    entities, smap = canonicalize(_mentions(spark, ROWS), cfg)
+    entities, smap = canonicalize(_mentions(spark, ROWS), PipelineConfig())
     e = sorted(tuple(r) for r in entities.collect())
     s = sorted(tuple(r) for r in smap.collect())
     release_caches(entities)
@@ -42,9 +41,10 @@ def _run(spark, driver_max):
     return e, s
 
 
-def test_canonicalize_driver_parity(spark):
-    e_drv, s_drv = _run(spark, 20_000)
-    e_dist, s_dist = _run(spark, 0)
+def test_canonicalize_driver_parity(spark, tier):
+    e_drv, s_drv = _run(spark)
+    with tier():
+        e_dist, s_dist = _run(spark)
     assert s_drv == s_dist
     assert e_drv == e_dist
     # the near-dups actually linked (the test exercises the verify+CC
@@ -61,7 +61,7 @@ def test_canonicalize_driver_audit(spark):
     from gliner_spark.cache import release_caches
     from gliner_spark.operators.linking import canonicalize
 
-    cfg = PipelineConfig(link_driver_max_surfaces=20_000)
+    cfg = PipelineConfig()
     entities, smap = canonicalize(_mentions(spark, ROWS), cfg)
     m = skew_metrics(entities)
     assert "linking_lsh_block_cap" in m

@@ -3,7 +3,6 @@ row-identical to the distributed CC path."""
 
 import pytest
 
-from gliner_spark import gate
 from gliner_spark.operators.linking import closure_clusters
 
 
@@ -29,11 +28,11 @@ def _has_non_local_leaf(df):
     )
 
 
-def test_closure_driver_matches_distributed(pairs, monkeypatch):
+def test_closure_driver_matches_distributed(pairs, tier):
     fast = closure_clusters(pairs, "doc_a", "doc_b", "doc_id", None)
     fast_rows = _rows(fast)
-    monkeypatch.setattr(gate, "GRAPH_DRIVER_MAX_EDGES", 0)
-    slow = closure_clusters(pairs, "doc_a", "doc_b", "doc_id", None)
+    with tier():
+        slow = closure_clusters(pairs, "doc_a", "doc_b", "doc_id", None)
     assert _has_non_local_leaf(slow)
     assert fast_rows == _rows(slow)
     assert [(f.name, f.dataType) for f in fast.schema.fields] == [
@@ -46,13 +45,13 @@ def test_closure_driver_matches_distributed(pairs, monkeypatch):
     assert got[5] == (5, 2, True)
 
 
-def test_closure_driver_string_ids(spark, monkeypatch):
+def test_closure_driver_string_ids(spark, tier):
     rows = [("doc-b", "doc-a"), ("doc-c", "doc-b")]
     pairs = spark.createDataFrame(rows, "doc_a string, doc_b string")
     fast = closure_clusters(pairs, "doc_a", "doc_b", "doc_id", None)
     fast_rows = _rows(fast)
-    monkeypatch.setattr(gate, "GRAPH_DRIVER_MAX_EDGES", 0)
-    slow = closure_clusters(pairs, "doc_a", "doc_b", "doc_id", None)
+    with tier():
+        slow = closure_clusters(pairs, "doc_a", "doc_b", "doc_id", None)
     assert _has_non_local_leaf(slow)
     assert fast_rows == _rows(slow)
     assert fast_rows[0] == ("doc-a", "doc-a", 3, True)

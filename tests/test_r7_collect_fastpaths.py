@@ -6,7 +6,8 @@ import random
 
 import pytest
 
-from gliner_spark.gate import GRAPH_DRIVER_MAX_EDGES, _local_df, dedup
+from gliner_spark import gate
+from gliner_spark.gate import _local_df, dedup
 from gliner_spark.operators.graph_analytics import (
     _fold_hash_many,
     _fold_hash_py,
@@ -56,46 +57,49 @@ def test_local_df_empty_and_int_type(spark):
     ]
 
 
-def test_collected_dedup_matches_distinct_collect(spark):
+def test_collected_dedup_matches_distinct_collect(spark, tier):
     raw = spark.createDataFrame(
         [("a", "b"), ("a", "b"), ("b", "c"), ("a", "c"), ("b", "c")],
         "src string, dst string",
     )
-    got = dedup(raw, ("src", "dst"), 100)
+    with tier(edges=100):
+        got = dedup(raw, ("src", "dst"))
     want = sorted(map(tuple, raw.distinct().collect()))
     assert sorted(got) == want
     assert got == sorted(set(got))  # returned sorted + unique
 
 
-def test_collected_dedup_bound_fallback(spark):
+def test_collected_dedup_bound_fallback(spark, tier):
     raw = spark.createDataFrame(
         [(str(i), str(i + 1)) for i in range(50)],
         "src string, dst string",
     )
     # distinct rows (50) exceed bound -> None (caller goes distributed)
-    assert dedup(raw, ("src", "dst"), 10) is None
+    with tier(edges=10):
+        assert dedup(raw, ("src", "dst")) is None
     # bound 0 disables the gate entirely
-    assert dedup(raw, ("src", "dst"), 0) is None
-    assert dedup(raw, ("src", "dst"), 50) is not None
+    with tier(edges=0):
+        assert dedup(raw, ("src", "dst")) is None
+    with tier(edges=50):
+        assert dedup(raw, ("src", "dst")) is not None
 
 
 def test_collected_dedup_raw_cap_degrades_to_distinct_tier(
-    spark, monkeypatch
+    spark, monkeypatch, tier
 ):
-    from gliner_spark import gate
-
     raw = spark.createDataFrame(
         [("a", "b")] * 40 + [("b", "c")] * 40,
         "src string, dst string",
     )
     monkeypatch.setattr(gate, "RAW_COLLECT_CAP", 8)
-    got = gate.dedup(raw, ("src", "dst"), 100)
+    with tier(edges=100):
+        got = gate.dedup(raw, ("src", "dst"))
     # falls back to the cluster-distinct tier, same result set
     assert sorted(got) == [("a", "b"), ("b", "c")]
 
 
-def test_default_bound_is_env_tunable():
-    assert GRAPH_DRIVER_MAX_EDGES > 0
+def test_default_edge_bound_is_positive():
+    assert gate.BOUNDS["edges"] > 0
 
 
 def test_fold_keys_composed_matches_concat_fold():

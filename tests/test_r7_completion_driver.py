@@ -37,11 +37,12 @@ def _rows(df):
     return out
 
 
-def test_negatives_driver_matches(spark, triples):
+def test_negatives_driver_matches(spark, triples, tier):
     from gliner_spark.operators.kg_completion import negative_samples
 
     drv = _rows(negative_samples(triples))
-    dist = _rows(negative_samples(triples, driver_max_rows=0))
+    with tier():
+        dist = _rows(negative_samples(triples))
     assert drv == dist
     assert len(drv) > 0
 
@@ -52,14 +53,15 @@ def _bits(rows):
 
 
 @pytest.mark.parametrize("scorer", ["transe", "distmult", "complex", "rotate"])
-def test_margin_eval_over_driver_negatives(spark, triples, scorer):
+def test_margin_eval_over_driver_negatives(spark, triples, scorer, tier):
     from gliner_spark.operators.kg_completion import transe_margin_eval
 
     # r7 pass 3: the whole eval (sampler + scoring + aggregate) replays
     # on the driver below the gate; force-compare end to end, bit-exact
     # on the mean_margin doubles
     drv = _rows(transe_margin_eval(triples, scorer=scorer))
-    dist = _rows(transe_margin_eval(triples, scorer=scorer, driver_max_rows=0))
+    with tier():
+        dist = _rows(transe_margin_eval(triples, scorer=scorer))
     assert _bits(drv) == _bits(dist)
     assert len(drv) > 0
 
@@ -71,58 +73,64 @@ def test_margin_eval_unknown_scorer_raises(spark, triples):
         transe_margin_eval(triples, scorer="nope")
 
 
-def test_ranking_metrics_driver_matches(spark, triples):
+def test_ranking_metrics_driver_matches(spark, triples, tier):
     from gliner_spark.operators.kg_completion import ranking_metrics
 
     drv = _rows(ranking_metrics(triples))
-    dist = _rows(ranking_metrics(triples, driver_max_rows=0))
+    with tier():
+        dist = _rows(ranking_metrics(triples))
     assert drv == dist
     assert len(drv) > 0
 
 
-def test_ranking_metrics_driver_matches_small_pool(spark, triples):
+def test_ranking_metrics_driver_matches_small_pool(spark, triples, tier):
     # a 2-entity pool forces the true-object and filtered exclusions to
     # decide almost every rank
     from gliner_spark.operators.kg_completion import ranking_metrics
 
     drv = _rows(ranking_metrics(triples, pool_cap=2))
-    dist = _rows(ranking_metrics(triples, pool_cap=2, driver_max_rows=0))
+    with tier():
+        dist = _rows(ranking_metrics(triples, pool_cap=2))
     assert drv == dist
 
 
-def test_cooc_driver_matches(spark, triples):
+def test_cooc_driver_matches(spark, triples, tier):
     from gliner_spark.metrics import skew_metrics
     from gliner_spark.operators.kg_completion import cooc_candidates
 
     drv_df = cooc_candidates(triples)
     m = skew_metrics(drv_df)
     drv = _rows(drv_df)
-    dist = _rows(cooc_candidates(triples, driver_max_rows=0))
+    with tier():
+        dist = _rows(cooc_candidates(triples))
     assert drv == dist
     assert len(drv) > 0
     assert "cooc_doc_cap" in m
 
 
-def test_cooc_driver_matches_with_firing_cap(spark, triples):
+def test_cooc_driver_matches_with_firing_cap(spark, triples, tier):
     from gliner_spark.operators.kg_completion import cooc_candidates
 
     drv = _rows(cooc_candidates(triples, doc_cap=3))
-    dist = _rows(cooc_candidates(triples, doc_cap=3, driver_max_rows=0))
+    with tier():
+        dist = _rows(cooc_candidates(triples, doc_cap=3))
     assert drv == dist
 
 
-def test_walks_driver_matches(spark, triples):
+def test_walks_driver_matches(spark, triples, tier):
     from gliner_spark.operators.kg_completion import walk_corpus
 
     drv = _rows(walk_corpus(triples))
-    dist = _rows(walk_corpus(triples, driver_max_edges=0))
+    with tier():
+        dist = _rows(walk_corpus(triples))
     assert drv == dist
     assert len(drv) > 0
 
 
-def test_walks_driver_matches_with_firing_cap(spark, triples):
+def test_walks_driver_matches_with_firing_cap(spark, triples, tier):
     from gliner_spark.operators.kg_completion import walk_corpus
 
     drv = _rows(walk_corpus(triples, nbr_cap=2))
-    dist = _rows(walk_corpus(triples, nbr_cap=2, driver_max_edges=0))
+    with tier():
+        dist = _rows(walk_corpus(triples, nbr_cap=2))
     assert drv == dist

@@ -42,35 +42,39 @@ def _rows(df):
     return out
 
 
-def test_fuse_functional_driver_matches(spark, triples):
+def test_fuse_functional_driver_matches(spark, triples, tier):
     from gliner_spark.operators.kg_fusion import fuse_functional
 
     drv = _rows(fuse_functional(triples))
-    dist = _rows(fuse_functional(triples, driver_max_rows=0))
+    with tier():
+        dist = _rows(fuse_functional(triples))
     assert drv == dist
     assert len(drv) > 0
 
 
-def test_fuse_functional_driver_matches_min_objects(spark, triples):
+def test_fuse_functional_driver_matches_min_objects(spark, triples, tier):
     from gliner_spark.operators.kg_fusion import fuse_functional
 
     drv = _rows(fuse_functional(triples, min_objects=3))
-    dist = _rows(fuse_functional(triples, min_objects=3, driver_max_rows=0))
+    with tier():
+        dist = _rows(fuse_functional(triples, min_objects=3))
     assert drv == dist
 
 
-def test_fact_rank_driver_matches(spark, triples):
+def test_fact_rank_driver_matches(spark, triples, tier):
     from gliner_spark.operators.kg_fusion import fact_rank
 
     drv = _rows(fact_rank(triples))
-    dist = _rows(fact_rank(triples, driver_max_rows=0))
+    with tier():
+        dist = _rows(fact_rank(triples))
     assert drv == dist
     assert len(drv) > 0
 
 
-def test_fact_rank_driver_matches_top1(spark, triples):
+def test_fact_rank_driver_matches_top1(spark, triples, tier):
     from gliner_spark.operators.kg_fusion import fact_rank
 
     drv = _rows(fact_rank(triples, top_m=1))
-    dist = _rows(fact_rank(triples, top_m=1, driver_max_rows=0))
+    with tier():
+        dist = _rows(fact_rank(triples, top_m=1))
     assert drv == dist

@@ -1,7 +1,7 @@
 """r7: the driver-gated small-graph paths must be row-identical to the
 distributed plans for every operator that gained one (the _cc_driver
 adaptive design generalized). Each op runs twice — driver path (default
-gate) vs forced-distributed (driver_max_edges=0) — on a random graph
+gate) vs forced-distributed (the `tier` fixture) — on a random graph
 with hubs, chains and isolated cliques."""
 
 import random
@@ -58,56 +58,36 @@ def _rows(df):
         "squares", "two_hop",
     ],
 )
-def test_driver_paths_match_distributed(spark, graph, name):
+def test_driver_paths_match_distributed(spark, graph, tier, name):
     import gliner_spark.operators.graph_analytics as ga
 
     fns = {
-        "lpa": lambda d: ga.lpa_communities(graph, driver_max_edges=d),
-        "modularity": lambda d: ga.partition_modularity(
-            graph, driver_max_edges=d
-        ),
-        "wl": lambda d: ga.wl_colors(graph, driver_max_edges=d),
-        "hits": lambda d: ga.hits(graph, driver_max_edges=d),
-        "bfs": lambda d: ga.bfs_distances(graph, driver_max_edges=d),
-        "harmonic": lambda d: ga.harmonic_centrality(
-            graph, driver_max_edges=d
-        ),
-        "distances": lambda d: ga.distance_profile(
-            graph, driver_max_edges=d
-        ),
-        "stress": lambda d: ga.stress_centrality(graph, driver_max_edges=d),
-        "components": lambda d: ga.entity_components(
-            graph, driver_max_edges=d
-        ),
-        "kcore": lambda d: ga.kcore(graph, driver_max_edges=d),
-        "truss": lambda d: ga.ktruss(graph, driver_max_edges=d),
-        "pagerank": lambda d: ga.pagerank(graph, driver_max_edges=d),
-        "pagerank_dangling": lambda d: ga.pagerank(
-            graph, dangling=True, driver_max_edges=d
-        ),
-        "ppr": lambda d: ga.pagerank(
-            graph, seed_prefix="person:", driver_max_edges=d
-        ),
-        "pagerank_weighted": lambda d: ga.pagerank_weighted(
-            graph, driver_max_edges=d
-        ),
-        "triangles": lambda d: ga.triangle_counts(
-            graph, driver_max_edges=d
-        ),
-        "clustering": lambda d: ga.clustering_coefficients(
-            graph, driver_max_edges=d
-        ),
-        "node_similarity": lambda d: ga.node_similarity(
-            graph, driver_max_edges=d
-        ),
-        "link_prediction": lambda d: ga.link_prediction(
-            graph, driver_max_edges=d
-        ),
-        "squares": lambda d: ga.square_counts(graph, driver_max_edges=d),
-        "two_hop": lambda d: ga.two_hop_paths(graph, driver_max_edges=d),
+        "lpa": lambda: ga.lpa_communities(graph),
+        "modularity": lambda: ga.partition_modularity(graph),
+        "wl": lambda: ga.wl_colors(graph),
+        "hits": lambda: ga.hits(graph),
+        "bfs": lambda: ga.bfs_distances(graph),
+        "harmonic": lambda: ga.harmonic_centrality(graph),
+        "distances": lambda: ga.distance_profile(graph),
+        "stress": lambda: ga.stress_centrality(graph),
+        "components": lambda: ga.entity_components(graph),
+        "kcore": lambda: ga.kcore(graph),
+        "truss": lambda: ga.ktruss(graph),
+        "pagerank": lambda: ga.pagerank(graph),
+        "pagerank_dangling": lambda: ga.pagerank(graph, dangling=True),
+        "ppr": lambda: ga.pagerank(graph, seed_prefix="person:"),
+        "pagerank_weighted": lambda: ga.pagerank_weighted(graph),
+        "triangles": lambda: ga.triangle_counts(graph),
+        "clustering": lambda: ga.clustering_coefficients(graph),
+        "node_similarity": lambda: ga.node_similarity(graph),
+        "link_prediction": lambda: ga.link_prediction(graph),
+        "squares": lambda: ga.square_counts(graph),
+        "two_hop": lambda: ga.two_hop_paths(graph),
     }
-    drv = _rows(fns[name](10_000_000))
-    dist = _rows(fns[name](0))
+    with tier(edges=10_000_000):
+        drv = _rows(fns[name]())
+    with tier():
+        dist = _rows(fns[name]())
     assert drv == dist, f"{name}: driver path diverges from distributed"
     assert len(drv) > 0
 
@@ -117,68 +97,58 @@ def test_driver_paths_match_distributed(spark, graph, name):
     ["triangles", "clustering", "node_similarity", "link_prediction",
      "squares", "two_hop", "truss"],
 )
-def test_driver_paths_match_with_firing_caps(spark, graph, name):
+def test_driver_paths_match_with_firing_caps(spark, graph, tier, name):
     """Same row identity with a tiny pivot cap so the audited drop
     branches execute on both sides."""
     import gliner_spark.operators.graph_analytics as ga
 
     fns = {
-        "triangles": lambda d: ga.triangle_counts(
-            graph, max_fanout=4, driver_max_edges=d
+        "triangles": lambda: ga.triangle_counts(graph, max_fanout=4),
+        "clustering": lambda: ga.clustering_coefficients(
+            graph, max_fanout=4
         ),
-        "clustering": lambda d: ga.clustering_coefficients(
-            graph, max_fanout=4, driver_max_edges=d
-        ),
-        "node_similarity": lambda d: ga.node_similarity(
-            graph, max_fanout=4, driver_max_edges=d
-        ),
-        "link_prediction": lambda d: ga.link_prediction(
-            graph, max_fanout=4, driver_max_edges=d
-        ),
-        "squares": lambda d: ga.square_counts(
-            graph, max_fanout=4, driver_max_edges=d
-        ),
-        "two_hop": lambda d: ga.two_hop_paths(
-            graph, max_fanout=2, driver_max_edges=d
-        ),
-        "truss": lambda d: ga.ktruss(
-            graph, max_fanout=4, driver_max_edges=d
-        ),
+        "node_similarity": lambda: ga.node_similarity(graph, max_fanout=4),
+        "link_prediction": lambda: ga.link_prediction(graph, max_fanout=4),
+        "squares": lambda: ga.square_counts(graph, max_fanout=4),
+        "two_hop": lambda: ga.two_hop_paths(graph, max_fanout=2),
+        "truss": lambda: ga.ktruss(graph, max_fanout=4),
     }
     from gliner_spark.metrics import skew_metrics
 
-    drv_df = fns[name](10_000_000)
+    with tier(edges=10_000_000):
+        drv_df = fns[name]()
     m = skew_metrics(drv_df)
     drv = _rows(drv_df)
-    dist = _rows(fns[name](0))
+    with tier():
+        dist = _rows(fns[name]())
     assert drv == dist, f"{name}: capped driver path diverges"
     # the cap genuinely fired on this graph
     assert any(v["n_dropped_rows"] > 0 for v in m.values()), m
 
 
-def test_metapath_driver_matches(spark, graph):
+def test_metapath_driver_matches(spark, graph, tier):
     from gliner_spark.metrics import skew_metrics
     from gliner_spark.operators.graph_analytics import metapath_counts
 
     drv_df = metapath_counts(graph, preds=("r", "s"))
     m = skew_metrics(drv_df)
     drv = _rows(drv_df)
-    dist = _rows(metapath_counts(graph, preds=("r", "s"), driver_max_edges=0))
+    with tier():
+        dist = _rows(metapath_counts(graph, preds=("r", "s")))
     assert drv == dist
     assert len(drv) > 0
     assert "metapath_hub_cap_1" in m
 
 
-def test_metapath_driver_matches_firing_cap(spark, graph):
+def test_metapath_driver_matches_firing_cap(spark, graph, tier):
     from gliner_spark.metrics import skew_metrics
     from gliner_spark.operators.graph_analytics import metapath_counts
 
     drv_df = metapath_counts(graph, preds=("r", "s", "r"), max_fanout=2)
     m = skew_metrics(drv_df)
     drv = _rows(drv_df)
-    dist_df = metapath_counts(
-        graph, preds=("r", "s", "r"), max_fanout=2, driver_max_edges=0
-    )
+    with tier():
+        dist_df = metapath_counts(graph, preds=("r", "s", "r"), max_fanout=2)
     md = skew_metrics(dist_df)
     dist = _rows(dist_df)
     assert drv == dist
@@ -188,19 +158,17 @@ def test_metapath_driver_matches_firing_cap(spark, graph):
     assert m == md
 
 
-def test_assortativity_driver_matches(spark, graph):
+def test_assortativity_driver_matches(spark, graph, tier):
     from gliner_spark.operators.graph_analytics import assortativity
 
     drv = [tuple(map(repr, r)) for r in _rows(assortativity(graph))]
-    dist = [
-        tuple(map(repr, r))
-        for r in _rows(assortativity(graph, driver_max_edges=0))
-    ]
+    with tier():
+        dist = [tuple(map(repr, r)) for r in _rows(assortativity(graph))]
     assert drv == dist
 
 
 @pytest.mark.parametrize("opname", ["degrees", "degree_hist", "provenance", "pred_assoc"])
-def test_profile_ops_driver_match(spark, graph, opname):
+def test_profile_ops_driver_match(spark, graph, tier, opname):
     from gliner_spark.operators.graph_analytics import (
         degree_histogram,
         entity_degrees,
@@ -216,16 +184,16 @@ def test_profile_ops_driver_match(spark, graph, opname):
     }
     fn = fns[opname]
     drv = [tuple(map(repr, r)) for r in _rows(fn(graph))]
-    dist = [
-        tuple(map(repr, r)) for r in _rows(fn(graph, driver_max_edges=0))
-    ]
+    with tier():
+        dist = [tuple(map(repr, r)) for r in _rows(fn(graph))]
     assert drv == dist
     assert len(drv) > 0
 
 
-def test_pred_assoc_driver_matches_min_support(spark, graph):
+def test_pred_assoc_driver_matches_min_support(spark, graph, tier):
     from gliner_spark.operators.graph_analytics import pred_association
 
     drv = _rows(pred_association(graph, min_support=5))
-    dist = _rows(pred_association(graph, min_support=5, driver_max_edges=0))
+    with tier():
+        dist = _rows(pred_association(graph, min_support=5))
     assert drv == dist

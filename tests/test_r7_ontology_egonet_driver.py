@@ -39,9 +39,10 @@ def _types(df):
     return [(f.name, f.dataType) for f in df.schema.fields]
 
 
-def test_rdfs_driver_matches_distributed(triples):
+def test_rdfs_driver_matches_distributed(triples, tier):
     fast = rdfs_types(triples)
-    slow = rdfs_types(triples, driver_max_rows=0)
+    with tier():
+        slow = rdfs_types(triples)
     assert _types(fast) == _types(slow)
     assert _rows(fast) == _rows(slow)
     # the subclass chain materializes ancestors with min hops
@@ -51,9 +52,10 @@ def test_rdfs_driver_matches_distributed(triples):
     assert got[("person:p", "entity")] == 2
 
 
-def test_subproperty_driver_matches_distributed(triples):
+def test_subproperty_driver_matches_distributed(triples, tier):
     fast = subproperty_triples(triples)
-    slow = subproperty_triples(triples, driver_max_rows=0)
+    with tier():
+        slow = subproperty_triples(triples)
     assert _types(fast) == _types(slow)
     assert _rows(fast) == _rows(slow)
     got = {(r[0], r[1], r[2]): r[3] for r in fast.collect()}
@@ -63,9 +65,10 @@ def test_subproperty_driver_matches_distributed(triples):
     assert ("person:p", "affiliated_with", "org:a") not in got
 
 
-def test_egonet_driver_matches_distributed(triples):
+def test_egonet_driver_matches_distributed(triples, tier):
     fast = egonet(triples)
-    slow = egonet(triples, driver_max_edges=0)
+    with tier():
+        slow = egonet(triples)
     assert _types(fast) == _types(slow)
     assert _rows(fast) == _rows(slow)
     # depth-2 person neighborhood includes the org->loc edge (loc:x is

@@ -38,40 +38,38 @@ def triples(spark):
 
 
 @pytest.mark.parametrize("expr", EXPRS[:3])
-def test_rpq_driver_matches_distributed(triples, expr):
+def test_rpq_driver_matches_distributed(triples, tier, expr):
     if expr[0] == "star":
         return
     fast = rpq_match(triples, expr, RPQ_MAX_HOPS).collect()
-    slow = rpq_match(
-        triples, expr, RPQ_MAX_HOPS, driver_max_edges=0
-    ).collect()
+    with tier():
+        slow = rpq_match(triples, expr, RPQ_MAX_HOPS).collect()
     assert [tuple(r) for r in fast] == [tuple(r) for r in slow]
 
 
-def test_rpq_driver_state_cap_falls_back(triples):
+def test_rpq_driver_state_cap_falls_back(triples, tier):
     expr = EXPRS[0]
     # a 1-state budget always blows: result must equal the distributed one
-    capped = rpq_match(triples, expr, RPQ_MAX_HOPS, state_cap=1).collect()
-    slow = rpq_match(
-        triples, expr, RPQ_MAX_HOPS, driver_max_edges=0
-    ).collect()
+    with tier(rpq_states=1):
+        capped = rpq_match(triples, expr, RPQ_MAX_HOPS).collect()
+    with tier():
+        slow = rpq_match(triples, expr, RPQ_MAX_HOPS).collect()
     assert [tuple(r) for r in capped] == [tuple(r) for r in slow]
 
 
-def test_rpq_driver_self_loop_and_inverse(triples):
+def test_rpq_driver_self_loop_and_inverse(triples, tier):
     # self-loop fact participates; inverse direction walks object->subject
     expr = ("seq", ("plus", ("pred", "acquired")), ("pred", "based_in"))
     fast = {tuple(r) for r in rpq_match(triples, expr, 5).collect()}
     assert ("org:d", "loc:x", 2) in fast  # via the org:d self-loop
-    slow = {
-        tuple(r)
-        for r in rpq_match(triples, expr, 5, driver_max_edges=0).collect()
-    }
+    with tier():
+        slow = {tuple(r) for r in rpq_match(triples, expr, 5).collect()}
     assert fast == slow
 
 
-def test_rpq_driver_schema_matches(triples):
+def test_rpq_driver_schema_matches(triples, tier):
     expr = EXPRS[1]
     fast = rpq_match(triples, expr, 4)
-    slow = rpq_match(triples, expr, 4, driver_max_edges=0)
+    with tier():
+        slow = rpq_match(triples, expr, 4)
     assert fast.schema == slow.schema

@@ -39,37 +39,41 @@ def _rows(df):
     return out
 
 
-def test_mine_rules_driver_matches(spark, triples):
+def test_mine_rules_driver_matches(spark, triples, tier):
     from gliner_spark.operators.kg_completion import mine_rules
 
     drv = _rows(mine_rules(triples))
-    dist = _rows(mine_rules(triples, driver_max_rows=0))
+    with tier():
+        dist = _rows(mine_rules(triples))
     assert drv == dist
     assert len(drv) > 0
     assert any(r[2] == 1 for r in drv)  # inverse rules exercised
 
 
-def test_mine_rules_driver_matches_min_support(spark, triples):
+def test_mine_rules_driver_matches_min_support(spark, triples, tier):
     from gliner_spark.operators.kg_completion import mine_rules
 
     drv = _rows(mine_rules(triples, min_support=5))
-    dist = _rows(mine_rules(triples, min_support=5, driver_max_rows=0))
+    with tier():
+        dist = _rows(mine_rules(triples, min_support=5))
     assert drv == dist
 
 
-def test_apply_rules_driver_matches(spark, triples):
+def test_apply_rules_driver_matches(spark, triples, tier):
     from gliner_spark.operators.kg_completion import apply_rules
 
     drv = _rows(apply_rules(triples))
-    dist = _rows(apply_rules(triples, driver_max_rows=0))
+    with tier():
+        dist = _rows(apply_rules(triples))
     assert drv == dist
     assert len(drv) > 0
 
 
-def test_apply_rules_driver_matches_low_conf(spark, triples):
+def test_apply_rules_driver_matches_low_conf(spark, triples, tier):
     # a low floor admits many rules -> the anti-join branch is exercised
     from gliner_spark.operators.kg_completion import apply_rules
 
     drv = _rows(apply_rules(triples, min_conf_permille=100))
-    dist = _rows(apply_rules(triples, min_conf_permille=100, driver_max_rows=0))
+    with tier():
+        dist = _rows(apply_rules(triples, min_conf_permille=100))
     assert drv == dist

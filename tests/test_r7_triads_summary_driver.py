@@ -44,9 +44,10 @@ def _rows(df):
     return [tuple(r) for r in df.collect()]
 
 
-def test_triads_driver_matches_distributed(triples):
+def test_triads_driver_matches_distributed(triples, tier):
     fast = triad_census(triples)
-    slow = triad_census(triples, driver_max_edges=0)
+    with tier():
+        slow = triad_census(triples)
     assert [(f.name, f.dataType) for f in fast.schema.fields] == [
         (f.name, f.dataType) for f in slow.schema.fields
     ]  # nullability differs by construction (local relation), like every
@@ -59,9 +60,10 @@ def test_triads_driver_matches_distributed(triples):
     assert cls.get("120") == 1
 
 
-def test_triads_driver_cap_audit_matches(triples):
+def test_triads_driver_cap_audit_matches(triples, tier):
     fast = triad_census(triples, max_fanout=1)
-    slow = triad_census(triples, max_fanout=1, driver_max_edges=0)
+    with tier():
+        slow = triad_census(triples, max_fanout=1)
     assert _rows(fast) == _rows(slow)
     fa = skew_metrics(fast)["triad_pivot_cap"]
     sa = skew_metrics(slow)["triad_pivot_cap"]
@@ -69,9 +71,10 @@ def test_triads_driver_cap_audit_matches(triples):
     assert fa["max_group_size"] == sa["max_group_size"]
 
 
-def test_summary_driver_matches_distributed(triples):
+def test_summary_driver_matches_distributed(triples, tier):
     fast = summary_graph(triples)
-    slow = summary_graph(triples, driver_max_edges=0)
+    with tier():
+        slow = summary_graph(triples)
     assert [(f.name, f.dataType) for f in fast.schema.fields] == [
         (f.name, f.dataType) for f in slow.schema.fields
     ]  # nullability differs by construction (local relation), like every

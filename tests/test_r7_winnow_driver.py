@@ -30,7 +30,7 @@ def test_winnow_fp_replay_matches_distributed(docs):
         _winnow_gram_rows,
     )
 
-    rows = _winnow_gram_rows(docs, WINNOW_K, None)
+    rows = _winnow_gram_rows(docs, WINNOW_K)
     fps = _winnow_fps_driver(rows, WINNOW_W)
     want = {}
     for r in winnow_fingerprints(docs).collect():
@@ -39,9 +39,10 @@ def test_winnow_fp_replay_matches_distributed(docs):
     assert {d: sorted(v) for d, v in want.items()} == got
 
 
-def test_winnow_pairs_driver_matches(docs):
+def test_winnow_pairs_driver_matches(docs, tier):
     fast = winnow_overlap_pairs(docs)
-    slow = winnow_overlap_pairs(docs, driver_max_docs=0)
+    with tier():
+        slow = winnow_overlap_pairs(docs)
     assert _rows(fast) == _rows(slow)
     fa = skew_metrics(fast)["winnow_bucket_cap"]
     sa = skew_metrics(slow)["winnow_bucket_cap"]
@@ -49,9 +50,10 @@ def test_winnow_pairs_driver_matches(docs):
     assert fa["max_group_size"] == sa["max_group_size"]
 
 
-def test_winnow_pairs_driver_cap_forced(docs):
+def test_winnow_pairs_driver_cap_forced(docs, tier):
     fast = winnow_overlap_pairs(docs, bucket_cap=2)
-    slow = winnow_overlap_pairs(docs, bucket_cap=2, driver_max_docs=0)
+    with tier():
+        slow = winnow_overlap_pairs(docs, bucket_cap=2)
     assert _rows(fast) == _rows(slow)
     assert (
         skew_metrics(fast)["winnow_bucket_cap"]["n_dropped_rows"]
@@ -59,11 +61,13 @@ def test_winnow_pairs_driver_cap_forced(docs):
     )
 
 
-def test_containment_driver_matches(docs):
+def test_containment_driver_matches(docs, tier):
     fast = containment_pairs(docs)
-    slow = containment_pairs(docs, driver_max_docs=0)
+    with tier():
+        slow = containment_pairs(docs)
     assert _rows(fast) == _rows(slow)
     # permille threshold exercised on both sides identically
     fast_low = containment_pairs(docs, min_permille=1)
-    slow_low = containment_pairs(docs, min_permille=1, driver_max_docs=0)
+    with tier():
+        slow_low = containment_pairs(docs, min_permille=1)
     assert _rows(fast_low) == _rows(slow_low)

@@ -74,7 +74,7 @@ def test_entity_pair_table_matches_udf_enumeration(spark):
     assert sample == rev
 
 
-def test_cc_chain_converges_logarithmically(spark):
+def test_cc_chain_converges_logarithmically(spark, tier):
     """A 200-node chain has diameter 199: plain min-propagation would need
     199 rounds (>> cc_max_iterations) and silently mis-cluster; pointer
     jumping must converge within the default 20."""
@@ -86,17 +86,16 @@ def test_cc_chain_converges_logarithmically(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "src long, dst long"
     )
-    # pin the DISTRIBUTED loop (cc_driver_max_nodes=0 disables the
+    # pin the DISTRIBUTED loop (tier() zeroes the cc_nodes bound of the
     # small-graph driver path) — this test is about the loop's round bound
-    comp = connected_components(
-        nodes, chain, PipelineConfig(cc_driver_max_nodes=0)
-    )
+    with tier():
+        comp = connected_components(nodes, chain, PipelineConfig())
     rows = comp.collect()
     assert len(rows) == n
     assert {r.component for r in rows} == {0}
 
 
-def test_cc_driver_path_equals_distributed_path(spark):
+def test_cc_driver_path_equals_distributed_path(spark, tier):
     """The adaptive small-graph union-find must produce the identical
     (id, component) clustering as the pointer-jumping loop — chains,
     cycles, singletons, and cross-links."""
@@ -115,8 +114,9 @@ def test_cc_driver_path_equals_distributed_path(spark):
     e = spark.createDataFrame(edges, "src long, dst long")
     fast = {r.id: r.component for r in connected_components(
         nodes, e, PipelineConfig()).collect()}
-    dist = {r.id: r.component for r in connected_components(
-        nodes, e, PipelineConfig(cc_driver_max_nodes=0)).collect()}
+    with tier():
+        dist = {r.id: r.component for r in connected_components(
+            nodes, e, PipelineConfig()).collect()}
     assert fast == dist
 
 
