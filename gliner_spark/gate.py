@@ -37,24 +37,27 @@ every gated call under it, nested ones included, reads the patched
 value. The default table is the production policy; nothing else sets
 it.
 
-Collect modes. The module picks the mode; operators never call
-toArrow(), limit() or a collect primitive themselves.
+One capped collect. The module collects; operators never call
+toArrow(), limit() or a collect primitive themselves. Every collect is
+_arrow_collect_bounded: it reads the Arrow stream of pyspark's toArrow
+batch by batch and stops past its cap, so at most cap + one batch of
+rows reach the driver, whatever the frame computes (then it closes the
+stream and cancels the job).
 - Raw mode (`collect_raw`, `group`, `edge_rows`): a RAW, pre-aggregate
-  frame sized by the leaf-stats probe, collected with a plain toArrow()
-  (executor-side Arrow batches, 2-4x faster than a CollectLimit) and
-  dropped when it has more than RAW_COLLECT_CAP rows.
-- Limit mode (`collect_rows`, the degraded tier of `group`): a COMPUTED
-  per-row frame (token-id arrays, quantized vectors, a cluster-side
-  aggregate) collected as limit(bound+1).toArrow(). This mode stays
-  because the leaf-stats probe sees only the leaves: a frame of
-  token-id arrays computed from a table under the 1 GiB threshold would
-  be collected whole by a plain toArrow(), where the limit pulls at most
-  bound+1 rows to the driver.
+  frame, capped at RAW_COLLECT_CAP, and first sized by the leaf-stats
+  probe, which skips a known-huge input without a job.
+- Computed frames (`collect_rows`, the degraded tier of `group`):
+  token-id arrays, quantized vectors, a cluster-side aggregate, capped
+  at their bound. The stats probe sees only the leaves, so these take
+  no probe: the cap alone bounds them.
 
 Grouped rows (`group`): "group by keys, aggregate, bound, sort by keys"
-has one implementation for both tiers. The raw tier is a pyarrow
-group_by over the raw-mode table; past RAW_COLLECT_CAP the degraded tier
-runs the same aggregates as a Spark groupBy, then a limit-mode collect.
+has one implementation for both tiers. The raw tier (`group_table`) is
+a pyarrow group_by over the raw-mode table, on int32 codes of its
+keys: the driver then holds codes, not a hash table of strings, and an
+over-bound view is dropped before anything is sorted or decoded.
+Past RAW_COLLECT_CAP the degraded tier runs the same aggregates as a
+Spark groupBy, then a collect capped at the bound.
 Supported aggregates: count_all, count_distinct, min, max, sum (column
 names follow pyarrow: `count_all`, `<col>_<fn>`). `dedup` is the
 no-aggregate case.
@@ -83,7 +86,8 @@ filtered to a predicate set, the non-loop spo rows, and (subj, pred).
   tables only; each view is deduped, sorted and bounded per call.
 - Tier decisions are those of a per-operator collect. A frame over
   RAW_COLLECT_CAP is never collected a second time: only its row counts
-  are kept (total, non-loop, per predicate), and a view whose counted
+  are kept (total, non-loop, per predicate; folded batch by batch as
+  the stream is read, each batch dropped), and a view whose counted
   raw rows exceed the cap goes straight to the degraded tier. A view
   that fits (a predicate filter, say) makes its own collect.
 - A predicate-filtered view never creates the snapshot: it uses one if
@@ -94,11 +98,17 @@ filtered to a predicate set, the non-loop spo rows, and (subj, pred).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import uuid
+from collections import Counter
+from dataclasses import dataclass, field
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.serializers import ArrowCollectSerializer
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.traceback_utils import SCCallSiteSync
+from pyspark.util import _load_from_socket
 
 from gliner_spark.cache import forward_caches
 from gliner_spark.metrics import attach_audits
@@ -122,57 +132,98 @@ def bound(kind: str = "edges") -> int:
 
 # ----------------------------------------------------------------- collects
 
-
-def _arrow_collect_bounded(df: DataFrame, cap: int, over=None):
-    """Raw mode: pyarrow table of `df` if it has <= cap rows, else None.
-    `over`, if given, is called with an over-cap table before it is
-    dropped (the edge snapshot keeps its row counts, so the frame is
-    never collected again).
-
-    Memory safety is layered: (1) a Catalyst plan-stats probe skips
-    inputs whose KNOWN size exceeds STATS_SKIP_BYTES without running any
-    job (file scans report real bytes, so the petabyte path never
-    collects); (2) spark.driver.maxResultSize aborts a runaway collect,
-    which is caught; (3) the exact row cap is enforced on the table."""
+def _stats_skip(df: DataFrame) -> bool:
+    """True when the plan's KNOWN leaf sizes exceed STATS_SKIP_BYTES: a
+    raw collect is then skipped without running any job (file scans
+    report real bytes, so the petabyte path never collects). The LEAF
+    sizes are summed, not the top-level estimate: join plans multiply
+    row guesses into garbage (a ~30 MB chain join reported 1.2e15
+    bytes) while leaves are trustworthy. Unknown sources report the
+    Long.MaxValue-band sentinel, which is ignored: unknown is not huge."""
     try:
-        # sum the plan's LEAF sizes, not the top-level estimate: join
-        # plans multiply row guesses into garbage (a ~30 MB chain join
-        # reported 1.2e15 bytes) while leaves are trustworthy. Unknown
-        # sources report the Long.MaxValue-band sentinel, which is
-        # ignored: unknown is not huge.
         leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
         total = 0
         for i in range(leaves.size()):
             sz = int(str(leaves.apply(i).stats().sizeInBytes()))
             if sz < (1 << 60):
                 total += sz
-        if total > STATS_SKIP_BYTES:
-            return None
+        return total > STATS_SKIP_BYTES
     except Exception:
-        pass  # stats unavailable -> maxResultSize still bounds memory
+        return False  # stats unavailable: the row cap still bounds memory
+
+
+def _arrow_collect_bounded(df: DataFrame, cap: int, over=None):
+    """The gate's one collect: pyarrow table of `df` if it has <= cap
+    rows, else None.
+
+    The Arrow stream of pyspark's own toArrow is read batch by batch and
+    stops past cap rows, so at most cap + one batch of rows reach
+    Python; the stream is then closed and the job cancelled. The kept
+    batches become the table zero-copy, in partition order. `over`, if
+    given, is called with every batch of an over-cap frame instead, and
+    each batch is dropped once folded: the edge snapshot keeps its row
+    counts, so the frame is never collected again. A failed collect
+    (spark.driver.maxResultSize, say) is None too."""
+    import pyarrow as pa
+
+    spark = df.sparkSession
+    sc = spark.sparkContext
+    tag = f"gliner-spark-gate-{uuid.uuid4().hex}"
     try:
-        tbl = df.toArrow()
+        schema = to_arrow_schema(
+            df.schema,
+            error_on_duplicated_field_names_in_struct=True,
+            prefers_large_types=spark._jconf.arrowUseLargeVarTypes(),
+        )
+        sc.addJobTag(tag)
+        try:
+            with SCCallSiteSync(sc):
+                port, secret, server = df._jdf.collectAsArrowToPython()
+        finally:
+            sc.removeJobTag(tag)
     except Exception:
         return None
-    if tbl.num_rows > cap:
-        if over is not None:
-            over(tbl)
+    stream = _load_from_socket((port, secret), ArrowCollectSerializer())
+    kept, n, order = [], 0, None
+    try:
+        for item in stream:
+            if not isinstance(item, pa.RecordBatch):
+                order = item  # the stream ends with the partition order
+                break
+            kept.append(item)
+            n += item.num_rows
+            if n > cap:
+                if over is None:
+                    break
+                for batch in kept:
+                    over(batch)
+                kept = []
+    except Exception:
+        pass  # the job failed: order stays None
+    finally:
+        if order is None:
+            # stopped early or failed: close the stream and end the job;
+            # the serving thread then fails, its error absorbed below
+            stream.close()
+            sc.cancelJobsWithTag(tag)
+    try:
+        server.getResult()
+    except Exception:
         return None
-    return tbl
+    if order is None or n > cap:
+        return None
+    if not kept:
+        return schema.empty_table()
+    return pa.Table.from_batches([kept[i] for i in order]).cast(schema)
 
 
-def _collect_limited(df: DataFrame, limit: int):
-    """Limit mode: pyarrow table of `df` if it has <= limit rows, else
-    None; at most limit+1 rows reach the driver."""
-    tbl = df.limit(limit + 1).toArrow()
-    return None if tbl.num_rows > limit else tbl
-
-
-def collect_raw(df: DataFrame):
+def collect_raw(df: DataFrame, over=None):
     """Raw-mode collect of a pre-aggregate frame: pyarrow table, or None
-    past RAW_COLLECT_CAP rows (the caller degrades or goes
-    distributed)."""
-    return _arrow_collect_bounded(df, RAW_COLLECT_CAP)
+    past RAW_COLLECT_CAP rows or STATS_SKIP_BYTES of known leaf bytes
+    (the caller degrades or goes distributed)."""
+    if _stats_skip(df):
+        return None
+    return _arrow_collect_bounded(df, RAW_COLLECT_CAP, over)
 
 
 def rows(tbl) -> list:
@@ -181,12 +232,12 @@ def rows(tbl) -> list:
 
 
 def collect_rows(df: DataFrame, cols, cap: int):
-    """Limit-mode collect of a computed per-row frame: row tuples of
-    `cols` if at most `cap` rows (a bound(kind), or a cap computed from
-    one), else None; cap <= 0 is None with no job."""
+    """Collect of a computed per-row frame: row tuples of `cols` if at
+    most `cap` rows (a bound(kind), or a cap computed from one), else
+    None; cap <= 0 is None with no job."""
     if cap <= 0:
         return None
-    tbl = _collect_limited(df.select(*cols), cap)
+    tbl = _arrow_collect_bounded(df.select(*cols), cap)
     return None if tbl is None else rows(tbl)
 
 
@@ -203,13 +254,69 @@ def _agg_name(col, fn: str) -> str:
     return f"{col}_{fn}" if col else fn
 
 
-def _group_raw(table, keys, aggs, b: int):
-    out = table.group_by(keys).aggregate(aggs)
+def group_table(table, keys, aggs, b: int):
+    """`table` grouped by `keys` with `aggs`, sorted by `keys`, if there
+    are at most `b` groups; else None. The raw tier of `group`.
+
+    Every key is grouped on int32 codes into its distinct values (one
+    dictionary_encode pass; NULL takes the last code). Hashing codes
+    holds a fraction of the memory of hashing strings; the over-bound
+    case is known before anything is sorted or decoded; and the grouper
+    sees keys of one type (pyarrow 16's multi-key grouper misgroups
+    NULLs when the key types differ). The groups are then sorted on the
+    rank of each code's value (Arrow's order, NULL last) and decoded
+    with take: the rows and schema of a group_by + sort_by on the raw
+    keys. An aggregate always reads the raw column, even when it is
+    also a key."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    kcols = [f"k{i}" for i in range(len(keys))]
+    cols, values = [], []
+    for k in keys:
+        enc = pc.dictionary_encode(table.column(k))
+        # one dictionary, shared by every chunk of a chunked encode
+        vals = (enc.chunk(0).dictionary if enc.num_chunks
+                else pa.array([], enc.type.value_type))
+        values.append(vals)
+        cols.append(pa.chunked_array(
+            [pc.fill_null(c.indices, len(vals)) for c in enc.chunks],
+            pa.int32(),
+        ))
+    fields = [pa.field(k, pa.int32()) for k in kcols]
+    inputs = {c: f"a{j}"
+              for j, c in enumerate(dict.fromkeys(c for c, _fn in aggs if c))}
+    for c, name in inputs.items():
+        fields.append(table.schema.field(c).with_name(name))
+        cols.append(table.column(c))
+    out = pa.Table.from_arrays(cols, schema=pa.schema(fields)).group_by(
+        kcols
+    ).aggregate([(inputs[c] if c else c, fn) for c, fn in aggs])
     if out.num_rows > b:
         return None
-    # pyarrow puts the aggregates first: keys first, as Spark does
-    out = out.select(keys + [_agg_name(c, fn) for c, fn in aggs])
-    return out.sort_by([(k, "ascending") for k in keys])
+    for i, vals in enumerate(values):
+        order = pc.sort_indices(vals).to_numpy()
+        rank = np.empty(len(vals) + 1, np.int32)
+        rank[order] = np.arange(len(vals), dtype=np.int32)
+        rank[len(vals)] = len(vals)
+        out = out.set_column(
+            out.schema.get_field_index(kcols[i]), kcols[i],
+            pc.take(pa.array(rank), out.column(kcols[i])),
+        )
+        values[i] = pa.concat_arrays([vals.take(order),
+                                      pa.nulls(1, vals.type)])
+    out = out.sort_by([(k, "ascending") for k in kcols])
+    anames = [_agg_name(inputs[c] if c else c, fn) for c, fn in aggs]
+    return pa.Table.from_arrays(
+        [pc.take(vals, out.column(k)) for vals, k in zip(values, kcols)]
+        + [out.column(a) for a in anames],
+        schema=pa.schema(
+            [table.schema.field(k) for k in keys]
+            + [out.schema.field(a).with_name(_agg_name(c, fn))
+               for a, (c, fn) in zip(anames, aggs)]
+        ),
+    )
 
 
 def _group_degraded(frame: DataFrame, keys, aggs, b: int):
@@ -219,7 +326,7 @@ def _group_degraded(frame: DataFrame, keys, aggs, b: int):
         ))
     else:
         frame = frame.select(*keys).distinct()
-    out = _collect_limited(frame, b)
+    out = _arrow_collect_bounded(frame, b)
     return None if out is None else out.sort_by(
         [(k, "ascending") for k in keys]
     )
@@ -231,9 +338,10 @@ def group(frame: DataFrame | None, keys, aggs=(), table=None):
     are at most bound() groups; else None.
 
     The raw tier groups `table` (when the caller collected it already)
-    or a raw-mode collect of the frame's columns. Past RAW_COLLECT_CAP
-    the degraded tier runs the same aggregates in Spark and collects in
-    limit mode; with `frame` None there is no degraded tier."""
+    or a raw-mode collect of the frame's columns (group_table). Past
+    RAW_COLLECT_CAP the degraded tier runs the same aggregates in Spark
+    and collects at most bound() + one batch of their rows; with
+    `frame` None there is no degraded tier."""
     b = bound()
     if b <= 0:
         return None
@@ -242,7 +350,7 @@ def group(frame: DataFrame | None, keys, aggs=(), table=None):
         used = keys + [c for c, _fn in aggs if c and c not in keys]
         table = collect_raw(frame.select(*dict.fromkeys(used)))
     if table is not None:
-        return _group_raw(table, keys, aggs, b)
+        return group_table(table, keys, aggs, b)
     return None if frame is None else _group_degraded(frame, keys, aggs, b)
 
 
@@ -354,30 +462,26 @@ class _Snapshot:
     table: object = None       # pyarrow (subj, pred, obj) table, <= cap rows
     n_rows: int | None = None  # over-cap counts, kept instead of the table
     n_nonloop: int = 0
-    pred_counts: object = None  # pyarrow struct array of pred value counts
+    pred_counts: Counter = field(default_factory=Counter)  # pred -> rows
 
-    def count(self, tbl) -> None:
-        """Keep the row counts of an over-cap table before it is dropped."""
+    def fold(self, batch) -> None:
+        """Add an over-cap batch's row counts; the batch is then dropped."""
         import pyarrow.compute as pc
 
-        s, p, o = tbl.columns
-        self.n_rows = tbl.num_rows
-        self.n_nonloop = int(pc.sum(pc.not_equal(s, o)).as_py() or 0)
-        self.pred_counts = pc.value_counts(p)
+        s, p, o = batch.columns
+        self.n_rows = (self.n_rows or 0) + batch.num_rows
+        self.n_nonloop += int(pc.sum(pc.not_equal(s, o)).as_py() or 0)
+        for vc in pc.value_counts(p).to_pylist():
+            self.pred_counts[vc["values"]] += vc["counts"]
 
     def raw_rows(self, view: str, preds) -> int:
         """Raw (pre-distinct) rows of `view` on the over-cap frame."""
-        import pyarrow.compute as pc
-
         if view in ("spo", "sp"):
             return self.n_rows
         if view == "preds":
-            vals = self.pred_counts.field("values")
-            hit = pc.is_in(vals, value_set=_pred_set(preds, vals.type))
-            return int(
-                pc.sum(pc.filter(self.pred_counts.field("counts"), hit))
-                .as_py() or 0
-            )
+            # Spark's `pred IN (...)` never matches a NULL
+            want = set(preds) - {None}
+            return sum(n for p, n in self.pred_counts.items() if p in want)
         return self.n_nonloop
 
 
@@ -435,9 +539,7 @@ def _snapshot(triples: DataFrame) -> _Snapshot:
         except AnalysisException:
             frame = None  # not a triples frame: one collect per view
         if frame is not None:
-            tbl = _arrow_collect_bounded(
-                frame, RAW_COLLECT_CAP, over=snap.count
-            )
+            tbl = collect_raw(frame, over=snap.fold)
             if tbl is not None:
                 snap.table = tbl.rename_columns(["subj", "pred", "obj"])
         setattr(triples, _ATTR, snap)
@@ -470,7 +572,7 @@ def edge_rows(triples: DataFrame, view: str, preds=None):
     cols = list(VIEWS[view])
     tbl = view_table(triples, view, preds)
     if tbl is not None:
-        out = _group_raw(tbl, cols, [], b)
+        out = group_table(tbl, cols, [], b)
     else:
         out = _group_degraded(_view_frame(triples, view, preds), cols, [], b)
     return None if out is None else rows(out)

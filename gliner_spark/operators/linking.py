@@ -534,7 +534,7 @@ def canonicalize(mentions: DataFrame, cfg: PipelineConfig):
     # r7: the surface table is a pure groupBy-count over (label, norm) —
     # below gate.RAW_COLLECT_CAP raw mention rows, pull the two columns
     # through ONE Arrow collect and aggregate vectorized on the driver
-    # (pyarrow group_by count), skipping the cluster-side aggregate
+    # (the gate's grouped count), skipping the cluster-side aggregate
     # exchange AND the separate count job the old gate paid on every
     # chain invocation. The gate condition (distinct surfaces <=
     # BOUNDS["surfaces"]) is unchanged; oversized corpora degrade
@@ -543,16 +543,14 @@ def canonicalize(mentions: DataFrame, cfg: PipelineConfig):
     srows = None
     tbl = gate.collect_raw(mentions.select("label", "norm"))
     if tbl is not None:
-        agg = tbl.group_by(["label", "norm"]).aggregate([([], "count_all")])
+        # grouped under the collect cap, not the surface bound: the
+        # count also sizes the distributed plan past the check
+        agg = gate.group_table(
+            tbl, ["label", "norm"], [([], "count_all")], gate.RAW_COLLECT_CAP
+        )
         n_surfaces = agg.num_rows
         if n_surfaces <= gate.bound("surfaces"):
-            srows = sorted(
-                zip(
-                    agg.column("label").to_pylist(),
-                    agg.column("norm").to_pylist(),
-                    agg.column("count_all").to_pylist(),
-                )
-            )
+            srows = gate.rows(agg)  # sorted by (label, norm)
     else:
         # surfaces is the root of every downstream branch (edges, CC
         # nodes, cluster join) — persist the tiny post-agg table, not

@@ -4,6 +4,9 @@ All scale-sensitive knobs live here so bench/tests/production share one
 tuned profile: AQE (runtime coalescing + skew-join splitting), Arrow
 vectorized UDF transfer, and a shuffle-partition default sized for the
 local harness (override via env or PipelineConfig.extra_spark_conf).
+No setting serves the driver gate's collects: each one reads the Arrow
+stream of a plain toArrow and stops at its row cap (gate.py), so none
+takes a limit() and none depends on how Spark schedules one.
 """
 
 from __future__ import annotations
@@ -31,16 +34,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # the driver gate's limit-mode collects (gate.py: computed
-        # per-row frames and degraded-tier aggregates) are
-        # limit(bound+1).toArrow(); executeTake's default first batch of
-        # 1 partition serializes the upstream into incremental
-        # single-task waves — start at the session's parallelism instead
-        # (r7, guide §1.2/§5: the limit is a memory bound, not a
-        # work-reduction hint, for these collects). Raw-mode collects
-        # take no limit. The setting stays until an early-abort raw
-        # collect replaces the limit mode.
-        .config("spark.sql.limit.initialNumPartitions", str(shuffle))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

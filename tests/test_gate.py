@@ -104,26 +104,31 @@ def _tier(df):
     return "driver" if _leaf_names(df) <= {"LocalRelation"} else "distributed"
 
 
-@pytest.fixture
-def collects(monkeypatch):
-    """Spy on the bounded collect primitives: the raw Arrow collect
-    (every raw-tier collect, snapshot included) and the degraded tier's
-    distinct collect."""
+def _spy_collects(monkeypatch, calls):
+    """Count the gate's one collect primitive into `calls` by mode:
+    "raw" when collect_raw called it (every raw-tier collect, snapshot
+    included), else "degraded" (the degraded tier's distinct collect,
+    or a computed frame's)."""
+    import sys
+
     from gliner_spark import gate
 
+    collect = gate._arrow_collect_bounded
+
+    def spy(*a, **k):
+        raw = sys._getframe(1).f_code.co_name == "collect_raw"
+        calls["raw" if raw else "degraded"] += 1
+        return collect(*a, **k)
+
+    monkeypatch.setattr(gate, "_arrow_collect_bounded", spy)
+
+
+@pytest.fixture
+def collects(monkeypatch):
+    """Spy on the bounded collect primitive: raw-mode collects and the
+    degraded tier's distinct collects, counted apart."""
     calls = {"raw": 0, "degraded": 0}
-    raw, degraded = gate._arrow_collect_bounded, gate._collect_limited
-
-    def spy_raw(*a, **k):
-        calls["raw"] += 1
-        return raw(*a, **k)
-
-    def spy_degraded(*a, **k):
-        calls["degraded"] += 1
-        return degraded(*a, **k)
-
-    monkeypatch.setattr(gate, "_arrow_collect_bounded", spy_raw)
-    monkeypatch.setattr(gate, "_collect_limited", spy_degraded)
+    _spy_collects(monkeypatch, calls)
     return calls
 
 
@@ -413,31 +418,28 @@ def test_degraded_grouped_tier_matches_raw_tier(
     spark, triples_path, monkeypatch, name
 ):
     """Past RAW_COLLECT_CAP every grouped site takes the degraded tier
-    (Spark aggregate, then a limit-mode collect) and returns the raw
-    tier's rows, sorted, and its op the raw tier's output."""
+    (Spark aggregate, then a collect capped at the bound) and returns
+    the raw tier's rows, sorted, and its op the raw tier's output."""
     from gliner_spark import gate
 
     t = _read(spark, triples_path).repartition(4)
-    seen = {"rows": [], "limited": 0}
-    group, limited = gate.group, gate._collect_limited
+    seen = {"rows": []}
+    calls = {"raw": 0, "degraded": 0}
+    group = gate.group
 
     def spy_group(*a, **k):
         tbl = group(*a, **k)
         seen["rows"].append(None if tbl is None else gate.rows(tbl))
         return tbl
 
-    def spy_limited(*a, **k):
-        seen["limited"] += 1
-        return limited(*a, **k)
-
     monkeypatch.setattr(gate, "group", spy_group)
-    monkeypatch.setattr(gate, "_collect_limited", spy_limited)
+    _spy_collects(monkeypatch, calls)
 
     def run():
-        seen["rows"], seen["limited"] = [], 0
+        seen["rows"], calls["degraded"] = [], 0
         out = _grouped_site(name, t)
         assert _tier(out) == "driver"
-        return seen["rows"], seen["limited"], _rows(out)
+        return seen["rows"], calls["degraded"], _rows(out)
 
     raw_rows, raw_limited, raw_out = run()
     assert raw_limited == 0
@@ -457,6 +459,172 @@ def test_degraded_grouped_tier_matches_raw_tier(
     assert deg_out == raw_out
 
 
+# --------------------------------------- capped collect, coded grouping
+
+AGGS = [([], "count_all"), ("v", "sum"), ("v", "min"), ("v", "max"),
+        ("t", "count_distinct"), ("t", "min"), ("t", "max"),
+        ("s1", "count_distinct")]
+
+
+def _chunked(rng, values, typ):
+    """`values` as a chunked array cut at random points."""
+    import pyarrow as pa
+
+    cuts = sorted(rng.randrange(len(values) + 1) for _ in range(2))
+    bounds = [0] + cuts + [len(values)]
+    return pa.chunked_array(
+        [values[a:b] for a, b in zip(bounds, bounds[1:])], typ
+    )
+
+
+def _random_table(rng, n):
+    """A multi-chunk table: string keys s1 / s2 and an int64 key i (all
+    with NULLs), an int64 value v and a non-key string t."""
+    import pyarrow as pa
+
+    words = [f"w{i:02d}" for i in range(12)] + ["", "W", "é", "wé"]
+
+    def draw(make):
+        return [None if rng.random() < 0.1 else make() for _ in range(n)]
+
+    schema = pa.schema([
+        pa.field("s1", pa.string(), metadata={"origin": "spark"}),
+        pa.field("s2", pa.string()),
+        pa.field("i", pa.int64()),
+        pa.field("v", pa.int64()),
+        pa.field("t", pa.string()),
+    ])
+    cols = [
+        draw(lambda: rng.choice(words)),
+        draw(lambda: rng.choice(words[:4])),
+        draw(lambda: rng.randrange(-3, 4)),
+        draw(lambda: rng.randrange(-100, 100)),
+        draw(lambda: rng.choice(words)),
+    ]
+    return pa.Table.from_arrays(
+        [_chunked(rng, c, f.type) for c, f in zip(cols, schema)],
+        schema=schema,
+    )
+
+
+def _py_grouped(table, keys, aggs):
+    """The grouping in plain python: one dict per group, sorted by the
+    keys with NULL last; aggregates skip NULLs (count_all counts rows)."""
+    from gliner_spark.gate import _agg_name
+
+    groups = {}
+    for row in table.to_pylist():
+        groups.setdefault(tuple(row[k] for k in keys), []).append(row)
+
+    def agg(rows, col, fn):
+        if fn == "count_all":
+            return len(rows)
+        vals = [r[col] for r in rows if r[col] is not None]
+        if fn == "count_distinct":
+            return len(set(vals))
+        return {"sum": sum, "min": min, "max": max}[fn](vals) if vals else None
+
+    out = [
+        {**dict(zip(keys, key)),
+         **{_agg_name(c, fn): agg(rows, c, fn) for c, fn in aggs}}
+        for key, rows in groups.items()
+    ]
+    return sorted(out, key=lambda r: [(r[k] is None, r[k]) for k in keys])
+
+
+@pytest.mark.parametrize("keys", (
+    ["s1"], ["s1", "s2"], ["i", "s1"], ["s2", "i"], ["i"],
+))
+@pytest.mark.parametrize("n", (0, 1, 57, 400))
+def test_coded_grouping_equals_string_grouping(keys, n):
+    """group_table groups on codes; its output is the string group_by +
+    sort_by's, schema and rows, on every aggregate (one over a non-key
+    string, one over a key), and None past the bound. Keys of mixed
+    types with NULLs are misgrouped by pyarrow 16's multi-key group_by
+    itself, so there the rows are checked against plain python only."""
+    from gliner_spark import gate
+
+    for seed in range(4):
+        rng = random.Random(seed * 1000 + n)
+        table = _random_table(rng, n)
+        want = table.group_by(keys).aggregate(AGGS)
+        want = want.select(
+            keys + [gate._agg_name(c, fn) for c, fn in AGGS]
+        ).sort_by([(k, "ascending") for k in keys])
+        n_groups = len(_py_grouped(table, keys, AGGS))
+        got = gate.group_table(table, keys, AGGS, n_groups)
+        assert got.schema.equals(want.schema, check_metadata=True)
+        assert got.to_pylist() == _py_grouped(table, keys, AGGS)
+        if len({table.schema.field(k).type for k in keys}) == 1:
+            assert got.to_pylist() == want.to_pylist()
+        if n_groups:
+            assert gate.group_table(table, keys, AGGS, n_groups - 1) is None
+
+
+def test_capped_collect_stops_early(spark, monkeypatch):
+    """A frame of 3x the cap whose leaf stats are unknown (RDD-backed,
+    so the stats probe lets it through) stops its collect past the cap:
+    at most cap + one Arrow batch of rows reach Python, and the job is
+    cancelled, not waited for (its last partitions would sleep for a
+    minute), so none is left running. The session's next collect
+    succeeds."""
+    import time
+
+    import pyarrow as pa
+
+    from gliner_spark import gate
+
+    cap = 5000
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    sc = spark.sparkContext
+
+    # partitions 0-3 hold twice the cap; the padding makes their rows
+    # outgrow the JVM's buffer on the stream, so they reach Python while
+    # partitions 4-5 sleep
+    def slow_tail(i, it):
+        import time
+
+        if i >= 4:
+            time.sleep(60)
+        return ((x, "p" * 100) for x in it)
+
+    df = spark.createDataFrame(
+        sc.parallelize(range(3 * cap), 6).mapPartitionsWithIndex(slow_tail),
+        "x long, pad string",
+    )
+    assert not gate._stats_skip(df)
+    seen = []
+    load = gate._load_from_socket
+
+    def spy(*a, **k):
+        for item in load(*a, **k):
+            if isinstance(item, pa.RecordBatch):
+                seen.append(item.num_rows)
+            yield item
+
+    monkeypatch.setattr(gate, "_load_from_socket", spy)
+    monkeypatch.setattr(gate, "RAW_COLLECT_CAP", cap)
+    start = time.monotonic()
+    assert gate.collect_raw(df) is None
+    assert time.monotonic() - start < 30
+    assert cap < sum(seen) <= cap + batch
+    deadline = time.monotonic() + 30
+    while sc.statusTracker().getActiveJobsIds() and (
+        time.monotonic() < deadline
+    ):
+        time.sleep(0.1)
+    assert sc.statusTracker().getActiveJobsIds() == []
+
+    fast = spark.createDataFrame(
+        sc.parallelize(range(3 * cap), 6).map(lambda x: (x,)), "x long"
+    )
+    monkeypatch.setattr(gate, "RAW_COLLECT_CAP", 3 * cap)
+    tbl = gate.collect_raw(fast)
+    assert tbl.column("x").to_pylist() == list(range(3 * cap))
+    empty = gate.collect_raw(fast.limit(0))
+    assert empty.num_rows == 0 and empty.schema == tbl.schema
+
+
 # ------------------------------------------------------------ one module
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "gliner_spark"
@@ -465,6 +633,7 @@ PKG = pathlib.Path(__file__).resolve().parent.parent / "gliner_spark"
 def test_collects_stay_in_the_gate_module():
     bad = re.compile(
         r"\.toArrow\(|_arrow_collect_bounded|\.limit\([^)]*\+\s*1\s*\)"
+        r"|\.group_by\("
         r"|def _(collected_\w+|degraded_dedup|sorted_distinct|local_df)\b"
     )
     hits = [
