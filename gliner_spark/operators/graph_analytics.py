@@ -97,17 +97,70 @@ def _adj_from_und(rows):
     return adj
 
 
-def _driver_seeds(adj, n_seeds: int):
-    """The n_seeds nodes with the smallest (fold_hash(id), id) — the same
-    deterministic hash-scrambled sample the distributed TakeOrdered
-    picks."""
+def _driver_seeds(nodes, n_seeds: int):
+    """Positions in `nodes` of the n_seeds nodes with the smallest
+    (fold_hash(id), id) — the same deterministic hash-scrambled sample the
+    distributed TakeOrdered picks."""
     import heapq
 
-    nodes_l = list(adj)
-    hs = _fold_hash_many(nodes_l).tolist()
+    hs = _fold_hash_many(nodes).tolist()
     return [
-        n for _h, n in heapq.nsmallest(n_seeds, zip(hs, nodes_l))
+        i for _h, _n, i in heapq.nsmallest(
+            n_seeds, zip(hs, nodes, range(len(nodes)))
+        )
     ]
+
+
+def _csr(pairs, directed: bool):
+    """CSR adjacency over collected (u, v) edge pairs: (nodes, indptr,
+    indices), node i's neighbours being indices[indptr[i]:indptr[i + 1]];
+    an undirected pair is stored in both directions. Duplicate pairs are
+    harmless to the BFS below (it dedups each level)."""
+    import numpy as np
+
+    idx: dict = {}
+    ends = np.fromiter(
+        (idx.setdefault(x, len(idx)) for u, v in pairs for x in (u, v)),
+        dtype=np.int64,
+    )
+    src, dst = ends[0::2], ends[1::2]
+    if not directed:
+        src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
+    indptr = np.zeros(len(idx) + 1, dtype=np.int64)
+    np.cumsum(np.bincount(src, minlength=len(idx)), out=indptr[1:])
+    return list(idx), indptr, dst[np.argsort(src, kind="stable")]
+
+
+def _expand(indptr, indices, front):
+    """Every CSR edge leaving the nodes `front`: (src, nbr) arrays."""
+    import numpy as np
+
+    cnt = indptr[front + 1] - indptr[front]
+    start = indptr[front] - (np.cumsum(cnt) - cnt)
+    pos = np.arange(int(cnt.sum())) + np.repeat(start, cnt)
+    return np.repeat(front, cnt), indices[pos]
+
+
+def _bfs(indptr, indices, sources, depth: int):
+    """Multi-source level-synchronous BFS over a CSR adjacency, at most
+    `depth` hops: (dist, levels) with dist[i] the first-reach hop count of
+    node i (-1 unreached) and levels[d] the nodes at distance d.
+    First reach == min distance, so the result is order-independent — the
+    driver replay of the distributed tagged-min level plan."""
+    import numpy as np
+
+    dist = np.full(len(indptr) - 1, -1, dtype=np.int32)
+    front = np.asarray(sources, dtype=np.int64)
+    dist[front] = 0
+    levels = [front]
+    for d in range(1, depth + 1):
+        _src, nbr = _expand(indptr, indices, front)
+        front = np.unique(nbr[dist[nbr] < 0])
+        if front.size == 0:
+            break
+        dist[front] = d
+        levels.append(front)
+    return dist, levels
 
 
 def _duckdb_round6(x):
@@ -649,6 +702,14 @@ def undirected_edges(triples: DataFrame) -> DataFrame:
     return undirected_edges_raw(triples).distinct()
 
 
+def symmetric_edges(und: DataFrame) -> DataFrame:
+    """(node, nbr) rows of an undirected (a, b) edge frame, each edge once
+    in each direction — the neighbour list the undirected walks join."""
+    return und.select(
+        F.col("a").alias("node"), F.col("b").alias("nbr")
+    ).union(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
+
+
 def triangle_counts(
     triples: DataFrame,
     max_fanout: int = TWO_HOP_MAX_FANOUT,
@@ -903,9 +964,7 @@ def node_similarity(
             audits=[audit],
         )
     und = undirected_edges(triples).persist()
-    sym = und.select(
-        F.col("a").alias("node"), F.col("b").alias("nbr")
-    ).union(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
+    sym = symmetric_edges(und)
     deg = sym.groupBy("node").agg(
         F.count(F.lit(1)).cast("long").alias("k")
     )
@@ -1121,9 +1180,7 @@ def link_prediction(
             audits=[audit],
         )
     und = undirected_edges(triples).persist()
-    sym = und.select(
-        F.col("a").alias("node"), F.col("b").alias("nbr")
-    ).union(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
+    sym = symmetric_edges(und)
     w = Window.partitionBy("node")
     capped, audit = capped_filter(
         sym.withColumn("fan", F.count(F.lit(1)).over(w)),
@@ -1168,31 +1225,45 @@ def link_prediction(
 BFS_DEPTH = 4
 
 
-def _bfs_dist_driver(edge_pairs, seed_prefix: str, depth: int) -> dict:
-    """Multi-source directed BFS replay over collected distinct
-    (src, dst) edge pairs: {node: first-reach distance} for every node
-    within `depth` hops of any seed (id startswith seed_prefix). The
-    level-order assignment is order-independent (first reach == min
-    dist). Shared by bfs_distances and egonet."""
-    adj_d: dict = {}
-    node_set = set()
-    for r in edge_pairs:
-        adj_d.setdefault(r[0], []).append(r[1])
-        node_set.add(r[0])
-        node_set.add(r[1])
-    dist_d = {n: 0 for n in node_set if n.startswith(seed_prefix)}
-    frontier = list(dist_d)
+def _prefix_bfs(edge_pairs, seed_prefix: str, depth: int) -> dict:
+    """{node: first-reach distance} of the directed BFS over collected
+    (src, dst) pairs from every node whose id starts with seed_prefix —
+    the driver tier of bfs_distances and egonet."""
+    import numpy as np
+
+    nodes, indptr, indices = _csr(edge_pairs, directed=True)
+    sources = [i for i, x in enumerate(nodes) if x.startswith(seed_prefix)]
+    dist, _levels = _bfs(indptr, indices, sources, depth)
+    return {nodes[i]: int(dist[i]) for i in np.flatnonzero(dist >= 0)}
+
+
+def _level_plan(lev0: DataFrame, edges: DataFrame, depth: int,
+                key=()) -> DataFrame:
+    """The distributed multi-source BFS as ONE lazy fixed-depth plan:
+    level d is level d-1 expanded one hop over the (node, nbr) `edges`
+    (join + distinct), each level is tagged with its d, and the result
+    (*key, node, dist) keeps the min tag per (*key, node) — the
+    first-reach BFS distance, since the shortest walk is the shortest
+    path. Levels are not pruned of visited nodes; min keeps the answer
+    exact, and levels past the true reach are empty and add nothing.
+    `key` columns ride every level, so one plan runs one BFS per key
+    value (the seed). No level is checkpointed: the repeated level
+    subtrees share their shuffles via ReusedExchange, and the caller's
+    action runs the whole plan."""
+    cols = [*key, "node"]
+    lev = lev0
+    parts = [lev.select(*cols, F.lit(0).cast("long").alias("dist"))]
     for d in range(1, depth + 1):
-        nxt = []
-        for u in frontier:
-            for v in adj_d.get(u, ()):
-                if v not in dist_d:
-                    dist_d[v] = d
-                    nxt.append(v)
-        if not nxt:
-            break
-        frontier = nxt
-    return dist_d
+        lev = (
+            lev.join(edges, "node")
+            .select(*key, F.col("nbr").alias("node"))
+            .distinct()
+        )
+        parts.append(lev.select(*cols, F.lit(d).cast("long").alias("dist")))
+    allp = parts[0]
+    for p in parts[1:]:
+        allp = allp.union(p)
+    return allp.groupBy(*cols).agg(F.min("dist").cast("long").alias("dist"))
 
 
 def bfs_distances(
@@ -1204,22 +1275,20 @@ def bfs_distances(
     `seed_prefix`) within `depth` hops over the distinct edge set — the
     multi-hop neighborhood query ("everything within 4 hops of a person")
     that KG consumers run for subgraph extraction and provenance
-    expansion. Level-synchronous BFS: each round expands the current
-    frontier one hop and keeps only NEWLY reached nodes (anti-join
-    against everything already distanced), so every node is assigned its
-    first = minimum distance exactly once; pure integers, no tie-breaks.
+    expansion. Level-synchronous multi-source BFS (_level_plan over the
+    directed edges, no key): every node gets its first = minimum
+    distance; pure integers, no tie-breaks.
 
-    Early exit on an empty frontier equals running all `depth` rounds
-    (later rounds are no-ops), so the kg_bfs oracle's fixed unrolled
-    levels replay this bit-for-bit. Scale shape: one equi-join +
-    distinct + anti-join per round over the localCheckpointed edge set
-    (frontiers shrink after the expansion wave); depth is a constant, so
-    the plan is a fixed pipeline, not a data-dependent recursion."""
+    Empty levels past the true reach add nothing, so the kg_bfs oracle's
+    fixed unrolled levels replay this bit-for-bit. Scale shape: one
+    equi-join + distinct per level over the localCheckpointed edge set,
+    then one grouped min; depth is a constant, so the plan is a fixed
+    pipeline, not a data-dependent recursion."""
     erows = edge_rows(triples, "directed")
     if erows is not None:
         # driver path (BOUNDS["edges"] gate): multi-source
         # directed BFS replay over one bounded edge collect
-        dist_d = _bfs_dist_driver(erows, seed_prefix, depth)
+        dist_d = _prefix_bfs(erows, seed_prefix, depth)
         return local_result(
             triples, list(dist_d.items()), "node string, dist long",
             ["dist", "node"],
@@ -1230,30 +1299,15 @@ def bfs_distances(
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    # r7 (guide §2.4): one lazy fixed-depth plan instead of a per-level
-    # localCheckpoint + anti-join + empty-frontier probe (4 jobs/level):
-    # level d = level d-1 expanded one directed hop (join + distinct),
-    # tagged with d; dist = min d per node == first-reach BFS distance
-    # (min walk length is the shortest-path length; levels past the true
-    # reach are empty and contribute nothing, like the old early exit).
     lev0 = (
         nodes.filter(F.col("node").startswith(seed_prefix))
         .select("node")
         .localCheckpoint()
     )
-    lev = lev0
-    parts = [lev0.select("node", F.lit(0).cast("long").alias("dist"))]
-    for d in range(1, depth + 1):
-        lev = (
-            lev.join(e, lev["node"] == e["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-        )
-        parts.append(lev.select("node", F.lit(d).cast("long").alias("dist")))
-    allp = parts[0]
-    for p in parts[1:]:
-        allp = allp.union(p)
-    dist = allp.groupBy("node").agg(F.min("dist").cast("long").alias("dist"))
+    dist = _level_plan(
+        lev0, e.select(F.col("src").alias("node"), F.col("dst").alias("nbr")),
+        depth,
+    )
     # e / seed-level checkpoints ride the output as releasable handles
     # (ADVICE r6: loop operators should expose their surviving
     # checkpoints to release_caches instead of pinning blocks until GC)
@@ -1334,9 +1388,7 @@ def lpa_communities(
                 ["entity"] if sort else (),
             )
         und = own_und = undirected_edges(triples).localCheckpoint()
-    sym = und.select(
-        F.col("a").alias("node"), F.col("b").alias("nbr")
-    ).union(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
+    sym = symmetric_edges(und)
     labels = (
         sym.select("node")
         .distinct()
@@ -1995,9 +2047,7 @@ def wl_colors(
             "entity string, wl_color long, class_size long", ["entity"],
         )
     und = undirected_edges(triples).localCheckpoint()
-    sym = und.select(
-        F.col("a").alias("node"), F.col("b").alias("nbr")
-    ).union(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
+    sym = symmetric_edges(und)
     colors = (
         sym.select("node")
         .distinct()
@@ -2179,76 +2229,30 @@ def _tri_driver(eset: set, cap: int):
     return counts, audit
 
 
-def _seed_bfs_matrix(adj, seeds, depth: int):
-    """Driver replay of _seed_bfs: (nodes, D) with D[i, j] the
-    first-reach distance of nodes[j] from seeds[i] (-1 unreached) — a
-    CSR numpy level-synchronous BFS (first reach == min dist is
-    order-independent). It replaced a per-node python loop that was
-    ~0.8 s of every seed-BFS-consuming driver path at sf0.1."""
+def _seed_bfs_matrix(indptr, indices, seeds, depth: int):
+    """Driver replay of _seed_bfs: D[i, j] the first-reach distance of
+    node j from seeds[i] (-1 unreached), one _bfs per seed."""
     import numpy as np
 
-    nodes = list(adj)
-    idx = {n: i for i, n in enumerate(nodes)}
-    n = len(nodes)
-    deg = np.fromiter(
-        (len(adj[x]) for x in nodes), dtype=np.int64, count=n
-    )
-    indptr = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(deg, out=indptr[1:])
-    indices = np.fromiter(
-        (idx[v] for x in nodes for v in adj[x]),
-        dtype=np.int64,
-        count=int(indptr[-1]),
-    )
-    D = np.full((len(seeds), n), -1, dtype=np.int32)
+    D = np.full((len(seeds), len(indptr) - 1), -1, dtype=np.int32)
     for i, s in enumerate(seeds):
-        dist = D[i]
-        si = idx[s]
-        dist[si] = 0
-        front = np.array([si], dtype=np.int64)
-        for d in range(1, depth + 1):
-            cnt = indptr[front + 1] - indptr[front]
-            total = int(cnt.sum())
-            if total == 0:
-                break
-            offsets = np.repeat(indptr[front], cnt)
-            within = np.arange(total) - np.repeat(
-                np.cumsum(cnt) - cnt, cnt
-            )
-            nbrs = indices[offsets + within]
-            nbrs = nbrs[dist[nbrs] < 0]
-            if nbrs.size == 0:
-                break
-            nbrs = np.unique(nbrs)
-            dist[nbrs] = d
-            front = nbrs
-    return nodes, D
+        D[i] = _bfs(indptr, indices, [s], depth)[0]
+    return D
 
 
-def _seed_bfs(triples: DataFrame, n_seeds: int, depth: int) -> DataFrame:
-    """Shared multi-source BFS over the undirected entity graph:
-    (seed, node, dist) for the n_seeds hash-chosen seeds, dist <= depth,
-    first reach = min dist. Used by harmonic_centrality and
-    distance_profile (stress_centrality carries path counts, so it keeps
-    its own Brandes variant).
-
-    r7 (guide §2.4): the per-level localCheckpoint + anti-join +
-    empty-frontier-probe loop (4 jobs per level) is replaced by ONE lazy
-    fixed-depth plan: level d's reachable set is the previous level
-    expanded one hop (join + distinct), every level is tagged with its
-    d, and dist = min d per (seed, node) — identical to first-reach BFS
-    (min walk length == shortest-path length), with empty levels beyond
-    the true eccentricity contributing nothing, exactly like the old
-    early exit. 3 jobs total (und + seeds checkpoints + the caller's
-    action); the repeated level subtrees share their shuffles via
-    ReusedExchange. The returned frame is localCheckpointed — callers
-    attach it to their output as a releasable cache handle."""
+def _seed_bfs(triples: DataFrame, n_seeds: int, depth: int):
+    """Shared seed-keyed BFS over the undirected entity graph
+    (harmonic_centrality, distance_profile, stress_centrality):
+    (dist, sym, und). dist is the localCheckpointed (seed, node, dist)
+    frame of the n_seeds hash-chosen seeds, dist <= depth (_level_plan
+    keyed on seed); sym is the symmetric edge list it walked. und, the
+    checkpoint sym reads, stays checkpointed for stress's sigma and g
+    chains: the caller unpersists it or attaches it to its output, and
+    attaches dist as a releasable cache handle."""
     from gliner_spark.functions.text import fold_hash
 
     und = undirected_edges(triples).localCheckpoint()
-    sym = und.select(
-        F.col("a").alias("node"), F.col("b").alias("nbr")
-    ).union(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
+    sym = symmetric_edges(und)
     seeds = (
         sym.select("node")
         .distinct()
@@ -2258,28 +2262,12 @@ def _seed_bfs(triples: DataFrame, n_seeds: int, depth: int) -> DataFrame:
         .select(F.col("node").alias("seed"))
         .localCheckpoint()
     )
-    lev = seeds.select("seed", F.col("seed").alias("node"))
-    parts = [lev.select("seed", "node", F.lit(0).cast("long").alias("dist"))]
-    for d in range(1, depth + 1):
-        lev = (
-            lev.join(sym, "node")
-            .select("seed", F.col("nbr").alias("node"))
-            .distinct()
-        )
-        parts.append(
-            lev.select("seed", "node", F.lit(d).cast("long").alias("dist"))
-        )
-    allp = parts[0]
-    for p in parts[1:]:
-        allp = allp.union(p)
-    dist = (
-        allp.groupBy("seed", "node")
-        .agg(F.min("dist").cast("long").alias("dist"))
-        .localCheckpoint()
-    )
+    dist = _level_plan(
+        seeds.select("seed", F.col("seed").alias("node")), sym, depth,
+        key=("seed",),
+    ).localCheckpoint()
     seeds.unpersist()
-    und.unpersist()
-    return dist
+    return dist, sym, und
 
 
 def harmonic_centrality(
@@ -2299,17 +2287,15 @@ def harmonic_centrality(
     Seeds are the n_seeds entities with the smallest (fold_hash(id), id)
     — a deterministic hash-scrambled sample, no RNG — and distances come
     from one multi-source level-synchronous BFS carrying (seed, node)
-    pairs: each round expands the frontier one undirected hop, distinct,
-    anti-joined against already-distanced pairs (first reach = min
-    dist), exactly bfs_distances' loop lifted to a seed column. Entities
-    no seed reaches within `depth` are absent (estimated centrality 0).
+    pairs (_seed_bfs: bfs_distances' level plan keyed on the seed, over
+    undirected hops; first reach = min dist). Entities no seed reaches
+    within `depth` are absent (estimated centrality 0).
 
-    Scale shape: BFS state is at most n_seeds x |V| rows with n_seeds a
-    small constant — linear in the graph, never quadratic; one
-    equi-join + distinct + anti-join per round over the
-    localCheckpointed symmetric edge list, then one grouped integer
-    aggregate. The seed pick is a TakeOrdered top-k (no global sort
-    materialized)."""
+    Scale shape: BFS state is at most n_seeds x |V| rows per level with
+    n_seeds a small constant — linear in the graph, never quadratic; one
+    equi-join + distinct per level over the localCheckpointed symmetric
+    edge list, one grouped min, then one grouped integer aggregate. The
+    seed pick is a TakeOrdered top-k (no global sort materialized)."""
     rows = edge_rows(triples, "undirected")
     if rows is not None:
         # driver path (BOUNDS["edges"] gate): one bounded collect
@@ -2318,9 +2304,10 @@ def harmonic_centrality(
         # nonneg), parity-tested against the distributed plan below
         import numpy as np
 
-        adj = _adj_from_und(rows)
-        seeds = _driver_seeds(adj, n_seeds)
-        nodes_l, D = _seed_bfs_matrix(adj, seeds, depth)
+        nodes_l, indptr, indices = _csr(rows, directed=False)
+        D = _seed_bfs_matrix(
+            indptr, indices, _driver_seeds(nodes_l, n_seeds), depth
+        )
         pos = D > 0
         harm = (
             (HC_UNIT // np.where(pos, D, 1).astype(np.int64)) * pos
@@ -2336,7 +2323,8 @@ def harmonic_centrality(
             "entity string, harmonic long, n_seeds_reached long",
             [F.desc("harmonic"), "entity"],
         )
-    dist = _seed_bfs(triples, n_seeds, depth)
+    dist, _sym, und = _seed_bfs(triples, n_seeds, depth)
+    und.unpersist()
     out = (
         dist.filter(F.col("dist") > 0)
         .groupBy("node")
@@ -2571,9 +2559,7 @@ def square_counts(
             "entity string, n_squares long", ["entity"], audits=[audit],
         )
     und = undirected_edges(triples)
-    sym = und.select(
-        F.col("a").alias("node"), F.col("b").alias("nbr")
-    ).union(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
+    sym = symmetric_edges(und)
     w = Window.partitionBy("node")
     capped, audit = capped_filter(
         sym.withColumn("fan", F.count(F.lit(1)).over(w)),
@@ -2604,81 +2590,39 @@ STRESS_SEEDS = 8
 STRESS_DEPTH = 4
 
 
-def _stress_driver_np(adj, seeds, depth: int) -> dict:
-    """{node: [stress_sum, n_seeds_reached]} — per-seed two-phase
+def _stress_driver_np(indptr, indices, seeds, depth: int):
+    """(stress_sum, n_seeds_reached) per node — per-seed two-phase
     Brandes with integer path counts, the driver replay of
     stress_centrality's distributed plan (sigma = sum of level-(d-1)
     predecessor sigmas; g = 1 + sum of g over one-level-deeper
-    neighbors; through = sigma * (g - 1) for dist >= 1), over a CSR
-    adjacency with np.add.at accumulation — all int64 (sigma sums and
-    g sums are order-independent integer additions)."""
+    neighbors; through = sigma * (g - 1) for dist >= 1). Levels come
+    from _bfs; the shortest-path DAG edges (level d to level d + 1) from
+    one _expand per level, walked forward for sigma and backward for g
+    with np.add.at — all int64 (sigma sums and g sums are
+    order-independent integer additions)."""
     import numpy as np
 
-    nodes = list(adj)
-    idx = {n: i for i, n in enumerate(nodes)}
-    n = len(nodes)
-    deg = np.fromiter(
-        (len(adj[x]) for x in nodes), dtype=np.int64, count=n
-    )
-    indptr = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(deg, out=indptr[1:])
-    indices = np.fromiter(
-        (idx[v] for x in nodes for v in adj[x]),
-        dtype=np.int64,
-        count=int(indptr[-1]),
-    )
+    n = len(indptr) - 1
     stress_sum = np.zeros(n, dtype=np.int64)
     reach_cnt = np.zeros(n, dtype=np.int64)
     for s in seeds:
-        si = idx[s]
-        dist = np.full(n, -1, dtype=np.int32)
+        dist, levels = _bfs(indptr, indices, [s], depth)
+        dag = []
+        for d, lv in enumerate(levels[:-1]):
+            u, w = _expand(indptr, indices, lv)
+            down = dist[w] == d + 1
+            dag.append((u[down], w[down]))
         sigma = np.zeros(n, dtype=np.int64)
-        dist[si] = 0
-        sigma[si] = 1
-        levels = [np.array([si], dtype=np.int64)]
-        front = levels[0]
-        for d in range(1, depth + 1):
-            cnt = indptr[front + 1] - indptr[front]
-            total = int(cnt.sum())
-            if total == 0:
-                break
-            offsets = np.repeat(indptr[front], cnt)
-            within = np.arange(total) - np.repeat(
-                np.cumsum(cnt) - cnt, cnt
-            )
-            nbr = indices[offsets + within]
-            src_rep = np.repeat(front, cnt)
-            fresh = np.unique(nbr[dist[nbr] < 0])
-            if fresh.size == 0:
-                break
-            dist[fresh] = d
-            mask = dist[nbr] == d
-            np.add.at(sigma, nbr[mask], sigma[src_rep[mask]])
-            levels.append(fresh)
-            front = fresh
+        sigma[s] = 1
+        for u, w in dag:
+            np.add.at(sigma, w, sigma[u])
         g = np.ones(n, dtype=np.int64)
-        for li in range(len(levels) - 1, -1, -1):
-            lv = levels[li]
-            cnt = indptr[lv + 1] - indptr[lv]
-            total = int(cnt.sum())
-            if total == 0:
-                continue
-            offsets = np.repeat(indptr[lv], cnt)
-            within = np.arange(total) - np.repeat(
-                np.cumsum(cnt) - cnt, cnt
-            )
-            nbr = indices[offsets + within]
-            src_rep = np.repeat(lv, cnt)
-            mask = dist[nbr] == li + 1
-            np.add.at(g, src_rep[mask], g[nbr[mask]])
-        for li in range(1, len(levels)):
-            lv = levels[li]
+        for u, w in reversed(dag):
+            np.add.at(g, u, g[w])
+        for lv in levels[1:]:
             stress_sum[lv] += sigma[lv] * (g[lv] - 1)
             reach_cnt[lv] += 1
-    return {
-        nodes[i]: [int(stress_sum[i]), int(reach_cnt[i])]
-        for i in np.flatnonzero(reach_cnt)
-    }
+    return stress_sum, reach_cnt
 
 
 def stress_centrality(
@@ -2701,12 +2645,12 @@ def stress_centrality(
     communities has modest degree but enormous through-traffic.
 
     Two-phase Brandes shape, all joins + grouped integer sums:
-    - forward: level-synchronous multi-source BFS carrying sigma =
-      #shortest paths from the seed (per level: expand the previous
-      frontier, SUM predecessor sigmas per (seed, node), anti-join
-      against already-reached pairs — first reach = shortest, and
-      summing across the whole previous level before the anti-join
-      counts every shortest predecessor exactly once);
+    - forward: the shared seed BFS (_seed_bfs) gives each (seed, node)
+      its level; sigma = #shortest paths from the seed, level by
+      level: per level, SUM the previous level's sigmas over its edges
+      per (seed, node) and keep the pairs of this level — first reach
+      = shortest, so summing across the whole previous level counts
+      every shortest predecessor exactly once;
     - backward: g(v) = 1 + sum of g over the seed's shortest-path-DAG
       successors (a node w one level deeper with an edge v-w), computed
       deepest-level-up — g counts the shortest continuations below v,
@@ -2719,72 +2663,42 @@ def stress_centrality(
     branching ~180; graphs hotter than that should drop `depth` (the
     estimate is depth-bounded by contract, same as harmonic/BFS).
 
-    Scale shape: state is at most n_seeds x |V| rows per direction
-    (n_seeds a small constant); per round one equi-join against the
-    localCheckpointed symmetric edge list + one grouped sum; level
-    frames are checkpointed (the backward pass re-reads each exactly
-    once, and the loop stays flat)."""
-    from gliner_spark.functions.text import fold_hash
-
+    Scale shape: state is at most n_seeds x |V| rows per level
+    (n_seeds a small constant); the distance frame is checkpointed once,
+    and per level each phase does one equi-join against the
+    localCheckpointed symmetric edge list + one grouped sum."""
     rows = edge_rows(triples, "undirected")
     if rows is not None:
         # driver path (BOUNDS["edges"] gate): pure-integer Brandes
         # replay over the undirected edge view (_stress_driver_np)
-        adj = _adj_from_und(rows)
-        seeds = _driver_seeds(adj, n_seeds)
-        st = _stress_driver_np(adj, seeds, depth)
+        import numpy as np
+
+        nodes_l, indptr, indices = _csr(rows, directed=False)
+        st, reached = _stress_driver_np(
+            indptr, indices, _driver_seeds(nodes_l, n_seeds), depth
+        )
         return local_result(
-            triples, [(n, v[0], v[1]) for n, v in st.items()],
+            triples,
+            [
+                (nodes_l[i], int(st[i]), int(reached[i]))
+                for i in np.flatnonzero(reached)
+            ],
             "entity string, stress long, n_seeds_reached long",
             [F.desc("stress"), "entity"],
         )
-    und = undirected_edges(triples).localCheckpoint()
-    sym = und.select(
-        F.col("a").alias("node"), F.col("b").alias("nbr")
-    ).union(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-    seeds = (
-        sym.select("node")
-        .distinct()
-        .withColumn("h", fold_hash("node"))
-        .orderBy("h", "node")
-        .limit(n_seeds)
-        .select(F.col("node").alias("seed"))
-        .localCheckpoint()
-    )
-    # r7 (guide §2.4): ONE checkpointed distance frame from the lazy
-    # tagged-min BFS (min walk length == shortest distance; the same
-    # reformulation as _seed_bfs), then the sigma and g chains are built
-    # LAZILY over dist's per-level filters — level sets are cheap scans
-    # of the checkpoint, every chain step references its predecessor
-    # once, and one final action executes the whole two-phase Brandes
-    # instead of ~4 jobs per level.
-    lev = seeds.select("seed", F.col("seed").alias("node"))
-    parts = [lev.select("seed", "node", F.lit(0).cast("long").alias("dist"))]
-    for d in range(1, depth + 1):
-        lev = (
-            lev.join(sym, "node")
-            .select("seed", F.col("nbr").alias("node"))
-            .distinct()
-        )
-        parts.append(
-            lev.select("seed", "node", F.lit(d).cast("long").alias("dist"))
-        )
-    allp = parts[0]
-    for p in parts[1:]:
-        allp = allp.union(p)
-    dist = (
-        allp.groupBy("seed", "node")
-        .agg(F.min("dist").cast("long").alias("dist"))
-        .localCheckpoint()
-    )
+    # ONE checkpointed distance frame from the shared seed BFS, then the
+    # sigma and g chains are built LAZILY over dist's per-level filters —
+    # level sets are cheap scans of the checkpoint, every chain step
+    # references its predecessor once, and one final action executes the
+    # whole two-phase Brandes instead of ~4 jobs per level.
+    dist, sym, und = _seed_bfs(triples, n_seeds, depth)
     levels = [
         dist.filter(F.col("dist") == d).select("seed", "node")
         for d in range(depth + 1)
     ]
     # forward sigma: sigma(level d) = per-(seed, node) sum of level d-1
     # predecessor sigmas over the shortest-path DAG (the inner join with
-    # level d replaces the old anti-join-vs-visited: both keep exactly
-    # the first-reached pairs)
+    # level d keeps exactly the first-reached pairs)
     sig = [
         levels[0].select("seed", "node", F.lit(1).cast("long").alias("sigma"))
     ]
@@ -2797,8 +2711,7 @@ def stress_centrality(
         )
     # backward accumulation, deepest level up: g = 1 + sum of successor
     # g along the shortest-path DAG (edge + one level deeper); levels
-    # past the true reach are empty frames and contribute nothing,
-    # exactly like the old early exit
+    # past the true reach are empty frames and contribute nothing
     per_level_g = {
         depth: levels[depth].select(
             "seed", "node", F.lit(1).cast("long").alias("g")
@@ -2845,7 +2758,7 @@ def stress_centrality(
         .select(F.col("node").alias("entity"), "stress", "n_seeds_reached")
         .orderBy(F.desc("stress"), "entity")
     )
-    return attach_caches(forward_caches(out, triples), und, seeds, dist)
+    return attach_caches(forward_caches(out, triples), und, dist)
 
 
 def distance_profile(
@@ -2864,8 +2777,8 @@ def distance_profile(
     the standard effective diameter; a rising tail at d == depth says
     the horizon clipped the profile (increase depth).
 
-    Same multi-source BFS state and bounds as harmonic_centrality
-    (n_seeds x |V| rows, one join + distinct + anti-join per round);
+    Same multi-source BFS (_seed_bfs) and bounds as harmonic_centrality
+    (n_seeds x |V| rows per level, one join + distinct per level);
     the profile itself is one grouped count + a cumulative window over
     <= depth rows. All integers — the kg_distances oracle replays the
     unrolled levels and the permille division exactly."""
@@ -2876,9 +2789,10 @@ def distance_profile(
         # exact integer folds (1000 * cum DIV total == // for nonneg)
         import numpy as np
 
-        adj = _adj_from_und(rows)
-        seeds = _driver_seeds(adj, n_seeds)
-        _nodes_l, D = _seed_bfs_matrix(adj, seeds, depth)
+        nodes_l, indptr, indices = _csr(rows, directed=False)
+        D = _seed_bfs_matrix(
+            indptr, indices, _driver_seeds(nodes_l, n_seeds), depth
+        )
         vals = D[D > 0]
         bc = np.bincount(vals, minlength=depth + 1)
         hist_d = {
@@ -2895,7 +2809,8 @@ def distance_profile(
             "reached_permille long",
             ["dist"],
         )
-    dist = _seed_bfs(triples, n_seeds, depth)
+    dist, _sym, und = _seed_bfs(triples, n_seeds, depth)
+    und.unpersist()
     hist = (
         dist.filter(F.col("dist") > 0)
         .groupBy("dist")
@@ -2978,9 +2893,7 @@ def assortativity(triples: DataFrame) -> DataFrame:
             ],
         )
     und = undirected_edges(triples).localCheckpoint()
-    sym = und.select(
-        F.col("a").alias("node"), F.col("b").alias("nbr")
-    ).union(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
+    sym = symmetric_edges(und)
     deg = sym.groupBy("node").agg(
         F.count(F.lit(1)).cast("long").alias("deg")
     )
@@ -3518,7 +3431,7 @@ def egonet(
         # driver path (BOUNDS["edges"] gate): BFS distances +
         # both endpoint joins replayed over one bounded collect of the
         # distinct facts (edges exclude self-loops, like graph_edges)
-        dist_d = _bfs_dist_driver(
+        dist_d = _prefix_bfs(
             [(s_, o_) for s_, _p, o_ in frows if s_ != o_],
             seed_prefix, depth,
         )
@@ -3553,7 +3466,8 @@ def egonet(
         .select("subj", "pred", "obj", "dist_subj", "dist_obj")
         .orderBy("subj", "pred", "obj")
     )
-    return forward_caches(out, triples)
+    # dist carries triples' handles and bfs_distances' checkpoints
+    return forward_caches(out, dist)
 
 
 def summary_graph(

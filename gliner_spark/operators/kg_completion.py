@@ -35,6 +35,7 @@ from gliner_spark.operators.graph_analytics import (
     _adj_from_und,
     _fold_hash_many,
     _fold_hash_py,
+    symmetric_edges,
     undirected_edges,
 )
 
@@ -636,9 +637,7 @@ def walk_corpus(
             triples, data, "entity string, walk_id long, walk string",
             ["entity", "walk_id"],
         )
-    sym = und.select(
-        F.col("a").alias("node"), F.col("b").alias("nbr")
-    ).union(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
+    sym = symmetric_edges(und)
     w = Window.partitionBy("node").orderBy("hrank", "nbr")
     pool = (
         sym.withColumn("hrank", fold_hash(F.col("nbr")))

@@ -55,7 +55,8 @@ def _rows(df):
         "distances", "stress", "components", "kcore", "truss",
         "pagerank", "pagerank_dangling", "ppr", "pagerank_weighted",
         "triangles", "clustering", "node_similarity", "link_prediction",
-        "squares", "two_hop",
+        "squares", "two_hop", "stress_seeds3_depth2", "harmonic_depth6",
+        "distances_depth6", "bfs_org_depth1",
     ],
 )
 def test_driver_paths_match_distributed(spark, graph, tier, name):
@@ -83,6 +84,14 @@ def test_driver_paths_match_distributed(spark, graph, tier, name):
         "link_prediction": lambda: ga.link_prediction(graph),
         "squares": lambda: ga.square_counts(graph),
         "two_hop": lambda: ga.two_hop_paths(graph),
+        "stress_seeds3_depth2": lambda: ga.stress_centrality(
+            graph, n_seeds=3, depth=2
+        ),
+        "harmonic_depth6": lambda: ga.harmonic_centrality(graph, depth=6),
+        "distances_depth6": lambda: ga.distance_profile(graph, depth=6),
+        "bfs_org_depth1": lambda: ga.bfs_distances(
+            graph, seed_prefix="org:", depth=1
+        ),
     }
     with tier(edges=10_000_000):
         drv = _rows(fns[name]())
@@ -90,6 +99,76 @@ def test_driver_paths_match_distributed(spark, graph, tier, name):
         dist = _rows(fns[name]())
     assert drv == dist, f"{name}: driver path diverges from distributed"
     assert len(drv) > 0
+
+
+# the hop-distance family at its default parameters
+HOP_OPS = {
+    "bfs": lambda ga, t: ga.bfs_distances(t),
+    "egonet": lambda ga, t: ga.egonet(t),
+    "harmonic": lambda ga, t: ga.harmonic_centrality(t),
+    "distances": lambda ga, t: ga.distance_profile(t),
+    "stress": lambda ga, t: ga.stress_centrality(t),
+}
+# Spark jobs of each op's forced distributed tier on `graph`, its
+# output collected, with AQE off and one shuffle partition: one job per
+# checkpoint, broadcast and collect. (With AQE on, every query stage is
+# a job of its own and their number follows the order stages complete
+# in: stress read 55 in one run and 51 in the next.)
+HOP_JOBS = {
+    "bfs": 3, "egonet": 3, "harmonic": 5, "distances": 5, "stress": 5,
+}
+
+
+@pytest.mark.parametrize("name", sorted(HOP_OPS))
+def test_hop_distance_job_counts(spark, graph, tier, name):
+    """A checkpoint or an action added to a hop-distance plan shows up
+    as a changed job count."""
+    import uuid
+
+    import gliner_spark.operators.graph_analytics as ga
+
+    sc = spark.sparkContext
+    confs = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": "1",  # the fewest tasks
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    group = f"hop-jobs-{uuid.uuid4().hex}"
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    sc.setJobGroup(group, name)
+    try:
+        with tier():
+            rows = _rows(HOP_OPS[name](ga, graph))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert rows
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == HOP_JOBS[name], (name, jobs)
+
+
+@pytest.mark.parametrize("name", sorted(HOP_OPS))
+def test_hop_distance_ops_empty(spark, graph, tier, name):
+    """Empty output on both tiers for a frame whose only facts are
+    self-loops (no edge), and, for the prefix-seeded ops, for a seed
+    prefix no entity matches."""
+    import gliner_spark.operators.graph_analytics as ga
+
+    loops = _triples(
+        spark, [("person:a", "r", "person:a"), ("org:b", "s", "org:b")]
+    )
+    calls = [lambda: HOP_OPS[name](ga, loops)]
+    if name in ("bfs", "egonet"):
+        fn = ga.bfs_distances if name == "bfs" else ga.egonet
+        calls.append(lambda: fn(graph, seed_prefix="nomatch:"))
+    for call in calls:
+        with tier(edges=10_000_000):
+            assert _rows(call()) == []
+        with tier():
+            assert _rows(call()) == []
 
 
 @pytest.mark.parametrize(

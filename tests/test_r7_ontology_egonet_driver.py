@@ -76,3 +76,15 @@ def test_egonet_driver_matches_distributed(triples, tier):
     assert ("org:a", "based_in", "loc:x", 1, 1) in {
         tuple(r) for r in fast.collect()
     }
+
+
+def test_egonet_releases_bfs_checkpoints(triples, tier):
+    """The distributed tier's BFS checkpoints (bfs_distances' edge set
+    and seed level) ride egonet's output, so release_caches frees them."""
+    from gliner_spark.cache import release_caches
+
+    with tier():
+        out = egonet(triples)
+    assert _rows(out)
+    assert release_caches(out) == 2
+    assert release_caches(out) == 0
